@@ -28,7 +28,7 @@ object QueriesExt {
       System.getProperty("java.io.tmpdir"),
       s"graft-$tag-${s.sparkContext.applicationId}")
     if (jsonlScratchHooked.add(tmp.toString))
-      sys.addShutdownHook(graft.streaming.StoreFiles.deleteRecursively(tmp))
+      sys.addShutdownHook(graft.streaming.MaintainedStore.deleteRecursively(tmp))
     java.nio.file.Files.createDirectories(tmp)
     tmp.toString
   }
@@ -3602,7 +3602,7 @@ object QueriesExt {
     // processes' dirs at startup would race live runs — each process
     // cleans only its own)
     if (jsonlScratchHooked.add(tmp))
-      sys.addShutdownHook(graft.streaming.StoreFiles.deleteRecursively(
+      sys.addShutdownHook(graft.streaming.MaintainedStore.deleteRecursively(
         java.nio.file.Paths.get(tmp)))
     d.write.mode("overwrite").json(tmp)
     sources.TextTables.quarantine(
@@ -4108,7 +4108,7 @@ object QueriesExt {
     // session — reset this gate's state and outputs so every run
     // replays the same three nights
     Seq("state", "out1", "out2", "out3").foreach(d =>
-      graft.streaming.StoreFiles.deleteRecursively(
+      graft.streaming.MaintainedStore.deleteRecursively(
         java.nio.file.Paths.get(tmp, d)))
     val src = s"$tmp/src"
     val withPage = e.select(col("vec_id"),
@@ -4191,7 +4191,7 @@ object QueriesExt {
     val e = emb(s, dir)
     val tmp = scratchDir(s, "ann-retrain")
     Seq("state", "out1", "out2", "out3").foreach(d =>
-      graft.streaming.StoreFiles.deleteRecursively(
+      graft.streaming.MaintainedStore.deleteRecursively(
         java.nio.file.Paths.get(tmp, d)))
     val src = s"$tmp/src"
     val withPage = e.select(col("vec_id"),
@@ -4218,7 +4218,7 @@ object QueriesExt {
       })
     // post-swap ≡ from-scratch bitwise: rebuild at night-3 scope with
     // the same seed/params through the same parquet round-trip path
-    graft.streaming.StoreFiles.deleteRecursively(
+    graft.streaming.MaintainedStore.deleteRecursively(
       java.nio.file.Paths.get(s"$tmp/scratchidx"))
     operators.AnnIndex.trainIvf(withPage, "vec_id", "embedding", nCells = 16)
       .write.parquet(s"$tmp/scratchidx/centroids")

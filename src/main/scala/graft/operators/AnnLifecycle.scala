@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{StoreFiles, StreamingAnnIndex}
+import graft.streaming.{MaintainedStore, StreamingAnnIndex}
 
 /** Stored-ANN index LIFECYCLE: drift monitor → thresholded retrain →
   * staged re-encode → atomic whole-index swap while queries read.
@@ -115,11 +115,11 @@ object AnnLifecycle {
 
   /** Rows the index was last trained on (carried through swaps). */
   def trainedRows(idxDir: String): Long =
-    StoreFiles.readMarker(idxDir, TrainedRowsMarker, InitHint).trim.toLong
+    MaintainedStore.requireMarker(idxDir, TrainedRowsMarker, InitHint).trim.toLong
 
   /** Lifetime retrain count (bootstrap is not a retrain). */
   def retrains(idxDir: String): Long =
-    StoreFiles.readMarker(idxDir, RetrainsMarker, InitHint).trim.toLong
+    MaintainedStore.requireMarker(idxDir, RetrainsMarker, InitHint).trim.toLong
 
   /** Mean reconstruction error of the CURRENT corpus against a frozen
     * model, over the deterministic id-hash sample
@@ -199,7 +199,7 @@ object AnnLifecycle {
       nCells: Int, m: Int, kCodes: Int, buckets: Int, seed: Long
   ): (Long, Array[Array[Double]], Similarity.PqModel) = {
     val spark = corpus.sparkSession
-    StoreFiles.deleteRecursively(Paths.get(dir))
+    MaintainedStore.deleteRecursively(Paths.get(dir))
     AnnIndex.trainIvf(corpus, idCol, vecCol, nCells, seed = seed)
       .write.parquet(s"$dir/centroids")
     val cents = AnnIndex.ivfModel(liveCentroids(spark, dir))
@@ -209,7 +209,7 @@ object AnnLifecycle {
     // two-level (cell, bucket) layout: the admit anti-join prunes on
     // buckets, stored queries partition-prune on their probed cells
     StreamingAnnIndex.initialize(s"$dir/codes", buckets, CodesSchema,
-      partitionCols = Seq("cell", StreamingAnnIndex.BucketCol))
+      partitionCols = Seq("cell", MaintainedStore.BucketCol))
     val n = StreamingAnnIndex.applyBatch(
       corpus.select(col(idCol), col(vecCol)), idCol, s"$dir/codes",
       CodesSchema, buckets,
@@ -246,8 +246,8 @@ object AnnLifecycle {
       val staged = idxDir + StagedSuffix
       val (nCorpus, bCents, bBooks) =
         buildIndex(corpus, idCol, vecCol, staged, nCells, m, kCodes, buckets, seed)
-      StoreFiles.writeMarker(staged, TrainedRowsMarker, nCorpus.toString)
-      StoreFiles.writeMarker(staged, RetrainsMarker, "0")
+      MaintainedStore.writeMarker(staged, TrainedRowsMarker, nCorpus.toString)
+      MaintainedStore.writeMarker(staged, RetrainsMarker, "0")
       graft.exec.Staging.promoteStaged(spark, stateStepDir, IndexDirName, StagedSuffix)
       val (_, occMax, occMed, skew) = codesProfile(liveCodes(spark, idxDir))
       val recon = reconErrSampled(corpus, idCol, vecCol, bCents, bBooks, sampleMod)
@@ -286,8 +286,8 @@ object AnnLifecycle {
       // -------- retrain on the full current corpus, staged + swapped
       val staged = idxDir + StagedSuffix
       val _ = buildIndex(corpus, idCol, vecCol, staged, nCells, m, kCodes, buckets, seed)
-      StoreFiles.writeMarker(staged, TrainedRowsMarker, nCorpus.toString)
-      StoreFiles.writeMarker(staged, RetrainsMarker, (retrainsBefore + 1).toString)
+      MaintainedStore.writeMarker(staged, TrainedRowsMarker, nCorpus.toString)
+      MaintainedStore.writeMarker(staged, RetrainsMarker, (retrainsBefore + 1).toString)
       graft.exec.Staging.promoteStaged(spark, stateStepDir, IndexDirName, StagedSuffix)
       Decision(bootstrap = false, nCorpus, nCodes, trainedBefore, fresh,
         occMax, occMed, skew, recon,

@@ -9,7 +9,7 @@ import org.yaml.snakeyaml.Yaml
 
 import graft.exec.Staging
 import graft.operators.{Decontaminate, Dedup, Multimodal, Packing, Sampling, Sessions, TextAnalysis}
-import graft.streaming.{StreamingAdmission, StreamingAnnIndex, StreamingAudioDedup, StreamingImageDedup, StreamingLineDedup, StreamingNearDup, StreamingRecrawl, StreamingSemDedup, StreamingVideoDedup}
+import graft.streaming.{MaintainedStore, StreamingAdmission, StreamingAnnIndex, StreamingAudioDedup, StreamingImageDedup, StreamingLineDedup, StreamingNearDup, StreamingRecrawl, StreamingSemDedup, StreamingVideoDedup}
 
 /** Declarative training-data curation pipelines — the job-spec surface
   * that makes the operator library a runnable product, the way the
@@ -436,11 +436,11 @@ object CurationPipeline {
           val root = c.requireState("dedup_exact mode: admit")
           val (fp, sink) = (s"$root/fingerprints", s"$root/admitted")
           val buckets = c.params.int("buckets", 64)
-          if (!java.nio.file.Files.exists(java.nio.file.Paths.get(fp, "_graft_buckets")))
+          if (!StreamingAdmission.initialized(fp))
             StreamingAdmission.initialize(c.input.limit(0), c.textCol, fp, buckets)
           StreamingAdmission.applyBatch(
             c.input, c.idCol, c.textCol, fp, sink, buckets, c.batchId)
-          readBatchPartition(c, sink, StreamingAdmission.BatchCol)
+          readBatchPartition(c, sink, MaintainedStore.BatchCol)
       }
     }, modes = Set("full", "admit"), fullOnlyParams = Set("column")),
     // MinHash-LSH near-dup dedup: one survivor per near-dup cluster
@@ -470,12 +470,12 @@ object CurationPipeline {
             r = c.params.int("r", 4),
             minJaccard = c.params.double("minJaccard", 0.5),
             maxBucket = c.params.int("maxBucket", 1000))
-          if (!java.nio.file.Files.exists(java.nio.file.Paths.get(store, "_graft_buckets")))
+          if (!StreamingNearDup.initialized(store))
             StreamingNearDup.initialize(
               c.input.limit(0), c.idCol, c.textCol, store, sink, p)
           StreamingNearDup.applyBatch(
             c.input, c.batchId, c.idCol, c.textCol, store, sink, p)
-          readBatchPartition(c, sink, StreamingNearDup.BatchCol)
+          readBatchPartition(c, sink, MaintainedStore.BatchCol)
       }
     }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
       fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
@@ -1181,8 +1181,7 @@ object CurationPipeline {
           }
           val (store, sink) = (s"$storeRoot/lastfetch", s"$ownRoot/frontier")
           val buckets = c.params.int("buckets", 64)
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(store, "_graft_buckets"))) {
+          if (!StreamingRecrawl.initialized(store)) {
             // a SHARED store must already exist (the referenced
             // change_detect step is a topo-order dependency and
             // initializes it even on an empty batch) — initializing it
@@ -1201,7 +1200,7 @@ object CurationPipeline {
             changefreqCol, store, sink, buckets, c.batchId, nowTs, defaultAgeS,
             adaptive = adaptive)
           val out = readBatchPartition(
-            c.copy(input = padded), sink, StreamingRecrawl.BatchCol,
+            c.copy(input = padded), sink, MaintainedStore.BatchCol,
             extraCols = Seq("recrawl_reason"))
           // project back to the INPUT's columns (+ the reason): the
           // padding columns were plumbing unless the input had them
@@ -1281,8 +1280,7 @@ object CurationPipeline {
           val (store, sink) = (s"$root/lastfetch", s"$root/changed")
           val buckets = c.params.int("buckets", 64)
           val nowTs = c.params.reqLong("now")
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(store, "_graft_buckets")))
+          if (!StreamingRecrawl.initialized(store))
             StreamingRecrawl.initialize(
               withFpCol.limit(0).select(col(urlCol), lit(0L).as("last_fetch_ts")),
               urlCol, store, buckets)
@@ -1292,7 +1290,7 @@ object CurationPipeline {
           // materializes extraCols as string nulls; a bare string
           // filter would be an analysis error
           project(readBatchPartition(
-            c.copy(input = withFpCol), sink, StreamingRecrawl.BatchCol,
+            c.copy(input = withFpCol), sink, MaintainedStore.BatchCol,
             extraCols = Seq("change_kind", "content_changed",
               "content_fp_ts")), fpCol)
       }
@@ -1481,12 +1479,12 @@ object CurationPipeline {
             n = c.params.int("n", 4), w = c.params.int("w", 5),
             minShared = c.params.long("minShared", 2L),
             maxBucket = c.params.int("maxBucket", 1000))
-          if (!java.nio.file.Files.exists(java.nio.file.Paths.get(store, "_graft_buckets")))
+          if (!graft.streaming.StreamingWinnowDedup.initialized(store))
             graft.streaming.StreamingWinnowDedup.initialize(
               c.input.limit(0), c.idCol, c.textCol, store, sink, p)
           graft.streaming.StreamingWinnowDedup.applyBatch(
             c.input, c.batchId, c.idCol, c.textCol, store, sink, p)
-          readBatchPartition(c, sink, graft.streaming.StreamingWinnowDedup.BatchCol)
+          readBatchPartition(c, sink, MaintainedStore.BatchCol)
       }
     }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
       fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
@@ -1517,8 +1515,7 @@ object CurationPipeline {
           require(minDf >= 2, s"minDf must be >= 2, got $minDf")
           val store = c.requireState("line_dedup mode: against_store") + "/line_df"
           val spark = c.input.sparkSession
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(store, "_graft_line_delim")))
+          if (!StreamingLineDedup.initialized(store))
             StreamingLineDedup.initialize(c.input.limit(0), c.idCol, c.textCol, store, delim)
           StreamingLineDedup.applyBatch(c.input, c.idCol, c.textCol, store, delim, c.batchId)
           StreamingLineDedup.cleanWith(c.input, c.idCol, c.textCol, store, minDf, delim)
@@ -1612,10 +1609,10 @@ object CurationPipeline {
         case "merge" =>
           val store = c.requireState("moments mode: merge") + "/moments"
           val spark = c.input.sparkSession
-          batchMoments.withColumn("__batch_id", lit(c.batchId))
+          batchMoments.withColumn(MaintainedStore.BatchCol, lit(c.batchId))
             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id").parquet(store)
-          val all = spark.read.parquet(store).drop("__batch_id")
+            .partitionBy(MaintainedStore.BatchCol).parquet(store)
+          val all = spark.read.parquet(store).drop(MaintainedStore.BatchCol)
           // mergeMoments is a self-merge over the unioned partials
           graft.operators.Profile.mergeMoments(all, all.limit(0))
       }
@@ -2214,16 +2211,15 @@ object CurationPipeline {
           c.requireIntegralId("knn_encode mode: admit")
           val store = s"${c.requireState("knn_encode mode: admit")}/encoded"
           val buckets = c.params.int("buckets", 64)
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(store, "_graft_buckets")))
+          if (!StreamingAnnIndex.initialized(store))
             // cell-carrying families take the two-level (cell, bucket)
             // layout: admit keeps its bucket pruning, and the stored
             // query's probed-cell filter becomes PARTITION pruning
             StreamingAnnIndex.initialize(store, buckets, schema,
               partitionCols =
                 if (schema.contains("cell INT"))
-                  Seq("cell", StreamingAnnIndex.BucketCol)
-                else Seq(StreamingAnnIndex.BucketCol))
+                  Seq("cell", MaintainedStore.BucketCol)
+                else Seq(MaintainedStore.BucketCol))
           StreamingAnnIndex.applyBatch(
             c.input.select(col(eid), col(vec)), eid, store, schema, buckets,
             newRows => encodeAll(newRows, "id"))
@@ -2760,7 +2756,7 @@ object CurationPipeline {
       // never replay (a rerun presents the NEXT id), so folding them is
       // safe; the additive stores fold exactly (line-df group-sum,
       // moment partial-sum), and the swap is the two-rename crash-safe
-      // shape (StoreFiles.swapCompacted)
+      // shape (MaintainedStore.swapCompacted)
       if (compactState) stateDir.foreach { sd =>
         ordered.foreach { s =>
           (s.op, s.params.getOrElse("mode", "full")) match {
@@ -2770,11 +2766,11 @@ object CurationPipeline {
                 s.params.getOrElse("delim", "\n"), upToBatchId = batchId)
             case ("moments", "merge") =>
               val store = s"$sd/${s.name}/moments"
-              graft.streaming.StoreFiles.swapCompacted(store) { tmp =>
-                val folded = spark.read.parquet(store).drop("__batch_id")
+              MaintainedStore.swapCompacted(store) { tmp =>
+                val folded = spark.read.parquet(store).drop(MaintainedStore.BatchCol)
                 graft.operators.Profile.mergeMoments(folded, folded.limit(0))
-                  .withColumn("__batch_id", lit(-1L))
-                  .write.mode("overwrite").partitionBy("__batch_id").parquet(tmp)
+                  .withColumn(MaintainedStore.BatchCol, lit(-1L))
+                  .write.mode("overwrite").partitionBy(MaintainedStore.BatchCol).parquet(tmp)
               }
             case _ => () // bucket stores rewrite in place — nothing accumulates
           }

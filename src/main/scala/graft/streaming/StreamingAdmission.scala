@@ -1,13 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** Streaming corpus admission — the foreachBatch twin of
   * [[graft.operators.Dedup.exactIncremental]]: every micro-batch of
@@ -31,29 +28,12 @@ import graft.operators.Dedup
   * sidecar and re-checked fail-loud (a reader pruning with the wrong
   * modulus would silently re-admit known content).
   */
-object StreamingAdmission {
+object StreamingAdmission extends MaintainedStore {
 
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
+  protected val marker = "_graft_buckets"
 
   private def bucketOf(numBuckets: Int) =
     pmod(hash(col("fingerprint")), lit(numBuckets))
-
-  private def marker(path: String) = Paths.get(path, "_graft_buckets")
-
-  private def writeMarker(path: String, numBuckets: Int): Unit = {
-    Files.createDirectories(Paths.get(path))
-    Files.write(marker(path), numBuckets.toString.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def checkMarker(path: String, numBuckets: Int): Unit = {
-    require(Files.exists(marker(path)),
-      s"$path has no _graft_buckets marker — initialize() the store first")
-    val stored = new String(Files.readAllBytes(marker(path)), StandardCharsets.UTF_8).trim.toInt
-    require(stored == numBuckets,
-      s"bucket-count mismatch for $path: store laid out with $stored buckets, " +
-        s"caller passed $numBuckets — pruning with the wrong modulus re-admits known content")
-  }
 
   // explicit schema: an empty-corpus bootstrap writes a marker but no
   // parquet files, and schema inference over the empty directory would
@@ -79,7 +59,7 @@ object StreamingAdmission {
       .withColumn(BucketCol, bucketOf(numBuckets))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(fpStorePath)
-    writeMarker(fpStorePath, numBuckets)
+    writeMarker(fpStorePath, numBuckets.toString)
   }
 
   /** Admit one micro-batch: anti-join the touched store buckets,
@@ -94,7 +74,8 @@ object StreamingAdmission {
   ): Unit = {
     if (batch.isEmpty) return
     requireCleanColumns(batch)
-    checkMarker(fpStorePath, numBuckets)
+    checkMarker(fpStorePath, numBuckets.toString, "bucket-count",
+      "pruning with the wrong modulus re-admits known content")
     val spark = batch.sparkSession
     // fingerprint the batch ONCE (normalize+md5 is the hottest
     // expression of the loop) and feed every consumer from the cached
@@ -145,20 +126,4 @@ object StreamingAdmission {
         .partitionBy(BucketCol).parquet(fpStorePath)
     } finally withFp.unpersist()
   }
-
-  /** Wire a document stream to corpus admission. */
-  def maintain(
-      stream: DataFrame, idCol: String, textCol: String,
-      fpStorePath: String, corpusOutPath: String, numBuckets: Int,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, textCol, fpStorePath, corpusOutPath, numBuckets, batchId)
-      }
-      .start()
 }

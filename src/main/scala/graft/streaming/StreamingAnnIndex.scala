@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import MaintainedStore.BucketCol
+
 /** Maintained ANN postings/codes store — the incremental half of the
   * [[graft.operators.AnnIndex]] train-once workflow: the model
   * (IVF centroids / PQ codebooks) is FROZEN, and each batch of corpus
@@ -28,14 +30,18 @@ import org.apache.spark.sql.functions._
   * ARRAY<FLOAT>` for IVF postings; `id BIGINT, codes ARRAY<INT>` for
   * PQ codes); this object owns only keying, pruning, and replay.
   */
-object StreamingAnnIndex {
+object StreamingAnnIndex extends MaintainedStore {
 
-  val BucketCol = "__kb"
+  // initialize writes _graft_schema LAST: the other two markers are
+  // meaningless without the family it pins, and every generation of
+  // the store (including those from before _graft_partitioning
+  // existed) carries it
+  protected val marker = "_graft_schema"
+  private val BucketsMarker = "_graft_buckets"
+  private val PartitioningMarker = "_graft_partitioning"
 
   private def bucketOf(numBuckets: Int) =
     pmod(hash(col("id")), lit(numBuckets))
-
-  private val InitHint = "initialize() the store first"
 
   /** Field names of a DDL schema string via the real parser — a naive
     * comma split breaks on parameterized types (`DECIMAL(38,2)`,
@@ -43,26 +49,15 @@ object StreamingAnnIndex {
   private def schemaFieldNames(schema: String): Array[String] =
     org.apache.spark.sql.types.StructType.fromDDL(schema).fieldNames
 
-  // markers through StoreFiles (the shared atomic temp+rename write —
-  // a crash mid-write must never leave a truncated payload that still
-  // parses). The SCHEMA is a marker too: the store's family is a
-  // property of the data, and a caller whose model param silently
-  // switched family (ivf store read with the pq schema) would
-  // otherwise read stored rows as NULLs, anti-join nothing out, and
-  // dynamically overwrite touched buckets with wrong-schema rows —
-  // permanent silent corruption. Fail loud instead.
-  private def checkMarkers(path: String, numBuckets: Int, schema: String): Unit = {
-    val storedBuckets = StoreFiles.readMarker(path, "_graft_buckets", InitHint).trim.toInt
-    require(storedBuckets == numBuckets,
-      s"bucket-count mismatch for $path: store laid out with $storedBuckets buckets, " +
-        s"caller passed $numBuckets — pruning with the wrong modulus would " +
-        "re-encode known vectors or miss stored ones")
-    val storedSchema = StoreFiles.readMarker(path, "_graft_schema", InitHint).trim
-    require(storedSchema == schema.trim,
-      s"schema mismatch for $path: store initialized as '$storedSchema', " +
-        s"caller passed '$schema' — did the model table's family change? " +
-        "Re-reading with the wrong schema would silently corrupt the store")
-  }
+  // The SCHEMA is a marker too: the store's family is a property of
+  // the data, and a caller whose model param silently switched family
+  // (ivf store read with the pq schema) would otherwise read stored
+  // rows as NULLs, anti-join nothing out, and append wrong-schema rows
+  // — permanent silent corruption. Fail loud instead.
+  private def checkSchema(path: String, schema: String): Unit =
+    checkMarker(path, schema.trim, "schema",
+      "did the model table's family change? Re-reading with the wrong " +
+        "schema would silently corrupt the store")
 
   /** Read the full encoded table (plumbing dropped) — what a `knn`
     * step searches. `schema` must be the same string the store was
@@ -71,9 +66,7 @@ object StreamingAnnIndex {
   def readEncoded(
       spark: org.apache.spark.sql.SparkSession, storePath: String, schema: String
   ): DataFrame = {
-    checkMarkers(storePath,
-      StoreFiles.readMarker(storePath, "_graft_buckets", InitHint).trim.toInt,
-      schema)
+    checkSchema(storePath, schema)
     // partition columns surface at the END of a partitioned read's
     // schema regardless of the declared order — re-select the declared
     // order so positional consumers see the same shape on every layout
@@ -89,10 +82,8 @@ object StreamingAnnIndex {
     * by construction — defaulting (instead of failing) keeps
     * long-lived pay-encode-once stores usable across the upgrade. */
   private def partitioning(path: String): Seq[String] =
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(path, "_graft_partitioning"))) Seq(BucketCol)
-    else StoreFiles.readMarker(path, "_graft_partitioning", InitHint)
-      .trim.split(",").map(_.trim).toSeq
+    MaintainedStore.readMarker(path, PartitioningMarker)
+      .fold(Seq(BucketCol))(_.trim.split(",").map(_.trim).toSeq)
 
   /** Bootstrap an empty store (markers only; the first batch encodes
     * everything it sees). `schema` pins the store's family for every
@@ -105,7 +96,7 @@ object StreamingAnnIndex {
     * instead of row-filtering a full scan — the
     * [[graft.operators.AnnIndex]] `partitionBy("cell")` discipline,
     * now available on the MAINTAINED store too). Must include
-    * [[BucketCol]]; every other column must exist in `schema`. */
+    * [[MaintainedStore.BucketCol]]; every other column must exist in `schema`. */
   def initialize(storePath: String, numBuckets: Int, schema: String,
       partitionCols: Seq[String] = Seq(BucketCol)): Unit = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
@@ -116,10 +107,9 @@ object StreamingAnnIndex {
     partitionCols.filterNot(_ == BucketCol).foreach(c =>
       require(schemaCols.contains(c),
         s"partition column '$c' is not in the store schema '$schema'"))
-    StoreFiles.writeMarker(storePath, "_graft_buckets", numBuckets.toString)
-    StoreFiles.writeMarker(storePath, "_graft_schema", schema.trim)
-    StoreFiles.writeMarker(storePath, "_graft_partitioning",
-      partitionCols.mkString(","))
+    MaintainedStore.writeMarker(storePath, PartitioningMarker, partitionCols.mkString(","))
+    MaintainedStore.writeMarker(storePath, BucketsMarker, numBuckets.toString)
+    writeMarker(storePath, schema.trim)
   }
 
   /** Encode one batch's NEW vectors and append them. `batch` carries
@@ -135,7 +125,10 @@ object StreamingAnnIndex {
       numBuckets: Int, encode: DataFrame => DataFrame
   ): Long = {
     if (batch.isEmpty) return 0L
-    checkMarkers(storePath, numBuckets, schema)
+    MaintainedStore.checkMarker(storePath, BucketsMarker, numBuckets.toString,
+      "bucket-count", "pruning with the wrong modulus would re-encode known " +
+        "vectors or miss stored ones")
+    checkSchema(storePath, schema)
     require(!batch.columns.contains(BucketCol),
       s"input already has a '$BucketCol' column — rename it first")
     require(idCol == "id" || !batch.columns.contains("id"),

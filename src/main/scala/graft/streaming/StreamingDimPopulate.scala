@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.DataFrame
 
 import graft.exec.DimPopulate
 import graft.model.{Env, Fact, TimeWindow}
@@ -29,7 +27,8 @@ object StreamingDimPopulate {
 
   /** One micro-batch step: new dim rows (with continuing surrogate
     * ids) for `dimTableName` given the batch's source rows and the
-    * currently stored dim. Exposed for tests and for custom sinks. */
+    * currently stored dim. A stream drives it through
+    * [[MaintainedStore.maintain]], appending the rows to the stored dim. */
   def step(
       env: Env,
       fact: Fact,
@@ -38,41 +37,4 @@ object StreamingDimPopulate {
       existing: DataFrame
   ): DataFrame =
     DimPopulate.incremental(env, fact, dimTableName, batch, existing, TimeWindow.unbounded)
-
-  /** Wire a stream to parquet-backed dimension maintenance for every
-    * derived dim of `fact`. `dimPath` maps dim table name → storage
-    * path; dims must exist (e.g. created by a full batch populate —
-    * mirrors the reference where incremental SQL assumes the table).
-    * Returns the started query (micro-batches on `trigger`). */
-  def maintain(
-      env: Env,
-      fact: Fact,
-      stream: DataFrame,
-      dimPath: String => String,
-      dimNames: Seq[String],
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery = {
-    val writer: DataStreamWriter[Row] = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // one materialization of the micro-batch feeds every dim's
-        // candidate scan; without it each dim re-evaluates the source
-        batch.persist()
-        try dimNames.foreach { dimName =>
-          val existing = spark.read.parquet(dimPath(dimName))
-          val newRows  = step(env, fact, dimName, batch, existing).persist()
-          try {
-            // persisted so the emptiness probe and the append share one
-            // run of the candidates + anti-join + id-assignment pipeline
-            if (!newRows.isEmpty)
-              newRows.write.mode(SaveMode.Append).parquet(dimPath(dimName))
-          } finally newRows.unpersist()
-        } finally batch.unpersist()
-      }
-    writer.start()
-  }
 }

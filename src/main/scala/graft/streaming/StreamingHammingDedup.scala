@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** The generic hamming-ball admission core shared by the perceptual
   * media stores ([[StreamingImageDedup]] dHash, [[StreamingAudioDedup]]
@@ -35,35 +36,20 @@ import graft.operators.Dedup
   * mapPartitions; the store probe is an equi-join of the batch's
   * ≤(maxHamming+1)·|batch| posting rows against bucket-pruned store
   * partitions; the in-batch pair join is [[Dedup.hamming64Pairs]]
-  * (capped buckets). The corpus is never rescanned or re-decoded. */
-private[streaming] final class StreamingHammingDedup(
-    markerName: String, hashCol: String,
-    sigOf: (DataFrame, String) => DataFrame) {
+  * (capped buckets). The corpus is never rescanned or re-decoded.
+  *
+  * A store is an `object` extending this class with its marker name,
+  * hash column and signature pass `sigOf(items, idCol)`; all stores
+  * share [[StreamingHammingDedup.Params]]. */
+abstract class StreamingHammingDedup(
+    protected val marker: String, hashCol: String,
+    sigOf: (DataFrame, String) => DataFrame) extends MaintainedStore {
 
-  import StreamingHammingDedup.{BatchCol, BucketCol, Params}
+  type Params = StreamingHammingDedup.Params
+  val Params: StreamingHammingDedup.Params.type = StreamingHammingDedup.Params
 
   private def bucketOf(numBuckets: Int) =
     pmod(hash(col("band"), col("chunk")), lit(numBuckets))
-
-  /** Whether `initialize` completed for this store path (marker file
-    * present — written LAST, so a crashed initialize reads false). */
-  def initialized(path: String): Boolean =
-    Files.exists(Paths.get(path, markerName))
-
-  // marker I/O routes through [[StoreFiles]] (the shared protocol —
-  // exact-byte read, atomic write), NOT a private copy: protocol fixes
-  // must land once for every store
-  private def writeMarker(path: String, p: Params): Unit =
-    StoreFiles.writeMarker(path, markerName, p.encoded)
-
-  private def checkMarker(path: String, p: Params): Unit = {
-    val stored = StoreFiles.readMarker(
-      path, markerName, "initialize() the store first")
-    require(stored == p.encoded,
-      s"$hashCol posting-table parameter mismatch for $path: store laid out with " +
-        s"($stored), caller passed (${p.encoded}) — a different radius bands " +
-        "differently and mixed postings silently lose recall")
-  }
 
   // explicit schema: survives the empty-store cold start
   private def readStore(
@@ -89,7 +75,7 @@ private[streaming] final class StreamingHammingDedup(
     posts.select(col(idCol), col(hashCol)).distinct()
       .withColumn(BatchCol, lit(-1L))
       .write.mode("overwrite").partitionBy(BatchCol).parquet(sinkPath)
-    writeMarker(storePath, p)
+    writeMarker(storePath, p.encoded)
   }
 
   /** Admit one batch against the posting store + sink. */
@@ -97,7 +83,8 @@ private[streaming] final class StreamingHammingDedup(
       batch: DataFrame, batchId: Long, idCol: String,
       storePath: String, sinkPath: String, p: Params): Unit = {
     if (batch.isEmpty) return
-    checkMarker(storePath, p)
+    checkMarker(storePath, p.encoded, s"$hashCol posting-table parameter",
+      "a different radius bands differently and mixed postings silently lose recall")
     val spark = batch.sparkSession
     val batchPosts = postingsOf(batch, idCol, p).persist()
     try {
@@ -157,10 +144,7 @@ private[streaming] final class StreamingHammingDedup(
     }
 }
 
-private[streaming] object StreamingHammingDedup {
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
-
+object StreamingHammingDedup {
   final case class Params(
       numBuckets: Int, maxHamming: Int = 3, maxBucket: Int = 1000) {
     def encoded: String = s"$numBuckets;$maxHamming;$maxBucket"

@@ -1,13 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.HeavyHitters
+import MaintainedStore.BatchCol
 
 /** Streaming heavy-hitter maintenance — the foreachBatch twin of
   * [[graft.operators.HeavyHitters]]: each micro-batch contributes its
@@ -36,24 +33,16 @@ import graft.operators.HeavyHitters
   * fail-loud): summaries with different k have different error
   * budgets and must not merge silently.
   */
-object StreamingHeavyHitters {
+object StreamingHeavyHitters extends MaintainedStore {
 
-  val BatchCol = "__batch_id"
+  protected val marker = "_graft_hh_k"
+
   /** Sentinel row carrying the batch's non-null total (`cnt` = n). */
   val TotalKey = "\u0000__total__"
 
-  private val MarkerName = "_graft_hh_k"
-
-  private def writeMarker(path: String, k: Int): Unit =
-    StoreFiles.writeMarker(path, MarkerName, k.toString)
-
-  private def checkMarker(path: String, k: Int): Unit = {
-    val stored =
-      StoreFiles.readMarker(path, MarkerName, "initialize() the store first").trim.toInt
-    require(stored == k,
-      s"sketch-size mismatch for $path: store built with k=$stored, caller " +
-        s"passed k=$k — summaries with different error budgets must not merge")
-  }
+  private def checkK(path: String, k: Int): Unit =
+    checkMarker(path, k.toString, "sketch-size",
+      "summaries with different error budgets must not merge")
 
   private def summarize(rows: DataFrame, valueCol: String, k: Int): DataFrame = {
     val mg = udaf(new HeavyHitters.MisraGries(k))
@@ -83,7 +72,7 @@ object StreamingHeavyHitters {
     summarize(corpus, valueCol, k)
       .withColumn(BatchCol, lit(-1L))
       .write.mode("overwrite").partitionBy(BatchCol).parquet(path)
-    writeMarker(path, k)
+    writeMarker(path, k.toString)
   }
 
   /** Fold one micro-batch's summary into its own store partition. */
@@ -91,27 +80,12 @@ object StreamingHeavyHitters {
       batch: DataFrame, batchId: Long, valueCol: String,
       path: String, k: Int): Unit = {
     if (batch.isEmpty) return
-    checkMarker(path, k)
+    checkK(path, k)
     summarize(batch, valueCol, k)
       .withColumn(BatchCol, lit(batchId))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(BatchCol).parquet(path)
   }
-
-  /** Wire a stream to summary maintenance. */
-  def maintain(
-      stream: DataFrame, valueCol: String, path: String, k: Int,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, valueCol, path, k)
-      }
-      .start()
 
   /** Merge a list of summaries with the mergeable-summaries rule:
     * key-wise sum, then cut back to k by subtracting the (k+1)-th
@@ -137,7 +111,7 @@ object StreamingHeavyHitters {
     * > total/(k+1) is guaranteed present and each count
     * underestimates by at most total/(k+1). */
   def approx(spark: SparkSession, path: String, k: Int): (Long, Map[String, Long]) = {
-    checkMarker(path, k)
+    checkK(path, k)
     val rows = readStore(spark, path)
       .groupBy(col(BatchCol))
       .agg(map_from_entries(collect_list(struct(col("value"), col("cnt")))).as("m"))
@@ -178,7 +152,7 @@ object StreamingHeavyHitters {
     // partition -1 — a duplicate map key that fails approx() at read
     require(upToBatchId >= -1L,
       s"upToBatchId must be >= -1 (the bootstrap partition), got $upToBatchId")
-    checkMarker(path, k)
+    checkK(path, k)
     val byBatch = readStore(spark, path)
       .groupBy(col(BatchCol))
       .agg(map_from_entries(collect_list(struct(col("value"), col("cnt")))).as("m"))
@@ -191,10 +165,10 @@ object StreamingHeavyHitters {
       (merged + (TotalKey -> total)).toSeq.map { case (v, c) => (v, c, -1L) } ++
         keep.flatMap { case (b, m) => m.toSeq.map { case (v, c) => (v, c, b) } }
     import spark.implicits._
-    StoreFiles.swapCompacted(path) { tmp =>
+    MaintainedStore.swapCompacted(path) { tmp =>
       rows.toDF("value", "cnt", BatchCol)
         .write.mode("overwrite").partitionBy(BatchCol).parquet(tmp)
-      writeMarker(tmp, k)
+      writeMarker(tmp, k.toString)
     }
   }
 }

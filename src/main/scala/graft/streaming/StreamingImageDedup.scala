@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Multimodal
 
@@ -21,64 +19,8 @@ import graft.operators.Multimodal
   * admission core this store instantiates with the dHash signature
   * pass (decode + hash, scan-local mapPartitions).
   */
-object StreamingImageDedup {
-
-  val BucketCol = StreamingHammingDedup.BucketCol
-  val BatchCol  = StreamingHammingDedup.BatchCol
-
-  final case class Params(
-      numBuckets: Int, maxHamming: Int = 3, maxBucket: Int = 1000) {
-    def encoded: String = s"$numBuckets;$maxHamming;$maxBucket"
-    private[streaming] def core =
-      StreamingHammingDedup.Params(numBuckets, maxHamming, maxBucket)
-  }
-
-  private val core = new StreamingHammingDedup(
-    markerName = "_graft_dhash", hashCol = "dhash",
-    sigOf = (images, idCol) =>
-      Multimodal.dHash(images.select(col(idCol).cast("long").as("doc_id"), col("payload")))
-        .toDF().select(col("doc_id").as(idCol), col("dhash")))
-
-  /** Whether `initialize` completed for this store path. */
-  def initialized(storePath: String): Boolean = core.initialized(storePath)
-
-  /** Bootstrap the posting store AND the admitted sink from an
-    * existing image corpus (batch -1, admitted wholesale — the
-    * [[StreamingNearDup.initialize]] shape). Marker written last, so
-    * a crashed initialize is detectable (no marker → applyBatch fails
-    * actionably). */
-  def initialize(
-      corpus: DataFrame, idCol: String,
-      storePath: String, sinkPath: String, p: Params): Unit =
-    core.initialize(corpus, idCol, storePath, sinkPath, p.core)
-
-  /** Admit one image batch against the posting store + sink. */
-  def applyBatch(
-      batch: DataFrame, batchId: Long, idCol: String,
-      storePath: String, sinkPath: String, p: Params): Unit =
-    core.applyBatch(batch, batchId, idCol, storePath, sinkPath, p.core)
-
-  /** This batch's admitted `(id, dhash)` — empty when nothing
-    * admitted. Existence-checked, not Try-swallowed. */
-  def admittedOf(
-      spark: org.apache.spark.sql.SparkSession, sinkPath: String,
-      idCol: String, batchId: Long): DataFrame =
-    core.admittedOf(spark, sinkPath, idCol, batchId)
-
-  /** Wire an image stream (`idCol`, `payload`) to perceptual
-    * admission. */
-  def maintain(
-      stream: DataFrame, idCol: String,
-      storePath: String, sinkPath: String, p: Params,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, idCol, storePath, sinkPath, p)
-      }
-      .start()
-}
+object StreamingImageDedup extends StreamingHammingDedup(
+  marker = "_graft_dhash", hashCol = "dhash",
+  sigOf = (images, idCol) =>
+    Multimodal.dHash(images.select(col(idCol).cast("long").as("doc_id"), col("payload")))
+      .toDF().select(col("doc_id").as(idCol), col("dhash")))

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Kmeans
 
@@ -37,29 +33,19 @@ import graft.operators.Kmeans
   * re-checked fail-loud on every batch. Periodic re-training =
   * [[recenter]] → new store via [[initialize]] with the new centroids.
   */
-object StreamingKmeans {
+object StreamingKmeans extends MaintainedStore {
+
+  protected val marker = "_graft_centroids"
 
   /** Decimal type for per-dimension sums: exact, order-independent. */
   private val SumType = "decimal(38,15)"
 
-  private def marker(path: String) = Paths.get(path, "_graft_centroids")
-
   private def encode(centroids: Seq[Array[Double]]): String =
     centroids.map(_.mkString(",")).mkString(";")
 
-  private def writeMarker(path: String, centroids: Seq[Array[Double]]): Unit = {
-    Files.createDirectories(Paths.get(path))
-    Files.write(marker(path), encode(centroids).getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def checkMarker(path: String, centroids: Seq[Array[Double]]): Unit = {
-    require(Files.exists(marker(path)),
-      s"$path has no _graft_centroids marker — initialize() the store first")
-    val stored = new String(Files.readAllBytes(marker(path)), StandardCharsets.UTF_8)
-    require(stored == encode(centroids),
-      s"centroid mismatch for $path: the store was built against different " +
-        "reference centroids — merging their statistics would corrupt every mean")
-  }
+  private def checkCentroids(path: String, centroids: Seq[Array[Double]]): Unit =
+    checkMarker(path, encode(centroids), "centroid",
+      "merging statistics assigned against different centroids would corrupt every mean")
 
   /** Per-(cluster, dim) stats of one batch: `(cluster, pos, n, s)`.
     * One scan-local in-projection assignment ([[Kmeans.clusterColumn]],
@@ -90,7 +76,7 @@ object StreamingKmeans {
     batchStats(corpus, idCol, vecCol, centroids)
       .withColumn("batch_id", lit(-1L))
       .write.mode("overwrite").partitionBy("batch_id").parquet(path)
-    writeMarker(path, centroids)
+    writeMarker(path, encode(centroids))
   }
 
   /** Fold one micro-batch into the store: assignment stats written to
@@ -100,28 +86,12 @@ object StreamingKmeans {
       batch: DataFrame, batchId: Long, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], path: String): Unit = {
     if (batch.isEmpty) return
-    checkMarker(path, centroids)
+    checkCentroids(path, centroids)
     batchStats(batch, idCol, vecCol, centroids)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(path)
   }
-
-  /** Wire an embedding stream to stats maintenance of the store at
-    * `path` (created by [[initialize]]). */
-  def maintain(
-      stream: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Array[Double]], path: String, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, idCol, vecCol, centroids, path)
-      }
-      .start()
 
   /** Current cluster means and populations off the store (k·d-row
     * fold, no corpus scan): `(cluster, n, centroid array<double>)`.
@@ -130,7 +100,7 @@ object StreamingKmeans {
     */
   def recenter(spark: SparkSession, path: String,
       centroids: Seq[Array[Double]]): DataFrame = {
-    checkMarker(path, centroids)
+    checkCentroids(path, centroids)
     readStore(spark, path)
       .groupBy(col("cluster"), col("pos"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))

@@ -1,13 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
+import MaintainedStore.BatchCol
 
 /** Streaming maintenance of the line-document-frequency store — the
   * foreachBatch twin of [[graft.operators.Dedup.lineDedup]]'s df pass:
@@ -42,30 +39,13 @@ import graft.operators.Dedup
   * (summaries split with a different delimiter would silently count a
   * different line universe).
   */
-object StreamingLineDedup {
+object StreamingLineDedup extends MaintainedStore {
 
-  val BatchCol = "__batch_id"
+  protected val marker = "_graft_line_delim"
 
-  private val MarkerName = "_graft_line_delim"
-
-  private def writeMarker(path: String, delim: String): Unit =
-    StoreFiles.writeMarker(path, MarkerName, delim)
-
-  private def checkMarker(path: String, delim: String): Unit = {
-    // exact bytes, NO trim: the default delimiter IS whitespace
-    val stored = StoreFiles.readMarker(path, MarkerName, "initialize() the store first")
-    require(stored == delim,
-      s"delimiter mismatch for $path: store laid out with ${escape(stored)}, " +
-        s"caller passed ${escape(delim)} — different line universes")
-  }
-
-  private def escape(s: String): String =
-    "\"" + s.flatMap {
-      case '\n' => "\\n"
-      case '\t' => "\\t"
-      case '\r' => "\\r"
-      case c    => c.toString
-    } + "\""
+  // exact bytes, NO trim: the default delimiter IS whitespace
+  private def checkDelim(path: String, delim: String): Unit =
+    checkMarker(path, delim, "delimiter", "different line universes")
 
   // explicit schema: the empty-corpus bootstrap writes only the marker,
   // and the first micro-batch must still be able to read the store
@@ -94,7 +74,7 @@ object StreamingLineDedup {
     // marker check BEFORE the empty short-circuit: an uninitialized
     // store or wrong delimiter must fail on the FIRST micro-batch,
     // empty or not — not whenever data happens to arrive
-    checkMarker(storePath, delim)
+    checkDelim(storePath, delim)
     if (batch.isEmpty) return
     Dedup.lineDf(batch, idCol, textCol, delim)
       .withColumn(BatchCol, lit(batchId))
@@ -109,7 +89,7 @@ object StreamingLineDedup {
       spark: SparkSession, storePath: String, minDf: Int, delim: String = "\n"
   ): DataFrame = {
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
-    checkMarker(storePath, delim)
+    checkDelim(storePath, delim)
     readStore(spark, storePath)
       .groupBy(col("line"))
       .agg(sum(col("n_docs")).as("df"))
@@ -135,8 +115,8 @@ object StreamingLineDedup {
     * re-delivers only past the checkpoint), and a replay of a later
     * batch still rewrites its own untouched partition.
     *
-    * MUST run with the [[maintain]] stream STOPPED (or between
-    * triggers) — the `upToBatchId` contract implies it, but not only
+    * MUST run with the [[MaintainedStore.maintain]] stream STOPPED (or
+    * between triggers) — the `upToBatchId` contract implies it, but not only
     * for replay reasons: compact reads the live store lazily and then
     * swaps directories, so a partition written by a concurrent
     * micro-batch between the read and the rename would be silently
@@ -155,32 +135,17 @@ object StreamingLineDedup {
   ): Unit = {
     require(upToBatchId >= -1L,
       s"upToBatchId must be >= -1 (the bootstrap partition), got $upToBatchId")
-    checkMarker(storePath, delim)
+    checkDelim(storePath, delim)
     val store  = readStore(spark, storePath)
     val folded = store.filter(col(BatchCol) <= upToBatchId)
       .groupBy(col("line"))
       .agg(sum(col("n_docs")).as("n_docs"))
       .withColumn(BatchCol, lit(-1L))
     val keep = store.filter(col(BatchCol) > upToBatchId)
-    StoreFiles.swapCompacted(storePath) { tmp =>
+    MaintainedStore.swapCompacted(storePath) { tmp =>
       folded.unionByName(keep.select(col("line"), col("n_docs"), col(BatchCol)))
         .write.mode("overwrite").partitionBy(BatchCol).parquet(tmp)
       writeMarker(tmp, delim)
     }
   }
-
-  /** Wire a document stream to df-store maintenance. */
-  def maintain(
-      stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, checkpointDir: String, delim: String = "\n",
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, textCol, storePath, delim, batchId)
-      }
-      .start()
 }

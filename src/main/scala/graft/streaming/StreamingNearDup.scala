@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** Streaming NEAR-dup corpus admission — the foreachBatch twin of
   * [[graft.operators.Dedup.minhashIncremental]], completing the
@@ -38,10 +37,9 @@ import graft.operators.Dedup
   * postings from different parameters must never merge — recorded in
   * the same sidecar.
   */
-object StreamingNearDup {
+object StreamingNearDup extends MaintainedStore {
 
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
+  protected val marker = "_graft_buckets"
 
   final case class Params(
       numBuckets: Int, n: Int = 3, k: Int = 64, r: Int = 4,
@@ -51,22 +49,14 @@ object StreamingNearDup {
 
   private def bucketOf(numBuckets: Int) = pmod(hash(col("bh")), lit(numBuckets))
 
-  private def marker(path: String) = Paths.get(path, "_graft_buckets")
-
-  private def writeMarker(path: String, p: Params): Unit = {
-    Files.createDirectories(Paths.get(path))
-    Files.write(marker(path), p.encoded.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def checkMarker(path: String, p: Params): Unit = {
-    require(Files.exists(marker(path)),
-      s"$path has no _graft_buckets marker — initialize() the store first")
-    val stored = new String(Files.readAllBytes(marker(path)), StandardCharsets.UTF_8).trim
-    require(stored == p.encoded,
-      s"posting-table parameter mismatch for $path: store laid out with " +
-        s"($stored), caller passed (${p.encoded}) — mixed LSH parameters " +
-        "silently corrupt candidate generation")
-  }
+  /** Whether the corpus sink holds a batch partition yet. An empty
+    * bootstrap leaves none, and schema inference over it would throw. */
+  private def hasBatches(corpusOutPath: String): Boolean =
+    Files.isDirectory(Paths.get(corpusOutPath)) && {
+      val entries = Files.list(Paths.get(corpusOutPath))
+      try entries.anyMatch(_.getFileName.toString.startsWith(BatchCol + "="))
+      finally entries.close()
+    }
 
   // explicit schema: survives the empty-store cold start (marker but no
   // parquet files yet). Doc ids are constrained to BIGINT by the store.
@@ -98,7 +88,7 @@ object StreamingNearDup {
     corpus
       .withColumn(BatchCol, lit(-1L))
       .write.mode("overwrite").partitionBy(BatchCol).parquet(corpusOutPath)
-    writeMarker(storePath, p)
+    writeMarker(storePath, p.encoded)
   }
 
   /** Admit one micro-batch against the posting store + corpus sink.
@@ -107,7 +97,8 @@ object StreamingNearDup {
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       storePath: String, corpusOutPath: String, p: Params): Unit = {
     if (batch.isEmpty) return
-    checkMarker(storePath, p)
+    checkMarker(storePath, p.encoded, "posting-table parameter",
+      "mixed LSH parameters silently corrupt candidate generation")
     val spark = batch.sparkSession
     val batchBands = Dedup.bandPostings(batch, idCol, textCol, p.n, p.k, p.r)
       .withColumn(BucketCol, bucketOf(p.numBuckets))
@@ -118,9 +109,14 @@ object StreamingNearDup {
         .collect().map(_.getInt(0)).toSeq
       val stored = readStore(spark, storePath, idCol)
         .filter(col(BucketCol).isin(touched: _*))
-      val corpus = scala.util.Try(
-        spark.read.parquet(corpusOutPath).select(col(idCol), col(textCol)))
-        .getOrElse(batch.select(col(idCol), col(textCol)).limit(0)) // cold start
+      // existence-checked, not Try-swallowed: only the cold start (no
+      // batch partition yet) reads as empty; any other read failure —
+      // a text column the sink lacks, a corrupt file — fails the batch
+      // instead of admitting near-duplicates against an empty corpus
+      val corpus =
+        if (hasBatches(corpusOutPath))
+          spark.read.parquet(corpusOutPath).select(col(idCol), col(textCol))
+        else batch.select(col(idCol), col(textCol)).limit(0)
       // persist: the admission plan (signatures, candidate join, exact
       // Jaccard verification over corpus text) feeds TWO actions — the
       // corpus-sink write and the posting semi-join below; without the
@@ -145,20 +141,4 @@ object StreamingNearDup {
       } finally admitted.unpersist(blocking = false)
     } finally batchBands.unpersist()
   }
-
-  /** Wire a document stream to near-dup corpus admission. */
-  def maintain(
-      stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, corpusOutPath: String, p: Params,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, idCol, textCol, storePath, corpusOutPath, p)
-      }
-      .start()
 }

@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Recrawl
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** Maintained last-fetch store + recrawl admission — the stateful
   * twin of [[Recrawl.dueVerdicts]] and the 13th maintenance store:
@@ -50,10 +50,9 @@ import graft.operators.Recrawl
   * conservative "some channel says it changed" rule) so two sitemaps
   * listing the same resource schedule one fetch.
   */
-object StreamingRecrawl {
+object StreamingRecrawl extends MaintainedStore {
 
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
+  protected val marker = "_graft_buckets"
 
   private def bucketOf(numBuckets: Int) =
     pmod(hash(col("__url_fp")), lit(numBuckets))
@@ -67,14 +66,10 @@ object StreamingRecrawl {
   private def readStore(spark: org.apache.spark.sql.SparkSession, path: String) =
     spark.read.schema(StoreSchema).parquet(path)
 
-  private def checkMarker(path: String, numBuckets: Int): Unit = {
-    val stored = StoreFiles.readMarker(path, "_graft_buckets",
-      "initialize() the store first").trim.toInt
-    require(stored == numBuckets,
-      s"bucket-count mismatch for $path: store laid out with $stored buckets, " +
-        s"caller passed $numBuckets — pruning with the wrong modulus would " +
-        "miss fetch records and re-crawl the whole frontier")
-  }
+  private def checkBuckets(path: String, numBuckets: Int): Unit =
+    checkMarker(path, numBuckets.toString, "bucket-count",
+      "pruning with the wrong modulus would miss fetch records and re-crawl " +
+        "the whole frontier")
 
   /** Bootstrap an EMPTY last-fetch store (or from an existing fetch
     * log carrying `(urlCol, last_fetch_ts)`). */
@@ -105,7 +100,7 @@ object StreamingRecrawl {
         col(BucketCol))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(storePath)
-    StoreFiles.writeMarker(storePath, "_graft_buckets", numBuckets.toString)
+    writeMarker(storePath, numBuckets.toString)
   }
 
   /** Judge one discovery batch and advance the store. Due rows land in
@@ -122,7 +117,7 @@ object StreamingRecrawl {
       nowTs: Long, defaultAgeS: Long, adaptive: Boolean = false
   ): Unit = {
     if (batch.isEmpty) return
-    checkMarker(storePath, numBuckets)
+    checkBuckets(storePath, numBuckets)
     Seq("__url_fp", BucketCol, BatchCol, "recrawl_due", "recrawl_reason").foreach(c =>
       require(!batch.columns.contains(c),
         s"input already has a '$c' column — rename it first"))
@@ -247,7 +242,7 @@ object StreamingRecrawl {
       nowTs: Long
   ): Unit = {
     if (batch.isEmpty) return
-    checkMarker(storePath, numBuckets)
+    checkBuckets(storePath, numBuckets)
     Seq("__url_fp", BucketCol, BatchCol, "change_kind", "content_changed")
       .foreach(c => require(!batch.columns.contains(c),
         s"input already has a '$c' column — rename it first"))
@@ -346,24 +341,4 @@ object StreamingRecrawl {
       } finally verdicts.unpersist()
     } finally withFp.unpersist()
   }
-
-  /** Wire a discovery stream to recrawl scheduling. `nowTsOf` maps the
-    * batch id to its scheduling instant (explicit — replay
-    * determinism; wall-clock reads would break it). */
-  def maintain(
-      stream: DataFrame, idCol: String, urlCol: String,
-      lastmodCol: String, changefreqCol: String,
-      storePath: String, sinkPath: String, numBuckets: Int,
-      checkpointDir: String, nowTsOf: Long => Long, defaultAgeS: Long,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, idCol, urlCol, lastmodCol, changefreqCol,
-          storePath, sinkPath, numBuckets, batchId, nowTsOf(batchId), defaultAgeS)
-      }
-      .start()
 }

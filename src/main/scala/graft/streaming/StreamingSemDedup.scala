@@ -1,13 +1,12 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Kmeans
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** Streaming/batch SEMANTIC-dup admission — the maintained-store twin
   * of [[graft.operators.Similarity.semDedup]] [Abbas et al. 2023],
@@ -56,10 +55,9 @@ import graft.operators.Kmeans
   * bounded. Exact decimal arithmetic matches the full operator
   * bit-for-bit, so equality specs need no tolerance.
   */
-object StreamingSemDedup {
+object StreamingSemDedup extends MaintainedStore {
 
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
+  protected val marker = "_graft_semdedup"
 
   final case class Params(
       numBuckets: Int, k: Int, minCosine: Double,
@@ -67,13 +65,9 @@ object StreamingSemDedup {
     def encoded: String = s"$numBuckets;$k;$minCosine;$maxCluster"
   }
 
-  private val MarkerName = "_graft_semdedup"
-
-  private def marker(path: String) = Paths.get(path, MarkerName)
-
   // line 1: params; line 2: centroid count + dimension (so a torn read
   // is DETECTABLE, not just unlikely); line 3: the centroids. The
-  // write itself is atomic (StoreFiles temp+rename) — the count line
+  // write itself is atomic (MaintainedStore temp+rename) — the count line
   // is belt-and-braces against any other source of truncation (a
   // partial copy, a filesystem without atomic rename).
   private def encode(p: Params, cents: Seq[Array[Double]]): String =
@@ -81,20 +75,15 @@ object StreamingSemDedup {
       s"${cents.size} ${cents.headOption.map(_.length).getOrElse(0)}\n" +
       cents.map(_.mkString(",")).mkString(";")
 
-  private def writeMarker(path: String, p: Params, cents: Seq[Array[Double]]): Unit =
-    StoreFiles.writeMarker(path, MarkerName, encode(p, cents))
-
   /** Pinned centroids, or None before the first batch. Fails loudly on
     * a parameter mismatch (failOnOversized is a per-run choice, not
     * store geometry, so it stays out of the check) AND on a centroid
     * list whose count/dimension disagrees with the recorded header —
     * a truncated marker must never silently assign later batches under
     * different geometry. */
-  def readCentroids(path: String, p: Params): Option[Seq[Array[Double]]] = {
-    if (!Files.exists(marker(path))) None
-    else {
-      val lines = new String(Files.readAllBytes(marker(path)), StandardCharsets.UTF_8)
-        .split("\n", 3)
+  def readCentroids(path: String, p: Params): Option[Seq[Array[Double]]] =
+    MaintainedStore.readMarker(path, marker).map { payload =>
+      val lines = payload.split("\n", 3)
       require(lines(0) == p.encoded,
         s"semdedup store parameter mismatch for $path: store pinned (${lines(0)}), " +
           s"caller passed (${p.encoded}) — mixed geometry corrupts every admission")
@@ -110,7 +99,7 @@ object StreamingSemDedup {
             s"(${cents.size} centroids, dims " +
             s"${cents.map(_.length).distinct.sorted.mkString("{", ",", "}")}) — " +
             "re-run initialize() over the bootstrap corpus")
-        Some(cents)
+        cents
       } else {
         val (n, dim) = scala.util.Try {
           val header = lines(1).split(" ")
@@ -124,10 +113,9 @@ object StreamingSemDedup {
             s"dimension $dim but the body parses ${cents.size} of dimensions " +
             s"${cents.map(_.length).distinct.sorted.mkString("{", ",", "}")} — " +
             "a truncated write; re-run initialize() over the bootstrap corpus")
-        Some(cents)
+        cents
       }
     }
-  }
 
   private def seenPath(storeDir: String)     = s"$storeDir/seen"
   private def admittedPath(storeDir: String) = s"$storeDir/admitted"
@@ -154,7 +142,7 @@ object StreamingSemDedup {
       .partitionBy(BucketCol, BatchCol).parquet(seenPath(storeDir))
     assigned.select(col("vid"), col("cluster"), col(BatchCol))
       .write.mode("overwrite").partitionBy(BatchCol).parquet(admittedPath(storeDir))
-    writeMarker(storeDir, p, cents)
+    writeMarker(storeDir, encode(p, cents))
   }
 
   private def assignedOf(
@@ -190,7 +178,7 @@ object StreamingSemDedup {
       // rewrite is byte-identical
       val c = Kmeans.initLowestIds(batch, idCol, vecCol, p.k)
       require(c.nonEmpty, "semdedup admission: first batch has no non-null vectors")
-      writeMarker(storeDir, p, c)
+      writeMarker(storeDir, encode(p, c))
       c
     }
     val assigned = assignedOf(batch, idCol, vecCol, cents, p)
@@ -282,19 +270,4 @@ object StreamingSemDedup {
       import spark.implicits._
       Seq.empty[(Long, Int)].toDF("vid", "cluster")
     }
-
-  /** Wire an embedded-document stream to semantic admission. */
-  def maintain(
-      stream: DataFrame, idCol: String, vecCol: String,
-      storeDir: String, p: Params, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, idCol, vecCol, storeDir, p)
-      }
-      .start()
 }

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.RegisterSketch
 
@@ -34,7 +30,9 @@ import graft.functions.RegisterSketch
   * in a `_graft_sketch_m` sidecar at [[initialize]] and re-checked
   * fail-loud on every maintenance step.
   */
-object StreamingSketch {
+object StreamingSketch extends MaintainedStore {
+
+  protected val marker = "_graft_sketch_m"
 
   val DayCol = "ts_day_id"
 
@@ -49,21 +47,9 @@ object StreamingSketch {
   private def readStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.schema(s"sk MAP<INT, INT>, $DayCol BIGINT").parquet(path)
 
-  private def marker(path: String) = Paths.get(path, "_graft_sketch_m")
-
-  private def writeMarker(path: String, m: Int): Unit = {
-    Files.createDirectories(Paths.get(path))
-    Files.write(marker(path), m.toString.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def checkMarker(path: String, m: Int): Unit = {
-    require(Files.exists(marker(path)),
-      s"$path has no _graft_sketch_m marker — initialize() the table first")
-    val stored = new String(Files.readAllBytes(marker(path)), StandardCharsets.UTF_8).trim.toInt
-    require(stored == m,
-      s"register-count mismatch for $path: table built with m=$stored, caller passed m=$m — " +
-        "merging mismatched registers silently corrupts estimates")
-  }
+  private def checkM(path: String, m: Int): Unit =
+    checkMarker(path, m.toString, "register-count",
+      "merging mismatched registers silently corrupts estimates")
 
   private def dailySketches(rows: DataFrame, tsCol: String, valueCol: String, m: Int): DataFrame =
     rows.groupBy(dayOf(tsCol))
@@ -83,7 +69,7 @@ object StreamingSketch {
     dailySketches(events, tsCol, valueCol, m)
       .write.mode("overwrite")
       .partitionBy(DayCol).parquet(path)
-    writeMarker(path, m)
+    writeMarker(path, m.toString)
   }
 
   /** Fold one micro-batch of events into the store: sketch the batch
@@ -94,7 +80,7 @@ object StreamingSketch {
       batch: DataFrame, tsCol: String, valueCol: String, path: String, m: Int
   ): Unit = {
     if (batch.isEmpty) return
-    checkMarker(path, m)
+    checkM(path, m)
     val spark = batch.sparkSession
     val batchDaily = dailySketches(batch, tsCol, valueCol, m)
     batchDaily.persist()
@@ -111,22 +97,6 @@ object StreamingSketch {
     } finally batchDaily.unpersist()
   }
 
-  /** Wire an event stream to sketch maintenance of the store at
-    * `path` (created by [[initialize]]). */
-  def maintain(
-      stream: DataFrame, tsCol: String, valueCol: String, path: String, m: Int,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, tsCol, valueCol, path, m)
-      }
-      .start()
-
   /** Rolling `windowDays`-day distinct estimate per day, straight off
     * the maintained store (|days|-row data; RANGE frame skips
     * calendar gaps) — the query side of `sketch_rolling_distinct`
@@ -135,7 +105,7 @@ object StreamingSketch {
       spark: org.apache.spark.sql.SparkSession, path: String, m: Int, windowDays: Int
   ): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")
-    checkMarker(path, m)
+    checkM(path, m)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col(DayCol)).rangeBetween(-(windowDays - 1L), 0L)
     readStore(spark, path)

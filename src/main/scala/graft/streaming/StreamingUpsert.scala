@@ -1,13 +1,10 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Scd2
+import MaintainedStore.BucketCol
 
 /** Streaming upsert maintenance for dimension tables: the
   * `foreachBatch` twins of the two batch merge primitives —
@@ -22,7 +19,7 @@ import graft.operators.Scd2
   * for surgical rewrites instead:
   *
   *   - the table is partitioned by a key-hash bucket column
-  *     ([[BucketCol]], `pmod(hash(key), numBuckets)`), so
+  *     ([[MaintainedStore.BucketCol]], `pmod(hash(key), numBuckets)`), so
   *   - each micro-batch READS only the buckets its keys touch
   *     (partition pruning against the bucket dirs), and
   *   - WRITES back only those buckets, via dynamic partition
@@ -48,29 +45,16 @@ import graft.operators.Scd2
   * finer rewrites but more (and smaller) files — hundreds to a few
   * thousand at warehouse scale.
   */
-object StreamingUpsert {
+object StreamingUpsert extends MaintainedStore {
 
-  /** Key-hash bucket partition column added to the stored layout. */
-  val BucketCol = "__kb"
+  protected val marker = "_graft_buckets"
 
   private def bucketOf(keyCol: String, numBuckets: Int): Column =
     pmod(hash(col(keyCol)), lit(numBuckets))
 
-  private def marker(path: String) = Paths.get(path, "_graft_buckets")
-
-  private def writeMarker(path: String, numBuckets: Int): Unit = {
-    Files.createDirectories(Paths.get(path))
-    Files.write(marker(path), numBuckets.toString.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def checkMarker(path: String, numBuckets: Int): Unit = {
-    require(Files.exists(marker(path)),
-      s"$path has no _graft_buckets marker — initialize() the table first")
-    val stored = new String(Files.readAllBytes(marker(path)), StandardCharsets.UTF_8).trim.toInt
-    require(stored == numBuckets,
-      s"bucket-count mismatch for $path: table is laid out with $stored buckets, " +
-        s"caller passed $numBuckets — pruning with the wrong modulus would drop keys")
-  }
+  private def checkBuckets(path: String, numBuckets: Int): Unit =
+    checkMarker(path, numBuckets.toString, "bucket-count",
+      "pruning with the wrong modulus would drop keys")
 
   private def requireNoBucketCol(df: DataFrame): Unit =
     require(!df.columns.contains(BucketCol),
@@ -94,21 +78,20 @@ object StreamingUpsert {
       .withColumn(BucketCol, bucketOf(keyCol, numBuckets))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(path)
-    writeMarker(path, numBuckets)
+    writeMarker(path, numBuckets.toString)
   }
 
   /** Fold one micro-batch of change rows into the stored history:
     * prune to the touched buckets, [[Scd2.merge]] within them, rewrite
-    * only them. Exposed (not just inside `foreachBatch`) so tests and
-    * custom sinks can drive it; calling it twice with the same batch
-    * is a content no-op. */
+    * only them. A stream drives it through [[MaintainedStore.maintain]];
+    * calling it twice with the same batch is a content no-op. */
   def applyScd2Batch(
       batch: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       attrCols: Seq[String], path: String, numBuckets: Int
   ): Unit = {
     if (batch.isEmpty) return
     requireNoBucketCol(batch)
-    checkMarker(path, numBuckets)
+    checkBuckets(path, numBuckets)
     val spark = batch.sparkSession
     val withKb = batch.withColumn(BucketCol, bucketOf(keyCol, numBuckets))
     withKb.persist()
@@ -123,23 +106,6 @@ object StreamingUpsert {
         .partitionBy(BucketCol).parquet(path)
     } finally withKb.unpersist()
   }
-
-  /** Wire a change stream to SCD2 maintenance of the store at `path`
-    * (created by [[initializeScd2]]). Returns the started query. */
-  def maintainScd2(
-      stream: DataFrame, keyCol: String, tsCol: String, tieCol: String,
-      attrCols: Seq[String], path: String, numBuckets: Int,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyScd2Batch(batch, keyCol, tsCol, tieCol, attrCols, path, numBuckets)
-      }
-      .start()
 
   // ================================================================ latest-wins CDC (Type 1)
 
@@ -170,7 +136,7 @@ object StreamingUpsert {
       .withColumn(BucketCol, bucketOf(keyCol, numBuckets))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(path)
-    writeMarker(path, numBuckets)
+    writeMarker(path, numBuckets.toString)
   }
 
   /** Fold one micro-batch of upserts into the Type-1 store: prune to
@@ -182,7 +148,7 @@ object StreamingUpsert {
   ): Unit = {
     if (batch.isEmpty) return
     requireNoBucketCol(batch)
-    checkMarker(path, numBuckets)
+    checkBuckets(path, numBuckets)
     val spark = batch.sparkSession
     val withKb = batch.withColumn(BucketCol, bucketOf(keyCol, numBuckets))
     withKb.persist()
@@ -196,20 +162,4 @@ object StreamingUpsert {
         .partitionBy(BucketCol).parquet(path)
     } finally withKb.unpersist()
   }
-
-  /** Wire an upsert stream to Type-1 maintenance of the store at
-    * `path` (created by [[initializeLatest]]). */
-  def maintainLatest(
-      stream: DataFrame, keyCol: String, tsCol: String, tieCol: String,
-      path: String, numBuckets: Int, checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyLatestBatch(batch, keyCol, tsCol, tieCol, path, numBuckets)
-      }
-      .start()
 }

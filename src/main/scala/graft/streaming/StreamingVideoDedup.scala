@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Dedup, Multimodal}
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** Streaming VIDEO near-dup admission — the 12th maintenance store and
   * the last media member of the admission ladder
@@ -38,35 +38,15 @@ import graft.operators.{Dedup, Multimodal}
   * `maxBucket` cap trades exact replay identity at the cap boundary
   * for bounded worst-case cost, like every blocking join in the repo.
   */
-object StreamingVideoDedup {
+object StreamingVideoDedup extends MaintainedStore {
 
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
+  protected val marker = "_graft_vfp"
 
   final case class Params(numBuckets: Int, maxBucket: Int = 1000) {
     def encoded: String = s"$numBuckets;$maxBucket"
   }
 
-  private val MarkerName = "_graft_vfp"
-
   private def bucketOf(numBuckets: Int) = pmod(hash(col("fp")), lit(numBuckets))
-
-  /** Whether `initialize` completed for this store path (marker
-    * written last, so a crashed initialize reads false). */
-  def initialized(storePath: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(storePath, MarkerName))
-
-  private def writeMarker(path: String, p: Params): Unit =
-    StoreFiles.writeMarker(path, MarkerName, p.encoded)
-
-  private def checkMarker(path: String, p: Params): Unit = {
-    val stored = StoreFiles.readMarker(
-      path, MarkerName, "initialize() the store first")
-    require(stored == p.encoded,
-      s"video posting-table parameter mismatch for $path: store laid out with " +
-        s"($stored), caller passed (${p.encoded}) — mixed bucket layouts " +
-        "silently lose overlap recall")
-  }
 
   // explicit schema: survives the empty-store cold start
   private def readStore(
@@ -97,7 +77,7 @@ object StreamingVideoDedup {
     corpus
       .withColumn(BatchCol, lit(-1L))
       .write.mode("overwrite").partitionBy(BatchCol).parquet(sinkPath)
-    writeMarker(storePath, p)
+    writeMarker(storePath, p.encoded)
   }
 
   /** Admit one video batch against the posting store + corpus sink.
@@ -109,7 +89,8 @@ object StreamingVideoDedup {
       storePath: String, sinkPath: String, p: Params,
       payloadCol: String = "payload"): Unit = {
     if (batch.isEmpty) return
-    checkMarker(storePath, p)
+    checkMarker(storePath, p.encoded, "video posting-table parameter",
+      "mixed bucket layouts silently lose overlap recall")
     val spark = batch.sparkSession
     val batchFps = postingsOf(batch, idCol, payloadCol, p).persist()
     try {
@@ -186,20 +167,4 @@ object StreamingVideoDedup {
       import spark.implicits._
       Seq.empty[Long].toDF(idCol)
     }
-
-  /** Wire a video stream (`idCol`, `payload`) to near-dup admission. */
-  def maintain(
-      stream: DataFrame, idCol: String,
-      storePath: String, sinkPath: String, p: Params,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(batch, id, idCol, storePath, sinkPath, p)
-      }
-      .start()
 }

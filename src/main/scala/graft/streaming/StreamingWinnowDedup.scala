@@ -2,9 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
+import MaintainedStore.{BatchCol, BucketCol}
 
 /** Streaming WINNOW-dup corpus admission — the foreachBatch twin of
   * [[graft.operators.Dedup.winnowPairs]], completing the admission
@@ -50,10 +50,9 @@ import graft.operators.Dedup
   * `_graft_buckets` sidecar and re-checked fail-loud — postings from
   * different (n, w) must never merge.
   */
-object StreamingWinnowDedup {
+object StreamingWinnowDedup extends MaintainedStore {
 
-  val BucketCol = "__kb"
-  val BatchCol  = "__batch_id"
+  protected val marker = "_graft_buckets"
 
   final case class Params(
       numBuckets: Int, n: Int = 4, w: Int = 5,
@@ -62,20 +61,6 @@ object StreamingWinnowDedup {
   }
 
   private def bucketOf(numBuckets: Int) = pmod(hash(col("fp")), lit(numBuckets))
-
-  private val MarkerName = "_graft_buckets"
-
-  private def writeMarker(path: String, p: Params): Unit =
-    StoreFiles.writeMarker(path, MarkerName, p.encoded)
-
-  private def checkMarker(path: String, p: Params): Unit = {
-    val stored = StoreFiles.readMarker(
-      path, MarkerName, "initialize() the store first").trim
-    require(stored == p.encoded,
-      s"fingerprint-table parameter mismatch for $path: store laid out with " +
-        s"($stored), caller passed (${p.encoded}) — mixed winnowing parameters " +
-        "silently corrupt the shared-fingerprint criterion")
-  }
 
   // explicit schema: survives the empty-store cold start. Ids are
   // constrained to BIGINT by the store, checked at initialize.
@@ -102,7 +87,7 @@ object StreamingWinnowDedup {
     corpus
       .withColumn(BatchCol, lit(-1L))
       .write.mode("overwrite").partitionBy(BatchCol).parquet(corpusOutPath)
-    writeMarker(storePath, p)
+    writeMarker(storePath, p.encoded)
   }
 
   /** Admit one micro-batch against the fingerprint store. Exposed for
@@ -112,7 +97,8 @@ object StreamingWinnowDedup {
       batch: DataFrame, batchId: Long, idCol: String, textCol: String,
       storePath: String, corpusOutPath: String, p: Params): Unit = {
     if (batch.isEmpty) return
-    checkMarker(storePath, p)
+    checkMarker(storePath, p.encoded, "fingerprint-table parameter",
+      "mixed winnowing parameters silently corrupt the shared-fingerprint criterion")
     val spark = batch.sparkSession
     val batchFps = Dedup.winnowFingerprints(batch, idCol, textCol, p.n, p.w)
       .select(col(idCol), col("fp")).distinct()
@@ -164,20 +150,4 @@ object StreamingWinnowDedup {
       } finally admitted.unpersist(blocking = false)
     } finally batchFps.unpersist()
   }
-
-  /** Wire a document stream to winnow-dup corpus admission. */
-  def maintain(
-      stream: DataFrame, idCol: String, textCol: String,
-      storePath: String, corpusOutPath: String, p: Params,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")
-  ): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        applyBatch(batch, bid, idCol, textCol, storePath, corpusOutPath, p)
-      }
-      .start()
 }

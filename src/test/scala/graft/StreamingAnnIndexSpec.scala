@@ -126,4 +126,37 @@ class StreamingAnnIndexSpec extends SparkSpec {
       .select("id", "cell").as[(Long, Int)].collect().toSet
     assert(enc2.select("id", "cell").as[(Long, Int)].collect().toSet === scratch)
   }
+
+  test("pipeline knn_encode mode admit: a bootstrap that crashed after its first marker re-bootstraps and admits") {
+    import java.nio.file.{Files, Paths}
+    val (src, state) = (Files.createTempDirectory("graft-annc-src").toString,
+      Files.createTempDirectory("graft-annc-state").toString)
+    val rows = (0L until 12L).map(i => (i, s"d$i", vec(i.toInt)))
+      .toDF("vec_id", "text", "embedding")
+    AnnIndex.trainIvf(rows, "vec_id", "embedding", nCells = 4)
+      .write.parquet(s"$src/ann_model.parquet")
+    rows.write.parquet(s"$src/embeddings.parquet")
+    // the state a crash leaves when initialize() died after writing
+    // _graft_buckets but before the schema it pins
+    val store = Paths.get(state, "encoded", "encoded")
+    Files.createDirectories(store)
+    Files.writeString(store.resolve("_graft_buckets"), "8")
+    assert(!StreamingAnnIndex.initialized(store.toString))
+    val y = Files.createTempFile("graft-annc", ".yaml")
+    Files.writeString(y,
+      """pipeline: ann_admit
+        |id: vec_id
+        |text: text
+        |steps:
+        |  - name: encoded
+        |    op: knn_encode
+        |    input: embeddings
+        |    params: { model: ann_model, mode: admit, buckets: "8" }
+        |""".stripMargin)
+    val out = Files.createTempDirectory("graft-annc-out").toString
+    Cli.run(Seq("pipeline", y.toString, src, out, "--state", state), spark)
+    assert(spark.read.parquet(s"$out/encoded").count() === 12L)
+    assert(StreamingAnnIndex.initialized(store.toString))
+    assert(Files.readString(store.resolve("_graft_schema")) === IvfSchema)
+  }
 }

@@ -88,7 +88,7 @@ class StreamingLineDedupSpec extends SparkSpec {
     StreamingLineDedup.compact(spark, store, "\n", upToBatchId = 0L)
     assert(storeDf(store) == before, "compaction must not change totals")
     val parts = spark.read.parquet(store)
-      .select(col(StreamingLineDedup.BatchCol).cast("long")).distinct()
+      .select(col(graft.streaming.MaintainedStore.BatchCol).cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
     assert(parts == Set(-1L, 1L), s"expected fold into -1 keeping 1, got $parts")
     // a replay of the kept (uncommitted) batch is still a no-op

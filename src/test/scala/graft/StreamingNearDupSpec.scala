@@ -46,6 +46,27 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(corpusIds(out) === Set(10L, 12L, 21L))
   }
 
+  test("a corpus-sink read failure fails the batch instead of admitting near-dups") {
+    val root  = Files.createTempDirectory("graft-snd-body").toString
+    val store = s"$root/postings"
+    val out   = s"$root/corpus"
+    StreamingNearDup.initialize(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "doc_id", "text", store, out, p)
+    StreamingNearDup.applyBatch(
+      Seq((10L, base)).toDF("doc_id", "text"), 0L, "doc_id", "text", store, out, p)
+    assert(corpusIds(out) === Set(10L))
+    // batch 1 names its text column `body`, which the sink never held:
+    // the verification corpus cannot be read, so the batch must fail
+    // rather than verify against nothing and admit doc 20
+    val b1 = Seq((20L, base.replace("mu", "nu"))).toDF("doc_id", "body")
+    val e = intercept[Exception] {
+      StreamingNearDup.applyBatch(b1, 1L, "doc_id", "body", store, out, p)
+    }
+    assert(e.getMessage.contains("body"), e.getMessage)
+    assert(corpusIds(out) === Set(10L))
+  }
+
   test("replaying a micro-batch is a content no-op") {
     val root  = Files.createTempDirectory("graft-snd2").toString
     val store = s"$root/postings"

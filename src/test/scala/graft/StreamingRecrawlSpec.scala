@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamingRecrawl
+import graft.streaming.{MaintainedStore, StreamingRecrawl}
 
 /** Last-fetch store + recrawl admission: due rules against maintained
   * state, store advance, one-step replay idempotency (byte-identical
@@ -42,7 +42,7 @@ class StreamingRecrawlSpec extends SparkSpec {
       (3L, "http://h/c", "", "never"),
       (4L, "http://h/d", "", ""))
     apply1(n1, store, sink, batchId = 0L, now = T0)
-    val f1 = spark.read.parquet(sink).filter(col(StreamingRecrawl.BatchCol) === 0)
+    val f1 = spark.read.parquet(sink).filter(col(MaintainedStore.BatchCol) === 0)
     assert(f1.count() === 4)
     assert(f1.select("recrawl_reason").distinct().collect()
       .map(_.getString(0)).toSeq === Seq("new"))
@@ -55,7 +55,7 @@ class StreamingRecrawlSpec extends SparkSpec {
       (4L, "http://h/d", "", ""),                           // default 7d, 2d old -> not due
       (5L, "http://h/e", "", "daily"))                      // unseen -> new
     apply1(n2, store, sink, batchId = 1L, now = T0 + 2 * Day)
-    val f2 = spark.read.parquet(sink).filter(col(StreamingRecrawl.BatchCol) === 1)
+    val f2 = spark.read.parquet(sink).filter(col(MaintainedStore.BatchCol) === 1)
     val got = f2.select("url", "recrawl_reason").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got === Map(
@@ -112,7 +112,7 @@ class StreamingRecrawlSpec extends SparkSpec {
     applyFetch(Seq((1L, "http://h/a", "fpA2"), (2L, "http://h/b", "fpB1")),
       store, sink, batchId = 1L, now = T0 + Day)
     val n2 = spark.read.parquet(sink)
-      .filter(col(StreamingRecrawl.BatchCol) === 1L)
+      .filter(col(MaintainedStore.BatchCol) === 1L)
       .select("url", "change_kind", "content_changed").collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getBoolean(2)))).toMap
     assert(n2 === Map(
@@ -153,7 +153,7 @@ class StreamingRecrawlSpec extends SparkSpec {
     applyFetch(n3, store, sink, batchId = 3L, now = T0 + 2 * Day + 60)
     def snapshot(): (Map[String, (String, Boolean)], Set[Seq[Any]]) = (
       spark.read.parquet(sink)
-        .filter(col(StreamingRecrawl.BatchCol) === 3L)
+        .filter(col(MaintainedStore.BatchCol) === 3L)
         .select("url", "change_kind", "content_changed").collect()
         .map(r => r.getString(0) -> ((r.getString(1), r.getBoolean(2)))).toMap,
       spark.read.parquet(store).collect().map(_.toSeq).toSet)
@@ -179,7 +179,7 @@ class StreamingRecrawlSpec extends SparkSpec {
         defaultAgeS = Day, adaptive = true)
     def dueAt(batchId: Long): Set[String] =
       spark.read.parquet(dsink)
-        .filter(col(StreamingRecrawl.BatchCol) === batchId)
+        .filter(col(MaintainedStore.BatchCol) === batchId)
         .select("url").collect().map(_.getString(0)).toSet
     // three unchanged fetches build streak 2 on /a
     applyFetch(Seq((1L, "http://h/a", "fpA")), store, fsink, 0L, T0)

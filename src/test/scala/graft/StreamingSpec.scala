@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
       .select("user_id", "ts", "event_id", "event_type", "value")
 
   private def storeContents(path: String): Set[org.apache.spark.sql.Row] = {
-    val df = spark.read.parquet(path).drop(graft.streaming.StreamingUpsert.BucketCol)
+    val df = spark.read.parquet(path).drop(graft.streaming.MaintainedStore.BucketCol)
     df.select(df.columns.sorted.map(col): _*).collect().toSet
   }
 
@@ -319,10 +319,11 @@ class StreamingSpec extends SparkSpec {
     // micro-batch 2 through the REAL foreachBatch wiring (file stream)
     val stage = Files.createTempDirectory("graft-stream-scd2-src").toString
     half2.coalesce(1).write.mode("append").parquet(stage)
-    val q = StreamingUpsert.maintainScd2(
+    val q = graft.streaming.MaintainedStore.maintain(
       spark.readStream.schema(log.schema).parquet(stage),
-      "user_id", "ts", "event_id", attrs, path, B,
-      Files.createTempDirectory("graft-stream-scd2-ck").toString)
+      Files.createTempDirectory("graft-stream-scd2-ck").toString) { (batch, _) =>
+      StreamingUpsert.applyScd2Batch(batch, "user_id", "ts", "event_id", attrs, path, B)
+    }
     try q.processAllAvailable()
     finally q.stop()
 
@@ -347,7 +348,7 @@ class StreamingSpec extends SparkSpec {
     val before = bucketFiles(path)
     StreamingUpsert.applyScd2Batch(oneKey, "user_id", "ts", "event_id", attrs, path, B)
     val after = bucketFiles(path)
-    val otherBuckets = (f: String) => !f.startsWith(s"${StreamingUpsert.BucketCol}=$keyBucket/")
+    val otherBuckets = (f: String) => !f.startsWith(s"${graft.streaming.MaintainedStore.BucketCol}=$keyBucket/")
     assert(before.filter(otherBuckets) == after.filter(otherBuckets),
       "buckets the batch does not touch must not be rewritten")
     assert(before.filter(f => !otherBuckets(f)) != after.filter(f => !otherBuckets(f)),
@@ -447,6 +448,41 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(corpusOut).count() == admitted)
   }
 
+  test("generic maintain drives a batch-id store: admission over two micro-batches") {
+    import spark.implicits._
+    import graft.streaming.{MaintainedStore, StreamingAdmission}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val root = Files.createTempDirectory("graft-adm-stream").toString
+    val (fpStore, corpusOut) = (root + "/fps", root + "/admitted")
+    StreamingAdmission.initialize(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", fpStore, 8)
+    val input = MemoryStream[(Long, String)](spark)
+    val q = MaintainedStore.maintain(
+      input.toDF().toDF("doc_id", "text"),
+      Files.createTempDirectory("graft-adm-stream-ck").toString,
+      Trigger.ProcessingTime(0L)) { (batch, batchId) =>
+      StreamingAdmission.applyBatch(
+        batch, "doc_id", "text", fpStore, corpusOut, 8, batchId)
+    }
+    try {
+      input.addData((1L, "alpha beta gamma"), (2L, "delta epsilon"))
+      q.processAllAvailable()
+      // doc 3 re-sends doc 1's content in the NEXT micro-batch
+      input.addData((3L, "alpha beta gamma"), (4L, "zeta eta theta"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val admitted = spark.read.parquet(corpusOut)
+      .select(col("doc_id"), col(MaintainedStore.BatchCol))
+      .as[(Long, Long)].collect().toSet
+    assert(admitted === Set((1L, 0L), (2L, 0L), (4L, 1L)),
+      "each micro-batch admits under its own batch id; the cross-batch duplicate is rejected")
+    val partitions = java.nio.file.Files.list(java.nio.file.Paths.get(corpusOut))
+      .toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(_.contains("=")).toSet
+    assert(partitions === Set("__batch_id=0", "__batch_id=1"))
+  }
+
   test("streaming sketch maintenance equals batch registers; replay no-op; m guard") {
     import graft.streaming.StreamingSketch
     import graft.functions.RegisterSketch
@@ -460,10 +496,11 @@ class StreamingSpec extends SparkSpec {
     // micro-batch 2 through the REAL foreachBatch wiring (file stream)
     val stage = Files.createTempDirectory("graft-stream-sk-src").toString
     ev.filter(col("ts") >= split).coalesce(1).write.mode("append").parquet(stage)
-    val q = StreamingSketch.maintain(
+    val q = graft.streaming.MaintainedStore.maintain(
       spark.readStream.schema(ev.schema).parquet(stage),
-      "ts", "user_id", path, m,
-      Files.createTempDirectory("graft-stream-sk-ck").toString)
+      Files.createTempDirectory("graft-stream-sk-ck").toString) { (batch, _) =>
+      StreamingSketch.applyBatch(batch, "ts", "user_id", path, m)
+    }
     try q.processAllAvailable()
     finally q.stop()
 
