@@ -426,7 +426,7 @@ object Bench {
     //   SPARK_GRAFT_LOADAVG0="$(cut -d' ' -f1-3 /proc/loadavg)" sbt ...
     val loadPrelaunch = sys.env.getOrElse("SPARK_GRAFT_LOADAVG0", "")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = GraftSession.cpus
     // Bounded idle-wait BEFORE the honesty readings: ambient machine
     // load (sbt compile tails, a co-scheduled verify) vetoed two
     // consecutive otherwise-clean driver records via the START trigger.
@@ -451,40 +451,9 @@ object Bench {
     // gone quiet for. It stays in the record verbatim either way.
     val loadJvmStart = loadavg
     val prelaunchForFlag = if (idleReached) "" else loadPrelaunch
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE: spark.sql.adaptive.coalescePartitions.parallelismFirst
-      // =false (the Spark-docs production recommendation) was measured
-      // here and is WORSE at this scale (33.8s vs 31.7s total at equal
-      // load): with local[32] and fixture-sized shuffles, maximizing
-      // parallelism beats fewer-larger partitions. Left at default.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // NOTE: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-      // =true was measured here (r17) and REJECTED: it lets AQE
-      // coalesce a persisted mid-size frame to one partition, which
-      // then serializes every downstream stage that touches the cache —
-      // events_pagerank10's 10 iterations over its persisted edge list
-      // went 6.5s → 22.0s in the full-bench A/B. Left at default.
-      // pack small files denser into scan tasks: the default 4 MB
-      // open-cost gives every file its own split as soon as files are
-      // tiny, so a bucketed maintained store (cell × bucket dirs) scans
-      // with one task per file. 128 KB keeps multi-GB production files
-      // at one-split-per-128MB while letting small-file stores pack
-      // ~32 files per task (r17, measured on the ANN store gates).
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      // NOTE on scan parallelism: the testdata tables are single-file,
-      // SINGLE-ROW-GROUP parquet (checked), so their scans are
-      // unsplittable 1-task reads regardless of
-      // spark.sql.files.maxPartitionBytes — don't bother tuning it
-      // here. This is a property of the fixture data; production
-      // multi-file tables (and the bucketed source copies, 32 files)
-      // scan wide.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // session settings, and the configs measured and rejected for it,
+    // live in GraftSession
+    val spark = GraftSession.create(cpus)
     // The remaining bounded global windows (term-freq rank over a
     // limit(100), skew top-k over a limit(topK), PPS offsets over
     // ≤|partitions| rows) each trip WindowExec's benign

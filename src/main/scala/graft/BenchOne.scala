@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query bench harness for iteration: times one named suite
   * query (same warm-up + median-of-3 protocol as [[Bench]]) without
   * paying the full registry sweep. `runMain graft.BenchOne <name>`.
@@ -14,18 +12,7 @@ object BenchOne {
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fn = Bench.suite.collectFirst { case (`name`, f) => f }
       .getOrElse(sys.error(s"unknown bench query: $name"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // engine session tuning (see Bench.scala's notes): small files
-      // pack denser into scan tasks
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     def run(): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     run() // warm

@@ -308,23 +308,7 @@ object Cli {
   def main(args: Array[String]): Unit = {
     // the session is built lazily by run() AFTER arg/model validation:
     // usage errors print immediately instead of booting Spark first
-    lazy val spark: SparkSession = {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-      // engine session tuning (see Bench.scala's notes): small files
-      // pack denser into scan tasks
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    lazy val spark: SparkSession = GraftSession.create()
     var started = false
     var exitCode = 0
     // stop the session in a finally so a non-CliError failure (an

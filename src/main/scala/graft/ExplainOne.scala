@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-artifact dumper: writes `explain("formatted")` of named suite
   * queries to files — the r17 optimization round's before/after plan
   * evidence (`plans/r17/<query>_{before,after}.txt`). Diagnostic tool,
@@ -17,16 +15,7 @@ object ExplainOne {
     val names  = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir  = if (args.length > 3) args(3)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val fn = Bench.suite.collectFirst { case (`name`, f) => f }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job profiling harness for optimization work: runs ONE suite
   * query (warm + 1 profiled run) with a listener that records every
@@ -17,18 +16,7 @@ object ProfileOne {
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fn = Bench.suite.collectFirst { case (`name`, f) => f }
       .getOrElse(sys.error(s"unknown bench query: $name"))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // engine session tuning (see Bench.scala's notes): small files
-      // pack denser into scan tasks
-      .config("spark.sql.files.openCostInBytes", (128 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     def run(): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     run() // warm

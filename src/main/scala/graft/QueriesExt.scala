@@ -792,14 +792,21 @@ object QueriesExt {
     val tmp = scratchDir(s, "ann-ivf")
     operators.AnnIndex.trainIvf(e, "vec_id", "embedding", nCells = 16)
       .write.mode("overwrite").parquet(s"$tmp/centroids")
-    // load the model table ONCE after its parquet round-trip; encode
-    // and query share the loaded copy
-    val cents = operators.AnnIndex.ivfModel(s.read.parquet(s"$tmp/centroids"))
-    operators.AnnIndex.encodeIvfWith(e, "vec_id", "embedding", cents)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/postings")
-    operators.AnnIndex.ivfKnnIndexedWith(
-      e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-      cents, s.read.parquet(s"$tmp/postings"))
+    storedSearch(e, tmp,
+      operators.AnnIndex.load(centroids = Some(s.read.parquet(s"$tmp/centroids"))))
+  }
+
+  /** The second half of every stored-index gate: encode the corpus
+    * against the model (loaded ONCE after its tables' parquet round
+    * trip), persist the codes — partitioned by `cell` when the index
+    * has a coarse quantizer, so probes prune — read them back, and
+    * search the 10-query probe set. */
+  private def storedSearch(
+      e: DataFrame, tmp: String, model: operators.AnnIndex.Model): DataFrame = {
+    val w = operators.AnnIndex.encode(model, e, "vec_id", "embedding").write.mode("overwrite")
+    (if (model.centroids.isDefined) w.partitionBy("cell") else w).parquet(s"$tmp/codes")
+    operators.AnnIndex.search(model, Some(e), e.filter(col("vec_id") < 10),
+      e.sparkSession.read.parquet(s"$tmp/codes"), "vec_id", "embedding", k = 5)
   }
 
   /** STORED PQ index — [[embedKnnIvfStored]]'s contract for the
@@ -810,15 +817,8 @@ object QueriesExt {
     val tmp = scratchDir(s, "ann-pq")
     operators.AnnIndex.trainPq(e, "vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/codebooks")
-    // load the model table ONCE after its parquet round-trip; encode
-    // and query share the loaded copy
-    val books = operators.AnnIndex.pqModel(s.read.parquet(s"$tmp/codebooks"))
-    operators.AnnIndex.encodePqWith(e, "vec_id", "embedding", books)
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    val out = operators.AnnIndex.pqKnnIndexedWith(
-      e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-      books, s.read.parquet(s"$tmp/codes"))
-    knnVerified(out, e)
+    knnVerified(storedSearch(e, tmp,
+      operators.AnnIndex.load(codebooks = Some(s.read.parquet(s"$tmp/codebooks")))), e)
   }
 
   /** Composed STORED IVF-PQ index (FAISS `IndexIVFPQ`, the
@@ -841,18 +841,11 @@ object QueriesExt {
     val tmp = scratchDir(s, "ann-ivfpq")
     operators.AnnIndex.trainIvf(e, "vec_id", "embedding", nCells = 16)
       .write.mode("overwrite").parquet(s"$tmp/centroids")
-    // load each model table ONCE after its parquet round-trip; train,
-    // encode and query share the loaded copy (re-collecting the same
-    // bounded table per stage was a per-run scheduler tax)
-    val cents = operators.AnnIndex.ivfModel(s.read.parquet(s"$tmp/centroids"))
-    operators.AnnIndex.trainIvfPqWith(e, "vec_id", "embedding", cents)
+    val cents = s.read.parquet(s"$tmp/centroids")
+    operators.AnnIndex.trainIvfPq(e, "vec_id", "embedding", cents)
       .write.mode("overwrite").parquet(s"$tmp/codebooks")
-    val books = operators.AnnIndex.pqModel(s.read.parquet(s"$tmp/codebooks"))
-    operators.AnnIndex.encodeIvfPqWith(e, "vec_id", "embedding", cents, books)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/codes")
-    operators.AnnIndex.ivfPqKnnIndexedWith(
-      e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-      cents, books, s.read.parquet(s"$tmp/codes"))
+    storedSearch(e, tmp, operators.AnnIndex.load(centroids = Some(cents),
+      codebooks = Some(s.read.parquet(s"$tmp/codebooks"))))
   }
 
   /** STORED OPQ index (FAISS `OPQ{m},PQ{m}` — a learned orthogonal
@@ -875,16 +868,9 @@ object QueriesExt {
     val (rotation, books) = operators.AnnIndex.trainOpq(e, "vec_id", "embedding")
     rotation.write.mode("overwrite").parquet(s"$tmp/rotation")
     books.write.mode("overwrite").parquet(s"$tmp/codebooks")
-    val rot = s.read.parquet(s"$tmp/rotation")
-    val cb = s.read.parquet(s"$tmp/codebooks")
-    // load + fail-loud-validate the model ONCE; encode and query share
-    // it (re-collecting the tables per call was a per-run driver tax)
-    val model = operators.AnnIndex.opqModel(rot, cb)
-    operators.AnnIndex.encodeOpqWith(e, "vec_id", "embedding", model)
-      .write.mode("overwrite").parquet(s"$tmp/codes")
-    operators.AnnIndex.opqKnnIndexedWith(
-      e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-      model, s.read.parquet(s"$tmp/codes"))
+    storedSearch(e, tmp, operators.AnnIndex.load(
+      rotation = Some(s.read.parquet(s"$tmp/rotation")),
+      codebooks = Some(s.read.parquet(s"$tmp/codebooks"))))
   }
 
   /** Fully composed STORED OPQ+IVF-PQ index (FAISS
@@ -908,18 +894,10 @@ object QueriesExt {
     rotation.write.mode("overwrite").parquet(s"$tmp/rotation")
     centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
     books.write.mode("overwrite").parquet(s"$tmp/codebooks")
-    val rot = s.read.parquet(s"$tmp/rotation")
-    val cents = s.read.parquet(s"$tmp/centroids")
-    val cb = s.read.parquet(s"$tmp/codebooks")
-    // load + fail-loud-validate both models ONCE; encode and query
-    // share them (re-collecting per call was a per-run driver tax)
-    val opq = operators.AnnIndex.opqModel(rot, cb)
-    val centsArr = operators.AnnIndex.ivfModel(cents)
-    operators.AnnIndex.encodeIvfOpqWith(e, "vec_id", "embedding", opq, centsArr)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/codes")
-    operators.AnnIndex.ivfOpqKnnIndexedWith(
-      e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-      opq, centsArr, s.read.parquet(s"$tmp/codes"))
+    storedSearch(e, tmp, operators.AnnIndex.load(
+      centroids = Some(s.read.parquet(s"$tmp/centroids")),
+      codebooks = Some(s.read.parquet(s"$tmp/codebooks")),
+      rotation = Some(s.read.parquet(s"$tmp/rotation"))))
   }
 
   /** STORED IVF-SQ8 index (FAISS `IVF,SQ8` — scalar-quantized
@@ -939,14 +917,8 @@ object QueriesExt {
     val tmp = scratchDir(s, "ann-ivfsq")
     operators.AnnIndex.trainIvf(e, "vec_id", "embedding", nCells = 16)
       .write.mode("overwrite").parquet(s"$tmp/centroids")
-    // load the model table ONCE after its parquet round-trip; encode
-    // and query share the loaded copy
-    val cents = operators.AnnIndex.ivfModel(s.read.parquet(s"$tmp/centroids"))
-    operators.AnnIndex.encodeIvfSqWith(e, "vec_id", "embedding", cents)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$tmp/codes")
-    operators.AnnIndex.ivfSqKnnIndexedWith(
-      e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-      cents, s.read.parquet(s"$tmp/codes"))
+    storedSearch(e, tmp, operators.AnnIndex.load(
+      centroids = Some(s.read.parquet(s"$tmp/centroids")), sq8 = true))
   }
 
   /** The exact all-pairs cosine universe for query ids < 10 — shared
@@ -4225,12 +4197,12 @@ object QueriesExt {
     val cents = s.read.parquet(s"$tmp/scratchidx/centroids")
     operators.AnnIndex.trainIvfPq(withPage, "vec_id", "embedding", cents)
       .write.parquet(s"$tmp/scratchidx/books")
-    val books = s.read.parquet(s"$tmp/scratchidx/books")
-    val codes = operators.AnnIndex.encodeIvfPq(
-      withPage, "vec_id", "embedding", cents, books)
-    val fromScratch = operators.AnnIndex.ivfPqKnnIndexed(
-      withPage, withPage.filter(col("vec_id") < 10), "vec_id", "embedding",
-      k = 5, cents, books, codes, nProbe = 3, shortlist = 32)
+    val model = operators.AnnIndex.load(centroids = Some(cents),
+      codebooks = Some(s.read.parquet(s"$tmp/scratchidx/books")))
+    val fromScratch = operators.AnnIndex.search(model, Some(withPage),
+      withPage.filter(col("vec_id") < 10),
+      operators.AnnIndex.encode(model, withPage, "vec_id", "embedding"),
+      "vec_id", "embedding", k = 5, nProbe = 3, shortlist = 32)
     val hits3 = s.read.parquet(s"$tmp/out3/hits")
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
     // bitwise multiset equality via TWO bounded collects (k × nQueries

@@ -1,76 +1,125 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted ANN indexes: the train-once → store → reuse workflow
-  * (the FAISS production shape) over [[Similarity]]'s IVF and PQ
-  * machinery.
+  * (the FAISS production shape) over [[Similarity]]'s quantizer
+  * arithmetic.
   *
-  * [[Similarity.ivfKnn]]/[[Similarity.pqKnn]] retrain their
-  * quantizer/codebooks on every invocation — fine for one-shot
-  * analysis, wrong for a nightly 100 TB pipeline, where per-query
-  * retraining burns a corpus sample + Lloyd's per run AND makes
-  * shortlists drift as the corpus grows. Here the trained model
-  * and the per-vector codes become ordinary tables:
+  * Every index kind is ONE composition, the FAISS index-factory
+  * shape (Johnson, Douze & Jégou, "Billion-scale similarity search
+  * with GPUs", 2017): an optional OPQ rotation, an optional IVF
+  * coarse quantizer, and a codec — `Flat` (float postings), `Sq8`
+  * (per-vector int8 codes) or `Pq` (product codes, over the cell
+  * RESIDUAL when a coarse quantizer is present) — followed by an
+  * exact rerank. The six supported compositions are
   *
-  *  - IVF: `centroids` `(cell INT, centroid ARRAY<DOUBLE>)` and
-  *    `postings` `(id, cell INT, vector ARRAY<FLOAT>)` — the
-  *    inverted-list layout; write postings partitioned by `cell` and
-  *    a probe reads only its `nProbe` partitions at scale.
-  *  - PQ: `codebooks` `(subspace INT, code INT, dim INT,
-  *    centroid ARRAY<DOUBLE>)` and `codes` `(id, codes ARRAY<INT>)` —
-  *    8 bytes per vector at the default m=8; the exact rescore still
-  *    reads the raw corpus, so codes tables stay tiny.
+  *  | kind         | rotation | coarse | codec | codes table                     |
+  *  |--------------|----------|--------|-------|---------------------------------|
+  *  | IVF,Flat     |          | yes    | Flat  | `(id, cell, vector)`            |
+  *  | IVF,SQ8      |          | yes    | Sq8   | `(id, cell, scale, q)`          |
+  *  | PQ           |          |        | Pq    | `(id, codes)`                   |
+  *  | OPQ,PQ       | yes      |        | Pq    | `(id, codes)`                   |
+  *  | IVF,PQ       |          | yes    | Pq    | `(id, cell, codes)`             |
+  *  | OPQ,IVF,PQ   | yes      | yes    | Pq    | `(id, cell, codes)`             |
+  *
+  * and any other combination is rejected by [[Model]]. Three
+  * functions serve every kind: [[load]] builds the model from its
+  * tables once (fail loud on a malformed table), [[encode]] encodes
+  * a corpus, [[search]] answers a query batch. The `train*`
+  * functions produce the model tables.
+  *
+  * Model tables (unchanged on-disk formats):
+  *  - centroids `(cell INT, centroid ARRAY<DOUBLE>)` — unit-normalized,
+  *    contiguous 0-based cells;
+  *  - codebooks `(subspace INT, code INT, dim INT,
+  *    centroid ARRAY<DOUBLE>)` — `dim` constant across rows;
+  *  - rotation `(row INT, dim INT, coeffs ARRAY<DOUBLE>)` — orthogonal;
+  *  - the combined OPQ table ([[trainOpqCombined]]): codebook rows
+  *    with `rot_row = NULL` plus rotation rows in the `centroid`
+  *    column keyed by `rot_row`.
+  *
+  * Write cell-carrying codes `.partitionBy("cell")`: [[search]]
+  * collects the probed-cell set driver-side and filters on it, so a
+  * probe reads only its `nProbe` partitions (pinned in PlanSpec).
+  * Quantized codecs rescore their shortlist exactly over the raw
+  * corpus, so every returned cosine is exact.
   *
   * Determinism contract: training is seeded and sample order is an
-  * id-hash ([[Similarity.trainIvfModel]] / [[Similarity.trainPqModel]]),
-  * centroid doubles round-trip parquet exactly, and the indexed search
-  * paths share the retrain paths' UDF arithmetic verbatim — so
-  * query-against-stored-index returns IDENTICAL rows to a same-seed
-  * retrain (pinned in SimilaritySpec and the `embed_knn_*_stored`
-  * gates).
+  * id-hash, centroid doubles round-trip parquet exactly, and the
+  * [[Similarity]] retrain paths (`ivfKnn`, `pqKnn`, `opqKnn`,
+  * `ivfPqKnn`, `ivfSqKnn`) are themselves train → [[encode]] →
+  * [[search]] — so a query against a stored index returns IDENTICAL
+  * rows to a same-seed retrain (pinned in SimilaritySpec and the
+  * `embed_knn_*_stored` gates).
   */
 object AnnIndex {
 
-  /** Model tables are collected driver-side at query time — bounded by
-    * construction (an IVF quantizer has ~√N cells at most; a PQ
-    * codebook is m × kCodes), but a wrong table passed as a model must
-    * fail loud, not OOM the driver. */
+  /** Model tables are collected driver-side — bounded by construction
+    * (an IVF quantizer has ~√N cells at most; a PQ codebook is
+    * m × kCodes), but a wrong table passed as a model must fail loud,
+    * not OOM the driver. */
   val MaxModelRows = 1 << 20
 
-  private def boundedModelRows(df: DataFrame, what: String): Array[org.apache.spark.sql.Row] = {
-    val rows = df.limit(MaxModelRows + 1).collect()
-    require(rows.length <= MaxModelRows,
-      s"$what: model table has more than $MaxModelRows rows — not a trained " +
-        "model table (did you pass the corpus by mistake?)")
-    rows
+  /** What a vector is stored as inside its cell (or globally without a
+    * coarse quantizer). */
+  sealed trait Codec
+  /** The float vector itself; ranked exactly within probed cells. */
+  case object Flat extends Codec
+  /** Symmetric per-vector int8 codes ([[Quantize.int8]]'s formula). */
+  case object Sq8 extends Codec
+  /** m product-quantizer codes — of the unit vector, or of its
+    * residual against the assigned cell centroid under IVF. */
+  final case class Pq(books: Similarity.PqModel) extends Codec
+
+  /** One index: optional rotation, optional coarse quantizer, codec.
+    * Flat and Sq8 exist only under a coarse quantizer and without a
+    * rotation (IVF,Flat and IVF,SQ8); Pq composes with both. */
+  final case class Model(
+      rotation: Option[Array[Array[Double]]],
+      centroids: Option[Array[Array[Double]]],
+      codec: Codec) {
+    require(codec.isInstanceOf[Pq] || (centroids.isDefined && rotation.isEmpty),
+      s"AnnIndex.Model: $kind is not a supported index — the Flat and SQ8 " +
+        "codecs need an IVF coarse quantizer and take no rotation")
+    centroids.foreach(c => require(c.nonEmpty, "AnnIndex.Model: empty centroid set"))
+    codec match {
+      case Pq(books) => rotation.foreach(r =>
+        require(r.length == books.dim && r.forall(_.length == books.dim),
+          s"AnnIndex.Model: the rotation is not ${books.dim}x${books.dim}"))
+      case _ =>
+    }
+
+    /** The FAISS index-factory style name, e.g. `OPQ,IVF16,PQ8`. */
+    def kind: String = {
+      val c = codec match {
+        case Flat => "Flat"
+        case Sq8 => "SQ8"
+        case Pq(b) => s"PQ${b.m}"
+      }
+      (rotation.map(_ => "OPQ") ++ centroids.map(cs => s"IVF${cs.length}") ++ Seq(c))
+        .mkString(",")
+    }
+
+    /** The schema of [[encode]]'s output (the maintained-store family
+      * string of [[graft.streaming.StreamingAnnIndex]]). */
+    def codesSchema: String = {
+      val payload = codec match {
+        case Flat => "vector ARRAY<FLOAT>"
+        case Sq8 => "scale DOUBLE, q ARRAY<INT>"
+        case Pq(_) => "codes ARRAY<INT>"
+      }
+      s"id BIGINT, ${if (centroids.isDefined) "cell INT, " else ""}$payload"
+    }
   }
 
-  /** The distinct probed-cell set of a query batch — bounded by the
-    * cell count (never the query count), collected driver-side to
-    * become an IN filter on the stored table's `cell` partition
-    * column, so a `partitionBy("cell")` index reads only its probed
-    * partitions (partition pruning pinned in PlanSpec). The probes
-    * subplan evaluates twice (once here, once in the search join) —
-    * deliberate: queries are the SMALL side by construction, and
-    * persisting a frame that escapes into the returned lazy plan
-    * could not be unpersisted safely. Filtering to probed cells
-    * cannot change the join result, so stored == retrain equality is
-    * preserved. Shared by every stored-index query path. */
-  private def probedCells(
-      queries: DataFrame, idCol: String, vecCol: String,
-      nProbe: Int, cents: Array[Array[Double]]): Seq[Int] =
-    Similarity.ivfProbes(queries, idCol, vecCol, nProbe, cents)
-      .select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq // <= cents.length rows
+  // ============================================================ training
 
-  // ================================================================ IVF
-
-  /** Train an IVF coarse quantizer and return it as a table:
-    * `(cell INT, centroid ARRAY<DOUBLE>)`, unit-normalized centroids
-    * in cell order. Persist with `.write.parquet` and reuse across
-    * runs via [[ivfKnnIndexed]]. */
+  /** Train an IVF coarse quantizer: the centroids table, unit-normalized
+    * centroids in cell order ([[Similarity.trainIvfModel]]). */
   def trainIvf(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, iters: Int = 10, seed: Long = 42L
@@ -83,85 +132,8 @@ object AnnIndex {
       .toSeq.toDF("cell", "centroid")
   }
 
-  /** Load a centroids table back into the in-memory model shape:
-    * cell-indexed array of unit centroids. Fails loud on gaps or
-    * duplicates — a filtered or mis-joined centroids table would
-    * silently mis-assign every vector. */
-  def ivfModel(centroids: DataFrame): Array[Array[Double]] = {
-    val rows = boundedModelRows(
-      centroids.select(col("cell").cast("int"), col("centroid")), "ivfModel")
-    val byCell = rows.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-    require(byCell.size == rows.length,
-      s"ivfModel: duplicate cell ids in centroids table (${rows.length} rows, " +
-        s"${byCell.size} distinct cells)")
-    val n = rows.length
-    require(n > 0, "ivfModel: empty centroids table")
-    Array.tabulate(n)(i => byCell.getOrElse(i, throw new IllegalArgumentException(
-      s"ivfModel: centroids table has $n rows but no cell $i — cells must be " +
-        "contiguous 0-based (was the table filtered?)")))
-  }
-
-  /** Encode the corpus against a stored quantizer: the postings table
-    * `(id, cell, vector)` — scan-local (the model rides the UDF
-    * closure), no shuffle. Write `.partitionBy("cell")` so stored
-    * probes prune to their cells. NULL vectors get a NULL cell (they
-    * carry no geometry; the search join drops them). */
-  def encodeIvf(
-      corpus: DataFrame, idCol: String, vecCol: String, centroids: DataFrame
-  ): DataFrame =
-    encodeIvfWith(corpus, idCol, vecCol, ivfModel(centroids))
-
-  /** [[encodeIvf]] over an already-LOADED centroid model (one collect,
-    * shared across encode and query). */
-  def encodeIvfWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      model: Array[Array[Double]]
-  ): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      Similarity.ivfAssignUdf(model)(col(vecCol)).as("cell"),
-      col(vecCol).as("vector"))
-
-  /** Query a STORED IVF index: identical rows to
-    * [[Similarity.ivfKnn]] at the same training params — no retrain,
-    * and the postings scan is PRE-PRUNED to the probed cells
-    * ([[probedCells]]) — at 1024 cells and nProbe 3 a query batch
-    * touching 30 cells reads ~3% of the index instead of scanning
-    * it. */
-  def ivfKnnIndexed(
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      centroids: DataFrame, postings: DataFrame, nProbe: Int = 3
-  ): DataFrame =
-    ivfKnnIndexedWith(queries, idCol, vecCol, k, ivfModel(centroids),
-      postings, nProbe)
-
-  /** [[ivfKnnIndexed]] over an already-LOADED centroid model (one
-    * collect, shared across encode and query). */
-  def ivfKnnIndexedWith(
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      model: Array[Array[Double]], postings: DataFrame, nProbe: Int = 3
-  ): DataFrame = {
-    val assigned = postings.select(
-      col("id").as("neighbor_id"), col("vector").as("cv"),
-      col("cell").cast("int").as("cell"))
-    val probes = Similarity.ivfProbes(queries, idCol, vecCol, nProbe, model)
-    val cells = probedCells(queries, idCol, vecCol, nProbe, model)
-    Similarity.ivfSearchOnProbes(
-      assigned.filter(col("cell").isin(cells: _*)), probes, k)
-  }
-
-  // ================================================================ PQ
-
-  /** Train PQ codebooks and return them as a table:
-    * `(subspace INT, code INT, dim INT, centroid ARRAY<DOUBLE>)`.
-    * `dim` (constant across rows) pins the trained dimension; m and
-    * kCodes are the subspace/code extents. */
-  def trainPq(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int = 8, kCodes: Int = 16, iters: Int = 10
-  ): DataFrame = {
-    val spark = corpus.sparkSession
+  private def booksTable(spark: SparkSession, model: Similarity.PqModel): DataFrame = {
     import spark.implicits._
-    val model = Similarity.trainPqModel(corpus, idCol, vecCol, m, kCodes, iters)
     (for {
       j <- 0 until model.m
       c <- 0 until model.kCodes
@@ -169,79 +141,8 @@ object AnnIndex {
       .toDF("subspace", "code", "dim", "centroid")
   }
 
-  /** Load a codebooks table back into a [[Similarity.PqModel]]. Fails
-    * loud on gaps, duplicates, or inconsistent dims. */
-  def pqModel(codebooks: DataFrame): Similarity.PqModel = {
-    val rows = boundedModelRows(
-      codebooks.select(col("subspace").cast("int"), col("code").cast("int"),
-        col("dim").cast("int"), col("centroid")), "pqModel")
-    require(rows.nonEmpty, "pqModel: empty codebooks table")
-    val dims = rows.map(_.getInt(2)).distinct
-    require(dims.length == 1,
-      s"pqModel: inconsistent dim column (${dims.sorted.mkString(", ")})")
-    val dim = dims.head
-    val m = rows.map(_.getInt(0)).max + 1
-    val kCodes = rows.map(_.getInt(1)).max + 1
-    require(rows.length == m * kCodes,
-      s"pqModel: expected $m x $kCodes = ${m * kCodes} codebook rows, got " +
-        s"${rows.length} — gaps or duplicates (was the table filtered?)")
-    val byKey = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](3).toArray).toMap
-    require(byKey.size == rows.length, "pqModel: duplicate (subspace, code) rows")
-    val cb = Array.tabulate(m)(j => Array.tabulate(kCodes)(c =>
-      byKey.getOrElse((j, c), throw new IllegalArgumentException(
-        s"pqModel: missing codebook entry (subspace $j, code $c)"))))
-    Similarity.PqModel(dim, m, kCodes, cb)
-  }
-
-  /** Encode the corpus against stored codebooks: the codes table
-    * `(id, codes ARRAY<INT>)` — 8 bytes of payload per vector at the
-    * default m=8, scan-local. */
-  def encodePq(
-      corpus: DataFrame, idCol: String, vecCol: String, codebooks: DataFrame
-  ): DataFrame =
-    encodePqWith(corpus, idCol, vecCol, pqModel(codebooks))
-
-  /** [[encodePq]] over an already-LOADED model (one collect, shared
-    * across encode and query). */
-  def encodePqWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      model: Similarity.PqModel
-  ): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      Similarity.pqEncodeUdf(model)(col(idCol).cast("string"), col(vecCol)).as("codes"))
-
-  /** Query a STORED PQ index: identical rows to [[Similarity.pqKnn]]
-    * at the same training params. `corpus` supplies the raw vectors
-    * for the exact rescore of the shortlist (the index never stores
-    * them — that is the memory win). */
-  def pqKnnIndexed(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, codebooks: DataFrame, codes: DataFrame, shortlist: Int = 32
-  ): DataFrame =
-    pqKnnIndexedWith(corpus, queries, idCol, vecCol, k, pqModel(codebooks),
-      codes, shortlist)
-
-  /** [[pqKnnIndexed]] over an already-LOADED model (one collect,
-    * shared across encode and query). */
-  def pqKnnIndexedWith(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, model: Similarity.PqModel, codes: DataFrame, shortlist: Int = 32
-  ): DataFrame = {
-    val cz = codes.select(col("id").as("neighbor_id"), col("codes"))
-    Similarity.pqSearchCore(corpus, cz, queries, idCol, vecCol, k, shortlist, model)
-  }
-
-  // ============================================================== OPQ
-  /** Train an OPQ index (rotation + codebooks, jointly —
-    * [[Similarity.trainOpqModel]]) and return BOTH model tables:
-    * the rotation `(row INT, dim INT, coeffs ARRAY<DOUBLE>)` and the
-    * codebooks in the [[trainPq]] shape. Persist both and reuse via
-    * [[opqKnnIndexed]]; the rotation is the "fourth model table" of
-    * the FAISS `OPQ{m},PQ{m}` layout. */
-  /** The rotation table of an OPQ model — ONE schema home
-    * (`row INT, dim INT, coeffs ARRAY<DOUBLE>`), shared by
-    * [[trainOpq]] and [[trainIvfOpq]] so the loader can never see two
-    * divergent shapes. */
+  /** The rotation table of an OPQ model — one schema home, shared by
+    * [[trainOpq]] and [[trainIvfOpq]]. */
   private def rotationTable(
       spark: SparkSession, model: Similarity.OpqModel): DataFrame = {
     import spark.implicits._
@@ -250,66 +151,36 @@ object AnnIndex {
       .toSeq.toDF("row", "dim", "coeffs")
   }
 
+  /** Train PQ codebooks over the unit vectors: the codebooks table.
+    * m and kCodes are the subspace/code extents. */
+  def trainPq(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      m: Int = 8, kCodes: Int = 16, iters: Int = 10
+  ): DataFrame =
+    booksTable(corpus.sparkSession,
+      Similarity.trainPqModel(corpus, idCol, vecCol, m, kCodes, iters))
+
+  /** Train the residual codebooks of a composed IVF-PQ index against a
+    * stored centroids table: the codebooks shape, trained on per-cell
+    * RESIDUALS `u - c(cell)` (FAISS `IndexIVFPQ` — residuals are
+    * smaller and more isotropic, so the same code budget quantizes
+    * finer than plain PQ). */
+  def trainIvfPq(
+      corpus: DataFrame, idCol: String, vecCol: String, centroids: DataFrame,
+      m: Int = 8, kCodes: Int = 16, iters: Int = 10
+  ): DataFrame =
+    booksTable(corpus.sparkSession, Similarity.trainIvfPqResidualModel(
+      corpus, idCol, vecCol, loadCentroids(centroids), m, kCodes, iters))
+
+  /** Train an OPQ index (rotation + codebooks, jointly —
+    * [[Similarity.trainOpqModel]]): `(rotation, codebooks)` tables,
+    * the FAISS `OPQ{m},PQ{m}` layout. */
   def trainOpq(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, kCodes: Int = 16, iters: Int = 10, opqIters: Int = 8
   ): (DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val model = Similarity.trainOpqModel(corpus, idCol, vecCol, m, kCodes, iters, opqIters)
-    val books = (for {
-      j <- 0 until model.pq.m
-      c <- 0 until model.pq.kCodes
-    } yield (j, c, model.pq.dim, model.pq.codebooks(j)(c).toSeq))
-      .toDF("subspace", "code", "dim", "centroid")
-    (rotationTable(spark, model), books)
-  }
-
-  /** Load a (rotation, codebooks) table pair back into an
-    * [[Similarity.OpqModel]]. Fails loud on gaps, duplicates, dim
-    * disagreement between the two tables, or a rotation that is not
-    * orthogonal (a filtered or mis-joined rotation would silently
-    * mis-rank EVERY candidate — ADC scores would approximate a
-    * different query). */
-  def opqModel(rotation: DataFrame, codebooks: DataFrame): Similarity.OpqModel = {
-    val pq = pqModel(codebooks)
-    val rows = boundedModelRows(
-      rotation.select(col("row").cast("int"), col("dim").cast("int"), col("coeffs")),
-      "opqModel")
-    require(rows.nonEmpty, "opqModel: empty rotation table")
-    val dims = rows.map(_.getInt(1)).distinct
-    require(dims.length == 1 && dims.head == pq.dim,
-      s"opqModel: rotation dim column (${dims.sorted.mkString(", ")}) does not " +
-        s"match the codebooks' dim ${pq.dim}")
-    require(rows.length == pq.dim,
-      s"opqModel: expected ${pq.dim} rotation rows, got ${rows.length} — " +
-        "gaps or duplicates (was the table filtered?)")
-    val byRow = rows.map(r => r.getInt(0) -> r.getSeq[Double](2).toArray).toMap
-    require(byRow.size == rows.length, "opqModel: duplicate rotation row ids")
-    val rot = Array.tabulate(pq.dim)(i => byRow.getOrElse(i,
-      throw new IllegalArgumentException(
-        s"opqModel: rotation table has ${rows.length} rows but no row $i")))
-    rot.zipWithIndex.foreach { case (r, i) =>
-      require(r.length == pq.dim,
-        s"opqModel: rotation row $i has ${r.length} of ${pq.dim} coefficients")
-    }
-    // orthogonality sanity: R·Rᵀ ≈ I (parquet round-trips doubles
-    // exactly, so only genuine corruption trips this)
-    var a = 0
-    while (a < pq.dim) {
-      var b = 0
-      while (b < pq.dim) {
-        var s = 0.0; var i = 0
-        while (i < pq.dim) { s += rot(a)(i) * rot(b)(i); i += 1 }
-        val want = if (a == b) 1.0 else 0.0
-        require(math.abs(s - want) < 1e-6,
-          s"opqModel: rotation is not orthogonal (R·Rᵀ[$a][$b] = $s) — " +
-            "corrupt or filtered rotation table")
-        b += 1
-      }
-      a += 1
-    }
-    Similarity.OpqModel(rot, pq)
+    (rotationTable(corpus.sparkSession, model), booksTable(corpus.sparkSession, model.pq))
   }
 
   /** [[trainOpq]]'s two tables folded into ONE — the pipeline's
@@ -317,8 +188,7 @@ object AnnIndex {
     * pretransform chained into one index artifact): codebook rows
     * carry `(subspace, code, dim, centroid, rot_row = NULL)`, rotation
     * rows `(NULL, NULL, dim, centroid = coefficients, rot_row = i)`.
-    * The `rot_row` column is the family marker `knn_encode`/`knn`
-    * dispatch on. */
+    * [[load]] accepts it as the codebooks table. */
   def trainOpqCombined(
       corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, kCodes: Int = 16, iters: Int = 10, opqIters: Int = 8
@@ -331,94 +201,17 @@ object AnnIndex {
         col("dim"), col("coeffs").as("centroid"), col("row").as("rot_row")))
   }
 
-  /** Split a [[trainOpqCombined]] table back into its halves and load
-    * the model ([[opqModel]]'s fail-loud validation applies). */
-  def opqModelCombined(combined: DataFrame): Similarity.OpqModel = {
-    require(combined.columns.contains("rot_row"),
-      "opqModelCombined: not a combined OPQ table (no rot_row column)")
-    opqModel(
-      combined.filter(col("rot_row").isNotNull)
-        .select(col("rot_row").as("row"), col("dim"), col("centroid").as("coeffs")),
-      combined.filter(col("rot_row").isNull)
-        .select(col("subspace"), col("code"), col("dim"), col("centroid")))
-  }
-
-  /** [[encodeOpq]] over a combined model table. */
-  def encodeOpqCombined(
-      corpus: DataFrame, idCol: String, vecCol: String, combined: DataFrame
-  ): DataFrame = {
-    val model = opqModelCombined(combined)
-    corpus.select(col(idCol).as("id"),
-      Similarity.opqEncodeUdf(model)(col(idCol).cast("string"), col(vecCol)).as("codes"))
-  }
-
-  /** [[opqKnnIndexed]] over a combined model table. */
-  def opqKnnIndexedCombined(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, combined: DataFrame, codes: DataFrame, shortlist: Int = 32
-  ): DataFrame = {
-    val model = opqModelCombined(combined)
-    val cz = codes.select(col("id").as("neighbor_id"), col("codes"))
-    Similarity.opqSearchCore(corpus, cz, queries, idCol, vecCol, k, shortlist, model)
-  }
-
-  /** Encode the corpus against a stored OPQ model: the codes table
-    * `(id, codes ARRAY<INT>)` — m bytes of payload per vector,
-    * scan-local (rotation + codebooks ride the UDF closure). */
-  def encodeOpq(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      rotation: DataFrame, codebooks: DataFrame
-  ): DataFrame =
-    encodeOpqWith(corpus, idCol, vecCol, opqModel(rotation, codebooks))
-
-  /** [[encodeOpq]] over an already-LOADED model (one collect + one
-    * orthogonality validation, shared across encode and query). */
-  def encodeOpqWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      model: Similarity.OpqModel
-  ): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      Similarity.opqEncodeUdf(model)(col(idCol).cast("string"), col(vecCol)).as("codes"))
-
-  /** Query a STORED OPQ index: identical rows to
-    * [[Similarity.opqKnn]] at the same training params. `corpus`
-    * supplies the raw vectors for the exact rescore (in the ORIGINAL
-    * space — the rotation only chooses candidates). */
-  def opqKnnIndexed(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, rotation: DataFrame, codebooks: DataFrame, codes: DataFrame,
-      shortlist: Int = 32
-  ): DataFrame =
-    opqKnnIndexedWith(corpus, queries, idCol, vecCol, k,
-      opqModel(rotation, codebooks), codes, shortlist)
-
-  /** [[opqKnnIndexed]] over an already-LOADED model (same motivation
-    * as [[encodeOpqWith]]). */
-  def opqKnnIndexedWith(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, model: Similarity.OpqModel, codes: DataFrame,
-      shortlist: Int = 32
-  ): DataFrame = {
-    val cz = codes.select(col("id").as("neighbor_id"), col("codes"))
-    Similarity.opqSearchCore(corpus, cz, queries, idCol, vecCol, k, shortlist, model)
-  }
-
-  // ============================================================ OPQ+IVF-PQ
   /** Train the fully composed FAISS `OPQ{m},IVF{x},PQ{m}` index: the
     * OPQ pretransform trains first (joint rotation + throwaway
     * codebooks on the raw sample), then the coarse quantizer and the
-    * residual codebooks train in ROTATED space — the four-table form
-    * (rotation, centroids, residual codebooks, codes) that is FAISS's
-    * standard billion-vector shape. Returns (rotation, centroids,
-    * books); encode with [[encodeIvfOpq]], query with
-    * [[ivfOpqKnnIndexed]]. */
+    * residual codebooks train in ROTATED space. Returns
+    * `(rotation, centroids, codebooks)`. */
   def trainIvfOpq(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, m: Int = 8, kCodes: Int = 16,
       iters: Int = 10, opqIters: Int = 8
   ): (DataFrame, DataFrame, DataFrame) = {
-    // every training stage is internally fixed-seed (the family
-    // convention: trainOpqModel / trainIvf / trainIvfPq), so same
+    // every training stage is internally fixed-seed, so same
     // (corpus, params) -> byte-identical four-table index
     val opq = Similarity.trainOpqModel(corpus, idCol, vecCol, m, kCodes, iters, opqIters)
     val rotated = corpus.select(col(idCol),
@@ -428,206 +221,327 @@ object AnnIndex {
     (rotationTable(corpus.sparkSession, opq), centroids, books)
   }
 
-  /** Encode the corpus against a stored OPQ+IVF-PQ index: rotate once,
-    * then the [[encodeIvfPq]] arithmetic verbatim on the rotated
-    * column — `(id, cell, codes)`, m bytes per vector, scan-local.
-    * Write `.partitionBy("cell")` so stored probes prune. */
-  def encodeIvfOpq(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      rotation: DataFrame, centroids: DataFrame, codebooks: DataFrame
-  ): DataFrame =
-    encodeIvfOpqWith(corpus, idCol, vecCol,
-      opqModel(rotation, codebooks), ivfModel(centroids))
+  // ============================================================ load
 
-  /** [[encodeIvfOpq]] over already-LOADED models — for callers that
-    * load (and fail-loud validate) the model tables once and reuse
-    * them across encode + query instead of re-collecting the same
-    * tables and re-running the O(d³) orthogonality check per call. */
-  def encodeIvfOpqWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      opq: Similarity.OpqModel, cents: Array[Array[Double]]
-  ): DataFrame = {
-    val rotated = corpus.select(col(idCol),
-      Similarity.rotateFloatUdf(opq.rotation)(col(vecCol)).as(vecCol))
-    encodeIvfPqWith(rotated, idCol, vecCol, cents, opq.pq)
+  private def boundedModelRows(df: DataFrame, what: String): Array[org.apache.spark.sql.Row] = {
+    val rows = df.limit(MaxModelRows + 1).collect()
+    require(rows.length <= MaxModelRows,
+      s"$what: model table has more than $MaxModelRows rows — not a trained " +
+        "model table (did you pass the corpus by mistake?)")
+    rows
   }
 
-  /** Query a STORED OPQ+IVF-PQ index: queries rotate into index space
-    * for probing, ADC tables, and coarse dots; the codes scan
-    * pre-prunes to the probed cells; the exact rescore runs in the
-    * ORIGINAL space (rotation only chooses candidates), so every
-    * returned cosine is the exact original-space value. */
-  def ivfOpqKnnIndexed(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, rotation: DataFrame, centroids: DataFrame, codebooks: DataFrame,
-      codes: DataFrame, nProbe: Int = 3, shortlist: Int = 32
-  ): DataFrame =
-    ivfOpqKnnIndexedWith(corpus, queries, idCol, vecCol, k,
-      opqModel(rotation, codebooks), ivfModel(centroids), codes,
-      nProbe, shortlist)
+  /** Build a [[Model]] from its tables, collecting each once. The
+    * tables present pick the kind: `centroids` adds the IVF coarse
+    * quantizer, `codebooks` the PQ codec (a combined OPQ table — one
+    * with a `rot_row` column — also supplies the rotation), `rotation`
+    * the OPQ pretransform; without codebooks the codec is Flat, or Sq8
+    * when `sq8` is set. Fails loud on gaps, duplicates, inconsistent
+    * dims or a non-orthogonal rotation — a filtered or mis-joined
+    * model table would otherwise silently mis-assign or mis-rank
+    * every vector. */
+  def load(
+      centroids: Option[DataFrame] = None,
+      codebooks: Option[DataFrame] = None,
+      rotation: Option[DataFrame] = None,
+      sq8: Boolean = false
+  ): Model = {
+    require(!(sq8 && codebooks.isDefined),
+      "AnnIndex.load: sq8 is the codec of a centroids-only index (codebooks ARE the quantization)")
+    val combined = codebooks.filter(_.columns.contains("rot_row"))
+    require(combined.isEmpty || rotation.isEmpty,
+      "AnnIndex.load: the combined OPQ table already carries the rotation")
+    val books = codebooks.map(b => loadBooks(combined.fold(b)(_ =>
+      b.filter(col("rot_row").isNull)
+        .select(col("subspace"), col("code"), col("dim"), col("centroid")))))
+    val rot = combined.map(_.filter(col("rot_row").isNotNull)
+        .select(col("rot_row").as("row"), col("dim"), col("centroid").as("coeffs")))
+      .orElse(rotation)
+      .map { r =>
+        require(books.isDefined, "AnnIndex.load: a rotation needs its codebooks")
+        loadRotation(r, books.get.dim)
+      }
+    Model(rot, centroids.map(loadCentroids),
+      books.map(Pq(_)).getOrElse(if (sq8) Sq8 else Flat))
+  }
 
-  /** [[ivfOpqKnnIndexed]] over already-LOADED models (same motivation
-    * as [[encodeIvfOpqWith]]: one collect + one orthogonality
-    * validation per model table, shared across encode and query). */
-  def ivfOpqKnnIndexedWith(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, opq: Similarity.OpqModel, cents: Array[Array[Double]],
-      codes: DataFrame, nProbe: Int = 3, shortlist: Int = 32
+  /** A centroids table as the cell-indexed array of unit centroids. */
+  private def loadCentroids(centroids: DataFrame): Array[Array[Double]] = {
+    val rows = boundedModelRows(
+      centroids.select(col("cell").cast("int"), col("centroid")), "centroids")
+    val byCell = rows.map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+    require(byCell.size == rows.length,
+      s"centroids: duplicate cell ids in centroids table (${rows.length} rows, " +
+        s"${byCell.size} distinct cells)")
+    val n = rows.length
+    require(n > 0, "centroids: empty centroids table")
+    Array.tabulate(n)(i => byCell.getOrElse(i, throw new IllegalArgumentException(
+      s"centroids: centroids table has $n rows but no cell $i — cells must be " +
+        "contiguous 0-based (was the table filtered?)")))
+  }
+
+  private def loadBooks(codebooks: DataFrame): Similarity.PqModel = {
+    val rows = boundedModelRows(
+      codebooks.select(col("subspace").cast("int"), col("code").cast("int"),
+        col("dim").cast("int"), col("centroid")), "codebooks")
+    require(rows.nonEmpty, "codebooks: empty codebooks table")
+    val dims = rows.map(_.getInt(2)).distinct
+    require(dims.length == 1,
+      s"codebooks: inconsistent dim column (${dims.sorted.mkString(", ")})")
+    val dim = dims.head
+    val m = rows.map(_.getInt(0)).max + 1
+    val kCodes = rows.map(_.getInt(1)).max + 1
+    require(rows.length == m * kCodes,
+      s"codebooks: expected $m x $kCodes = ${m * kCodes} codebook rows, got " +
+        s"${rows.length} — gaps or duplicates (was the table filtered?)")
+    val byKey = rows.map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](3).toArray).toMap
+    require(byKey.size == rows.length, "codebooks: duplicate (subspace, code) rows")
+    val cb = Array.tabulate(m)(j => Array.tabulate(kCodes)(c =>
+      byKey.getOrElse((j, c), throw new IllegalArgumentException(
+        s"codebooks: missing codebook entry (subspace $j, code $c)"))))
+    Similarity.PqModel(dim, m, kCodes, cb)
+  }
+
+  private def loadRotation(rotation: DataFrame, dim: Int): Array[Array[Double]] = {
+    val rows = boundedModelRows(
+      rotation.select(col("row").cast("int"), col("dim").cast("int"), col("coeffs")),
+      "rotation")
+    require(rows.nonEmpty, "rotation: empty rotation table")
+    val dims = rows.map(_.getInt(1)).distinct
+    require(dims.length == 1 && dims.head == dim,
+      s"rotation: rotation dim column (${dims.sorted.mkString(", ")}) does not " +
+        s"match the codebooks' dim $dim")
+    require(rows.length == dim,
+      s"rotation: expected $dim rotation rows, got ${rows.length} — " +
+        "gaps or duplicates (was the table filtered?)")
+    val byRow = rows.map(r => r.getInt(0) -> r.getSeq[Double](2).toArray).toMap
+    require(byRow.size == rows.length, "rotation: duplicate rotation row ids")
+    val rot = Array.tabulate(dim)(i => byRow.getOrElse(i,
+      throw new IllegalArgumentException(
+        s"rotation: rotation table has ${rows.length} rows but no row $i")))
+    rot.zipWithIndex.foreach { case (r, i) =>
+      require(r.length == dim,
+        s"rotation: rotation row $i has ${r.length} of $dim coefficients")
+    }
+    // orthogonality sanity: R·Rᵀ ≈ I (parquet round-trips doubles
+    // exactly, so only genuine corruption trips this)
+    for (a <- 0 until dim; b <- 0 until dim) {
+      var s = 0.0; var i = 0
+      while (i < dim) { s += rot(a)(i) * rot(b)(i); i += 1 }
+      require(math.abs(s - (if (a == b) 1.0 else 0.0)) < 1e-6,
+        s"rotation: rotation is not orthogonal (R·Rᵀ[$a][$b] = $s) — " +
+          "corrupt or filtered rotation table")
+    }
+    rot
+  }
+
+  // ============================================================ encode
+
+  /** Encode `corpus` against `model`: the codes table of
+    * [[Model.codesSchema]] — scan-local (the model rides the UDF
+    * closures), no shuffle. NULL vectors get NULL cell/payload (they
+    * carry no geometry; the search join drops them). Under OPQ without
+    * IVF the rotation happens inside the codec UDF, in doubles; under
+    * OPQ+IVF the vectors rotate to a float column first, so the coarse
+    * quantizer assigns in rotated space. */
+  def encode(model: Model, corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val id = col(idCol).as("id")
+    (model.centroids, model.codec) match {
+      case (Some(cents), Flat) =>
+        corpus.select(id, Similarity.ivfAssignUdf(cents)(col(vecCol)).as("cell"),
+          col(vecCol).as("vector"))
+      case (Some(cents), Sq8) =>
+        corpus.select(id, Similarity.ivfAssignUdf(cents)(col(vecCol)).as("cell"),
+          Quantize.maxAbsCol(col(vecCol)).as("scale"), col(vecCol).as("__v"))
+          .select(col("id"), col("cell"), col("scale"),
+            Quantize.int8CodesCol(col("__v"), col("scale")).as("q"))
+      case (None, Pq(books)) =>
+        corpus.select(id, Similarity.pqEncodeUdf(books, model.rotation)(
+          col(idCol).cast("string"), col(vecCol)).as("codes"))
+      case (Some(cents), Pq(books)) =>
+        val src = model.rotation.fold(corpus)(r => corpus.select(col(idCol),
+          Similarity.rotateFloatUdf(r)(col(vecCol)).as(vecCol)))
+        src.select(id, col(vecCol).as("cv"),
+            Similarity.ivfAssignUdf(cents)(col(vecCol)).as("cell"))
+          .select(col("id"), col("cell"), Similarity.ivfPqCodesUdf(cents, books)(
+            col("id").cast("string"), col("cv"), col("cell")).as("codes"))
+      case _ => throw new IllegalStateException(s"unreachable: ${model.kind}")
+    }
+  }
+
+  // ============================================================ search
+
+  /** Columns that tell the codes-table kinds apart. */
+  private val KindCols = Set("cell", "vector", "q", "codes")
+
+  /** Top-`k` neighbours `(query_id, neighbor_id, rank, cosine)` of every
+    * query against a stored index. `codes` must be [[encode]]'s output
+    * for the same model kind (checked: a codes table of another kind
+    * fails loud instead of being searched as this one). `corpus`
+    * supplies the raw vectors for the exact rescore of a quantized
+    * codec's shortlist (Flat postings carry their vectors, so Flat
+    * ignores it). Under IVF the codes scan is pre-pruned to the
+    * probed cells; `nProbe` cells per query, `shortlist` ADC/int8
+    * candidates per query for the exact rescore. Self pairs are
+    * excluded; NULL query vectors return nothing. */
+  def search(
+      model: Model, corpus: Option[DataFrame], queries: DataFrame, codes: DataFrame,
+      idCol: String, vecCol: String, k: Int, nProbe: Int = 3, shortlist: Int = 32
   ): DataFrame = {
+    require(k >= 1, s"k must be positive, got $k")
+    if (model.centroids.isDefined)
+      require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+    if (model.codec != Flat)
+      require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
+    val want = StructType.fromDDL(model.codesSchema).fieldNames.toSet
+    val have = codes.columns.toSet
+    require(want.subsetOf(have) && (have & KindCols) == (want & KindCols),
+      s"AnnIndex.search: codes table (${codes.columns.mkString(", ")}) is not a " +
+        s"${model.kind} codes table (${model.codesSchema})")
+    lazy val rescoreFrom = corpus.getOrElse(throw new IllegalArgumentException(
+      s"AnnIndex.search: ${model.kind} rescores its shortlist exactly — pass the corpus"))
+
+    // under IVF: the query vectors the coarse quantizer sees (rotated
+    // under OPQ+IVF), and the codes scan pruned to the probed cells
     val rq = "__graft_rq"
-    require(!queries.columns.contains(rq),
-      s"queries already carry a '$rq' column — rename it first")
-    val q2 = queries.withColumn(rq,
-      Similarity.rotateFloatUdf(opq.rotation)(col(vecCol)))
-    val cz = codes
-      .filter(col("cell").isin(probedCells(q2, idCol, rq, nProbe, cents): _*))
-      .select(col("id").as("neighbor_id"), col("cell"), col("codes"))
-    Similarity.ivfPqSearchCore(
-      corpus, cz, q2, idCol, vecCol, k, shortlist, nProbe, cents, opq.pq,
-      probeVecCol = rq)
+    val (q, probeVec) = (model.centroids, model.rotation) match {
+      case (Some(_), Some(r)) =>
+        require(!queries.columns.contains(rq),
+          s"queries already carry a '$rq' column — rename it first")
+        (queries.withColumn(rq, Similarity.rotateFloatUdf(r)(col(vecCol))), rq)
+      case _ => (queries, vecCol)
+    }
+    val pruned = model.centroids.fold(codes)(cents =>
+      codes.filter(col("cell").isin(probedCells(q, idCol, probeVec, nProbe, cents): _*)))
+    val cell = col("cell").cast("int").as("cell")
+
+    (model.centroids, model.codec) match {
+      case (Some(cents), Flat) =>
+        val probes = ivfProbes(q, idCol, vecCol, nProbe, cents)
+        probes.join(pruned.select(col("id").as("neighbor_id"), col("vector").as("cv"), cell),
+            Seq("cell"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+          .withColumn("cosine", Similarity.cosine(col("qv"), col("cv")))
+          .withColumn("rank",
+            row_number().over(
+              Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
+          .filter(col("rank") <= k)
+          .select("query_id", "neighbor_id", "rank", "cosine")
+      case (Some(cents), Sq8) =>
+        // stage 1 ranks by the code-space cosine (exact integer dots,
+        // norms precomputed per side before the join; per-vector
+        // scales cancel); null codes and zero norms drop to null
+        val idot = Similarity.intDotCol
+        val probes = Quantize.int8(q, idCol, vecCol)
+          .select(col(idCol).as("query_id"), col("q").as("qq"))
+          .withColumn("qn", sqrt(idot(col("qq"), col("qq")).cast("double")))
+          .join(q.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id")
+          .withColumn("cell", explode(
+            Similarity.ivfProbeCellsUdf(cents, nProbe)(col("qv").cast("array<double>"))))
+          .select("query_id", "cell", "qq", "qn")
+        val cz = pruned.select(col("id").as("neighbor_id"), cell, col("q").as("cq"))
+          .withColumn("cn", sqrt(idot(col("cq"), col("cq")).cast("double")))
+        val denom = col("qn") * col("cn")
+        shortlistRescore(rescoreFrom, queries, cz, probes,
+          when(denom === 0.0, lit(null))
+            .otherwise(idot(col("qq"), col("cq")).cast("double") / denom),
+          idCol, vecCol, k, shortlist)
+      case (None, Pq(books)) =>
+        // asymmetric distance: one m × kCodes table per query, a
+        // candidate scores m table lookups
+        val probes = q.select(col(idCol).as("query_id"),
+          Similarity.pqAdcTableUdf(books, model.rotation)(
+            col(idCol).cast("string"), col(vecCol)).as("qt"))
+        shortlistRescore(rescoreFrom, queries,
+          pruned.select(col("id").as("neighbor_id"), col("codes")), probes,
+          Similarity.pqAdcLookupUdf(books)(col("codes"), col("qt")),
+          idCol, vecCol, k, shortlist)
+      case (Some(cents), Pq(books)) =>
+        // IVFADC: dot(q, c(cell)) from the probe plus the residual
+        // table sum; a candidate is scored only in its probed cells
+        val probes = q.select(col(idCol).as("query_id"), col(probeVec).as("qv"),
+            Similarity.pqAdcTableUdf(books)(col(idCol).cast("string"), col(probeVec)).as("qt"))
+          .withColumn("cell", explode(
+            Similarity.ivfProbeCellsUdf(cents, nProbe)(col("qv").cast("array<double>"))))
+          .withColumn("qcdot", Similarity.ivfCoarseDotUdf(cents)(
+            col("query_id").cast("string"), col("qv"), col("cell")))
+          .select("query_id", "cell", "qt", "qcdot")
+        shortlistRescore(rescoreFrom, queries,
+          pruned.select(col("id").as("neighbor_id"), cell, col("codes")), probes,
+          col("qcdot") + Similarity.pqAdcLookupUdf(books)(col("codes"), col("qt")),
+          idCol, vecCol, k, shortlist)
+      case _ => throw new IllegalStateException(s"unreachable: ${model.kind}")
+    }
   }
 
-  // ============================================================== IVF-SQ8
-  /** Encode the corpus against a stored quantizer as SCALAR-QUANTIZED
-    * postings `(id, cell, scale, q ARRAY<INT>)` — FAISS `IVF,SQ8`:
-    * the [[encodeIvf]] inverted-list layout at a quarter the bytes
-    * (int8 codes instead of float vectors; `scale` kept for
-    * dequantize-ability, ranking never reads it). Write
-    * `.partitionBy("cell")` so stored probes prune to their cells.
-    * NULL vectors get NULL cell/codes (the search join drops them). */
-  def encodeIvfSq(
-      corpus: DataFrame, idCol: String, vecCol: String, centroids: DataFrame
-  ): DataFrame =
-    Similarity.sqEncode(corpus, idCol, vecCol, ivfModel(centroids))
+  /** The distinct probed-cell set of a query batch — bounded by the
+    * cell count (never the query count), collected driver-side to
+    * become an IN filter on the codes table's `cell` partition column,
+    * so a `partitionBy("cell")` index reads only its probed partitions.
+    * The probes subplan evaluates twice (once here, once in the search
+    * join) — deliberate: queries are the SMALL side by construction.
+    * Filtering to probed cells cannot change the join result. */
+  private def probedCells(
+      queries: DataFrame, idCol: String, vecCol: String,
+      nProbe: Int, cents: Array[Array[Double]]): Seq[Int] =
+    ivfProbes(queries, idCol, vecCol, nProbe, cents)
+      .select(col("cell")).distinct()
+      .collect().map(_.getInt(0)).toSeq // <= cents.length rows
 
-  /** [[encodeIvfSq]] over an already-LOADED centroid model (one
-    * collect, shared across encode and query). */
-  def encodeIvfSqWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Array[Double]]
-  ): DataFrame =
-    Similarity.sqEncode(corpus, idCol, vecCol, cents)
+  /** Per query the nProbe nearest centroids, exploded to
+    * `(query_id, qv, cell)` probe rows. A NULL query embedding yields
+    * no probes and drops out of the explode. */
+  private def ivfProbes(
+      queries: DataFrame, idCol: String, vecCol: String, nProbe: Int,
+      cents: Array[Array[Double]]): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .withColumn("cell", explode(
+        Similarity.ivfProbeCellsUdf(cents, nProbe)(col("qv").cast("array<double>"))))
 
-  /** Query a STORED IVF-SQ8 index: identical rows to
-    * [[Similarity.ivfSqKnn]] at the same training params — no
-    * retrain, the codes scan PRE-PRUNED to the probed cells (the
-    * [[ivfKnnIndexed]] discipline). `corpus` supplies the raw
-    * vectors for the exact rescore of the int8 shortlist. */
-  def ivfSqKnnIndexed(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, centroids: DataFrame, codes: DataFrame,
-      nProbe: Int = 3, shortlist: Int = 32
-  ): DataFrame =
-    ivfSqKnnIndexedWith(corpus, queries, idCol, vecCol, k,
-      ivfModel(centroids), codes, nProbe, shortlist)
-
-  /** [[ivfSqKnnIndexed]] over an already-LOADED centroid model (one
-    * collect, shared across encode and query). */
-  def ivfSqKnnIndexedWith(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, cents: Array[Array[Double]], codes: DataFrame,
-      nProbe: Int = 3, shortlist: Int = 32
+  /** The shortlist-and-rescore tail of every quantized codec: join the
+    * codes `(neighbor_id, [cell,] payload)` with the broadcast probe
+    * rows (on `cell` under IVF), drop self pairs, keep the top
+    * `shortlist` candidates per query by `approx` (NULL scores drop),
+    * then rescore exactly. */
+  private def shortlistRescore(
+      corpus: DataFrame, queries: DataFrame, codes: DataFrame, probes: DataFrame,
+      approx: Column, idCol: String, vecCol: String, k: Int, shortlist: Int
   ): DataFrame = {
-    val cz = codes
-      .filter(col("cell").isin(probedCells(queries, idCol, vecCol, nProbe, cents): _*))
-      .select(col("id").as("neighbor_id"), col("cell"), col("q"))
-    Similarity.ivfSqSearchCore(
-      corpus, cz, queries, idCol, vecCol, k, shortlist, nProbe, cents)
+    val pairs =
+      if (probes.columns.contains("cell"))
+        codes.join(broadcast(probes), Seq("cell"))
+          .filter(col("query_id") =!= col("neighbor_id"))
+      else codes.join(broadcast(probes), col("query_id") =!= col("neighbor_id"))
+    val cand = pairs
+      .withColumn("approx", approx)
+      .filter(col("approx").isNotNull)
+      .withColumn("arank",
+        row_number().over(
+          Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))))
+      .filter(col("arank") <= shortlist)
+      .select("query_id", "neighbor_id")
+    rescoreExact(corpus, queries, cand, idCol, vecCol, k)
   }
 
-  // ============================================================== IVF-PQ
-  /** Train the residual PQ codebooks of a composed IVF-PQ index
-    * against a stored centroids table ([[trainIvf]]'s output) and
-    * return them as a table — the [[trainPq]] shape
-    * `(subspace INT, code INT, dim INT, centroid ARRAY<DOUBLE>)`, but
-    * trained on per-cell RESIDUALS `u - c(cell)` (FAISS `IndexIVFPQ`:
-    * residuals are smaller and more isotropic, so the same code
-    * budget quantizes finer than plain PQ). The full stored index is
-    * three tables: centroids, these codebooks, and [[encodeIvfPq]]'s
-    * codes partitioned by `cell`. */
-  def trainIvfPq(
-      corpus: DataFrame, idCol: String, vecCol: String, centroids: DataFrame,
-      m: Int = 8, kCodes: Int = 16, iters: Int = 10
-  ): DataFrame =
-    trainIvfPqWith(corpus, idCol, vecCol, ivfModel(centroids), m, kCodes, iters)
-
-  /** [[trainIvfPq]] over an already-LOADED centroid model — for callers
-    * (the lifecycle's staged build, the stored-index gates) that load
-    * the centroids table once and reuse it across train/encode/query
-    * instead of paying a fresh driver collect per stage. Same
-    * arithmetic, bitwise-identical output. */
-  def trainIvfPqWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Array[Double]], m: Int = 8, kCodes: Int = 16, iters: Int = 10
+  /** Exact rescoring of the `(query_id, neighbor_id)` shortlist only
+    * (the corpus streams; candidates + query vectors broadcast). The
+    * NaN guard: a ZERO vector encodes to valid codes, and its exact
+    * cosine is 0/0 = NaN under the fold fallback — which Spark sorts
+    * ABOVE every real double and would rank first. */
+  private def rescoreExact(
+      corpus: DataFrame, queries: DataFrame, cand: DataFrame,
+      idCol: String, vecCol: String, k: Int
   ): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val model = Similarity.trainIvfPqResidualModel(
-      corpus, idCol, vecCol, cents, m, kCodes, iters)
-    (for {
-      j <- 0 until model.m
-      c <- 0 until model.kCodes
-    } yield (j, c, model.dim, model.codebooks(j)(c).toSeq))
-      .toDF("subspace", "code", "dim", "centroid")
-  }
-
-  /** Encode the corpus against a stored IVF-PQ index: the codes table
-    * `(id, cell, codes ARRAY<INT>)` — m bytes of payload per vector,
-    * scan-local (both models ride the UDF closures). Write
-    * `.partitionBy("cell")` so stored probes prune to their cells:
-    * the search reads `nProbe/nCells` of the index, AND each touched
-    * row costs m table lookups instead of a float dot — the composed
-    * win neither half delivers alone. NULL vectors get NULL
-    * cell/codes (no geometry; the search join drops them). */
-  def encodeIvfPq(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, codebooks: DataFrame
-  ): DataFrame =
-    encodeIvfPqWith(corpus, idCol, vecCol, ivfModel(centroids), pqModel(codebooks))
-
-  /** The cell + residual-codes encode over already-LOADED models —
-    * shared by [[encodeIvfPq]] and [[encodeIvfOpq]] (which validates
-    * its codebooks once through [[opqModel]] and must not pay a
-    * second driver collect of the same table), and public for callers
-    * that load the model tables once across encode + query. */
-  def encodeIvfPqWith(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Array[Double]], model: Similarity.PqModel
-  ): DataFrame = {
-    val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("cv"),
-      Similarity.ivfAssignUdf(cents)(col(vecCol)).as("cell"))
-    assigned.select(col("id"), col("cell"),
-      Similarity.ivfPqCodesUdf(cents, model)(
-        col("id").cast("string"), col("cv"), col("cell")).as("codes"))
-  }
-
-  /** Query a STORED IVF-PQ index: identical rows to
-    * [[Similarity.ivfPqKnn]] at the same training params — no
-    * retrain, and the codes scan is PRE-PRUNED to the probed cells
-    * (the [[ivfKnnIndexed]] discipline: the distinct probed-cell set
-    * is bounded by the cell count, collects driver-side, and becomes
-    * an IN filter on the partition column — partition pruning pinned
-    * in PlanSpec). `corpus` supplies the raw vectors for the exact
-    * rescore only. */
-  def ivfPqKnnIndexed(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, centroids: DataFrame, codebooks: DataFrame, codes: DataFrame,
-      nProbe: Int = 3, shortlist: Int = 32
-  ): DataFrame =
-    ivfPqKnnIndexedWith(corpus, queries, idCol, vecCol, k,
-      ivfModel(centroids), pqModel(codebooks), codes, nProbe, shortlist)
-
-  /** [[ivfPqKnnIndexed]] over already-LOADED models (one collect per
-    * model table, shared across encode and query). */
-  def ivfPqKnnIndexedWith(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, cents: Array[Array[Double]], model: Similarity.PqModel,
-      codes: DataFrame, nProbe: Int = 3, shortlist: Int = 32
-  ): DataFrame = {
-    val cz = codes
-      .filter(col("cell").isin(probedCells(queries, idCol, vecCol, nProbe, cents): _*))
-      .select(col("id").as("neighbor_id"), col("cell"), col("codes"))
-    Similarity.ivfPqSearchCore(
-      corpus, cz, queries, idCol, vecCol, k, shortlist, nProbe, cents, model)
+    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    cv
+      .join(broadcast(cand.join(broadcast(qv), Seq("query_id"))), Seq("neighbor_id"))
+      .withColumn("cosine", Similarity.cosine(col("qv"), col("cv")))
+      .filter(col("cosine").isNotNull && !isnan(col("cosine")))
+      .withColumn("rank",
+        row_number().over(
+          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "rank", "cosine")
   }
 }

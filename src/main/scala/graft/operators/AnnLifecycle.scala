@@ -52,7 +52,7 @@ import graft.streaming.{MaintainedStore, StreamingAnnIndex}
   * two-level `(cell, bucket)` layout: the admit anti-join prunes on
   * buckets, and a stored query's probed-cell filter is PARTITION
   * pruning (PlanSpec-pinned), the same selectivity as the one-shot
-  * [[AnnIndex.encodeIvfPq]] `partitionBy("cell")` tables.
+  * [[AnnIndex.encode]] `partitionBy("cell")` tables.
   */
 object AnnLifecycle {
 
@@ -109,9 +109,37 @@ object AnnLifecycle {
     spark.read.parquet(s"$idxDir/books")
 
   /** The live codes table `(id, cell, codes)` — the
-    * [[AnnIndex.ivfPqKnnIndexed]] `codes` argument. */
+    * [[AnnIndex.search]] `codes` argument. Checked to come from one
+    * index generation ([[sameGeneration]]). */
   def liveCodes(spark: SparkSession, idxDir: String): DataFrame =
-    StreamingAnnIndex.readEncoded(spark, s"$idxDir/codes", CodesSchema)
+    sameGeneration(idxDir)(
+      StreamingAnnIndex.readEncoded(spark, s"$idxDir/codes", CodesSchema))
+
+  /** The IVF-PQ model (centroids + residual codebooks) under `idxDir`,
+    * loaded. Unchecked: the build loads it from the staged dir. */
+  def liveModel(spark: SparkSession, idxDir: String): AnnIndex.Model =
+    AnnIndex.load(centroids = Some(liveCentroids(spark, idxDir)),
+      codebooks = Some(liveBooks(spark, idxDir)))
+
+  /** What a reader searches: the loaded model and the codes table, both
+    * from one index generation. */
+  def liveIndex(spark: SparkSession, idxDir: String): (AnnIndex.Model, DataFrame) =
+    sameGeneration(idxDir)((liveModel(spark, idxDir), liveCodes(spark, idxDir)))
+
+  /** Run `read` (model collects and the codes file listing happen
+    * eagerly inside it) and fail loud if a swap landed meanwhile. Paths
+    * resolve by name, so a read that straddles the two renames of
+    * [[graft.exec.Staging.promoteStaged]] would otherwise mix the old
+    * and new generation; every swap bumps the retrain count, which
+    * moves with the index directory. */
+  private def sameGeneration[A](idxDir: String)(read: => A): A = {
+    val generation = retrains(idxDir)
+    val result = read
+    if (retrains(idxDir) != generation)
+      throw new IllegalStateException(
+        s"$idxDir: the index was swapped during the read — retry")
+    result
+  }
 
   /** Rows the index was last trained on (carried through swaps). */
   def trainedRows(idxDir: String): Long =
@@ -123,15 +151,15 @@ object AnnLifecycle {
 
   /** Mean reconstruction error of the CURRENT corpus against a frozen
     * model, over the deterministic id-hash sample
-    * `pmod(hash(id), sampleMod) == 0` — scan-local (both models ride
-    * the UDF closures; encoding reuses [[Similarity.ivfPqCodesUdf]]
-    * verbatim so the measured codes ARE the stored codes). Returns
-    * `-1.0` on an empty sample. */
+    * `pmod(hash(id), sampleMod) == 0` — scan-local (the model rides
+    * the UDF closures; encoding reuses [[AnnIndex.encode]]'s IVF-PQ
+    * UDFs verbatim so the measured codes ARE the stored codes).
+    * Returns `-1.0` on an empty sample. */
   private[operators] def reconErrSampled(
       corpus: DataFrame, idCol: String, vecCol: String,
-      cents: Array[Array[Double]], model: Similarity.PqModel,
-      sampleMod: Int): Double = {
+      index: AnnIndex.Model, sampleMod: Int): Double = {
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
+    val AnnIndex.Model(_, Some(cents), AnnIndex.Pq(model)) = index
     val bounds = model.bounds; val codebooks = model.codebooks
     val mV = model.m
     val errUdf = udf { (v: Seq[Float], cell: java.lang.Integer, codes: Seq[Int]) =>
@@ -191,21 +219,19 @@ object AnnLifecycle {
     * books train — the same arithmetic path a from-scratch
     * store-then-query build takes, which is what makes post-swap ≡
     * from-scratch bitwise. Returns the encoded row count plus the
-    * LOADED models (each model table is collected exactly once per
-    * build; the encode and the caller's health scan reuse them instead
-    * of paying fresh driver collects). */
+    * LOADED model (the encode and the caller's health scan reuse it
+    * instead of paying fresh driver collects). */
   private def buildIndex(
       corpus: DataFrame, idCol: String, vecCol: String, dir: String,
       nCells: Int, m: Int, kCodes: Int, buckets: Int, seed: Long
-  ): (Long, Array[Array[Double]], Similarity.PqModel) = {
+  ): (Long, AnnIndex.Model) = {
     val spark = corpus.sparkSession
     MaintainedStore.deleteRecursively(Paths.get(dir))
     AnnIndex.trainIvf(corpus, idCol, vecCol, nCells, seed = seed)
       .write.parquet(s"$dir/centroids")
-    val cents = AnnIndex.ivfModel(liveCentroids(spark, dir))
-    AnnIndex.trainIvfPqWith(corpus, idCol, vecCol, cents, m, kCodes)
+    AnnIndex.trainIvfPq(corpus, idCol, vecCol, liveCentroids(spark, dir), m, kCodes)
       .write.parquet(s"$dir/books")
-    val books = AnnIndex.pqModel(liveBooks(spark, dir))
+    val model = liveModel(spark, dir)
     // two-level (cell, bucket) layout: the admit anti-join prunes on
     // buckets, stored queries partition-prune on their probed cells
     StreamingAnnIndex.initialize(s"$dir/codes", buckets, CodesSchema,
@@ -213,8 +239,8 @@ object AnnLifecycle {
     val n = StreamingAnnIndex.applyBatch(
       corpus.select(col(idCol), col(vecCol)), idCol, s"$dir/codes",
       CodesSchema, buckets,
-      newRows => AnnIndex.encodeIvfPqWith(newRows, "id", vecCol, cents, books))
-    (n, cents, books)
+      newRows => AnnIndex.encode(model, newRows, "id", vecCol))
+    (n, model)
   }
 
   /** One maintenance night over the CUMULATIVE corpus `(id, vector)`:
@@ -244,13 +270,13 @@ object AnnLifecycle {
     if (!Files.exists(Paths.get(idxDir, TrainedRowsMarker))) {
       // -------- bootstrap: first contact trains and publishes
       val staged = idxDir + StagedSuffix
-      val (nCorpus, bCents, bBooks) =
+      val (nCorpus, built) =
         buildIndex(corpus, idCol, vecCol, staged, nCells, m, kCodes, buckets, seed)
       MaintainedStore.writeMarker(staged, TrainedRowsMarker, nCorpus.toString)
       MaintainedStore.writeMarker(staged, RetrainsMarker, "0")
       graft.exec.Staging.promoteStaged(spark, stateStepDir, IndexDirName, StagedSuffix)
       val (_, occMax, occMed, skew) = codesProfile(liveCodes(spark, idxDir))
-      val recon = reconErrSampled(corpus, idCol, vecCol, bCents, bBooks, sampleMod)
+      val recon = reconErrSampled(corpus, idCol, vecCol, built, sampleMod)
       return Decision(bootstrap = true, nCorpus, nCodes = nCorpus,
         trainedRowsBefore = 0L, freshSinceTrain = 0L,
         occMax, occMed, skew, recon,
@@ -260,22 +286,21 @@ object AnnLifecycle {
     }
 
     // -------- incremental: admit-encode fresh ids against the frozen
-    // model. Each model table is collected ONCE per night and shared by
-    // the encode and the reconstruction-error scan (these collects are
+    // model. The model is loaded ONCE per night and shared by the
+    // encode and the reconstruction-error scan (these collects are
     // bounded but each was a scheduled job).
-    val cents = AnnIndex.ivfModel(liveCentroids(spark, idxDir))
-    val books = AnnIndex.pqModel(liveBooks(spark, idxDir))
+    val model = liveModel(spark, idxDir)
     val nCorpus = StreamingAnnIndex.applyBatch(
       corpus.select(col(idCol), col(vecCol)), idCol, s"$idxDir/codes",
       CodesSchema, buckets,
-      newRows => AnnIndex.encodeIvfPqWith(newRows, "id", vecCol, cents, books))
+      newRows => AnnIndex.encode(model, newRows, "id", vecCol))
 
     // -------- health on the post-admit, pre-decision state (one scan)
     val (nCodes, occMax, occMed, skew) = codesProfile(liveCodes(spark, idxDir))
     val trainedBefore = trainedRows(idxDir)
     val retrainsBefore = retrains(idxDir)
     val fresh = nCodes - trainedBefore
-    val recon = reconErrSampled(corpus, idCol, vecCol, cents, books, sampleMod)
+    val recon = reconErrSampled(corpus, idCol, vecCol, model, sampleMod)
     // exact integer trigger — an external oracle re-derives it from
     // row counts alone; float signals are opt-in refinements
     val freshTripped = fresh * 1000L > th.freshPermille * nCodes

@@ -25,8 +25,9 @@ object Quantize {
 
   /** The int8 code array of `vec` against an already-materialized
     * `scale` column — THE quantization formula, shared by [[int8]]
-    * and [[Similarity.sqEncode]] so corpus and query codes can never
-    * silently desynchronize. Zero scale → all-zero codes. */
+    * and the IVF,SQ8 encode ([[AnnIndex.encode]]) so corpus and query
+    * codes can never silently desynchronize. Zero scale → all-zero
+    * codes. */
   private[operators] def int8CodesCol(vec: Column, scale: Column): Column =
     transform(vec, x =>
       when(scale === 0.0, lit(0))

@@ -450,14 +450,21 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 3
-  ): DataFrame = {
-    val prepared = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val centroids = trainIvfModel(corpus, idCol, vecCol, nCells)
-    val assigned = prepared
-      .select(col("neighbor_id"), col("cv"),
-        ivfAssignUdf(centroids)(col("cv")).as("cell"))
-    ivfSearchCore(assigned, queries, idCol, vecCol, k, nProbe, centroids)
-  }
+  ): DataFrame =
+    retrainSearch(AnnIndex.Model(None,
+        Some(trainIvfModel(corpus, idCol, vecCol, nCells)), AnnIndex.Flat),
+      corpus, queries, idCol, vecCol, k, nProbe)
+
+  /** The retrain shape every quantizer family shares: encode the
+    * corpus against the freshly trained model and search it — the
+    * stored-index path verbatim ([[AnnIndex.encode]],
+    * [[AnnIndex.search]]), so stored == retrain by construction. */
+  private def retrainSearch(
+      model: AnnIndex.Model, corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, nProbe: Int = 3, shortlist: Int = 32
+  ): DataFrame =
+    AnnIndex.search(model, Some(corpus), queries,
+      AnnIndex.encode(model, corpus, idCol, vecCol), idCol, vecCol, k, nProbe, shortlist)
 
   /** Train the IVF coarse quantizer — the persistable half of
     * [[ivfKnn]]: kmeans++ init + Lloyd's on a bounded deterministic
@@ -506,8 +513,7 @@ object Similarity {
     * unit centroids; centroids ride the UDF closure (tiny,
     * task-broadcast). Boxed return so a NULL embedding yields a NULL
     * cell (the row drops out of the cell join) instead of an executor
-    * NPE. Shared by the retrain path and [[AnnIndex.encodeIvf]] — ONE
-    * arithmetic, so stored codes equal in-plan codes exactly. */
+    * NPE. ONE arithmetic for every IVF encode. */
   private[operators] def ivfAssignUdf(centroids: Array[Array[Double]])
       : org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (cv: Seq[Float]) =>
@@ -527,23 +533,9 @@ object Similarity {
       }
     }
 
-  /** The probe + exact-rerank core over an already-assigned inverted
-    * list `(neighbor_id, cv, cell)` — shared verbatim by [[ivfKnn]]
-    * (in-plan assignment) and [[AnnIndex.ivfKnnIndexed]] (stored
-    * postings), so the two paths return identical rows. */
-  private[operators] def ivfSearchCore(
-      assigned: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int,
-      centroids: Array[Array[Double]]
-  ): DataFrame =
-    ivfSearchOnProbes(assigned,
-      ivfProbes(queries, idCol, vecCol, nProbe, centroids), k)
-
-  /** The probed-cell selection UDF shared by [[ivfProbes]] and
-    * [[ivfPqSearchCore]]: a query's `nProbe` nearest cells by cosine
-    * against the unit centroids (ONE arithmetic for both consumers —
-    * the stored==retrain bitwise contract rides on it). */
-  private def ivfProbeCellsUdf(
+  /** The probed-cell selection UDF of every IVF search: a query's
+    * `nProbe` nearest cells by cosine against the unit centroids. */
+  private[operators] def ivfProbeCellsUdf(
       centroids: Array[Array[Double]], nProbe: Int
   ): org.apache.spark.sql.expressions.UserDefinedFunction = {
     val centroidArrs: Seq[(Int, Array[Double])] =
@@ -563,33 +555,6 @@ object Similarity {
         .sortBy(-_._2).take(nProbe).map(_._1).toArray
     }
   }
-
-  /** Per query the nProbe nearest centroids, exploded to
-    * `(query_id, qv, cell)` probe rows (centroids are tiny — computed
-    * driver-side into the UDF closure, broadcast by the join). A NULL
-    * query embedding yields no probes and drops out of the explode,
-    * mirroring lshKnn's null-bucket behavior. */
-  private[operators] def ivfProbes(
-      queries: DataFrame, idCol: String, vecCol: String, nProbe: Int,
-      centroids: Array[Array[Double]]
-  ): DataFrame = {
-    val probeUdf = ivfProbeCellsUdf(centroids, nProbe)
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("cell", explode(probeUdf(col("qv").cast("array<double>"))))
-  }
-
-  /** The probed-cell join + exact rerank over prepared probe rows. */
-  private[operators] def ivfSearchOnProbes(
-      assigned: DataFrame, probes: DataFrame, k: Int
-  ): DataFrame =
-    probes.join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
 
   /** Scalable embedding near-dup: banded sign-LSH (any identical band
     * of `bandBits` sign bits proposes the pair — the minhash
@@ -713,8 +678,8 @@ object Similarity {
     * aggregate/zip_with pair made the "cheap int8 pass" the expensive
     * part — r5 verdict #3); the higher-order form stays as the
     * extension-less fallback with identical null algebra. Shared by
-    * [[quantizedKnn]] and [[ivfSqSearchCore]] — ONE arithmetic. */
-  private def intDotCol: (Column, Column) => Column = {
+    * [[quantizedKnn]] and the IVF,SQ8 search — ONE arithmetic. */
+  private[operators] def intDotCol: (Column, Column) => Column = {
     val registered = scala.util.Try(
       org.apache.spark.sql.SparkSession.active.catalog
         .functionExists(graft.functions.IntDotProduct.FUNC_NAME)).getOrElse(false)
@@ -800,17 +765,10 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       m: Int = 8, kCodes: Int = 16, shortlist: Int = 32, iters: Int = 10
-  ): DataFrame = {
-    // parameter errors must surface BEFORE the driver-side training
-    // pays its sample collect + m Lloyd runs (pqSearchCore re-checks
-    // for the stored-index path)
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val model = trainPqModel(corpus, idCol, vecCol, m, kCodes, iters)
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      pqEncodeUdf(model)(col(idCol).cast("string"), col(vecCol)).as("codes"))
-    pqSearchCore(corpus, codes, queries, idCol, vecCol, k, shortlist, model)
-  }
+  ): DataFrame =
+    retrainSearch(AnnIndex.Model(None, None,
+        AnnIndex.Pq(trainPqModel(corpus, idCol, vecCol, m, kCodes, iters))),
+      corpus, queries, idCol, vecCol, k, shortlist = shortlist)
 
   /** A trained product quantizer: `codebooks(j)(c)` is subspace `j`'s
     * code-`c` centroid over dims `[bounds(j), bounds(j+1))` of the
@@ -919,88 +877,49 @@ object Similarity {
     t
   }
 
-  /** Scan-local encoding: normalized vector -> m argmin-L2 codes. The
-    * UDF carries the row id so a ragged vector names its offender
-    * instead of producing silently-partial subspace dots. Shared by
-    * the retrain path and [[AnnIndex.encodePq]] — ONE arithmetic, so
-    * stored codes equal in-plan codes exactly. */
-  private[operators] def pqEncodeUdf(model: PqModel)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+  /** Scan-local encoding: normalized vector -> m argmin-L2 codes,
+    * after the OPQ `rotation` (in doubles) when one is given. The UDF
+    * carries the row id so a ragged vector names its offender instead
+    * of producing silently-partial subspace dots. */
+  private[operators] def pqEncodeUdf(
+      model: PqModel, rotation: Option[Array[Array[Double]]] = None
+  ): org.apache.spark.sql.expressions.UserDefinedFunction = {
     val bounds = model.bounds; val codebooks = model.codebooks
     val dim = model.dim
+    val rot = rotation.orNull
+    val family = if (rot == null) "pqKnn" else "opqKnn"
     udf { (id: String, cv: Seq[Float]) =>
       if (cv == null) null
       else {
         if (cv.length != dim) throw new IllegalArgumentException(
-          s"pqKnn: corpus vector $id has ${cv.length} dims, index trained on $dim")
-        subspaceCodes(unitOf(cv.toArray.map(_.toDouble)), bounds, codebooks).toSeq
+          s"$family: corpus vector $id has ${cv.length} dims, index trained on $dim")
+        val u = unitOf(cv.toArray.map(_.toDouble))
+        subspaceCodes(if (rot == null) u else rotateVec(rot, u), bounds, codebooks).toSeq
       }
     }
   }
 
-  /** The ADC shortlist + exact-rescore core over already-encoded codes
-    * `(neighbor_id, codes)` — shared verbatim by [[pqKnn]] (in-plan
-    * encoding) and [[AnnIndex.pqKnnIndexed]] (stored codes), so the
-    * two paths return identical rows. Scoring is ASYMMETRIC DISTANCE:
-    * each query precomputes ONE m x kCodes dot-product table against
-    * the codebooks (queries and tables broadcast), and a candidate's
-    * approximate cosine is m table lookups summed — no per-pair float
-    * vector arithmetic. The top `shortlist` per query rerank EXACTLY
-    * over the raw corpus vectors (PQ only CHOOSES candidates; every
-    * returned cosine is exact, which is what the _verified gate
-    * pins). The corpus never shuffles or collects. */
-  private[operators] def pqSearchCore(
-      corpus: DataFrame, codes: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, shortlist: Int, model: PqModel
-  ): DataFrame =
-    adcSearchCore(corpus, codes, queries, idCol, vecCol, k, shortlist,
-      pqAdcTableUdf(model), pqAdcLookupUdf(model))
-
-  /** The ADC shortlist machinery itself, parameterized on the
-    * table-building UDF so [[pqSearchCore]] (codebooks over the unit
-    * vector) and [[opqSearchCore]] (codebooks over the ROTATED unit
-    * vector) share one candidate plan — queries and their tables
-    * broadcast, candidates rank by m table lookups, the shortlist
-    * rescoring exactly over the raw corpus. */
-  private def adcSearchCore(
-      corpus: DataFrame, codes: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, shortlist: Int,
-      tableUdf: org.apache.spark.sql.expressions.UserDefinedFunction,
-      adcUdf: org.apache.spark.sql.expressions.UserDefinedFunction
-  ): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val qz = queries.select(col(idCol).as("query_id"),
-      tableUdf(col(idCol).cast("string"), col(vecCol)).as("qt"))
-    val cand = codes
-      .join(broadcast(qz), col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", adcUdf(col("codes"), col("qt")))
-      .filter(col("approx").isNotNull)
-      .withColumn("arank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))))
-      .filter(col("arank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, cand, idCol, vecCol, k)
-  }
-
   /** Per-query ADC table: flattened m x kCodes subspace dot products
-    * of the L2-normalized query against the codebooks — computed ONCE
-    * per query, broadcast to the candidate scan. Shared by
-    * [[pqSearchCore]] (plain PQ: codebooks over the unit vector) and
-    * [[ivfPqSearchCore]] (IVF-PQ: codebooks over the cell residual —
-    * the table math is identical, only what the codebooks were
-    * trained on differs). */
-  private[operators] def pqAdcTableUdf(model: PqModel)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+    * of the L2-normalized query (after the OPQ `rotation`, in doubles,
+    * when one is given — rotation preserves the dot) against the
+    * codebooks — computed ONCE per query, broadcast to the candidate
+    * scan. Plain PQ, OPQ and IVF-PQ (codebooks over the cell residual)
+    * share it: the table math is identical, only what the codebooks
+    * were trained on differs. */
+  private[operators] def pqAdcTableUdf(
+      model: PqModel, rotation: Option[Array[Array[Double]]] = None
+  ): org.apache.spark.sql.expressions.UserDefinedFunction = {
     val bounds = model.bounds; val codebooks = model.codebooks
     val kC = model.kCodes; val dim = model.dim
+    val rot = rotation.orNull
+    val family = if (rot == null) "pqKnn" else "opqKnn"
     udf { (id: String, qv: Seq[Float]) =>
       if (qv == null) null
       else {
         if (qv.length != dim) throw new IllegalArgumentException(
-          s"pqKnn: query vector $id has ${qv.length} dims, index trained on $dim")
-        adcTableOf(unitOf(qv.toArray.map(_.toDouble)), bounds, codebooks, kC).toSeq
+          s"$family: query vector $id has ${qv.length} dims, index trained on $dim")
+        val u = unitOf(qv.toArray.map(_.toDouble))
+        adcTableOf(if (rot == null) u else rotateVec(rot, u), bounds, codebooks, kC).toSeq
       }
     }
   }
@@ -1020,30 +939,6 @@ object Similarity {
     }
   }
 
-  /** Stage 2 of every two-stage quantized path: exact rescoring of the
-    * `(query_id, neighbor_id)` shortlist only (the corpus streams;
-    * candidates + query vectors broadcast). The NaN guard: a ZERO
-    * vector encodes to valid codes (PQ has no norm in the hot path,
-    * unlike quantizedKnn's stage-1 denom), and its exact cosine is
-    * 0/0 = NaN under the fold fallback — which Spark sorts ABOVE every
-    * real double and would rank first. */
-  private[operators] def rescoreExact(
-      corpus: DataFrame, queries: DataFrame, cand: DataFrame,
-      idCol: String, vecCol: String, k: Int
-  ): DataFrame = {
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    cv
-      .join(broadcast(cand.join(broadcast(qv), Seq("query_id"))), Seq("neighbor_id"))
-      .withColumn("cosine", cosine(col("qv"), col("cv")))
-      .filter(col("cosine").isNotNull && !isnan(col("cosine")))
-      .withColumn("rank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
-  }
-
   // ============================================================== IVF-PQ
   /** Composed IVF-PQ approximate top-k [Jégou et al. 2011 §IV, the
     * IVFADC system — FAISS `IndexIVFPQ`, the production shape for
@@ -1056,7 +951,7 @@ object Similarity {
     * `dot(q, v) ≈ dot(q, c(cell)) + Σ_j table(j, code_j)` — the
     * cell dot comes free from probe selection, the residual part is
     * the standard table lookup. Top `shortlist` rerank EXACTLY over
-    * the raw corpus ([[rescoreExact]]): IVF-PQ only CHOOSES
+    * the raw corpus: IVF-PQ only CHOOSES
     * candidates, every returned cosine is exact.
     *
     * At 100 TB this is the storage shape that works: the codes table
@@ -1069,17 +964,10 @@ object Similarity {
       nCells: Int = 16, m: Int = 8, kCodes: Int = 16,
       nProbe: Int = 3, shortlist: Int = 32, iters: Int = 10
   ): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val centroids = trainIvfModel(corpus, idCol, vecCol, nCells, iters)
     val model = trainIvfPqResidualModel(corpus, idCol, vecCol, centroids, m, kCodes, iters)
-    val assigned = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      ivfAssignUdf(centroids)(col(vecCol)).as("cell"))
-    val codes = assigned.select(col("neighbor_id"), col("cell"),
-      ivfPqCodesUdf(centroids, model)(
-        col("neighbor_id").cast("string"), col("cv"), col("cell")).as("codes"))
-    ivfPqSearchCore(corpus, codes, queries, idCol, vecCol, k, shortlist, nProbe,
-      centroids, model)
+    retrainSearch(AnnIndex.Model(None, Some(centroids), AnnIndex.Pq(model)),
+      corpus, queries, idCol, vecCol, k, nProbe, shortlist)
   }
 
   /** Train the residual PQ codebooks — the persistable half of
@@ -1136,9 +1024,7 @@ object Similarity {
   /** Scan-local residual encoding: `(id, raw vector, assigned cell)`
     * -> m argmin-L2 codes of `u - c(cell)`. The cell rides IN as a
     * column (assigned by the shared [[ivfAssignUdf]]) so stored and
-    * retrain paths quantize the SAME residual. Shared by [[ivfPqKnn]]
-    * and [[AnnIndex.encodeIvfPq]] — ONE arithmetic, so stored codes
-    * equal in-plan codes exactly. */
+    * retrain paths quantize the SAME residual. */
   private[operators] def ivfPqCodesUdf(
       centroids: Array[Array[Double]], model: PqModel
   ): org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -1157,39 +1043,13 @@ object Similarity {
     }
   }
 
-  /** The probed-cell ADC shortlist + exact-rescore core over
-    * already-encoded `(neighbor_id, cell, codes)` rows — shared
-    * verbatim by [[ivfPqKnn]] (in-plan encoding) and
-    * [[AnnIndex.ivfPqKnnIndexed]] (stored codes), so the two paths
-    * return identical rows. The candidate join is on `cell`: a
-    * candidate is scored ONLY when its cell is probed by the query —
-    * O(N · nProbe / nCells) ADC lookups instead of the plain-PQ full
-    * pass — and the approx score adds the probe's centroid dot to
-    * the residual table sum (IVFADC).
-    *
-    * `probeVecCol` lets a PRETRANSFORMED query column drive the
-    * approximate side (probing, ADC tables, coarse dots) while the
-    * exact rescore stays on `vecCol` in the ORIGINAL space — the
-    * composed OPQ+IVF-PQ path ([[AnnIndex.ivfOpqKnnIndexed]]) rotates
-    * queries into index space for candidate choice only, so every
-    * returned cosine remains the original-space exact value the
-    * `_verified` oracles pin. */
-  private[operators] def ivfPqSearchCore(
-      corpus: DataFrame, codes: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, shortlist: Int, nProbe: Int,
-      centroids: Array[Array[Double]], model: PqModel,
-      probeVecCol: String = null
-  ): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val probeVec = Option(probeVecCol).getOrElse(vecCol)
-    val tableUdf = pqAdcTableUdf(model)
-    val adcUdf = pqAdcLookupUdf(model)
-    val probeUdf = ivfProbeCellsUdf(centroids, nProbe)
-    // dot(u_q, c(cell)) for a probe row — the IVFADC coarse term. The
-    // centroids are unit, so this is the same cosine the probe ranked
-    // cells by; computed per (query, cell), nProbe rows per query.
-    val qcDotUdf = udf { (qid: String, qv: Seq[Float], cell: Int) =>
+  /** dot(u_q, c(cell)) for a probe row — the IVFADC coarse term. The
+    * centroids are unit, so this is the same cosine the probe ranked
+    * cells by; computed per (query, cell), nProbe rows per query. */
+  private[operators] def ivfCoarseDotUdf(
+      centroids: Array[Array[Double]]
+  ): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (qid: String, qv: Seq[Float], cell: Int) =>
       if (qv == null) null
       else {
         val v = qv.toArray.map(_.toDouble)
@@ -1207,24 +1067,6 @@ object Similarity {
         java.lang.Double.valueOf(dot)
       }
     }
-    val probes = queries.select(col(idCol).as("query_id"), col(probeVec).as("qv"),
-      tableUdf(col(idCol).cast("string"), col(probeVec)).as("qt"))
-      .withColumn("cell", explode(probeUdf(col("qv").cast("array<double>"))))
-      .withColumn("qcdot", qcDotUdf(col("query_id").cast("string"), col("qv"), col("cell")))
-      .select("query_id", "cell", "qt", "qcdot")
-    val cand = codes
-      .select(col("neighbor_id"), col("cell").cast("int").as("cell"), col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", col("qcdot") + adcUdf(col("codes"), col("qt")))
-      .filter(col("approx").isNotNull)
-      .withColumn("arank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))))
-      .filter(col("arank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, cand, idCol, vecCol, k)
-  }
 
   // ============================================================== IVF-SQ8
   /** IVF with scalar-quantized postings (the FAISS `IVF,SQ8` shape):
@@ -1235,7 +1077,7 @@ object Similarity {
     * ranking is exact integer arithmetic within the probed cells
     * (per-vector scales cancel out of the code-space cosine, the
     * [[quantizedKnn]] observation). The top `shortlist` per query
-    * rerank EXACTLY over the raw corpus ([[rescoreExact]]): SQ8 only
+    * rerank EXACTLY over the raw corpus: SQ8 only
     * CHOOSES candidates, every returned cosine is exact. Between
     * [[ivfKnn]] (float postings, exact in-cell rank) and [[ivfPqKnn]]
     * (m-byte codes, table-lookup rank), this is the middle storage
@@ -1245,73 +1087,10 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nCells: Int = 16, nProbe: Int = 3, shortlist: Int = 32, iters: Int = 10
-  ): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val centroids = trainIvfModel(corpus, idCol, vecCol, nCells, iters)
-    val codes = sqEncode(corpus, idCol, vecCol, centroids)
-      .select(col("id").as("neighbor_id"), col("cell"), col("q"))
-    ivfSqSearchCore(corpus, codes, queries, idCol, vecCol, k, shortlist, nProbe, centroids)
-  }
-
-  /** Scan-local SQ8 + cell encoding: `(id, cell, scale, q)` — the
-    * [[Quantize.int8]] formula with the cell assignment riding the
-    * same select ([[ivfAssignUdf]], shared with every IVF path).
-    * `scale` is stored for dequantize-ability; ranking never reads it
-    * (scales cancel out of the code-space cosine). Shared by
-    * [[ivfSqKnn]] and [[AnnIndex.encodeIvfSq]] — ONE arithmetic, so
-    * stored codes equal in-plan codes exactly. */
-  private[operators] def sqEncode(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Double]]
   ): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      ivfAssignUdf(centroids)(col(vecCol)).as("cell"),
-      Quantize.maxAbsCol(col(vecCol)).as("scale"), col(vecCol).as("__v"))
-      .select(col("id"), col("cell"), col("scale"),
-        Quantize.int8CodesCol(col("__v"), col("scale")).as("q"))
-
-  /** The probed-cell int8 shortlist + exact-rescore core over
-    * already-encoded `(neighbor_id, cell, q)` rows — shared verbatim
-    * by [[ivfSqKnn]] (in-plan encoding) and
-    * [[AnnIndex.ivfSqKnnIndexed]] (stored codes), so the two paths
-    * return identical rows. Stage-1 ranks by the code-space cosine
-    * (exact integer dots, norms precomputed per side before the
-    * join); null codes and zero norms drop to null and filter
-    * ([[quantizedKnn]]'s null contract). */
-  private[operators] def ivfSqSearchCore(
-      corpus: DataFrame, codes: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, shortlist: Int, nProbe: Int,
-      centroids: Array[Array[Double]]
-  ): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
-    val idot = intDotCol
-    val probeUdf = ivfProbeCellsUdf(centroids, nProbe)
-    val qz = Quantize.int8(queries, idCol, vecCol)
-      .select(col(idCol).as("query_id"), col("q").as("qq"))
-      .withColumn("qn", sqrt(idot(col("qq"), col("qq")).cast("double")))
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "query_id")
-      .withColumn("cell", explode(probeUdf(col("qv").cast("array<double>"))))
-      .select("query_id", "cell", "qq", "qn")
-    val cz = codes
-      .select(col("neighbor_id"), col("cell").cast("int").as("cell"), col("q").as("cq"))
-      .withColumn("cn", sqrt(idot(col("cq"), col("cq")).cast("double")))
-    val denom = col("qn") * col("cn")
-    val approx = when(denom === 0.0, lit(null))
-      .otherwise(idot(col("qq"), col("cq")).cast("double") / denom)
-    val cand = cz
-      .join(broadcast(qz), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", approx)
-      .filter(col("approx").isNotNull)
-      .withColumn("arank",
-        row_number().over(
-          Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))))
-      .filter(col("arank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, cand, idCol, vecCol, k)
-  }
+    retrainSearch(AnnIndex.Model(None,
+        Some(trainIvfModel(corpus, idCol, vecCol, nCells, iters)), AnnIndex.Sq8),
+      corpus, queries, idCol, vecCol, k, nProbe, shortlist)
 
   // ============================================================== OPQ
   /** An Optimized Product Quantizer (Ge et al., CVPR 2013 — FAISS's
@@ -1348,11 +1127,10 @@ object Similarity {
   }
 
   /** Column-level rotation into index space (float32, the embedding
-    * column's own width): the composed OPQ+IVF-PQ path rotates
+    * column's own width): the composed OPQ+IVF-PQ index rotates
     * corpus vectors once at encode time and query vectors once at
-    * probe time, then reuses EVERY existing IVF-PQ UDF verbatim on
-    * the rotated column — one arithmetic, so stored codes equal
-    * in-plan codes exactly. Rotation preserves norms, so normalizing
+    * probe time, then reuses EVERY IVF-PQ UDF verbatim on the
+    * rotated column. Rotation preserves norms, so normalizing
     * the rotated vector (which the downstream UDFs do) equals
     * rotating the unit vector, float rounding aside — and both the
     * encode and query paths take the SAME rounding. */
@@ -1443,58 +1221,6 @@ object Similarity {
       trainBooks(sample.map(v => rotateVec(rot, v)))))
   }
 
-  /** Scan-local OPQ encoding: normalize → rotate → m argmin-L2 codes
-    * ([[subspaceCodes]], the plain-PQ arithmetic over the rotated
-    * vector). Shared by the retrain path and [[AnnIndex.encodeOpq]] —
-    * ONE arithmetic, so stored codes equal in-plan codes exactly. */
-  private[operators] def opqEncodeUdf(model: OpqModel)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val rot = model.rotation
-    val bounds = model.pq.bounds; val codebooks = model.pq.codebooks
-    val dim = model.pq.dim
-    udf { (id: String, cv: Seq[Float]) =>
-      if (cv == null) null
-      else {
-        if (cv.length != dim) throw new IllegalArgumentException(
-          s"opqKnn: corpus vector $id has ${cv.length} dims, index trained on $dim")
-        subspaceCodes(rotateVec(rot, unitOf(cv.toArray.map(_.toDouble))),
-          bounds, codebooks).toSeq
-      }
-    }
-  }
-
-  /** Per-query OPQ ADC table: the [[pqAdcTableUdf]] math
-    * ([[adcTableOf]]) over the ROTATED unit query — rotation preserves
-    * the dot, so the summed table entries approximate the
-    * original-space cosine. */
-  private[operators] def opqAdcTableUdf(model: OpqModel)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val rot = model.rotation
-    val bounds = model.pq.bounds; val codebooks = model.pq.codebooks
-    val kC = model.pq.kCodes; val dim = model.pq.dim
-    udf { (id: String, qv: Seq[Float]) =>
-      if (qv == null) null
-      else {
-        if (qv.length != dim) throw new IllegalArgumentException(
-          s"opqKnn: query vector $id has ${qv.length} dims, index trained on $dim")
-        adcTableOf(rotateVec(rot, unitOf(qv.toArray.map(_.toDouble))),
-          bounds, codebooks, kC).toSeq
-      }
-    }
-  }
-
-  /** The OPQ ADC shortlist + exact-rescore core over already-encoded
-    * `(neighbor_id, codes)` — shared verbatim by [[opqKnn]] and
-    * [[AnnIndex.opqKnnIndexed]], so the two paths return identical
-    * rows. The exact rescore runs in the ORIGINAL space (rotation
-    * only chooses candidates). */
-  private[operators] def opqSearchCore(
-      corpus: DataFrame, codes: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, shortlist: Int, model: OpqModel
-  ): DataFrame =
-    adcSearchCore(corpus, codes, queries, idCol, vecCol, k, shortlist,
-      opqAdcTableUdf(model), pqAdcLookupUdf(model.pq))
-
   /** OPQ ANN, retrain path: train rotation + codebooks, encode, ADC
     * shortlist, exact rescore. `(query_id, neighbor_id, rank,
     * cosine)`, every cosine exact. */
@@ -1504,11 +1230,8 @@ object Similarity {
       m: Int = 8, kCodes: Int = 16, shortlist: Int = 32,
       iters: Int = 10, opqIters: Int = 8
   ): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val model = trainOpqModel(corpus, idCol, vecCol, m, kCodes, iters, opqIters)
-    val codes = corpus.select(col(idCol).as("neighbor_id"),
-      opqEncodeUdf(model)(col(idCol).cast("string"), col(vecCol)).as("codes"))
-    opqSearchCore(corpus, codes, queries, idCol, vecCol, k, shortlist, model)
+    retrainSearch(AnnIndex.Model(Some(model.rotation), None, AnnIndex.Pq(model.pq)),
+      corpus, queries, idCol, vecCol, k, shortlist = shortlist)
   }
 }

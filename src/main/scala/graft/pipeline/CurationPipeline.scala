@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.yaml.snakeyaml.Yaml
 
 import graft.exec.Staging
-import graft.operators.{Decontaminate, Dedup, Multimodal, Packing, Sampling, Sessions, TextAnalysis}
+import graft.operators.{AnnIndex, AnnLifecycle, Decontaminate, Dedup, Multimodal, Packing, Sampling, Sessions, TextAnalysis}
 import graft.streaming.{MaintainedStore, StreamingAdmission, StreamingAnnIndex, StreamingAudioDedup, StreamingImageDedup, StreamingLineDedup, StreamingNearDup, StreamingRecrawl, StreamingSemDedup, StreamingVideoDedup}
 
 /** Declarative training-data curation pipelines — the job-spec surface
@@ -392,6 +392,26 @@ object CurationPipeline {
         else d.withColumn(e, lit(null).cast("string")))
       padded.select((c.input.columns.toSeq ++ extraCols).map(col): _*)
     }
+  }
+
+  /** The stored ANN model a `knn_encode`/`knn` step names: `model:` is
+    * a centroids table, a codebooks table, or a combined OPQ table;
+    * beside codebooks, `centroids:` makes it the composed IVF-PQ
+    * index. `sq8` picks the SQ8 codec of a centroids model. */
+  private def knnModel(c: Ctx, sq8: Boolean): AnnIndex.Model = {
+    val table = c.resolve(c.params.reqStr("model"))
+    val isCells = table.columns.contains("cell")
+    require(isCells || table.columns.contains("subspace"),
+      s"step ${c.stepName}: table '${c.params.reqStr("model")}' is not a " +
+        "knn model (expected a 'cell' or 'subspace' column)")
+    require(!c.params.has("centroids") || !isCells && !table.columns.contains("rot_row"),
+      s"step ${c.stepName}: centroids applies to pq/ivfpq codebook models only")
+    AnnIndex.load(
+      centroids = if (isCells) Some(table)
+        else if (c.params.has("centroids")) Some(c.resolve(c.params.reqStr("centroids")))
+        else None,
+      codebooks = if (isCells) None else Some(table),
+      sq8 = isCells && sq8)
   }
 
   /** The step registry. Survivor-style steps (dedup/decontaminate/
@@ -2106,12 +2126,12 @@ object CurationPipeline {
             s"step ${c.stepName}: m/kCodes apply to family: pq/ivfpq only")
           require(!c.params.has("centroids"),
             s"step ${c.stepName}: centroids applies to family: ivfpq only")
-          graft.operators.AnnIndex.trainIvf(c.input, eid, vec,
+          AnnIndex.trainIvf(c.input, eid, vec,
             c.params.int("nCells", 16), c.params.int("iters", 10))
         case "pq" =>
           require(!c.params.has("nCells") && !c.params.has("centroids"),
             s"step ${c.stepName}: nCells/centroids apply to other families")
-          graft.operators.AnnIndex.trainPq(c.input, eid, vec,
+          AnnIndex.trainPq(c.input, eid, vec,
             c.params.int("m", 8), c.params.int("kCodes", 16),
             c.params.int("iters", 10))
         case "ivfpq" =>
@@ -2122,7 +2142,7 @@ object CurationPipeline {
           require(!c.params.has("nCells"),
             s"step ${c.stepName}: nCells applies to family: ivf only " +
               "(the cell count is the centroids table's)")
-          graft.operators.AnnIndex.trainIvfPq(c.input, eid, vec,
+          AnnIndex.trainIvfPq(c.input, eid, vec,
             c.resolve(c.params.reqStr("centroids")),
             c.params.int("m", 8), c.params.int("kCodes", 16),
             c.params.int("iters", 10))
@@ -2132,7 +2152,7 @@ object CurationPipeline {
           // pretransform rows) the downstream steps dispatch on
           require(!c.params.has("nCells") && !c.params.has("centroids"),
             s"step ${c.stepName}: nCells/centroids apply to other families")
-          graft.operators.AnnIndex.trainOpqCombined(c.input, eid, vec,
+          AnnIndex.trainOpqCombined(c.input, eid, vec,
             c.params.int("m", 8), c.params.int("kCodes", 16),
             c.params.int("iters", 10))
         case other => throw new IllegalArgumentException(
@@ -2141,11 +2161,12 @@ object CurationPipeline {
     }, tableParams = Set("centroids")),
     // persisted ANN index, step 2 of 3 — ENCODE: corpus vectors
     // against a stored model (`model:` names a knn_train step or a
-    // prior run's model table). Output is the postings table
-    // (id, cell, vector) for IVF — the inverted-list layout — or the
-    // codes table (id, codes) for PQ (8 bytes/vector at m=8). The
-    // family is the model table's schema; encoding is scan-local (the
-    // model rides the UDF closure), no shuffle.
+    // prior run's model table; [[knnModel]]). Output is the codes
+    // table of the model's kind ([[AnnIndex.encode]]): postings
+    // (id, cell, vector) for IVF — the inverted-list layout; `quantize:
+    // sq8` on a centroids model stores int8 codes instead (FAISS
+    // IVF,SQ8); (id, [cell,] codes) for the PQ family. Encoding is
+    // scan-local (the model rides the UDF closure), no shuffle.
     // mode: admit maintains the encoded table INCREMENTALLY under
     // --state ($state/<step>/encoded): each batch anti-joins the
     // store's bucket-pruned ids and encodes only NEW vectors against
@@ -2160,69 +2181,33 @@ object CurationPipeline {
       for (needed <- Seq(eid, vec))
         require(c.input.columns.contains(needed),
           s"step ${c.stepName}: input has no column '$needed'")
-      val model = c.resolve(c.params.reqStr("model"))
-      // `centroids:` beside a codebooks model selects the COMPOSED
-      // IVF-PQ encode (cell + residual codes); pq and ivfpq codebook
-      // tables share a schema, so the param is the family switch.
-      // `quantize: sq8` on a centroids model selects scalar-quantized
-      // postings (int8 codes, a quarter the bytes — FAISS IVF,SQ8).
-      val (family, schema) =
-        if (model.columns.contains("cell")) {
-          require(!c.params.has("centroids"),
-            s"step ${c.stepName}: centroids applies to codebook models " +
-              "(the model IS the centroids table here)")
-          c.params.str("quantize", "none") match {
-            case "none" => ("ivf", "id BIGINT, cell INT, vector ARRAY<FLOAT>")
-            case "sq8"  => ("ivfsq", "id BIGINT, cell INT, scale DOUBLE, q ARRAY<INT>")
-            case other  => throw new IllegalArgumentException(
-              s"step ${c.stepName}: quantize must be none or sq8, got '$other'")
-          }
-        } else if (model.columns.contains("rot_row")) {
-          // combined OPQ table (codebooks + rot_row-marked rotation)
-          require(!c.params.has("centroids") && !c.params.has("quantize"),
-            s"step ${c.stepName}: centroids/quantize apply to other families")
-          ("opq", "id BIGINT, codes ARRAY<INT>")
-        } else if (model.columns.contains("subspace")) {
-          require(!c.params.has("quantize"),
-            s"step ${c.stepName}: quantize applies to centroid models only " +
-              "(codebook models ARE the quantization)")
-          if (c.params.has("centroids"))
-            ("ivfpq", "id BIGINT, cell INT, codes ARRAY<INT>")
-          else ("pq", "id BIGINT, codes ARRAY<INT>")
-        } else throw new IllegalArgumentException(
-          s"step ${c.stepName}: table '${c.params.reqStr("model")}' is not a " +
-            "knn model (expected a 'cell' or 'subspace' column)")
-      lazy val cents = c.resolve(c.params.reqStr("centroids"))
-      def encodeAll(df: DataFrame, idc: String): DataFrame =
-        if (family == "ivf") graft.operators.AnnIndex.encodeIvf(df, idc, vec, model)
-        else if (family == "ivfsq")
-          graft.operators.AnnIndex.encodeIvfSq(df, idc, vec, model)
-        else if (family == "ivfpq")
-          graft.operators.AnnIndex.encodeIvfPq(df, idc, vec, cents, model)
-        else if (family == "opq")
-          graft.operators.AnnIndex.encodeOpqCombined(df, idc, vec, model)
-        else graft.operators.AnnIndex.encodePq(df, idc, vec, model)
+      val quantize = c.params.str("quantize", "none")
+      require(quantize == "none" || quantize == "sq8",
+        s"step ${c.stepName}: quantize must be none or sq8, got '$quantize'")
+      val model = knnModel(c, sq8 = quantize == "sq8")
+      require(!c.params.has("quantize") || !model.codec.isInstanceOf[AnnIndex.Pq],
+        s"step ${c.stepName}: quantize applies to centroid models only " +
+          "(codebook models ARE the quantization)")
+      val schema = model.codesSchema
       c.params.str("mode", "full") match {
         case "full" =>
           require(!c.params.has("buckets"),
             s"step ${c.stepName}: buckets applies to mode: admit only")
-          encodeAll(c.input, eid)
+          AnnIndex.encode(model, c.input, eid, vec)
         case "admit" =>
           c.requireIntegralId("knn_encode mode: admit")
           val store = s"${c.requireState("knn_encode mode: admit")}/encoded"
           val buckets = c.params.int("buckets", 64)
           if (!StreamingAnnIndex.initialized(store))
-            // cell-carrying families take the two-level (cell, bucket)
+            // cell-carrying kinds take the two-level (cell, bucket)
             // layout: admit keeps its bucket pruning, and the stored
             // query's probed-cell filter becomes PARTITION pruning
             StreamingAnnIndex.initialize(store, buckets, schema,
-              partitionCols =
-                if (schema.contains("cell INT"))
-                  Seq("cell", MaintainedStore.BucketCol)
-                else Seq(MaintainedStore.BucketCol))
+              partitionCols = model.centroids.map(_ => "cell").toSeq :+
+                MaintainedStore.BucketCol)
           StreamingAnnIndex.applyBatch(
             c.input.select(col(eid), col(vec)), eid, store, schema, buckets,
-            newRows => encodeAll(newRows, "id"))
+            newRows => AnnIndex.encode(model, newRows, "id", vec))
           // the step output is the FULL encoded table read back off the
           // bucketed store — rebalance before the runner writes it, or
           // the write inherits one tiny output file per store file
@@ -2256,12 +2241,12 @@ object CurationPipeline {
       c.requireIntegralId("knn_maintain")
       val root = c.requireState("knn_maintain")
       val inf = Double.PositiveInfinity
-      val d = graft.operators.AnnLifecycle.maintainNight(
+      val d = AnnLifecycle.maintainNight(
         c.input.select(col(eid), col(vec)), eid, vec, root,
         nCells = c.params.int("nCells", 16), m = c.params.int("m", 8),
         kCodes = c.params.int("kCodes", 16),
         buckets = c.params.int("buckets", 64),
-        th = graft.operators.AnnLifecycle.Thresholds(
+        th = AnnLifecycle.Thresholds(
           freshPermille = c.params.long("freshPermille", 600L),
           skewMax = c.params.double("skewMax", inf),
           reconMax = c.params.double("reconMax", inf)),
@@ -2280,13 +2265,16 @@ object CurationPipeline {
     }, modes = Set("admit")),
     // persisted ANN index, step 3 of 3 — QUERY: the input is the
     // QUERY table (id + vec); `model:`/`codes:` name the stored index
-    // halves (same-run steps or prior-run tables), or `index:` names a
+    // halves (same-run steps or prior-run tables; an SQ8 codes table
+    // picks the SQ8 codec of a centroids model), or `index:` names a
     // knn_maintain step whose LIVE lifecycle index
     // ($state/<step>/index) supplies all three — the reader half of
     // the atomic-swap contract. IVF searches the postings directly;
-    // PQ additionally needs `corpus:` (the raw vectors) for the exact
-    // rescore of the ADC shortlist — every returned cosine is exact
-    // either way. Output: (query_id, neighbor_id, rank, cosine).
+    // quantized codes additionally need `corpus:` (the raw vectors)
+    // for the exact rescore of the shortlist — every returned cosine
+    // is exact either way. A codes table of another kind than the
+    // model fails loud ([[AnnIndex.search]]). Output: (query_id,
+    // neighbor_id, rank, cosine).
     "knn" -> Op(Set("model", "codes", "corpus", "centroids", "index", "id",
       "vec", "k", "nProbe", "shortlist"), { c =>
       val eid = c.params.str("id", c.idCol)
@@ -2294,86 +2282,38 @@ object CurationPipeline {
       for (needed <- Seq(eid, vec))
         require(c.input.columns.contains(needed),
           s"step ${c.stepName}: input has no column '$needed'")
-      if (c.params.has("index")) {
-        for (excl <- Seq("model", "codes", "centroids"))
-          require(!c.params.has(excl),
-            s"step ${c.stepName}: index replaces $excl (the live lifecycle " +
-              "index IS the stored tables)")
-        val spark = c.input.sparkSession
-        val own = c.requireState("knn index:")
-        val idxDir = own.stripSuffix(s"/${c.stepName}") +
-          s"/${c.params.reqStr("index")}/${graft.operators.AnnLifecycle.IndexDirName}"
-        val corpus = c.resolve(c.params.reqStr("corpus"))
-        for (needed <- Seq(eid, vec))
-          require(corpus.columns.contains(needed),
-            s"step ${c.stepName}: corpus table has no column '$needed'")
-        val k0 = c.params.int("k", 10)
-        graft.operators.AnnIndex.ivfPqKnnIndexed(
-          corpus, c.input, eid, vec, k0,
-          graft.operators.AnnLifecycle.liveCentroids(spark, idxDir),
-          graft.operators.AnnLifecycle.liveBooks(spark, idxDir),
-          graft.operators.AnnLifecycle.liveCodes(spark, idxDir),
-          c.params.int("nProbe", 3),
-          c.params.int("shortlist", math.max(32, 2 * k0)))
-      } else {
-      val model = c.resolve(c.params.reqStr("model"))
-      val codes = c.resolve(c.params.reqStr("codes"))
-      val k = c.params.int("k", 10)
-      if (model.columns.contains("cell")) {
-        require(!c.params.has("centroids"),
-          s"step ${c.stepName}: centroids applies to codebook models " +
-            "(the model IS the centroids table here)")
-        if (codes.columns.contains("q")) {
-          // scalar-quantized postings (knn_encode quantize: sq8):
-          // int8 rank within probed cells, exact rescore from corpus
+      val (model, codes) =
+        if (c.params.has("index")) {
+          for (excl <- Seq("model", "codes", "centroids"))
+            require(!c.params.has(excl),
+              s"step ${c.stepName}: index replaces $excl (the live lifecycle " +
+                "index IS the stored tables)")
+          val spark = c.input.sparkSession
+          val idxDir = c.requireState("knn index:").stripSuffix(s"/${c.stepName}") +
+            s"/${c.params.reqStr("index")}/${AnnLifecycle.IndexDirName}"
+          AnnLifecycle.liveIndex(spark, idxDir)
+        } else {
+          val codes = c.resolve(c.params.reqStr("codes"))
+          (knnModel(c, sq8 = codes.columns.contains("q")), codes)
+        }
+      val corpus =
+        if (model.codec == AnnIndex.Flat) {
+          require(!c.params.has("corpus") && !c.params.has("shortlist"),
+            s"step ${c.stepName}: corpus/shortlist apply to quantized codes " +
+              "only (IVF postings carry the vectors)")
+          None
+        } else {
           val corpus = c.resolve(c.params.reqStr("corpus"))
           for (needed <- Seq(eid, vec))
             require(corpus.columns.contains(needed),
               s"step ${c.stepName}: corpus table has no column '$needed'")
-          graft.operators.AnnIndex.ivfSqKnnIndexed(corpus, c.input, eid, vec, k,
-            model, codes, c.params.int("nProbe", 3),
-            c.params.int("shortlist", math.max(32, 2 * k)))
-        } else {
-          require(!c.params.has("corpus") && !c.params.has("shortlist"),
-            s"step ${c.stepName}: corpus/shortlist apply to quantized codes " +
-              "only (IVF postings carry the vectors)")
-          graft.operators.AnnIndex.ivfKnnIndexed(c.input, eid, vec, k,
-            model, codes, c.params.int("nProbe", 3))
+          Some(corpus)
         }
-      } else if (model.columns.contains("rot_row")) {
-        // combined OPQ table: rotated ADC shortlist, original-space
-        // exact rescore from the corpus
-        require(!c.params.has("centroids") && !c.params.has("nProbe"),
-          s"step ${c.stepName}: centroids/nProbe apply to ivf-family models")
-        val corpus = c.resolve(c.params.reqStr("corpus"))
-        for (needed <- Seq(eid, vec))
-          require(corpus.columns.contains(needed),
-            s"step ${c.stepName}: corpus table has no column '$needed'")
-        graft.operators.AnnIndex.opqKnnIndexedCombined(corpus, c.input, eid, vec,
-          k, model, codes, c.params.int("shortlist", math.max(32, 2 * k)))
-      } else if (model.columns.contains("subspace")) {
-        val corpus = c.resolve(c.params.reqStr("corpus"))
-        for (needed <- Seq(eid, vec))
-          require(corpus.columns.contains(needed),
-            s"step ${c.stepName}: corpus table has no column '$needed'")
-        if (c.params.has("centroids"))
-          // composed IVF-PQ: centroids beside the codebooks — probes
-          // prune the codes scan to nProbe cells, ADC over the
-          // residual codebooks, exact rescore from the corpus
-          graft.operators.AnnIndex.ivfPqKnnIndexed(corpus, c.input, eid, vec, k,
-            c.resolve(c.params.reqStr("centroids")), model, codes,
-            c.params.int("nProbe", 3),
-            c.params.int("shortlist", math.max(32, 2 * k)))
-        else {
-          require(!c.params.has("nProbe"),
-            s"step ${c.stepName}: nProbe applies to ivf/ivfpq models only")
-          graft.operators.AnnIndex.pqKnnIndexed(corpus, c.input, eid, vec, k,
-            model, codes, c.params.int("shortlist", math.max(32, 2 * k)))
-        }
-      } else throw new IllegalArgumentException(
-        s"step ${c.stepName}: table '${c.params.reqStr("model")}' is not a " +
-          "knn model (expected a 'cell' or 'subspace' column)")
-      }
+      require(model.centroids.isDefined || !c.params.has("nProbe"),
+        s"step ${c.stepName}: nProbe applies to ivf-family models only")
+      val k = c.params.int("k", 10)
+      AnnIndex.search(model, corpus, c.input, codes, eid, vec, k,
+        c.params.int("nProbe", 3), c.params.int("shortlist", math.max(32, 2 * k)))
     }, tableParams = Set("model", "codes", "corpus", "centroids"),
       stepRefParams = Set("index")),
     // leakage-free train/valid/test assignment: adds a `split` column,

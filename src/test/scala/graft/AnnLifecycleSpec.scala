@@ -77,7 +77,9 @@ class AnnLifecycleSpec extends SparkSpec {
     val books = spark.read.parquet(s"$scratch/books")
     assert(AnnLifecycle.liveBooks(spark, idx).collect().toSet ==
       books.collect().toSet, "post-swap books must equal a from-scratch train")
-    val expected = AnnIndex.encodeIvfPq(full, "vec_id", "embedding", cents, books)
+    val expected = AnnIndex.encode(
+        AnnIndex.load(centroids = Some(cents), codebooks = Some(books)),
+        full, "vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.get(1), r.getSeq[Int](2))).toSet
     val got = AnnLifecycle.liveCodes(spark, idx)
       .collect().map(r => (r.getLong(0), r.get(1), r.getSeq[Int](2))).toSet

@@ -2994,9 +2994,10 @@ class CliSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Double)] =
       df.select("query_id", "neighbor_id", "rank", "cosine")
         .as[(Long, Long, Int, Double)].collect().sorted.toSeq
-    val direct = AnnIndex.ivfSqKnnIndexed(
-      embs, embs.filter(col("vec_id") < 3), "vec_id", "embedding", k = 3,
-      spark.read.parquet(s"$out/ann_model"), codes, nProbe = 2, shortlist = 8)
+    val direct = AnnIndex.search(
+      AnnIndex.load(centroids = Some(spark.read.parquet(s"$out/ann_model")), sq8 = true),
+      Some(embs), embs.filter(col("vec_id") < 3), codes, "vec_id", "embedding", k = 3,
+      nProbe = 2, shortlist = 8)
     assert(rows(spark.read.parquet(s"$out/neighbors")) === rows(direct),
       "pipeline SQ8 chain diverged from the direct stored path")
 
@@ -3034,7 +3035,8 @@ class CliSpec extends SparkSpec {
       df.select("id", "cell", "scale", "q")
         .as[(Long, Int, Double, Seq[Int])].collect().toSet
     assert(codeRows(night2) ===
-      codeRows(AnnIndex.encodeIvfSq(embs, "vec_id", "embedding", model)),
+      codeRows(AnnIndex.encode(AnnIndex.load(centroids = Some(model), sq8 = true),
+        embs, "vec_id", "embedding")),
       "incrementally-maintained SQ8 store diverged from a from-scratch encode")
   }
 
@@ -3080,19 +3082,22 @@ class CliSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Double)] =
       df.select("query_id", "neighbor_id", "rank", "cosine")
         .as[(Long, Long, Int, Double)].collect().sorted.toSeq
-    val direct = AnnIndex.opqKnnIndexedCombined(
-      embs, embs.filter(col("vec_id") < 3), "vec_id", "embedding", k = 3,
-      model, codes, shortlist = 8)
+    val viaCombined = AnnIndex.load(codebooks = Some(model))
+    val direct = AnnIndex.search(viaCombined, Some(embs), embs.filter(col("vec_id") < 3),
+      codes, "vec_id", "embedding", k = 3, shortlist = 8)
     assert(rows(spark.read.parquet(s"$out/neighbors")) === rows(direct),
       "pipeline OPQ chain diverged from the direct stored path")
     // and the combined table's halves load to the SAME model the
     // two-table path trains (joint training is deterministic)
     val (rotT, booksT) = AnnIndex.trainOpq(embs, "vec_id", "embedding", m = 4, kCodes = 8)
-    val viaPair = AnnIndex.opqModel(rotT, booksT)
-    val viaCombined = AnnIndex.opqModelCombined(model)
-    assert(viaCombined.rotation.map(_.toSeq).toSeq === viaPair.rotation.map(_.toSeq).toSeq)
-    assert(viaCombined.pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq ===
-      viaPair.pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
+    val viaPair = AnnIndex.load(rotation = Some(rotT), codebooks = Some(booksT))
+    def books(m: AnnIndex.Model) = m.codec match {
+      case AnnIndex.Pq(b) => b.codebooks.map(_.map(_.toSeq).toSeq).toSeq
+      case other => fail(s"not a PQ codec: $other")
+    }
+    assert(viaCombined.rotation.get.map(_.toSeq).toSeq ===
+      viaPair.rotation.get.map(_.toSeq).toSeq)
+    assert(books(viaCombined) === books(viaPair))
   }
 
   test("pipeline ann nights: change_detect + frozen-model IVF-PQ admission over three nights equals the one-shot stored index") {
@@ -3112,7 +3117,8 @@ class CliSpec extends SparkSpec {
     val cents = spark.read.parquet(s"$src/ann_centroids.parquet")
     AnnIndex.trainIvfPq(n1, "vec_id", "embedding", cents, m = 4, kCodes = 8)
       .write.parquet(s"$src/ann_books.parquet")
-    val books = spark.read.parquet(s"$src/ann_books.parquet")
+    val model = AnnIndex.load(centroids = Some(cents),
+      codebooks = Some(spark.read.parquet(s"$src/ann_books.parquet")))
     all.filter(col("vec_id") < 3).write.parquet(s"$src/queries.parquet")
     val yaml = "examples/ann_nights_pipeline.yaml"
     def night(n: Int, pages: org.apache.spark.sql.DataFrame): String = {
@@ -3134,15 +3140,14 @@ class CliSpec extends SparkSpec {
     def codes(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Seq[Int])] =
       df.select("id", "cell", "codes").as[(Long, Int, Seq[Int])].collect().toSet
     assert(codes(spark.read.parquet(s"$out3/encoded")) ===
-      codes(AnnIndex.encodeIvfPq(all, "vec_id", "embedding", cents, books)))
+      codes(AnnIndex.encode(model, all, "vec_id", "embedding")))
     // night 3's search over the maintained index equals the one-shot
     // stored-index query, bitwise
     def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Double)] =
       df.select("query_id", "neighbor_id", "rank", "cosine")
         .as[(Long, Long, Int, Double)].collect().sorted.toSeq
-    val oneShot = AnnIndex.ivfPqKnnIndexed(
-      all, all.filter(col("vec_id") < 3), "vec_id", "embedding", k = 5,
-      cents, books, AnnIndex.encodeIvfPq(all, "vec_id", "embedding", cents, books),
+    val oneShot = AnnIndex.search(model, Some(all), all.filter(col("vec_id") < 3),
+      AnnIndex.encode(model, all, "vec_id", "embedding"), "vec_id", "embedding", k = 5,
       nProbe = 3, shortlist = 32)
     assert(hits(spark.read.parquet(s"$out3/hits")) === hits(oneShot),
       "maintained-index search diverged from the one-shot stored index")

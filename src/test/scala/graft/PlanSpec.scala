@@ -270,12 +270,12 @@ class PlanSpec extends SparkSpec {
     def vec(seed: Int): Array[Float] = Array.tabulate(dim)(d => math.sin(seed * 31 + d).toFloat)
     val emb = (0L until 24L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
     val cents = AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 4)
-    val encIvf = AnnIndex.encodeIvf(emb, "vec_id", "embedding", cents)
+    val encIvf = AnnIndex.encode(AnnIndex.load(centroids = Some(cents)), emb, "vec_id", "embedding")
       .queryExecution.executedPlan.toString
     assert(!encIvf.contains("Exchange"),
       s"IVF encoding must be scan-local (model rides the closure):\n$encIvf")
     val books = AnnIndex.trainPq(emb, "vec_id", "embedding", m = 4, kCodes = 4)
-    val encPq = AnnIndex.encodePq(emb, "vec_id", "embedding", books)
+    val encPq = AnnIndex.encode(AnnIndex.load(codebooks = Some(books)), emb, "vec_id", "embedding")
       .queryExecution.executedPlan.toString
     assert(!encPq.contains("Exchange"),
       s"PQ encoding must be scan-local:\n$encPq")
@@ -283,7 +283,8 @@ class PlanSpec extends SparkSpec {
     // (both models ride the UDF closures — no shuffle, no join)
     val cents2 = AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 4)
     val rbooks = AnnIndex.trainIvfPq(emb, "vec_id", "embedding", cents2, m = 4, kCodes = 4)
-    val encIvfPq = AnnIndex.encodeIvfPq(emb, "vec_id", "embedding", cents2, rbooks)
+    val encIvfPq = AnnIndex.encode(AnnIndex.load(centroids = Some(cents2), codebooks = Some(rbooks)),
+      emb, "vec_id", "embedding")
       .queryExecution.executedPlan.toString
     assert(!encIvfPq.contains("Exchange"),
       s"IVF-PQ encoding must be scan-local:\n$encIvfPq")
@@ -306,12 +307,12 @@ class PlanSpec extends SparkSpec {
     def vec(seed: Int): Array[Float] = Array.tabulate(dim)(d => math.sin(seed * 31 + d).toFloat)
     val emb = (0L until 48L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-ivf").toString
-    val cents = AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 8)
-    AnnIndex.encodeIvf(emb, "vec_id", "embedding", cents)
+    val model = AnnIndex.load(centroids =
+      Some(AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 8)))
+    AnnIndex.encode(model, emb, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/postings")
-    val out = AnnIndex.ivfKnnIndexed(
-      emb.filter(col("vec_id") < 2), "vec_id", "embedding", k = 3,
-      cents, spark.read.parquet(s"$dir/postings"), nProbe = 2)
+    val out = AnnIndex.search(model, None, emb.filter(col("vec_id") < 2),
+      spark.read.parquet(s"$dir/postings"), "vec_id", "embedding", k = 3, nProbe = 2)
     val plan = out.queryExecution.executedPlan.toString
     // the postings FileScan must carry a cell partition filter (the
     // probed-cell IN list), so unprobed partitions are never read
@@ -335,12 +336,12 @@ class PlanSpec extends SparkSpec {
     def vec(seed: Int): Array[Float] = Array.tabulate(dim)(d => math.sin(seed * 31 + d).toFloat)
     val emb = (0L until 48L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-ivfsq").toString
-    val cents = AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 8)
-    AnnIndex.encodeIvfSq(emb, "vec_id", "embedding", cents)
+    val model = AnnIndex.load(centroids =
+      Some(AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 8)), sq8 = true)
+    AnnIndex.encode(model, emb, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/codes")
-    val out = AnnIndex.ivfSqKnnIndexed(
-      emb, emb.filter(col("vec_id") < 2), "vec_id", "embedding", k = 3,
-      cents, spark.read.parquet(s"$dir/codes"), nProbe = 2, shortlist = 8)
+    val out = AnnIndex.search(model, Some(emb), emb.filter(col("vec_id") < 2),
+      spark.read.parquet(s"$dir/codes"), "vec_id", "embedding", k = 3, nProbe = 2, shortlist = 8)
     val plan = out.queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(l =>
       l.contains("FileScan") && l.contains("codes")).getOrElse(
@@ -363,10 +364,9 @@ class PlanSpec extends SparkSpec {
     AnnLifecycle.maintainNight(emb, "vec_id", "embedding", state,
       nCells = 8, m = 4, kCodes = 8, buckets = 4)
     val idx = s"$state/${AnnLifecycle.IndexDirName}"
-    val out = AnnIndex.ivfPqKnnIndexed(
-      emb, emb.filter(col("vec_id") < 2), "vec_id", "embedding", k = 3,
-      AnnLifecycle.liveCentroids(spark, idx), AnnLifecycle.liveBooks(spark, idx),
-      AnnLifecycle.liveCodes(spark, idx), nProbe = 2, shortlist = 8)
+    val out = AnnIndex.search(AnnLifecycle.liveModel(spark, idx), Some(emb),
+      emb.filter(col("vec_id") < 2), AnnLifecycle.liveCodes(spark, idx),
+      "vec_id", "embedding", k = 3, nProbe = 2, shortlist = 8)
     val plan = out.queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(l =>
       l.contains("FileScan") && l.contains("codes")).getOrElse(
@@ -388,11 +388,11 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-ivfpq").toString
     val cents = AnnIndex.trainIvf(emb, "vec_id", "embedding", nCells = 8)
     val books = AnnIndex.trainIvfPq(emb, "vec_id", "embedding", cents, m = 4, kCodes = 8)
-    AnnIndex.encodeIvfPq(emb, "vec_id", "embedding", cents, books)
+    val model = AnnIndex.load(centroids = Some(cents), codebooks = Some(books))
+    AnnIndex.encode(model, emb, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/codes")
-    val out = AnnIndex.ivfPqKnnIndexed(
-      emb, emb.filter(col("vec_id") < 2), "vec_id", "embedding", k = 3,
-      cents, books, spark.read.parquet(s"$dir/codes"), nProbe = 2, shortlist = 8)
+    val out = AnnIndex.search(model, Some(emb), emb.filter(col("vec_id") < 2),
+      spark.read.parquet(s"$dir/codes"), "vec_id", "embedding", k = 3, nProbe = 2, shortlist = 8)
     val plan = out.queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(l =>
       l.contains("FileScan") && l.contains("codes")).getOrElse(

@@ -792,11 +792,11 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.trainIvf(df, "vec_id", "embedding", nCells = 8)
       .write.parquet(s"$dir/ivf_centroids")
     val cents = spark.read.parquet(s"$dir/ivf_centroids")
-    AnnIndex.encodeIvf(df, "vec_id", "embedding", cents)
+    val ivf = AnnIndex.load(centroids = Some(cents))
+    AnnIndex.encode(ivf, df, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/ivf_postings")
-    val storedIvf = collected(AnnIndex.ivfKnnIndexed(
-      queries, "vec_id", "embedding", k = 3,
-      cents, spark.read.parquet(s"$dir/ivf_postings"), nProbe = 3))
+    val storedIvf = collected(AnnIndex.search(ivf, None, queries,
+      spark.read.parquet(s"$dir/ivf_postings"), "vec_id", "embedding", k = 3, nProbe = 3))
     assert(storedIvf === retrainIvf, "stored-IVF path diverged from the retrain path")
 
     // PQ: same contract
@@ -805,11 +805,11 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.trainPq(df, "vec_id", "embedding", m = 4, kCodes = 8)
       .write.parquet(s"$dir/pq_codebooks")
     val books = spark.read.parquet(s"$dir/pq_codebooks")
-    AnnIndex.encodePq(df, "vec_id", "embedding", books)
+    val pq = AnnIndex.load(codebooks = Some(books))
+    AnnIndex.encode(pq, df, "vec_id", "embedding")
       .write.parquet(s"$dir/pq_codes")
-    val storedPq = collected(AnnIndex.pqKnnIndexed(
-      df, queries, "vec_id", "embedding", k = 3,
-      books, spark.read.parquet(s"$dir/pq_codes"), shortlist = 10))
+    val storedPq = collected(AnnIndex.search(pq, Some(df), queries,
+      spark.read.parquet(s"$dir/pq_codes"), "vec_id", "embedding", k = 3, shortlist = 10))
     assert(storedPq === retrainPq, "stored-PQ path diverged from the retrain path")
 
     // IVF-PQ: the composed index (residual codebooks inside IVF
@@ -820,11 +820,11 @@ class SimilaritySpec extends SparkSpec {
     AnnIndex.trainIvfPq(df, "vec_id", "embedding", cents, m = 4, kCodes = 8)
       .write.parquet(s"$dir/ivfpq_codebooks")
     val rbooks = spark.read.parquet(s"$dir/ivfpq_codebooks")
-    AnnIndex.encodeIvfPq(df, "vec_id", "embedding", cents, rbooks)
+    val ivfPq = AnnIndex.load(centroids = Some(cents), codebooks = Some(rbooks))
+    AnnIndex.encode(ivfPq, df, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/ivfpq_codes")
-    val storedIvfPq = collected(AnnIndex.ivfPqKnnIndexed(
-      df, queries, "vec_id", "embedding", k = 3,
-      cents, rbooks, spark.read.parquet(s"$dir/ivfpq_codes"),
+    val storedIvfPq = collected(AnnIndex.search(ivfPq, Some(df), queries,
+      spark.read.parquet(s"$dir/ivfpq_codes"), "vec_id", "embedding", k = 3,
       nProbe = 3, shortlist = 10))
     assert(storedIvfPq === retrainIvfPq,
       "stored-IVF-PQ path diverged from the retrain path")
@@ -833,11 +833,11 @@ class SimilaritySpec extends SparkSpec {
     val retrainIvfSq = collected(
       Similarity.ivfSqKnn(df, queries, "vec_id", "embedding", k = 3,
         nCells = 8, nProbe = 3, shortlist = 10))
-    AnnIndex.encodeIvfSq(df, "vec_id", "embedding", cents)
+    val ivfSq = AnnIndex.load(centroids = Some(cents), sq8 = true)
+    AnnIndex.encode(ivfSq, df, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/ivfsq_codes")
-    val storedIvfSq = collected(AnnIndex.ivfSqKnnIndexed(
-      df, queries, "vec_id", "embedding", k = 3,
-      cents, spark.read.parquet(s"$dir/ivfsq_codes"),
+    val storedIvfSq = collected(AnnIndex.search(ivfSq, Some(df), queries,
+      spark.read.parquet(s"$dir/ivfsq_codes"), "vec_id", "embedding", k = 3,
       nProbe = 3, shortlist = 10))
     assert(storedIvfSq === retrainIvfSq,
       "stored-IVF-SQ8 path diverged from the retrain path")
@@ -852,21 +852,21 @@ class SimilaritySpec extends SparkSpec {
     obooksT.write.parquet(s"$dir/opq_codebooks")
     val orot = spark.read.parquet(s"$dir/opq_rotation")
     val obooks = spark.read.parquet(s"$dir/opq_codebooks")
-    AnnIndex.encodeOpq(df, "vec_id", "embedding", orot, obooks)
+    val opq = AnnIndex.load(rotation = Some(orot), codebooks = Some(obooks))
+    AnnIndex.encode(opq, df, "vec_id", "embedding")
       .write.parquet(s"$dir/opq_codes")
-    val storedOpq = collected(AnnIndex.opqKnnIndexed(
-      df, queries, "vec_id", "embedding", k = 3,
-      orot, obooks, spark.read.parquet(s"$dir/opq_codes"), shortlist = 10))
+    val storedOpq = collected(AnnIndex.search(opq, Some(df), queries,
+      spark.read.parquet(s"$dir/opq_codes"), "vec_id", "embedding", k = 3, shortlist = 10))
     assert(storedOpq === retrainOpq, "stored-OPQ path diverged from the retrain path")
 
     // model-table validation fails loud: a filtered centroids table
     // (gap), a duplicated codebook row, and a corpus passed as a model
     val gap = intercept[IllegalArgumentException] {
-      AnnIndex.ivfModel(cents.filter(col("cell") =!= 3))
+      AnnIndex.load(centroids = Some(cents.filter(col("cell") =!= 3)))
     }
     assert(gap.getMessage.contains("no cell"))
     val dup = intercept[IllegalArgumentException] {
-      AnnIndex.pqModel(books.union(books.limit(1)))
+      AnnIndex.load(codebooks = Some(books.union(books.limit(1))))
     }
     assert(dup.getMessage.contains("codebook rows"))
     // a doctored (non-orthogonal) rotation fails loud — ADC scores
@@ -876,7 +876,7 @@ class SimilaritySpec extends SparkSpec {
         org.apache.spark.sql.functions.transform(col("coeffs"), _ * 2.0))
         .otherwise(col("coeffs")))
     val badRot = intercept[IllegalArgumentException] {
-      AnnIndex.opqModel(doctored, obooks)
+      AnnIndex.load(rotation = Some(doctored), codebooks = Some(obooks))
     }
     assert(badRot.getMessage.contains("not orthogonal"))
   }
@@ -898,17 +898,18 @@ class SimilaritySpec extends SparkSpec {
     rotT.write.parquet(s"$dir/rotation")
     centsT.write.parquet(s"$dir/centroids")
     booksT.write.parquet(s"$dir/codebooks")
-    val (rot, cents, books) = (spark.read.parquet(s"$dir/rotation"),
-      spark.read.parquet(s"$dir/centroids"), spark.read.parquet(s"$dir/codebooks"))
-    AnnIndex.encodeIvfOpq(df, "vec_id", "embedding", rot, cents, books)
+    val model = AnnIndex.load(rotation = Some(spark.read.parquet(s"$dir/rotation")),
+      centroids = Some(spark.read.parquet(s"$dir/centroids")),
+      codebooks = Some(spark.read.parquet(s"$dir/codebooks")))
+    AnnIndex.encode(model, df, "vec_id", "embedding")
       .write.partitionBy("cell").parquet(s"$dir/codes")
     val codes = spark.read.parquet(s"$dir/codes")
     // exhaustive regime degenerates to exact rescoring of everything —
     // must equal brute top-k bit for bit, IN THE ORIGINAL SPACE (the
     // rotated cosines would differ in the last ulps; bitwise equality
     // here proves the rescore never sees rotated vectors)
-    val all = AnnIndex.ivfOpqKnnIndexed(df, queries, "vec_id", "embedding",
-      k = 3, rot, cents, books, codes, nProbe = 4, shortlist = 40).collect()
+    val all = AnnIndex.search(model, Some(df), queries, codes, "vec_id", "embedding",
+      k = 3, nProbe = 4, shortlist = 40).collect()
     assert(!all.exists(r => r.getLong(1) >= 40L), "null/zero corpus rows surfaced")
     assert(!all.exists(r => r.getLong(0) >= 40L), "null/zero queries returned results")
     val brute = Similarity.knnBrute(
@@ -919,15 +920,15 @@ class SimilaritySpec extends SparkSpec {
     assert(all.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
       === brute)
     // production regime: nProbe < nCells and a tight shortlist
-    val tight = AnnIndex.ivfOpqKnnIndexed(df, queries, "vec_id", "embedding",
-        k = 3, rot, cents, books, codes, nProbe = 2, shortlist = 6).collect()
+    val tight = AnnIndex.search(model, Some(df), queries, codes, "vec_id", "embedding",
+        k = 3, nProbe = 2, shortlist = 6).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val brutePairs = brute.map(t => (t._1, t._2))
     val recall = brutePairs.count(tight.contains).toDouble / brutePairs.size
     assert(recall >= 0.65, s"OPQ+IVF-PQ recall $recall under the pinned floor")
     // and the probed query partition-prunes the codes scan on cell
-    val plan = AnnIndex.ivfOpqKnnIndexed(df, queries, "vec_id", "embedding",
-      k = 3, rot, cents, books, codes, nProbe = 2, shortlist = 6)
+    val plan = AnnIndex.search(model, Some(df), queries, codes, "vec_id", "embedding",
+      k = 3, nProbe = 2, shortlist = 6)
       .queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(l =>
       l.contains("FileScan") && l.contains("codes")).getOrElse(

@@ -170,10 +170,11 @@ class StoreFormatSpec extends SparkSpec {
     val vecs = (0L until 8L)
       .map(i => (i, Array.tabulate(4)(d => math.sin(i * 7 + d).toFloat)))
       .toDF("vec_id", "embedding")
-    val cents = AnnIndex.trainIvf(vecs, "vec_id", "embedding", nCells = 2)
+    val ivf = AnnIndex.load(centroids =
+      Some(AnnIndex.trainIvf(vecs, "vec_id", "embedding", nCells = 2)))
     StreamingAnnIndex.initialize(s"$r/enc", 8, schema, partitionCols = Seq("cell", "__kb"))
     StreamingAnnIndex.applyBatch(vecs, "vec_id", s"$r/enc", schema, 8,
-      AnnIndex.encodeIvf(_, "id", "embedding", cents))
+      AnnIndex.encode(ivf, _, "id", "embedding"))
     assertMarkers(s"$r/enc",
       "_graft_buckets" -> "8", "_graft_schema" -> schema,
       "_graft_partitioning" -> "cell,__kb")

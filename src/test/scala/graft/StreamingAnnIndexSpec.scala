@@ -21,11 +21,12 @@ class StreamingAnnIndexSpec extends SparkSpec {
     val all = (0L until 30L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
     val night1 = all.filter(col("vec_id") < 20)
     val night2 = all.filter(col("vec_id") >= 15) // overlaps 15..19 — already encoded
-    val cents = AnnIndex.trainIvf(all, "vec_id", "embedding", nCells = 4)
+    val ivf = AnnIndex.load(centroids =
+      Some(AnnIndex.trainIvf(all, "vec_id", "embedding", nCells = 4)))
     val store = java.nio.file.Files.createTempDirectory("graft-ann-store").toString + "/enc"
     StreamingAnnIndex.initialize(store, numBuckets = 8, IvfSchema)
     def enc(df: org.apache.spark.sql.DataFrame) =
-      AnnIndex.encodeIvf(df, "id", "embedding", cents)
+      AnnIndex.encode(ivf, df, "id", "embedding")
     StreamingAnnIndex.applyBatch(night1.select(col("vec_id"), col("embedding")),
       "vec_id", store, IvfSchema, 8, enc)
     StreamingAnnIndex.applyBatch(night2.select(col("vec_id"), col("embedding")),
@@ -33,7 +34,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Seq[Float])] =
       df.select("id", "cell", "vector").as[(Long, Int, Seq[Float])].collect().toSet
     val incremental = rows(StreamingAnnIndex.readEncoded(spark, store, IvfSchema))
-    val scratch = rows(AnnIndex.encodeIvf(all, "vec_id", "embedding", cents))
+    val scratch = rows(AnnIndex.encode(ivf, all, "vec_id", "embedding"))
     assert(incremental === scratch,
       "two incremental nights must equal a from-scratch encode (frozen model)")
     // replay night 2: every id anti-joins out — the store's rows are
@@ -46,12 +47,10 @@ class StreamingAnnIndexSpec extends SparkSpec {
     def collected(d: org.apache.spark.sql.DataFrame) =
       d.select("query_id", "neighbor_id", "rank", "cosine")
         .as[(Long, Long, Int, Double)].collect().sorted.toSeq
-    val viaStore = collected(AnnIndex.ivfKnnIndexed(
-      queries, "vec_id", "embedding", k = 3, cents,
-      StreamingAnnIndex.readEncoded(spark, store, IvfSchema)))
-    val viaScratch = collected(AnnIndex.ivfKnnIndexed(
-      queries, "vec_id", "embedding", k = 3, cents,
-      AnnIndex.encodeIvf(all, "vec_id", "embedding", cents)))
+    val viaStore = collected(AnnIndex.search(ivf, None, queries,
+      StreamingAnnIndex.readEncoded(spark, store, IvfSchema), "vec_id", "embedding", k = 3))
+    val viaScratch = collected(AnnIndex.search(ivf, None, queries,
+      AnnIndex.encode(ivf, all, "vec_id", "embedding"), "vec_id", "embedding", k = 3))
     assert(viaStore === viaScratch)
     // duplicate ids fail loud
     val dup = (Seq((1L, vec(1)), (1L, vec(99)))).toDF("vec_id", "embedding")
@@ -122,7 +121,7 @@ class StreamingAnnIndexSpec extends SparkSpec {
     // the incrementally-built table equals a from-scratch encode
     // against the same frozen model
     val model = spark.read.parquet(s"$src/ann_model.parquet")
-    val scratch = AnnIndex.encodeIvf(all, "vec_id", "embedding", model)
+    val scratch = AnnIndex.encode(AnnIndex.load(centroids = Some(model)), all, "vec_id", "embedding")
       .select("id", "cell").as[(Long, Int)].collect().toSet
     assert(enc2.select("id", "cell").as[(Long, Int)].collect().toSet === scratch)
   }
