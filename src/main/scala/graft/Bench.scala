@@ -453,7 +453,7 @@ object Bench {
     val prelaunchForFlag = if (idleReached) "" else loadPrelaunch
     // session settings, and the configs measured and rejected for it,
     // live in GraftSession
-    val spark = GraftSession.create(cpus)
+    val spark = GraftSession.create()
     // The remaining bounded global windows (term-freq rank over a
     // limit(100), skew top-k over a limit(topK), PPS offsets over
     // ≤|partitions| rows) each trip WindowExec's benign

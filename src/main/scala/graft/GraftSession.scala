@@ -11,7 +11,8 @@ object GraftSession {
   /** Local worker threads: `SPARK_GRAFT_CPUS`, default 32. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  def create(cpus: String = GraftSession.cpus): SparkSession = {
+  def create(): SparkSession = {
+    val cpus = GraftSession.cpus
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")

@@ -387,6 +387,19 @@ object AnnIndex {
   def search(
       model: Model, corpus: Option[DataFrame], queries: DataFrame, codes: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 3, shortlist: Int = 32
+  ): DataFrame =
+    searchCodes(model, corpus, queries, codes, idCol, vecCol, k, nProbe, shortlist,
+      pruneCells = true)
+
+  /** [[search]] with the probed-cell pre-filter optional. It pays off
+    * on a stored `partitionBy("cell")` codes table only; codes encoded
+    * in the same plan (the [[Similarity]] retrain paths) have nothing
+    * to prune, and there the filter would cost one more probe job and,
+    * pushed below the encode, a second cell assignment per corpus row. */
+  private[operators] def searchCodes(
+      model: Model, corpus: Option[DataFrame], queries: DataFrame, codes: DataFrame,
+      idCol: String, vecCol: String, k: Int, nProbe: Int, shortlist: Int,
+      pruneCells: Boolean
   ): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     if (model.centroids.isDefined)
@@ -411,7 +424,7 @@ object AnnIndex {
         (queries.withColumn(rq, Similarity.rotateFloatUdf(r)(col(vecCol))), rq)
       case _ => (queries, vecCol)
     }
-    val pruned = model.centroids.fold(codes)(cents =>
+    val pruned = model.centroids.filter(_ => pruneCells).fold(codes)(cents =>
       codes.filter(col("cell").isin(probedCells(q, idCol, probeVec, nProbe, cents): _*)))
     val cell = col("cell").cast("int").as("cell")
 

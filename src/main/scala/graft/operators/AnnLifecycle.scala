@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -110,7 +111,7 @@ object AnnLifecycle {
 
   /** The live codes table `(id, cell, codes)` — the
     * [[AnnIndex.search]] `codes` argument. Checked to come from one
-    * index generation ([[sameGeneration]]). */
+    * unchanging index state ([[sameGeneration]]). */
   def liveCodes(spark: SparkSession, idxDir: String): DataFrame =
     sameGeneration(idxDir)(
       StreamingAnnIndex.readEncoded(spark, s"$idxDir/codes", CodesSchema))
@@ -122,23 +123,37 @@ object AnnLifecycle {
       codebooks = Some(liveBooks(spark, idxDir)))
 
   /** What a reader searches: the loaded model and the codes table, both
-    * from one index generation. */
+    * from one unchanging index state. */
   def liveIndex(spark: SparkSession, idxDir: String): (AnnIndex.Model, DataFrame) =
-    sameGeneration(idxDir)((liveModel(spark, idxDir), liveCodes(spark, idxDir)))
+    sameGeneration(idxDir)((liveModel(spark, idxDir),
+      StreamingAnnIndex.readEncoded(spark, s"$idxDir/codes", CodesSchema)))
 
   /** Run `read` (model collects and the codes file listing happen
-    * eagerly inside it) and fail loud if a swap landed meanwhile. Paths
-    * resolve by name, so a read that straddles the two renames of
-    * [[graft.exec.Staging.promoteStaged]] would otherwise mix the old
-    * and new generation; every swap bumps the retrain count, which
-    * moves with the index directory. */
+    * eagerly inside it) and fail loud if the index changed meanwhile.
+    * Paths resolve by name, so a read could otherwise mix two states:
+    * a listing that straddles the two renames of
+    * [[graft.exec.Staging.promoteStaged]] sees parts of the old and new
+    * generation, and one that overlaps a night's in-place admit (a
+    * Spark append to `codes`, whose files move in one by one at job
+    * commit) sees part of the batch. */
   private def sameGeneration[A](idxDir: String)(read: => A): A = {
-    val generation = retrains(idxDir)
+    val before = generation(idxDir)
     val result = read
-    if (retrains(idxDir) != generation)
-      throw new IllegalStateException(
-        s"$idxDir: the index was swapped during the read — retry")
+    if (generation(idxDir) != before)
+      throw new IllegalStateException(s"$idxDir: the index changed during the read — retry")
     result
+  }
+
+  /** The retrain count (every swap bumps it; it moves with the index
+    * directory) and the codes directory's mtime (an append's output
+    * committer creates `codes/_temporary` before its file moves and
+    * deletes it after, each changing the mtime). Throws while an
+    * append is in flight. */
+  private def generation(idxDir: String): (Long, FileTime) = {
+    val codes = Paths.get(idxDir, "codes")
+    if (Files.exists(codes.resolve("_temporary")))
+      throw new IllegalStateException(s"$idxDir: a write to the codes is in flight — retry")
+    (retrains(idxDir), Files.getLastModifiedTime(codes))
   }
 
   /** Rows the index was last trained on (carried through swaps). */
@@ -251,10 +266,11 @@ object AnnLifecycle {
     * retrains (the frozen-model contract: one embedding per id;
     * content revisions enter the index at the next retrain).
     *
-    * The whole mutation happens under `stateStepDir` and publishes via
-    * ONE `index__staged` → `index` rename, so concurrent readers of
-    * [[liveCentroids]]/[[liveBooks]]/[[liveCodes]] always see a
-    * complete, mutually-consistent index generation. */
+    * The whole mutation happens under `stateStepDir`: the admit
+    * appends to the live codes in place, and a retrain publishes via
+    * ONE `index__staged` → `index` rename. A concurrent [[liveCodes]] /
+    * [[liveIndex]] read either sees one complete, unchanging index
+    * state or fails loud (retry). */
   def maintainNight(
       corpus: DataFrame, idCol: String, vecCol: String, stateStepDir: String,
       nCells: Int = 16, m: Int = 8, kCodes: Int = 16, buckets: Int = 64,

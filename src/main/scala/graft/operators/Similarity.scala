@@ -458,13 +458,15 @@ object Similarity {
   /** The retrain shape every quantizer family shares: encode the
     * corpus against the freshly trained model and search it — the
     * stored-index path verbatim ([[AnnIndex.encode]],
-    * [[AnnIndex.search]]), so stored == retrain by construction. */
+    * [[AnnIndex.search]]), so stored == retrain by construction. The
+    * codes are computed, not stored, so no probed-cell pruning. */
   private def retrainSearch(
       model: AnnIndex.Model, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 3, shortlist: Int = 32
   ): DataFrame =
-    AnnIndex.search(model, Some(corpus), queries,
-      AnnIndex.encode(model, corpus, idCol, vecCol), idCol, vecCol, k, nProbe, shortlist)
+    AnnIndex.searchCodes(model, Some(corpus), queries,
+      AnnIndex.encode(model, corpus, idCol, vecCol), idCol, vecCol, k, nProbe, shortlist,
+      pruneCells = false)
 
   /** Train the IVF coarse quantizer — the persistable half of
     * [[ivfKnn]]: kmeans++ init + Lloyd's on a bounded deterministic
