@@ -9,7 +9,7 @@ import org.yaml.snakeyaml.Yaml
 
 import graft.exec.Staging
 import graft.operators.{AnnIndex, AnnLifecycle, Decontaminate, Dedup, Multimodal, Packing, Sampling, Sessions, TextAnalysis}
-import graft.streaming.{MaintainedStore, StreamingAdmission, StreamingAnnIndex, StreamingAudioDedup, StreamingImageDedup, StreamingLineDedup, StreamingNearDup, StreamingRecrawl, StreamingSemDedup, StreamingVideoDedup}
+import graft.streaming.{MaintainedStore, PostingAdmission, StreamingAdmission, StreamingAnnIndex, StreamingAudioDedup, StreamingHammingDedup, StreamingImageDedup, StreamingLineDedup, StreamingNearDup, StreamingRecrawl, StreamingSemDedup, StreamingVideoDedup, StreamingWinnowDedup}
 
 /** Declarative training-data curation pipelines — the job-spec surface
   * that makes the operator library a runnable product, the way the
@@ -394,6 +394,56 @@ object CurationPipeline {
     }
   }
 
+  /** `mode: admit` of the posting-store dedups (near, winnow, image,
+    * audio, video): judge the batch against `store` under `--state`
+    * (bootstrapped empty on the first run) and return the admitted
+    * input rows. Admission keeps the in-batch min-id representative, so
+    * keep/scoreCol are full-mode-only. A text store sees the input rows
+    * whole and its sink keeps them, so they read back from the sink; a
+    * media store sees `(id, payload)` only, so its admitted ids select
+    * from the input. */
+  private def admitPostings(
+      c: Ctx, op: String, store: PostingAdmission, storeDir: String,
+      payloadCol: Option[String])(p: store.Params): DataFrame = {
+    require(!c.params.has("keep") && !c.params.has("scoreCol"),
+      s"step ${c.stepName}: keep/scoreCol apply to mode: full only " +
+        "(admission keeps the in-batch min-id representative)")
+    val root = c.requireState(s"$op mode: admit")
+    val (storePath, sink) = (s"$root/$storeDir", s"$root/admitted")
+    val (batch, contentCol) = payloadCol.fold((c.input, c.textCol))(pc =>
+      (c.input.select(col(c.idCol), col(pc).as("payload")), "payload"))
+    if (!store.initialized(storePath))
+      store.initialize(batch.limit(0), c.idCol, contentCol, storePath, sink, p)
+    store.applyBatch(batch, c.batchId, c.idCol, contentCol, storePath, sink, p)
+    if (payloadCol.isEmpty) readBatchPartition(c, sink, MaintainedStore.BatchCol)
+    else c.input.join(
+      store.admittedIds(c.input.sparkSession, c.batchId, c.idCol, sink),
+      Seq(c.idCol), "left_semi")
+  }
+
+  /** `dedup_image` / `dedup_audio`: one op over a hamming store's
+    * signature pass — pairs within `maxHamming` in full mode, the
+    * store's admission in `mode: admit`. */
+  private def hammingOp(op: String, store: StreamingHammingDedup): Op = Op(
+    Set("payload", "maxHamming", "maxBucket", "keep", "scoreCol", "scoreFrom",
+      "mode", "buckets"), { c =>
+      val pcol = c.params.str("payload", "payload")
+      require(c.input.columns.contains(pcol),
+        s"step ${c.stepName}: input has no payload column '$pcol'")
+      c.requireIntegralId(op)
+      val maxHamming = c.params.int("maxHamming", 3)
+      val maxBucket = c.params.int("maxBucket", 1000)
+      c.params.str("mode", "full") match {
+        case "full" =>
+          keepSurvivors(c, Dedup.hamming64Pairs(store.sigOf(c.input, c.idCol, pcol),
+            c.idCol, store.hashCol, maxHamming, maxBucket))
+        case "admit" =>
+          admitPostings(c, op, store, "postings", Some(pcol))(
+            store.Params(c.params.int("buckets", 64), maxHamming, maxBucket))
+      }
+    }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
+    fullOnlyParams = Set("keep", "scoreCol", "scoreFrom"))
+
   /** The stored ANN model a `knn_encode`/`knn` step names: `model:` is
     * a centroids table, a codebooks table, or a combined OPQ table;
     * beside codebooks, `centroids:` makes it the composed IVF-PQ
@@ -479,23 +529,13 @@ object CurationPipeline {
             maxBucket = c.params.int("maxBucket", 1000))
           keepSurvivors(c, pairs)
         case "admit" =>
-          require(!c.params.has("keep") && !c.params.has("scoreCol"),
-            s"step ${c.stepName}: keep/scoreCol apply to mode: full only " +
-              "(admission keeps the in-batch min-id representative)")
-          val root = c.requireState("dedup_near mode: admit")
-          val (store, sink) = (s"$root/postings", s"$root/admitted")
-          val p = StreamingNearDup.Params(
-            numBuckets = c.params.int("buckets", 64),
-            n = c.params.int("n", 3), k = c.params.int("k", 64),
-            r = c.params.int("r", 4),
-            minJaccard = c.params.double("minJaccard", 0.5),
-            maxBucket = c.params.int("maxBucket", 1000))
-          if (!StreamingNearDup.initialized(store))
-            StreamingNearDup.initialize(
-              c.input.limit(0), c.idCol, c.textCol, store, sink, p)
-          StreamingNearDup.applyBatch(
-            c.input, c.batchId, c.idCol, c.textCol, store, sink, p)
-          readBatchPartition(c, sink, MaintainedStore.BatchCol)
+          admitPostings(c, "dedup_near", StreamingNearDup, "postings", payloadCol = None)(
+            StreamingNearDup.Params(
+              numBuckets = c.params.int("buckets", 64),
+              n = c.params.int("n", 3), k = c.params.int("k", 64),
+              r = c.params.int("r", 4),
+              minJaccard = c.params.double("minJaccard", 0.5),
+              maxBucket = c.params.int("maxBucket", 1000)))
       }
     }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
       fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
@@ -506,55 +546,16 @@ object CurationPipeline {
         maxBucket = c.params.int("maxBucket", 1000))
       keepSurvivors(c, pairs)
     }, tableParams = Set("scoreFrom")),
-    // PERCEPTUAL image dedup over a binary `payload` column: decode +
-    // dHash scan-locally, pair by the radius-derived hamming banding
-    // (recompressed / losslessly re-encoded / exact-factor-rescaled
-    // copies hash into the ball), one survivor per hamming component.
-    // mode: admit judges the batch against the maintained dHash
-    // posting store + admitted sink under --state (StreamingImageDedup;
-    // admission keeps the in-batch min-id representative).
-    "dedup_image" -> Op(
-      Set("payload", "maxHamming", "maxBucket", "keep", "scoreCol", "scoreFrom",
-        "mode", "buckets"), { c =>
-      val pcol = c.params.str("payload", "payload")
-      require(c.input.columns.contains(pcol),
-        s"step ${c.stepName}: input has no payload column '$pcol'")
-      c.requireIntegralId("dedup_image")
-      val payloads = c.input.select(
-        col(c.idCol).cast("long").as("doc_id"), col(pcol).as("payload"))
-      c.params.str("mode", "full") match {
-        case "full" =>
-          val hashes = Multimodal.dHash(payloads).toDF()
-            .select(col("doc_id").as(c.idCol), col("dhash"))
-          keepSurvivors(c, Dedup.hamming64Pairs(hashes, c.idCol, "dhash",
-            maxHamming = c.params.int("maxHamming", 3),
-            maxBucket = c.params.int("maxBucket", 1000)))
-        case "admit" =>
-          require(!c.params.has("keep") && !c.params.has("scoreCol"),
-            s"step ${c.stepName}: keep/scoreCol apply to mode: full only " +
-              "(admission keeps the in-batch min-id representative)")
-          val root = c.requireState("dedup_image mode: admit")
-          val (store, sink) = (s"$root/postings", s"$root/admitted")
-          val p = StreamingImageDedup.Params(
-            numBuckets = c.params.int("buckets", 64),
-            maxHamming = c.params.int("maxHamming", 3),
-            maxBucket = c.params.int("maxBucket", 1000))
-          val batch = c.input.select(col(c.idCol), col(pcol).as("payload"))
-          if (!StreamingImageDedup.initialized(store))
-            StreamingImageDedup.initialize(batch.limit(0), c.idCol, store, sink, p)
-          StreamingImageDedup.applyBatch(batch, c.batchId, c.idCol, store, sink, p)
-          c.input.join(
-            StreamingImageDedup.admittedOf(
-              c.input.sparkSession, sink, c.idCol, c.batchId).select(c.idCol),
-            Seq(c.idCol), "left_semi")
-      }
-    }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
-      fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
-    // PERCEPTUAL audio dedup over a binary `payload` column (WAV
-    // clips): real decode + 64-bit sign-of-energy-delta fingerprint
-    // scan-locally, hamming banding pairs attenuated/re-encoded copies,
-    // one survivor per component. mode: admit rides StreamingAudioDedup
-    // (the 11th maintenance store) under --state.
+    // PERCEPTUAL image / audio dedup over a binary `payload` column:
+    // decode + 64-bit signature scan-locally (dHash of an image; the
+    // sign-of-energy-delta fingerprint of a WAV clip), pair by the
+    // radius-derived hamming banding (recompressed, losslessly
+    // re-encoded, exact-factor-rescaled or attenuated copies hash into
+    // the ball), one survivor per hamming component. mode: admit judges
+    // the batch against the maintained posting store + admitted sink
+    // under --state (StreamingImageDedup / StreamingAudioDedup).
+    "dedup_image" -> hammingOp("dedup_image", StreamingImageDedup),
+    "dedup_audio" -> hammingOp("dedup_audio", StreamingAudioDedup),
     // A/V soundtrack extraction: rewrite the payload column from a
     // RIFF/AVI container to its soundtrack WAV (the real JDK encoder
     // via Multimodal.aviAudioWav) so the audio passes — dedup_audio,
@@ -578,43 +579,6 @@ object CurationPipeline {
       }
       c.input.withColumn(pcol, ex(col(c.idCol).cast("long"), col(pcol)))
     }),
-    "dedup_audio" -> Op(
-      Set("payload", "maxHamming", "maxBucket", "keep", "scoreCol", "scoreFrom",
-        "mode", "buckets"), { c =>
-      val pcol = c.params.str("payload", "payload")
-      require(c.input.columns.contains(pcol),
-        s"step ${c.stepName}: input has no payload column '$pcol'")
-      c.requireIntegralId("dedup_audio")
-      val payloads = c.input.select(
-        col(c.idCol).cast("long").as("doc_id"), col(pcol).as("payload"))
-      c.params.str("mode", "full") match {
-        case "full" =>
-          val hashes = Multimodal.audioFingerprint(payloads).toDF()
-            .select(col("doc_id").as(c.idCol), col("afp"))
-          keepSurvivors(c, Dedup.hamming64Pairs(hashes, c.idCol, "afp",
-            maxHamming = c.params.int("maxHamming", 3),
-            maxBucket = c.params.int("maxBucket", 1000)))
-        case "admit" =>
-          require(!c.params.has("keep") && !c.params.has("scoreCol"),
-            s"step ${c.stepName}: keep/scoreCol apply to mode: full only " +
-              "(admission keeps the in-batch min-id representative)")
-          val root = c.requireState("dedup_audio mode: admit")
-          val (store, sink) = (s"$root/postings", s"$root/admitted")
-          val p = StreamingAudioDedup.Params(
-            numBuckets = c.params.int("buckets", 64),
-            maxHamming = c.params.int("maxHamming", 3),
-            maxBucket = c.params.int("maxBucket", 1000))
-          val batch = c.input.select(col(c.idCol), col(pcol).as("payload"))
-          if (!StreamingAudioDedup.initialized(store))
-            StreamingAudioDedup.initialize(batch.limit(0), c.idCol, store, sink, p)
-          StreamingAudioDedup.applyBatch(batch, c.batchId, c.idCol, store, sink, p)
-          c.input.join(
-            StreamingAudioDedup.admittedOf(
-              c.input.sparkSession, sink, c.idCol, c.batchId).select(c.idCol),
-            Seq(c.idCol), "left_semi")
-      }
-    }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
-      fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
     // video near-dup dedup over frame-container payloads: scan-local
     // demux + REAL per-frame decode + dHash; a video's signature is
     // its DISTINCT frame-hash set, pairs from shared-frame-hash
@@ -645,22 +609,10 @@ object CurationPipeline {
             .filter(col("shared") * 3 >= col("n_a") + col("n_b"))
           keepSurvivors(c, pairs)
         case "admit" =>
-          require(!c.params.has("keep") && !c.params.has("scoreCol"),
-            s"step ${c.stepName}: keep/scoreCol apply to mode: full only " +
-              "(admission keeps the in-batch min-id representative)")
-          val root = c.requireState("dedup_video mode: admit")
-          val (store, sink) = (s"$root/postings", s"$root/admitted")
-          val p = StreamingVideoDedup.Params(
-            numBuckets = c.params.int("buckets", 64),
-            maxBucket = c.params.int("maxBucket", 1000))
-          val batch = c.input.select(col(c.idCol), col(pcol).as("payload"))
-          if (!StreamingVideoDedup.initialized(store))
-            StreamingVideoDedup.initialize(batch.limit(0), c.idCol, store, sink, p)
-          StreamingVideoDedup.applyBatch(batch, c.batchId, c.idCol, store, sink, p)
-          c.input.join(
-            StreamingVideoDedup.admittedIdsOf(
-              c.input.sparkSession, sink, c.idCol, c.batchId, batch.schema),
-            Seq(c.idCol), "left_semi")
+          admitPostings(c, "dedup_video", StreamingVideoDedup, "postings", Some(pcol))(
+            StreamingVideoDedup.Params(
+              numBuckets = c.params.int("buckets", 64),
+              maxBucket = c.params.int("maxBucket", 1000)))
       }
     }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
       fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
@@ -1489,22 +1441,12 @@ object CurationPipeline {
             maxBucket = c.params.int("maxBucket", 1000))
           keepSurvivors(c, pairs)
         case "admit" =>
-          require(!c.params.has("keep") && !c.params.has("scoreCol"),
-            s"step ${c.stepName}: keep/scoreCol apply to mode: full only " +
-              "(admission keeps the in-batch min-id representative)")
-          val root = c.requireState("dedup_winnow mode: admit")
-          val (store, sink) = (s"$root/fingerprints", s"$root/admitted")
-          val p = graft.streaming.StreamingWinnowDedup.Params(
-            numBuckets = c.params.int("buckets", 64),
-            n = c.params.int("n", 4), w = c.params.int("w", 5),
-            minShared = c.params.long("minShared", 2L),
-            maxBucket = c.params.int("maxBucket", 1000))
-          if (!graft.streaming.StreamingWinnowDedup.initialized(store))
-            graft.streaming.StreamingWinnowDedup.initialize(
-              c.input.limit(0), c.idCol, c.textCol, store, sink, p)
-          graft.streaming.StreamingWinnowDedup.applyBatch(
-            c.input, c.batchId, c.idCol, c.textCol, store, sink, p)
-          readBatchPartition(c, sink, MaintainedStore.BatchCol)
+          admitPostings(c, "dedup_winnow", StreamingWinnowDedup, "fingerprints",
+            payloadCol = None)(StreamingWinnowDedup.Params(
+              numBuckets = c.params.int("buckets", 64),
+              n = c.params.int("n", 4), w = c.params.int("w", 5),
+              minShared = c.params.long("minShared", 2L),
+              maxBucket = c.params.int("maxBucket", 1000)))
       }
     }, modes = Set("full", "admit"), tableParams = Set("scoreFrom"),
       fullOnlyParams = Set("keep", "scoreCol", "scoreFrom")),
@@ -2712,7 +2654,10 @@ object CurationPipeline {
                   .withColumn(MaintainedStore.BatchCol, lit(-1L))
                   .write.mode("overwrite").partitionBy(MaintainedStore.BatchCol).parquet(tmp)
               }
-            case _ => () // bucket stores rewrite in place — nothing accumulates
+            // the posting stores rewrite touched buckets in place; the
+            // dedup_exact fingerprint store is append-only (up to one
+            // file per touched bucket per batch) and is not folded here
+            case _ => ()
           }
         }
       }

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{hash, lit, pmod}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** A persistent maintenance store: an object whose `initialize`
@@ -33,8 +34,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    present") is false after a crashed bootstrap and callers
   *    re-bootstrap instead of failing on every later batch.
   *  - '''Columns.''' Bucket-partitioned stores partition by
-  *    [[MaintainedStore.BucketCol]]; batch-owned sinks and summaries by
-  *    [[MaintainedStore.BatchCol]].
+  *    [[MaintainedStore.BucketCol]] = [[MaintainedStore.bucketOf]];
+  *    batch-owned sinks and summaries by [[MaintainedStore.BatchCol]].
   *  - '''One stream wiring.''' [[MaintainedStore.maintain]] runs a
   *    store's `applyBatch` on every micro-batch. Every `applyBatch` is
   *    replay-idempotent under a fixed batch id, which is what makes
@@ -65,6 +66,18 @@ object MaintainedStore {
   val BatchCol = "__batch_id"
 
   private val InitHint = "initialize() the store first"
+
+  /** Fail loud on a bucket count below 1, before anything is written:
+    * an empty bootstrap never evaluates `pmod(…, 0)`, so it would land
+    * its marker and every later batch would die on the division. */
+  def requireBuckets(numBuckets: Int): Unit =
+    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
+
+  /** The bucket of a row: `pmod(hash(keys), numBuckets)`. */
+  def bucketOf(numBuckets: Int, keys: Column*): Column = {
+    requireBuckets(numBuckets)
+    pmod(hash(keys: _*), lit(numBuckets))
+  }
 
   /** Write the sidecar `name` under `root` with exact `payload` bytes,
     * creating the directory first (the empty-bootstrap case). The

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import MaintainedStore.{BatchCol, BucketCol}
+import MaintainedStore.{BatchCol, BucketCol, bucketOf}
 
 /** Streaming corpus admission — the foreachBatch twin of
   * [[graft.operators.Dedup.exactIncremental]]: every micro-batch of
@@ -32,9 +32,6 @@ object StreamingAdmission extends MaintainedStore {
 
   protected val marker = "_graft_buckets"
 
-  private def bucketOf(numBuckets: Int) =
-    pmod(hash(col("fingerprint")), lit(numBuckets))
-
   // explicit schema: an empty-corpus bootstrap writes a marker but no
   // parquet files, and schema inference over the empty directory would
   // throw on the FIRST micro-batch — the natural cold start (begin
@@ -56,7 +53,7 @@ object StreamingAdmission extends MaintainedStore {
       corpus: DataFrame, textCol: String, fpStorePath: String, numBuckets: Int
   ): Unit = {
     Dedup.fingerprints(corpus, textCol)
-      .withColumn(BucketCol, bucketOf(numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col("fingerprint")))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(fpStorePath)
     writeMarker(fpStorePath, numBuckets.toString)
@@ -84,7 +81,7 @@ object StreamingAdmission extends MaintainedStore {
     // (batch parity is spec-pinned against the batch operator)
     val withFp = batch
       .withColumn("fingerprint", Dedup.contentFingerprint(col(textCol)))
-      .withColumn(BucketCol, bucketOf(numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col("fingerprint")))
     withFp.persist()
     try {
       // bounded driver materialization: at most numBuckets ints

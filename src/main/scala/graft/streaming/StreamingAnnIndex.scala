@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import MaintainedStore.BucketCol
+import MaintainedStore.{BucketCol, bucketOf}
 
 /** Maintained ANN postings/codes store — the incremental half of the
   * [[graft.operators.AnnIndex]] train-once workflow: the model
@@ -39,9 +39,6 @@ object StreamingAnnIndex extends MaintainedStore {
   protected val marker = "_graft_schema"
   private val BucketsMarker = "_graft_buckets"
   private val PartitioningMarker = "_graft_partitioning"
-
-  private def bucketOf(numBuckets: Int) =
-    pmod(hash(col("id")), lit(numBuckets))
 
   /** Field names of a DDL schema string via the real parser — a naive
     * comma split breaks on parameterized types (`DECIMAL(38,2)`,
@@ -99,7 +96,7 @@ object StreamingAnnIndex extends MaintainedStore {
     * [[MaintainedStore.BucketCol]]; every other column must exist in `schema`. */
   def initialize(storePath: String, numBuckets: Int, schema: String,
       partitionCols: Seq[String] = Seq(BucketCol)): Unit = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
+    MaintainedStore.requireBuckets(numBuckets)
     require(partitionCols.contains(BucketCol),
       s"partitionCols must include $BucketCol (the admit anti-join's " +
         s"bucket pruning depends on it), got ${partitionCols.mkString(", ")}")
@@ -149,7 +146,7 @@ object StreamingAnnIndex extends MaintainedStore {
           lit(" appears more than once in the batch — one embedding per id"))))
         .otherwise(lit(true)))
       .filter(col("__dup")).drop("__dup")
-      .withColumn(BucketCol, bucketOf(numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col("id")))
     guarded.persist()
     try {
       // bounded driver materialization: at most numBuckets rows — and
@@ -186,7 +183,7 @@ object StreamingAnnIndex extends MaintainedStore {
       // over the session's cores. File count is unchanged either way
       // (one per touched dir — each dir's rows hash to one partition).
       val parts = partitioning(storePath)
-      encoded.withColumn(BucketCol, bucketOf(numBuckets))
+      encoded.withColumn(BucketCol, bucketOf(numBuckets, col("id")))
         .repartition(spark.sessionState.conf.numShufflePartitions,
           parts.map(col): _*)
         .write.mode("append")

@@ -16,13 +16,13 @@ import graft.operators.Multimodal
   *
   * Store layout, admission contract, replay-idempotence and the 100 TB
   * shape are [[StreamingHammingDedup]]'s — the shared hamming-ball
-  * admission core this store instantiates with the audio-fingerprint
+  * admission this store instantiates with the audio-fingerprint
   * signature pass (real WAV decode + windowed energies, scan-local
   * mapPartitions).
   */
 object StreamingAudioDedup extends StreamingHammingDedup(
   marker = "_graft_afp", hashCol = "afp",
-  sigOf = (clips, idCol) =>
+  sigOf = (clips, idCol, payloadCol) =>
     Multimodal.audioFingerprint(
-        clips.select(col(idCol).cast("long").as("doc_id"), col("payload")))
+        clips.select(col(idCol).cast("long").as("doc_id"), col(payloadCol).as("payload")))
       .toDF().select(col("doc_id").as(idCol), col("afp")))

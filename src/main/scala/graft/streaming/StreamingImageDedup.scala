@@ -16,11 +16,12 @@ import graft.operators.Multimodal
   *
   * Store layout, admission contract, replay-idempotence and the 100 TB
   * shape are [[StreamingHammingDedup]]'s — the shared hamming-ball
-  * admission core this store instantiates with the dHash signature
-  * pass (decode + hash, scan-local mapPartitions).
+  * admission this store instantiates with the dHash signature pass
+  * (decode + hash, scan-local mapPartitions).
   */
 object StreamingImageDedup extends StreamingHammingDedup(
   marker = "_graft_dhash", hashCol = "dhash",
-  sigOf = (images, idCol) =>
-    Multimodal.dHash(images.select(col(idCol).cast("long").as("doc_id"), col("payload")))
+  sigOf = (images, idCol, payloadCol) =>
+    Multimodal.dHash(
+        images.select(col(idCol).cast("long").as("doc_id"), col(payloadCol).as("payload")))
       .toDF().select(col("doc_id").as(idCol), col("dhash")))

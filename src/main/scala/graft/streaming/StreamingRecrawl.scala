@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Recrawl
-import MaintainedStore.{BatchCol, BucketCol}
+import MaintainedStore.{BatchCol, BucketCol, bucketOf}
 
 /** Maintained last-fetch store + recrawl admission — the stateful
   * twin of [[Recrawl.dueVerdicts]] and the 13th maintenance store:
@@ -54,9 +54,6 @@ object StreamingRecrawl extends MaintainedStore {
 
   protected val marker = "_graft_buckets"
 
-  private def bucketOf(numBuckets: Int) =
-    pmod(hash(col("__url_fp")), lit(numBuckets))
-
   private val StoreSchema =
     s"__url_fp STRING, url STRING, last_fetch_ts LONG, prev_fetch_ts LONG, " +
       s"last_batch_id LONG, last_fp STRING, prev_fp STRING, fp_batch_id LONG, " +
@@ -76,7 +73,6 @@ object StreamingRecrawl extends MaintainedStore {
   def initialize(
       fetchLog: DataFrame, urlCol: String, storePath: String, numBuckets: Int
   ): Unit = {
-    require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
     fetchLog
       .select(md5(col(urlCol).cast("string")).as("__url_fp"),
         col(urlCol).cast("string").as("url"),
@@ -90,7 +86,7 @@ object StreamingRecrawl extends MaintainedStore {
         lit(null).cast("long").as("prev_streak"),
         lit(null).cast("long").as("fp_ts"),
         lit(null).cast("long").as("prev_fp_ts"))
-      .withColumn(BucketCol, bucketOf(numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
       // cluster by bucket before the partitioned write: unclustered,
       // EVERY upstream partition writes a file into EVERY bucket dir
       // (tasks × buckets tiny files); clustered it is one file per
@@ -138,7 +134,7 @@ object StreamingRecrawl extends MaintainedStore {
           .cast("string"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      .withColumn(BucketCol, bucketOf(numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
     withFp.persist()
     try {
       // bounded driver materialization: at most numBuckets ints
@@ -207,7 +203,7 @@ object StreamingRecrawl extends MaintainedStore {
             col("unchanged_streak"), col("prev_streak"),
             col("fp_ts"), col("prev_fp_ts"))
         kept.unionByName(advanced)
-          .withColumn(BucketCol, bucketOf(numBuckets))
+          .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
           // cluster by bucket: one rewritten file per touched bucket
           // instead of one per (upstream partition × bucket) — see
           // initialize()'s note
@@ -253,7 +249,7 @@ object StreamingRecrawl extends MaintainedStore {
       .withColumn("__url_fp", md5(col(urlCol).cast("string")))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      .withColumn(BucketCol, bucketOf(numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
     withFp.persist()
     try {
       val touched = withFp.select(col(BucketCol)).distinct()
@@ -330,7 +326,7 @@ object StreamingRecrawl extends MaintainedStore {
               .otherwise(lit(nowTs)).as("fp_ts"),
             col("__prev_fp_ts").as("prev_fp_ts"))
         kept.unionByName(advanced)
-          .withColumn(BucketCol, bucketOf(numBuckets))
+          .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
           // cluster by bucket: one rewritten file per touched bucket
           // instead of one per (upstream partition × bucket) — see
           // initialize()'s note

@@ -62,6 +62,8 @@ object StreamingSemDedup extends MaintainedStore {
   final case class Params(
       numBuckets: Int, k: Int, minCosine: Double,
       maxCluster: Int = 10000, failOnOversized: Boolean = false) {
+    // checked here, before initialize or a first batch writes the marker
+    MaintainedStore.requireBuckets(numBuckets)
     def encoded: String = s"$numBuckets;$k;$minCosine;$maxCluster"
   }
 

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd2
-import MaintainedStore.BucketCol
+import MaintainedStore.{BucketCol, bucketOf}
 
 /** Streaming upsert maintenance for dimension tables: the
   * `foreachBatch` twins of the two batch merge primitives —
@@ -49,9 +49,6 @@ object StreamingUpsert extends MaintainedStore {
 
   protected val marker = "_graft_buckets"
 
-  private def bucketOf(keyCol: String, numBuckets: Int): Column =
-    pmod(hash(col(keyCol)), lit(numBuckets))
-
   private def checkBuckets(path: String, numBuckets: Int): Unit =
     checkMarker(path, numBuckets.toString, "bucket-count",
       "pruning with the wrong modulus would drop keys")
@@ -75,7 +72,7 @@ object StreamingUpsert extends MaintainedStore {
     // (or laid out with a previous modulus) on disk behind a fresh
     // marker. Marker written AFTER the data survives the truncation.
     Scd2.history(changes, keyCol, tsCol, tieCol, attrCols)
-      .withColumn(BucketCol, bucketOf(keyCol, numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(path)
     writeMarker(path, numBuckets.toString)
@@ -93,7 +90,7 @@ object StreamingUpsert extends MaintainedStore {
     requireNoBucketCol(batch)
     checkBuckets(path, numBuckets)
     val spark = batch.sparkSession
-    val withKb = batch.withColumn(BucketCol, bucketOf(keyCol, numBuckets))
+    val withKb = batch.withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
     withKb.persist()
     try {
       // bounded driver materialization: at most numBuckets ints
@@ -133,7 +130,7 @@ object StreamingUpsert extends MaintainedStore {
     requireNoBucketCol(changes)
     // static overwrite + marker-after-data, same grounds as initializeScd2
     latestWins(changes, keyCol, tsCol, tieCol)
-      .withColumn(BucketCol, bucketOf(keyCol, numBuckets))
+      .withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
       .write.mode("overwrite")
       .partitionBy(BucketCol).parquet(path)
     writeMarker(path, numBuckets.toString)
@@ -150,7 +147,7 @@ object StreamingUpsert extends MaintainedStore {
     requireNoBucketCol(batch)
     checkBuckets(path, numBuckets)
     val spark = batch.sparkSession
-    val withKb = batch.withColumn(BucketCol, bucketOf(keyCol, numBuckets))
+    val withKb = batch.withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
     withKb.persist()
     try {
       val touched = withKb.select(BucketCol).distinct()

@@ -164,6 +164,45 @@ class StoreFormatSpec extends SparkSpec {
     assert(partitionKeys(s"$r/vid_out") === Set("__batch_id"))
   }
 
+  test("a bucket count below 1 fails initialize and leaves no marker, in every bucketed store") {
+    // empty inputs, as the pipeline's cold start passes them: an empty
+    // frame never evaluates pmod(…, 0), so only an up-front check stops
+    // the marker from landing
+    val empty = docs.limit(0)
+    val changes = Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "a"))
+      .toDF("k", "ts", "tie", "attr").limit(0)
+    val payloads = Seq.empty[(Long, Array[Byte])].toDF("doc_id", "payload")
+    val stores: Seq[(String, String => Unit)] = Seq(
+      "admission" -> (d => StreamingAdmission.initialize(empty, "text", d, 0)),
+      "near-dup" -> (d => StreamingNearDup.initialize(empty, "doc_id", "text", d, s"$d.out",
+        StreamingNearDup.Params(numBuckets = 0))),
+      "winnow" -> (d => StreamingWinnowDedup.initialize(empty, "doc_id", "text", d, s"$d.out",
+        StreamingWinnowDedup.Params(numBuckets = 0))),
+      "image" -> (d => StreamingImageDedup.initialize(payloads, "doc_id", d, s"$d.out",
+        StreamingImageDedup.Params(numBuckets = 0))),
+      "audio" -> (d => StreamingAudioDedup.initialize(payloads, "doc_id", d, s"$d.out",
+        StreamingAudioDedup.Params(numBuckets = 0))),
+      "video" -> (d => StreamingVideoDedup.initialize(payloads, "doc_id", d, s"$d.out",
+        StreamingVideoDedup.Params(numBuckets = 0))),
+      "scd2" -> (d =>
+        StreamingUpsert.initializeScd2(changes, "k", "ts", "tie", Seq("attr"), d, 0)),
+      "latest" -> (d => StreamingUpsert.initializeLatest(changes, "k", "ts", "tie", d, 0)),
+      "recrawl" -> (d => StreamingRecrawl.initialize(
+        Seq(("https://a.example/x", 100L)).toDF("url", "last_fetch_ts").limit(0),
+        "url", d, 0)),
+      "ann" -> (d => StreamingAnnIndex.initialize(d, 0, "id BIGINT, vector ARRAY<FLOAT>")),
+      "semdedup" -> (d => StreamingSemDedup.initialize(
+        Seq((1L, Seq(1.0, 0.0))).toDF("doc_id", "embedding").limit(0), "doc_id", "embedding",
+        d, StreamingSemDedup.Params(numBuckets = 0, k = 2, minCosine = 0.95))))
+    val r = root()
+    for ((name, init) <- stores) {
+      val d = s"$r/$name"
+      val e = intercept[IllegalArgumentException](init(d))
+      assert(e.getMessage.contains("numBuckets must be >= 1"), s"$name: ${e.getMessage}")
+      assert(!Files.exists(Paths.get(d)) || markers(d).isEmpty, s"$name left a marker")
+    }
+  }
+
   test("StreamingAnnIndex: bucket, schema and layout markers; (cell, bucket) directories") {
     val r = root()
     val schema = "id BIGINT, cell INT, vector ARRAY<FLOAT>"

@@ -29,8 +29,8 @@ class StreamingAudioDedupSpec extends SparkSpec {
   }
 
   private def admittedIds(sink: String, batch: Long): Set[Long] =
-    StreamingAudioDedup.admittedOf(spark, sink, "doc_id", batch)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    StreamingAudioDedup.admittedIds(spark, batch, "doc_id", sink)
+      .collect().map(_.getLong(0)).toSet
 
   test("two-batch admission: attenuated copies reject across batches, novel clips admit, replay no-op") {
     val (store, sink) = dirs()
@@ -48,12 +48,12 @@ class StreamingAudioDedupSpec extends SparkSpec {
     // batch 0: clip 1, an attenuated re-encode of it as id 101
     // (in-batch pair -> min-id 1 survives), novel clip 5
     StreamingAudioDedup.applyBatch(
-      clips(Seq(1L, 5L), Seq((1L, 101L))), 0L, "doc_id", store, sink, p)
+      clips(Seq(1L, 5L), Seq((1L, 101L))), 0L, "doc_id", "payload", store, sink, p)
     assert(admittedIds(sink, 0L) === Set(1L, 5L))
     // batch 1: another attenuated copy of ADMITTED 1 (id 201, rejected
     // against the store without re-decoding the corpus), novel clip 9
     StreamingAudioDedup.applyBatch(
-      clips(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", store, sink, p)
+      clips(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", "payload", store, sink, p)
     assert(admittedIds(sink, 1L) === Set(9L))
     // replay of batch 1: every clip self-collides at hamming 0 ->
     // admitted empty, store content identical
@@ -62,7 +62,7 @@ class StreamingAudioDedupSpec extends SparkSpec {
         spark.read.parquet(sink).toJSON.collect().map("s:" + _).toSet
     val before = content()
     StreamingAudioDedup.applyBatch(
-      clips(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", store, sink, p)
+      clips(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", "payload", store, sink, p)
     assert(content() === before)
   }
 
@@ -73,7 +73,7 @@ class StreamingAudioDedupSpec extends SparkSpec {
       clips(Seq(1L, 5L), Seq.empty), "doc_id", store, sink, p)
     assert(admittedIds(sink, -1L) === Set(1L, 5L))
     StreamingAudioDedup.applyBatch(
-      clips(Seq(9L), Seq((5L, 305L))), 0L, "doc_id", store, sink, p)
+      clips(Seq(9L), Seq((5L, 305L))), 0L, "doc_id", "payload", store, sink, p)
     assert(admittedIds(sink, 0L) === Set(9L))
   }
 
@@ -82,14 +82,14 @@ class StreamingAudioDedupSpec extends SparkSpec {
     val p = Params(numBuckets = 8, maxHamming = 3)
     val ex0 = intercept[IllegalArgumentException] {
       StreamingAudioDedup.applyBatch(
-        clips(Seq(1L), Seq.empty), 0L, "doc_id", store, sink, p)
+        clips(Seq(1L), Seq.empty), 0L, "doc_id", "payload", store, sink, p)
     }
     assert(ex0.getMessage.contains("initialize"))
     StreamingAudioDedup.initialize(
       clips(Seq(1L), Seq.empty), "doc_id", store, sink, p)
     val ex1 = intercept[IllegalArgumentException] {
       StreamingAudioDedup.applyBatch(
-        clips(Seq(5L), Seq.empty), 0L, "doc_id", store, sink,
+        clips(Seq(5L), Seq.empty), 0L, "doc_id", "payload", store, sink,
         p.copy(maxHamming = 7))
     }
     assert(ex1.getMessage.contains("parameter mismatch"))

@@ -30,8 +30,8 @@ class StreamingImageDedupSpec extends SparkSpec {
   }
 
   private def admittedIds(sink: String, batch: Long): Set[Long] =
-    StreamingImageDedup.admittedOf(spark, sink, "doc_id", batch)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    StreamingImageDedup.admittedIds(spark, batch, "doc_id", sink)
+      .collect().map(_.getLong(0)).toSet
 
   test("two-batch admission: copies reject across batches, novel images admit, replay no-op") {
     val (store, sink) = dirs()
@@ -49,12 +49,12 @@ class StreamingImageDedupSpec extends SparkSpec {
     // batch 0: img 1, a 2x re-encode of it as id 101 (in-batch pair ->
     // min-id 1 survives), novel img 5
     StreamingImageDedup.applyBatch(
-      images(Seq(1L, 5L), Seq((1L, 101L))), 0L, "doc_id", store, sink, p)
+      images(Seq(1L, 5L), Seq((1L, 101L))), 0L, "doc_id", "payload", store, sink, p)
     assert(admittedIds(sink, 0L) === Set(1L, 5L))
     // batch 1: another re-encode of ADMITTED 1 (id 201, rejected
     // against the store without re-decoding the corpus), novel img 9
     StreamingImageDedup.applyBatch(
-      images(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", store, sink, p)
+      images(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", "payload", store, sink, p)
     assert(admittedIds(sink, 1L) === Set(9L))
     // replay of batch 1: every image self-collides at hamming 0 ->
     // admitted empty, store content identical
@@ -63,7 +63,7 @@ class StreamingImageDedupSpec extends SparkSpec {
         spark.read.parquet(sink).toJSON.collect().map("s:" + _).toSet
     val before = content()
     StreamingImageDedup.applyBatch(
-      images(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", store, sink, p)
+      images(Seq(9L), Seq((1L, 201L))), 1L, "doc_id", "payload", store, sink, p)
     assert(content() === before)
   }
 
@@ -74,7 +74,7 @@ class StreamingImageDedupSpec extends SparkSpec {
       images(Seq(1L, 5L), Seq.empty), "doc_id", store, sink, p)
     assert(admittedIds(sink, -1L) === Set(1L, 5L))
     StreamingImageDedup.applyBatch(
-      images(Seq(9L), Seq((5L, 305L))), 0L, "doc_id", store, sink, p)
+      images(Seq(9L), Seq((5L, 305L))), 0L, "doc_id", "payload", store, sink, p)
     assert(admittedIds(sink, 0L) === Set(9L))
   }
 
@@ -83,14 +83,14 @@ class StreamingImageDedupSpec extends SparkSpec {
     val p = Params(numBuckets = 8, maxHamming = 3)
     val ex0 = intercept[IllegalArgumentException] {
       StreamingImageDedup.applyBatch(
-        images(Seq(1L), Seq.empty), 0L, "doc_id", store, sink, p)
+        images(Seq(1L), Seq.empty), 0L, "doc_id", "payload", store, sink, p)
     }
     assert(ex0.getMessage.contains("initialize"))
     StreamingImageDedup.initialize(
       images(Seq(1L), Seq.empty), "doc_id", store, sink, p)
     val ex1 = intercept[IllegalArgumentException] {
       StreamingImageDedup.applyBatch(
-        images(Seq(5L), Seq.empty), 0L, "doc_id", store, sink,
+        images(Seq(5L), Seq.empty), 0L, "doc_id", "payload", store, sink,
         p.copy(maxHamming = 7))
     }
     assert(ex1.getMessage.contains("parameter mismatch"))

@@ -211,7 +211,7 @@ class StreamingReplayPropertySpec extends SparkSpec {
         Multimodal.syntheticImages(Seq(1L).toDF("doc_id"), "doc_id"),
         "doc_id", store, sink, p)
       (b => StreamingImageDedup.applyBatch(
-        imgs(b), b.toLong, "doc_id", store, sink, p),
+        imgs(b), b.toLong, "doc_id", "payload", store, sink, p),
         () => rowsOf(store).map("p:" + _) ++ rowsOf(sink).map("s:" + _))
     }
   }
@@ -235,7 +235,7 @@ class StreamingReplayPropertySpec extends SparkSpec {
         Multimodal.syntheticAudioVaried(Seq(1L).toDF("doc_id"), "doc_id"),
         "doc_id", store, sink, p)
       (b => StreamingAudioDedup.applyBatch(
-        wavs(b), b.toLong, "doc_id", store, sink, p),
+        wavs(b), b.toLong, "doc_id", "payload", store, sink, p),
         () => rowsOf(store).map("p:" + _) ++ rowsOf(sink).map("s:" + _))
     }
   }
@@ -259,7 +259,7 @@ class StreamingReplayPropertySpec extends SparkSpec {
         Multimodal.syntheticVideos(Seq(1L).toDF("doc_id"), "doc_id"),
         "doc_id", store, sink, p)
       (b => StreamingVideoDedup.applyBatch(
-        vids(b), b.toLong, "doc_id", store, sink, p),
+        vids(b), b.toLong, "doc_id", "payload", store, sink, p),
         () => rowsOf(store).map("p:" + _) ++ rowsOf(sink).map("s:" + _))
     }
   }

@@ -36,13 +36,7 @@ class StreamingVideoDedupSpec extends SparkSpec {
     Multimodal.reencodeScaledVideo(videos(srcIds), factor = 2, idOffset = offset)
 
   private def admitted(sink: String, batch: Long): Set[Long] =
-    StreamingVideoDedup.admittedIdsOf(
-        spark, sink, "doc_id", batch,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "doc_id", org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField(
-            "payload", org.apache.spark.sql.types.BinaryType))))
+    StreamingVideoDedup.admittedIds(spark, batch, "doc_id", sink)
       .collect().map(_.getLong(0)).toSet
 
   test("two-batch admission: trims/transcodes reject across batches, partial overlap admits, replay no-op") {
@@ -66,14 +60,14 @@ class StreamingVideoDedupSpec extends SparkSpec {
     // min-id 2 survives), disjoint video 20
     StreamingVideoDedup.applyBatch(
       videos(Seq(2L, 20L)).unionByName(transcodes(Seq(2L), 1000L)),
-      0L, "doc_id", store, sink, p)
+      0L, "doc_id", "payload", store, sink, p)
     assert(admitted(sink, 0L) === Set(2L, 20L))
     // batch 1: trim-shaped 3 (⊂ admitted 2 -> reject), partial-overlap
     // 4 (< ½ vs 2 -> admit), transcode of ADMITTED 20 as 1020 (reject
     // against the store without re-demuxing the corpus), novel 40
     StreamingVideoDedup.applyBatch(
       videos(Seq(3L, 4L, 40L)).unionByName(transcodes(Seq(20L), 1000L)),
-      1L, "doc_id", store, sink, p)
+      1L, "doc_id", "payload", store, sink, p)
     assert(admitted(sink, 1L) === Set(4L, 40L))
     // replay of batch 1: admitted set recomputes identically (own
     // postings self-excluded), both stores byte-content-identical
@@ -83,7 +77,7 @@ class StreamingVideoDedupSpec extends SparkSpec {
     val before = content()
     StreamingVideoDedup.applyBatch(
       videos(Seq(3L, 4L, 40L)).unionByName(transcodes(Seq(20L), 1000L)),
-      1L, "doc_id", store, sink, p)
+      1L, "doc_id", "payload", store, sink, p)
     assert(content() === before)
     assert(admitted(sink, 1L) === Set(4L, 40L))
   }
@@ -95,7 +89,7 @@ class StreamingVideoDedupSpec extends SparkSpec {
     assert(admitted(sink, -1L) === Set(2L, 20L))
     StreamingVideoDedup.applyBatch(
       videos(Seq(3L, 40L)).unionByName(transcodes(Seq(2L), 1000L)),
-      0L, "doc_id", store, sink, p)
+      0L, "doc_id", "payload", store, sink, p)
     assert(admitted(sink, 0L) === Set(40L))
   }
 
@@ -103,13 +97,13 @@ class StreamingVideoDedupSpec extends SparkSpec {
     val (store, sink) = dirs()
     val p = Params(numBuckets = 8)
     val ex0 = intercept[IllegalArgumentException] {
-      StreamingVideoDedup.applyBatch(videos(Seq(2L)), 0L, "doc_id", store, sink, p)
+      StreamingVideoDedup.applyBatch(videos(Seq(2L)), 0L, "doc_id", "payload", store, sink, p)
     }
     assert(ex0.getMessage.contains("initialize"))
     StreamingVideoDedup.initialize(videos(Seq(2L)), "doc_id", store, sink, p)
     val ex1 = intercept[IllegalArgumentException] {
       StreamingVideoDedup.applyBatch(
-        videos(Seq(20L)), 0L, "doc_id", store, sink, p.copy(numBuckets = 16))
+        videos(Seq(20L)), 0L, "doc_id", "payload", store, sink, p.copy(numBuckets = 16))
     }
     assert(ex1.getMessage.contains("parameter mismatch"))
   }
