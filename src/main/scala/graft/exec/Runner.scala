@@ -1,15 +1,27 @@
 package graft.exec
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors,
+  ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 import graft.derive.{Extractor, SqlTypes}
 import graft.model._
 
 /** End-to-end ETL runner: derives the dimensional model from an [[Env]]
-  * and executes the populate pipelines in dependency order, writing
+  * and executes the populate pipelines in dependency waves, writing
   * parquet. Replaces the reference's emit-SQL-and-let-an-orchestrator-
   * run-it lifecycle (SURVEY §3.1 step 5) with a single in-session run.
+  *
+  * The waves are the levels of [[Extractor]]'s dependency DAG: every
+  * derived dim, then every persistent fact. The tables of one wave run
+  * concurrently (see [[runWave]]); a wave starts only after the previous
+  * one has ended. A fact populate reads sources and dims only, never
+  * another fact table, so [[factsInTopoOrder]] orders the returned
+  * names but adds no data edge between facts.
   *
   * Physical design (D1-D3, re-expressed for parquet/Spark):
   *  - every output is written with the *derived* schema enforced (cast)
@@ -133,68 +145,74 @@ final class Runner(
       .filterNot { case (_, t) => env.tables.contains(t) }
       .distinctBy(_._2.name)
 
-  /** Full refresh of every derived table: dims first, then facts in
-    * parent-before-child order. Each table is written once; fact reads
-    * resolve dims from the just-written parquet. Returns written table
-    * names. */
+  /** Full refresh of every derived table: the dims wave, then the facts
+    * wave. Each table is written once; fact reads resolve dims from the
+    * just-written parquet. Returns written table names, dims first, then
+    * facts in parent-before-child order. */
   def fullRefresh(window: TimeWindow = TimeWindow.unbounded): Seq[String] = withWriterLease {
-    val dimNames = derivedDims.map { case (fact, dimTable) =>
-      val df = DimPopulate.full(env, fact, dimTable.name, readSource(fact.tableName), window)
-      writeDim(df, dimTable, targetName = stagedName(dimTable.name, PopulationMode.Full))
-      dimTable.name
-    }
-    val factNames = factsInTopoOrder.filter(_.persistent).map { fact =>
-      // in full mode the dim lookups read the staged dims too
-      // (`Fact.hs:189`: the subquery targets the suffixed table)
-      val df = FactPopulate.populate(env, fact, window, readSource,
-        d => readOut(stagedName(d, PopulationMode.Full)), saltParents)
-      writeFact(df, fact, targetName = stagedName(factTableNameOf(fact), PopulationMode.Full))
-      factTableNameOf(fact)
-    }
+    val dimNames = runWave(derivedDims.map { case (fact, dimTable) =>
+      s"warehouse full: dim ${dimTable.name}" -> { () =>
+        val df = DimPopulate.full(env, fact, dimTable.name, readSource(fact.tableName), window)
+        writeDim(df, dimTable, targetName = stagedName(dimTable.name, PopulationMode.Full))
+        dimTable.name
+      }
+    })
+    val factNames = runWave(factsInTopoOrder.filter(_.persistent).map { fact =>
+      s"warehouse full: fact ${factTableNameOf(fact)}" -> { () =>
+        // in full mode the dim lookups read the staged dims too
+        // (`Fact.hs:189`: the subquery targets the suffixed table)
+        val df = FactPopulate.populate(env, fact, window, readSource,
+          d => readOut(stagedName(d, PopulationMode.Full)), saltParents)
+        writeFact(df, fact, targetName = stagedName(factTableNameOf(fact), PopulationMode.Full))
+        factTableNameOf(fact)
+      }
+    })
     dimNames ++ factNames
   }
 
   /** Incremental refresh over an aligned window: appends new dim rows
     * (anti-join, ids continuing after the existing max) and appends the
-    * window's fact rows. Bucket keys are disjoint across aligned
-    * windows, so appends never double-count (SURVEY §4, last row). */
+    * window's fact rows, in the same two waves as [[fullRefresh]].
+    * Bucket keys are disjoint across aligned windows, so appends never
+    * double-count (SURVEY §4, last row). */
   def incrementalRefresh(window: TimeWindow): Seq[String] = withWriterLease {
     require(window.lower.nonEmpty && window.upper.nonEmpty,
       "incremental refresh needs both window bounds")
-    val dimNames = derivedDims.map { case (fact, dimTable) =>
-      val newRows = DimPopulate.incremental(
-        env, fact, dimTable.name, readSource(fact.tableName), readOut(dimTable.name), window)
-      writeDim(newRows, dimTable, append = true)
-      dimTable.name
-    }
-    val factNames = factsInTopoOrder.filter(_.persistent).map { fact =>
-      val df = FactPopulate.populate(env, fact, window, readSource, readOut, saltParents)
-      writeFact(df, fact, append = true)
-      factTableNameOf(fact)
-    }
+    val dimNames = runWave(derivedDims.map { case (fact, dimTable) =>
+      s"warehouse incremental: dim ${dimTable.name}" -> { () =>
+        val newRows = DimPopulate.incremental(
+          env, fact, dimTable.name, readSource(fact.tableName), readOut(dimTable.name), window)
+        writeDim(newRows, dimTable, append = true)
+        dimTable.name
+      }
+    })
+    val factNames = runWave(factsInTopoOrder.filter(_.persistent).map { fact =>
+      s"warehouse incremental: fact ${factTableNameOf(fact)}" -> { () =>
+        val df = FactPopulate.populate(env, fact, window, readSource, readOut, saltParents)
+        writeFact(df, fact, append = true)
+        factTableNameOf(fact)
+      }
+    })
     dimNames ++ factNames
   }
 
   /** Data-quality checks (the executable form of PK/UK constraints):
     * returns (table, constraint-description, violation count) for every
-    * declared uniqueness on derived tables; all counts must be 0. */
+    * declared uniqueness on derived tables; all counts must be 0. The
+    * checks run as one wave. */
   def checkUniqueKeys(): Seq[(String, String, Long)] = {
-    val dimChecks = derivedDims.map { case (_, dimTable) =>
-      val uk = dimTable.constraints.collectFirst {
-        case TableConstraint.UniqueKey(cols) => cols
-      }.getOrElse(Seq.empty)
-      (dimTable.name, s"UniqueKey(${uk.mkString(",")})",
-        countDuplicates(readOut(dimTable.name), uk))
-    }
-    val factChecks = factsInTopoOrder.filter(_.persistent).map { fact =>
-      val derived = Extractor.extractFactTable(env, fact)
-      val uk = derived.constraints.collectFirst {
-        case TableConstraint.UniqueKey(cols) => cols
-      }.getOrElse(Seq.empty)
-      (factTableNameOf(fact), s"UniqueKey(${uk.mkString(",")})",
-        countDuplicates(readOut(factTableNameOf(fact)), uk))
-    }
-    dimChecks ++ factChecks
+    def check(kind: String, name: String, derived: Table) =
+      s"warehouse check: $kind $name" -> { () =>
+        val uk = derived.constraints.collectFirst {
+          case TableConstraint.UniqueKey(cols) => cols
+        }.getOrElse(Seq.empty)
+        (name, s"UniqueKey(${uk.mkString(",")})", countDuplicates(readOut(name), uk))
+      }
+    runWave(
+      derivedDims.map { case (_, dimTable) => check("dim", dimTable.name, dimTable) } ++
+        factsInTopoOrder.filter(_.persistent).map { fact =>
+          check("fact", factTableNameOf(fact), Extractor.extractFactTable(env, fact))
+        })
   }
 
   private def countDuplicates(df: DataFrame, keys: Seq[String]): Long =
@@ -286,23 +304,70 @@ final class Runner(
   }
 
   /** Emit the optimized physical plan per derived table — the
-    * debuggability analogue of the reference's SQL-text artifacts. */
+    * debuggability analogue of the reference's SQL-text artifacts. The
+    * plans are built as one wave. Each text is `Dataset.explain`'s
+    * output, the trailing newline of its `println` included. */
   def emitPlans(window: TimeWindow = TimeWindow.unbounded): Map[String, String] = {
-    def planOf(df: DataFrame): String = {
-      val out = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(out)) { df.explain("formatted") }
-      out.toString
-    }
+    def planOf(df: DataFrame): String =
+      df.queryExecution.explainString(FormattedMode) + "\n"
     val dims = derivedDims.map { case (fact, dimTable) =>
-      dimTable.name -> planOf(
-        DimPopulate.candidates(env, fact, dimTable.name, readSource(fact.tableName), window))
+      s"warehouse plan: dim ${dimTable.name}" -> { () =>
+        dimTable.name -> planOf(
+          DimPopulate.candidates(env, fact, dimTable.name, readSource(fact.tableName), window))
+      }
     }
     val facts = factsInTopoOrder.filter(_.persistent).map { fact =>
-      factTableNameOf(fact) -> planOf(
-        FactPopulate.populate(env, fact, window, readSource, readOut, saltParents))
+      s"warehouse plan: fact ${factTableNameOf(fact)}" -> { () =>
+        factTableNameOf(fact) -> planOf(
+          FactPopulate.populate(env, fact, window, readSource, readOut, saltParents))
+      }
     }
-    (dims ++ facts).toMap
+    runWave(dims ++ facts).toMap
   }
+
+  /** Run one wave of tables: each `(label, body)` on a pool of
+    * `min(wave size, defaultParallelism)` daemon threads, every Spark
+    * job of a body described by its label. Waits for every body before
+    * it returns their results in wave order or rethrows the first
+    * failure, in wave order, as thrown — so a wave never overlaps the
+    * next, and a failed wave leaves nothing running behind the writer
+    * lease. The session's FIFO scheduling suffices: each table's jobs
+    * are a few 1-task stages, so it is running tables side by side, not
+    * sharing cores within a job, that keeps the other cores busy. */
+  private def runWave[T](wave: Seq[(String, () => T)]): Seq[T] =
+    if (wave.isEmpty) Seq.empty
+    else {
+      val sc      = spark.sparkContext
+      val ids     = new AtomicInteger()
+      val workers = new ConcurrentLinkedQueue[Thread]()
+      val factory: ThreadFactory = { r =>
+        val t = new Thread(r, s"${Runner.WaveThreadPrefix}${ids.incrementAndGet()}")
+        t.setDaemon(true)
+        workers.add(t)
+        t
+      }
+      val pool = Executors.newFixedThreadPool(math.min(wave.size, sc.defaultParallelism), factory)
+      try {
+        // workers start on submit and inherit a copy of the caller's
+        // local properties, so the labels set on them never reach the
+        // caller's later jobs
+        val futures = wave.map { case (label, body) =>
+          pool.submit(new Callable[T] {
+            def call(): T = { sc.setJobDescription(label); body() }
+          })
+        }
+        val outcomes = futures.map { f =>
+          try Right(f.get())
+          catch { case e: ExecutionException => Left(e.getCause) }
+        }
+        outcomes.collectFirst { case Left(e) => throw e }
+        outcomes.collect { case Right(t) => t }
+      } finally {
+        // joined, not just terminated: no worker outlives its wave
+        pool.shutdown()
+        workers.forEach(_.join())
+      }
+    }
 
   def factTableNameOf(fact: Fact): String = {
     val s = env.settings
@@ -355,4 +420,10 @@ final class Runner(
     } else
       out.write.mode(if (append) "append" else "overwrite").parquet(s"$outDir/$name")
   }
+}
+
+object Runner {
+
+  /** Name prefix of the threads that run a wave's tables. */
+  private[graft] val WaveThreadPrefix = "graft-refresh-"
 }

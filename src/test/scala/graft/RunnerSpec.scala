@@ -1,7 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, ExecutionException}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 import graft.exec.Runner
@@ -14,6 +21,54 @@ class RunnerSpec extends SparkSpec {
 
   private def tempDir(): String =
     Files.createTempDirectory("graft-runner").toString
+
+  /** Job descriptions and SQL executions (start, end, call-site
+    * details) seen on the listener bus. */
+  private final class Recorder extends SparkListener {
+    val jobLabels  = new ConcurrentLinkedQueue[String]()
+    val execStarts = new ConcurrentHashMap[Long, (Long, String)]()
+    val execEnds   = new ConcurrentHashMap[Long, Long]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobLabels.add(Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => execStarts.put(s.executionId, (s.time, s.details))
+      case x: SparkListenerSQLExecutionEnd   => execEnds.put(x.executionId, x.time)
+      case _ => ()
+    }
+  }
+
+  /** Runs `body` under a [[Recorder]] and returns both once every event
+    * `body` posted has been delivered: the bus delivers in posting
+    * order, so that holds when a marker job started afterwards is seen.
+    * The marker runs on its own thread, leaving the caller's local
+    * properties as `body` left them. */
+  private def recording[T](body: => T): (T, Recorder) = {
+    val rec = new Recorder
+    val sc  = spark.sparkContext
+    sc.addSparkListener(rec)
+    try {
+      val result = body
+      val marker = new Thread(() => {
+        sc.setJobDescription("listener marker")
+        sc.parallelize(Seq(1), 1).count()
+      })
+      marker.start()
+      marker.join()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!rec.jobLabels.contains("listener marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(rec.jobLabels.remove("listener marker"), "listener events were not delivered")
+      (result, rec)
+    } finally sc.removeSparkListener(rec)
+  }
+
+  private def liveWaveThreads(): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(Runner.WaveThreadPrefix)).map(_.getName)
+
+  private val tpchTables = Seq("dim_order_priority", "dim_order_status", "dim_line_status",
+    "fact_order_by_day", "fact_line_by_day")
 
   test("YAML model parses and matches the programmatic fixture") {
     val Right((tables, facts, defaults)) =
@@ -185,6 +240,86 @@ class RunnerSpec extends SparkSpec {
       s"post-swap reads must succeed (transient failures during swap: ${transients.get()})")
   }
 
+  test("refresh waves: no fact populate starts before the last dim populate ends") {
+    val runner = new Runner(spark, Fixtures.tpchEnv, sf("sf0.001"), tempDir())
+    val (written, rec) = recording(runner.fullRefresh(TimeWindow.unbounded))
+    // the returned order is unchanged: dims, then facts in topo order
+    assert(written == tpchTables)
+    // executions are told apart as the refresh benchmark's trace does:
+    // by the populate on the call-site stack that started them
+    val execs = rec.execStarts.asScala.toSeq.map { case (id, (start, details)) =>
+      val populate =
+        if (details.contains("writeDim") || details.contains("DimPopulate")) "dim"
+        else if (details.contains("writeFact") || details.contains("FactPopulate")) "fact"
+        else ""
+      (populate, start, rec.execEnds.asScala(id))
+    }
+    assert(execs.forall(_._1.nonEmpty), "every refresh execution comes from a populate")
+    val dimEnd    = execs.filter(_._1 == "dim").map(_._3).max
+    val factStart = execs.filter(_._1 == "fact").map(_._2).min
+    assert(dimEnd <= factStart,
+      s"a fact populate started at $factStart, before the dims wave ended at $dimEnd")
+  }
+
+  test("every refresh job is labelled with its table; the caller's label is untouched") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    val (written, rec) =
+      try {
+        val runner = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), tempDir())
+        val r = recording(runner.fullRefresh(TimeWindow.unbounded))
+        assert(sc.getLocalProperty("spark.job.description") == "caller label")
+        r
+      } finally sc.setJobDescription(null)
+    val labels = rec.jobLabels.asScala.toSeq
+    assert(labels.nonEmpty)
+    labels.foreach { l =>
+      assert(written.exists(t => l == s"warehouse full: dim $t" || l == s"warehouse full: fact $t"),
+        s"job label '$l' names no derived table")
+      // the pipeline-step marker that the refresh benchmark parses
+      assert(!l.contains(": step "), l)
+    }
+    assert(written.forall(t => labels.exists(_.endsWith(s" $t"))), labels.distinct)
+  }
+
+  test("a failing table fails its wave: the rest of the wave ends, the next never starts") {
+    // the tpch env without lineitem: dim_line_status fails, the two
+    // orders dims of the same wave succeed
+    val src = tempDir()
+    for (t <- Seq("orders", "customer"))
+      Files.copy(Paths.get(sf("sf0.001"), s"$t.parquet"), Paths.get(src, s"$t.parquet"))
+    val out    = tempDir()
+    val runner = new Runner(spark, Fixtures.tpchEnv, src, out, stagingSuffix = "_staging")
+    val e = intercept[Exception](runner.fullRefresh(TimeWindow.unbounded))
+    assert(!e.isInstanceOf[ExecutionException], e)
+    assert(e.isInstanceOf[AnalysisException] && e.getMessage.contains("lineitem"), e)
+    for (d <- Seq("dim_order_status", "dim_order_priority"))
+      assert(Files.exists(Paths.get(out, s"${d}_staging", "_SUCCESS")), s"$d did not finish")
+    val left = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!left.exists(_.startsWith("fact_")), s"the facts wave started: $left")
+    assert(!left.contains("_graft_writer.lock"), "the writer lease was not released")
+    // a rerun on fixed input succeeds and promotes
+    Files.copy(Paths.get(sf("sf0.001"), "lineitem.parquet"), Paths.get(src, "lineitem.parquet"))
+    val written = runner.fullRefresh(TimeWindow.unbounded)
+    assert(written == tpchTables)
+    runner.swapStaging(written)
+    assert(spark.read.parquet(s"$out/fact_line_by_day").count() > 0)
+    assert(runner.checkUniqueKeys().forall(_._3 == 0))
+  }
+
+  test("no wave thread outlives a refresh, successful or failed") {
+    val ok = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), tempDir())
+    ok.fullRefresh(TimeWindow.unbounded)
+    assert(liveWaveThreads().isEmpty, liveWaveThreads())
+    ok.checkUniqueKeys()
+    ok.emitPlans()
+    assert(liveWaveThreads().isEmpty, liveWaveThreads())
+    // an empty source directory fails every dim of the first wave
+    val failing = new Runner(spark, Fixtures.eventsEnv, tempDir(), tempDir())
+    intercept[AnalysisException](failing.fullRefresh(TimeWindow.unbounded))
+    assert(liveWaveThreads().isEmpty, liveWaveThreads())
+  }
+
   test("writer lease: concurrent mutating runs against one outDir fail loudly") {
     val out = tempDir()
     val runner = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), out)
@@ -287,6 +422,21 @@ class RunnerSpec extends SparkSpec {
     val tenant = new Runner(spark, Fixtures.tenantEnv, sf("sf0.001"), tempDir()).emitDdl()
     assert(tenant("fact_order_by_tenant_by_day").contains(
       "-- create index on fact_order_by_tenant_by_day (o_custkey, o_orderdate_day_id)"))
+  }
+
+  test("a plan artifact is Dataset.explain's formatted output, trailing newline included") {
+    val runner = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), tempDir())
+    runner.fullRefresh(TimeWindow.unbounded) // the fact plans read the dims
+    val (fact, dim) = runner.derivedDims.head
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(printed)) {
+      exec.DimPopulate.candidates(Fixtures.eventsEnv, fact, dim.name,
+        runner.readSource(fact.tableName), TimeWindow.unbounded).explain("formatted")
+    }
+    // two builds of one plan differ only in their expression and plan ids
+    def masked(plan: String) =
+      plan.replaceAll("#\\d+L?", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+    assert(masked(runner.emitPlans()(dim.name)) == masked(printed.toString))
   }
 
   test("metadata JSON sinks") {
