@@ -77,68 +77,99 @@ object Extractor {
     (myDims ++ parentDims).distinctBy(_._2)
   }
 
-  /** E3: the fact table schema (`Extractor.hs:23-73`) — one output
-    * column (or two, for FactAverage) per fact column in declaration
-    * order, then one FK id column per dimension, then
-    * UK(time col + degenerate dims + FK ids). */
+  /** E3: the fact table schema (`Extractor.hs:23-73`) — the columns of
+    * [[factPlan]] plus UK(its group keys). */
   def extractFactTable(env: Env, fact: Fact): Table = {
-    val s       = env.settings
+    val plan = factPlan(env, fact)
+    Table(plan.name, plan.columns.map(_.column), Seq(TableConstraint.UniqueKey(plan.keys)))
+  }
+
+  /** The one derivation of a fact table ([[FactPlan]]): one output
+    * column (or two, for FactAverage: its count then its sum) per fact
+    * column in declaration order, then one FK id column per dimension
+    * of [[extractAllDimensionTables]]; every output NOT NULL, measures
+    * typed by their source column, counts by the count type. Also the
+    * parent-source joins with their FK pairs and the derived-dim
+    * lookups with their (dim column, source column) pairs
+    * (`Populate/Fact.hs:155-195`). */
+  def factPlan(env: Env, fact: Fact): FactPlan = {
+    import FactPlan._
+    val s = env.settings
+    def table(name: String): Table =
+      env.findTable(name).getOrElse(throw new IllegalStateException(s"missing table $name"))
+    def source(t: Table, cName: String): Column =
+      t.findColumn(cName)
+        .getOrElse(throw new IllegalStateException(s"missing column ${t.name}.$cName"))
+    val fTable  = table(fact.tableName)
     val allDims = extractAllDimensionTables(env, fact)
-    val table = env
-      .findTable(fact.tableName)
-      .getOrElse(throw new IllegalStateException(s"missing table ${fact.tableName}"))
 
-    def sourceColumn(cName: String): Column =
-      table
-        .findColumn(cName)
-        .getOrElse(throw new IllegalStateException(s"missing column $cName"))
-    def notNullCopy(cName: String): Column =
-      sourceColumn(cName).copy(nullable = Nullable.NotNull)
-    def notNullRename(srcName: String, newName: String): Column =
-      notNullCopy(srcName).copy(name = newName)
+    val timeColumn = fact.columns.collectFirst { case FactColumn(c, DimTime) => c }
+      .getOrElse(throw new IllegalStateException(s"fact ${fact.name} has no DimTime column"))
+    val timeId = Naming.timeUnitColumnName(s.dimTableIdColumnName, timeColumn, s.timeUnit)
 
-    val columns: Seq[Column] = fact.columns.flatMap { case FactColumn(cName, kind) =>
+    def notNull(name: String, columnType: String) = Column(name, columnType, Nullable.NotNull)
+    def measure(name: String, agg: Agg, src: Option[String]): Output = {
+      val columnType = agg match {
+        case Count         => s.factCountColumnType
+        case CountDistinct => "json"
+        case _             => source(fTable, src.get).columnType
+      }
+      Output(notNull(name, columnType), Measure(agg, src))
+    }
+    def sourcePK: String =
+      fTable.constraints.collectFirst { case TableConstraint.PrimaryKey(c) => c }
+        .getOrElse(throw new IllegalStateException(
+          s"FactCountDistinct with no source column needs a PK on ${fTable.name}"))
+
+    val own: Seq[Output] = fact.columns.flatMap { case FactColumn(cName, kind) =>
       kind match {
-        case DimTime =>
-          Seq(Column(
-            Naming.timeUnitColumnName(s.dimTableIdColumnName, cName, s.timeUnit),
-            "bigint", Nullable.NotNull))
-        case NoDimId | TenantId   => Seq(notNullCopy(cName))
-        case FactCount(_)         => Seq(Column(cName, s.factCountColumnType, Nullable.NotNull))
-        case FactCountDistinct(_) => Seq(Column(cName, "json", Nullable.NotNull))
-        case FactSum(src)         => Seq(notNullRename(src, cName))
-        case FactMax(src)         => Seq(notNullRename(src, cName))
-        case FactMin(src)         => Seq(notNullRename(src, cName))
+        case DimTime => Seq(Output(notNull(timeId, "bigint"), TimeBucket))
+        case NoDimId | TenantId =>
+          val c = source(fTable, cName)
+          Seq(Output(c.copy(nullable = Nullable.NotNull), Degenerate(c, kind == TenantId)))
+        case FactCount(src)         => Seq(measure(cName, Count, src))
+        case FactCountDistinct(src) => Seq(measure(cName, CountDistinct, src.orElse(Some(sourcePK))))
+        case FactSum(src)           => Seq(measure(cName, Sum, Some(src)))
+        case FactMax(src)           => Seq(measure(cName, Max, Some(src)))
+        case FactMin(src)           => Seq(measure(cName, Min, Some(src)))
         case FactAverage(src) =>
           Seq(
-            Column(cName + s.avgCountColumnSuffix, s.factCountColumnType, Nullable.NotNull),
-            notNullRename(src, cName + s.avgSumColumnSuffix))
+            measure(cName + s.avgCountColumnSuffix, Count, Some(src)),
+            measure(cName + s.avgSumColumnSuffix, Sum, Some(src)))
         case DimId(_) | DimVal(_) => Nil
       }
     }
 
-    val fkColumns: Seq[Column] = allDims.map { case (dimFact, dimTable) =>
-      Column(
-        Naming.factDimFKIdColumnName(
-          s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables),
-        Naming.idColTypeToFKIdColType(s.dimTableIdColumnType),
-        Nullable.NotNull)
+    val fkType = Naming.idColTypeToFKIdColType(s.dimTableIdColumnType)
+    val fks: Seq[Output] = allDims.map { case (dimFact, dimTable) =>
+      val name = Naming.factDimFKIdColumnName(
+        s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables)
+      // an existing dim's FK column lives in the declaring fact's source
+      val role =
+        if (env.tables.contains(dimTable))
+          ExistingDimId(dimFact.tableName, source(table(dimFact.tableName), name))
+        else DerivedDimId(dimTable.name)
+      Output(notNull(name, fkType), role)
     }
 
-    val ukColNames: Seq[String] = fact.columns.flatMap { case FactColumn(cName, kind) =>
-      kind match {
-        case DimTime =>
-          Some(Naming.timeUnitColumnName(s.dimTableIdColumnName, cName, s.timeUnit))
-        case NoDimId | TenantId => Some(cName)
-        case _                  => None
-      }
-    } ++ fkColumns.map(_.name)
+    val parentJoins = allDims.map(_._1.tableName).distinct.filter(_ != fact.tableName).map { p =>
+      ParentJoin(p, fTable.constraints.collectFirst {
+        case TableConstraint.ForeignKey(t, pairs) if t == p => pairs
+      }.getOrElse(throw new IllegalStateException(
+        s"no FK from ${fact.tableName} to parent source $p")))
+    }
 
-    Table(
-      name = Naming.extractedFactTableName(s.factPrefix, s.factInfix, fact.name, s.timeUnit),
-      columns = columns ++ fkColumns,
-      constraints = Seq(TableConstraint.UniqueKey(ukColNames))
-    )
+    val dimLookups = allDims.collect {
+      case (dimFact, dimTable) if !env.tables.contains(dimTable) =>
+        val srcTable = table(dimFact.tableName)
+        DimLookup(dimTable.name, srcTable.name,
+          Naming.dimColumnMapping(s.dimPrefix, dimFact, dimTable.name)
+            .map { case (dimC, srcC) => dimC -> source(srcTable, srcC) })
+    }
+
+    FactPlan(fact,
+      Naming.extractedFactTableName(s.factPrefix, s.factInfix, fact.name, s.timeUnit),
+      timeColumn, timeId, own ++ fks, parentJoins, dimLookups)
   }
 
   /** E4: build-order dependency DAG (`Extractor.hs:75-100`): the

@@ -2,7 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.model.{Env, TableConstraint}
+import graft.model.Env
 
 /** Bucketed managed-table writes (the D3 `bucketBy` path, SURVEY §2.9):
   * co-locating two tables on their join key lets repeated joins run
@@ -40,14 +40,9 @@ object Bucketing {
   def parentJoinKeys(env: Env): Map[String, Seq[String]] = {
     import graft.derive.Extractor
     val keyed = for {
-      fact    <- env.facts
-      fTable  <- env.findTable(fact.tableName).toSeq
-      parent  <- Extractor.extractAllDimensionTables(env, fact)
-                   .map(_._1.tableName).distinct.filter(_ != fact.tableName)
-      fkPairs <- fTable.constraints.collectFirst {
-                   case TableConstraint.ForeignKey(t, ps) if t == parent => ps
-                 }.toSeq
-      entry   <- Seq(fact.tableName -> fkPairs.map(_._1), parent -> fkPairs.map(_._2))
+      fact  <- env.facts
+      join  <- Extractor.factPlan(env, fact).parentJoins
+      entry <- Seq(fact.tableName -> join.fkPairs.map(_._1), join.table -> join.fkPairs.map(_._2))
     } yield entry
     keyed.groupBy(_._1).map { case (t, ks) =>
       val distinctKeySets = ks.map(_._2).distinct

@@ -3,7 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.derive.SqlTypes
+import graft.derive.{Extractor, SqlTypes}
 import graft.model._
 
 /** Dimension populate pipelines (P1/P2/P3 in SURVEY §2.0).
@@ -19,11 +19,6 @@ object DimPopulate {
     val lower = window.lower.map(timeCol >= lit(_))
     (upper.toSeq ++ lower.toSeq).reduceOption(_ && _).getOrElse(lit(true))
   }
-
-  /** The time (DimTime) column of a fact; validation guarantees one. */
-  private[exec] def timeColumnOf(fact: Fact): String =
-    fact.columns.collectFirst { case FactColumn(c, FactColumnKind.DimTime) => c }
-      .getOrElse(throw new IllegalStateException(s"fact ${fact.name} has no DimTime column"))
 
   /** P1 candidate rows (no ids yet): filter (any contributing column
     * non-null AND inside the window) -> project with NULL defaults ->
@@ -50,7 +45,7 @@ object DimPopulate {
       Defaults.coalesced(col(srcC), srcColumn, env.typeDefaults).as(dimC)
     }
     src
-      .filter(anyNotNull && windowPred(col(timeColumnOf(fact)), window))
+      .filter(anyNotNull && windowPred(col(Extractor.factPlan(env, fact).timeColumn), window))
       .select(projected: _*)
       .distinct()
   }

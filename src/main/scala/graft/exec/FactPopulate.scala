@@ -3,10 +3,9 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.derive.{Extractor, SqlTypes}
+import graft.derive.{Extractor, FactPlan, SqlTypes}
 import graft.functions.RegisterSketch
 import graft.model._
-import graft.model.FactColumnKind._
 
 /** Fact populate pipeline (F1-F9 in SURVEY §2.0), the reference's main
   * generated INSERT...SELECT (`src/Ringo/Generator/Populate/Fact.hs:127-230`)
@@ -20,6 +19,12 @@ import graft.model.FactColumnKind._
   *     .groupBy(time bucket, degenerate dims, fk ids)        // F1/F3
   *     .agg(count/sum/min/max, avg->count+sum, sketch)       // F3/F7
   * }}}
+  *
+  * The columns, keys, joins and aggregates are those of
+  * [[Extractor.factPlan]]; [[SqlEmit.factPopulateSql]] renders the same
+  * plan as SQL text. This side carries what the text cannot: the
+  * size-guarded broadcast hint, `--salt-parents` and distributed
+  * surrogate ids.
   *
   * Scale notes: dimension lookups broadcast (dims are
   * cardinality-bounded); the single shuffle is the final hash
@@ -104,16 +109,7 @@ object FactPopulate {
       readDim: String => DataFrame,
       saltParents: Option[Int] = None
   ): DataFrame = {
-    val s       = env.settings
-    val allDims = Extractor.extractAllDimensionTables(env, fact)
-    val fTable = env
-      .findTable(fact.tableName)
-      .getOrElse(throw new IllegalStateException(s"missing table ${fact.tableName}"))
-
-    def srcColumn(table: Table, cName: String): graft.model.Column =
-      table
-        .findColumn(cName)
-        .getOrElse(throw new IllegalStateException(s"missing column ${table.name}.$cName"))
+    val plan = Extractor.factPlan(env, fact)
 
     // ---- FROM: fact source LEFT OUTER JOIN each parent fact's source (F5)
     //
@@ -129,9 +125,7 @@ object FactPopulate {
     // row matches exactly the one replica with its salt; unmatched rows
     // stay unmatched). The salt columns never reach the output: the
     // final groupBy/select lists only the derived fact columns.
-    val parentTables =
-      allDims.map(_._1.tableName).distinct.filter(_ != fact.tableName)
-    val saltOpt = saltParents.filter(_ => parentTables.nonEmpty)
+    val saltOpt = saltParents.filter(_ => plan.parentJoins.nonEmpty)
     saltOpt.foreach(n => require(n > 1, s"--salt-parents must be > 1, got $n"))
     val base = {
       val raw = readSource(fact.tableName)
@@ -143,136 +137,99 @@ object FactPopulate {
         case None => raw.alias(fact.tableName)
       }
     }
-    val joinedSources = parentTables.foldLeft(base) { (acc, oTableName) =>
-      val fkPairs = fTable.constraints.collectFirst {
-        case TableConstraint.ForeignKey(t, pairs) if t == oTableName => pairs
-      }.getOrElse(throw new IllegalStateException(
-        s"no FK from ${fact.tableName} to parent source $oTableName"))
-      val cond = fkPairs
-        .map { case (c1, c2) => col(s"${fact.tableName}.$c1") === col(s"$oTableName.$c2") }
+    val joinedSources = plan.parentJoins.foldLeft(base) { (acc, join) =>
+      val parentName = join.table
+      val cond = join.fkPairs
+        .map { case (c1, c2) => col(s"${fact.tableName}.$c1") === col(s"$parentName.$c2") }
         .reduce(_ && _)
       saltOpt match {
         case Some(n) =>
-          val parent = readSource(oTableName)
+          val parent = readSource(parentName)
             .withColumn("__parent_salt", explode(sequence(lit(0), lit(n - 1))))
-            .alias(oTableName)
+            .alias(parentName)
           acc.join(parent,
-            cond && col(s"${fact.tableName}.__fact_salt") === col(s"$oTableName.__parent_salt"),
+            cond && col(s"${fact.tableName}.__fact_salt") === col(s"$parentName.__parent_salt"),
             "left_outer")
         case None =>
-          acc.join(readSource(oTableName).alias(oTableName), cond, "left_outer")
+          acc.join(readSource(parentName).alias(parentName), cond, "left_outer")
       }
     }
 
     // ---- WHERE: refresh window on the raw event time (F6)
-    val timeColName = DimPopulate.timeColumnOf(fact)
-    val timeCol     = col(s"${fact.tableName}.$timeColName")
-    val filtered    = joinedSources.filter(DimPopulate.windowPred(timeCol, window))
+    val timeCol  = col(s"${fact.tableName}.${plan.timeColumn}")
+    val filtered = joinedSources.filter(DimPopulate.windowPred(timeCol, window))
 
     // ---- derived-dimension lookups: broadcast left outer joins (F4)
-    val withDims = allDims.foldLeft(filtered) { case (acc, (dimFact, dimTable)) =>
-      if (env.tables.contains(dimTable)) acc // existing dim: FK col is already in a source
-      else {
-        val srcTableName = dimFact.tableName
-        val srcTable = env
-          .findTable(srcTableName)
-          .getOrElse(throw new IllegalStateException(s"missing table $srcTableName"))
-        val cond = Naming
-          .dimColumnMapping(s.dimPrefix, dimFact, dimTable.name)
-          .map { case (dimColName, sourceColName) =>
-            col(s"${dimTable.name}.$dimColName") ===
-              Defaults.coalesced(
-                col(s"$srcTableName.$sourceColName"),
-                srcColumn(srcTable, sourceColName),
-                env.typeDefaults)
-          }
-          .reduce(_ && _)
-        val dim = readDim(dimTable.name)
-        val aliased = dim.alias(dimTable.name)
-        val side = if (broadcastable(dim, s.dimBroadcastMaxBytes)) broadcast(aliased) else aliased
-        acc.join(side, cond, "left_outer")
-      }
-    }
+    val withDims = joinDimLookups(env, plan, filtered, readDim,
+      broadcastable(_, env.settings.dimBroadcastMaxBytes))
 
     // ---- select list: group keys + aggregates (F1/F2/F3/F7)
-    val coalesceFKId: Column => Column =
-      c => coalesce(c, lit(s.foreignKeyIdCoalesceValue))
-
-    // (outputName, expression, isGroupKey)
-    val factColMap: Seq[(String, Column, Boolean)] = fact.columns.flatMap {
-      case FactColumn(cName, kind) =>
-        def qual(c: String) = col(s"${fact.tableName}.$c")
-        kind match {
-          case DimTime =>
-            val outName = Naming.timeUnitColumnName(s.dimTableIdColumnName, cName, s.timeUnit)
-            Seq((
-              outName,
-              floor(unix_timestamp(qual(cName)) / lit(s.timeUnit.seconds)).cast("long"),
-              true))
-          case NoDimId | TenantId =>
-            Seq((
-              cName,
-              Defaults.coalesced(qual(cName), srcColumn(fTable, cName), env.typeDefaults),
-              true))
-          case FactCount(srcOpt) =>
-            val cnt = srcOpt.map(c => count(qual(c))).getOrElse(count(lit(1)))
-            Seq((cName, cnt.cast(SqlTypes.toDataType(s.factCountColumnType)), false))
-          case FactCountDistinct(srcOpt) =>
-            val srcName = srcOpt.getOrElse(
-              fTable.constraints.collectFirst { case TableConstraint.PrimaryKey(c) => c }
-                .getOrElse(throw new IllegalStateException(
-                  s"FactCountDistinct with no source column needs a PK on ${fTable.name}")))
-            val m = RegisterSketch.bucketCount(s.factCountDistinctErrorRate)
-            Seq((cName, RegisterSketch.buildAgg(m)(RegisterSketch.hashColumn(qual(srcName))), false))
-          // Measures are cast to their declared SQL type BEFORE
-          // aggregation: declaring a measure `numeric(p,s)` makes the
-          // sum exact decimal arithmetic — deterministic under any
-          // partitioning / aggregation order, which double sums are
-          // not. Essential for reproducible results on a real cluster.
-          case FactSum(src) =>
-            val t = SqlTypes.toDataType(srcColumn(fTable, src).columnType)
-            Seq((cName, sum(qual(src).cast(t)), false))
-          case FactMax(src) =>
-            val t = SqlTypes.toDataType(srcColumn(fTable, src).columnType)
-            Seq((cName, max(qual(src).cast(t)), false))
-          case FactMin(src) =>
-            val t = SqlTypes.toDataType(srcColumn(fTable, src).columnType)
-            Seq((cName, min(qual(src).cast(t)), false))
-          case FactAverage(src) =>
-            val t = SqlTypes.toDataType(srcColumn(fTable, src).columnType)
-            Seq(
-              (cName + s.avgCountColumnSuffix,
-                count(qual(src)).cast(SqlTypes.toDataType(s.factCountColumnType)), false),
-              (cName + s.avgSumColumnSuffix, sum(qual(src).cast(t)), false))
-          case DimId(_) | DimVal(_) => Nil
-        }
-    }
-
-    val dimColMap: Seq[(String, Column, Boolean)] = allDims.map { case (dimFact, dimTable) =>
-      val fkColName =
-        Naming.factDimFKIdColumnName(s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables)
-      val expr =
-        if (env.tables.contains(dimTable)) {
-          // existing dimension: the FK column lives in the declaring
-          // fact's source table; coalesce only if nullable (Fact.hs:182-184)
-          val srcTableName = dimFact.tableName
-          val srcTable     = env.findTable(srcTableName).get
-          val fkCol        = srcColumn(srcTable, fkColName)
-          val raw          = col(s"$srcTableName.$fkColName")
-          if (fkCol.isNullable) coalesceFKId(raw) else raw
-        } else
-          coalesceFKId(col(s"${dimTable.name}.${s.dimTableIdColumnName}"))
-      (fkColName, expr.cast(SqlTypes.toDataType(
-        Naming.idColTypeToFKIdColType(s.dimTableIdColumnType))), true)
-    }
-
-    val colMap    = factColMap ++ dimColMap
-    val groupCols = colMap.collect { case (n, e, true) => e.as(n) }
-    val aggCols   = colMap.collect { case (n, e, false) => e.as(n) }
+    val (keys, measures) = plan.columns.partition(_.role.isKey)
+    def rendered(outs: Seq[FactPlan.Output]) = outs.map(o => render(env, plan, o).as(o.column.name))
+    val groupCols = rendered(keys)
+    val aggCols   = rendered(measures)
     val grouped =
       if (aggCols.isEmpty) withDims.select(groupCols: _*).distinct()
       else withDims.groupBy(groupCols: _*).agg(aggCols.head, aggCols.tail: _*)
     // final column order = derived fact-table schema order
-    grouped.select(colMap.map { case (n, _, _) => col(n) }: _*)
+    grouped.select(plan.names.map(col): _*)
+  }
+
+  /** Left outer join each derived dim of `plan` on its natural keys
+    * (F4, replacing the reference's per-row correlated subquery),
+    * broadcast-hinted where `hint` holds for the dim. */
+  private[graft] def joinDimLookups(
+      env: Env, plan: FactPlan, rows: DataFrame,
+      readDim: String => DataFrame, hint: DataFrame => Boolean): DataFrame =
+    plan.dimLookups.foldLeft(rows) { (acc, lookup) =>
+      val cond = lookup.pairs
+        .map { case (dimColName, source) =>
+          col(s"${lookup.dim}.$dimColName") ===
+            Defaults.coalesced(
+              col(s"${lookup.sourceTable}.${source.name}"), source, env.typeDefaults)
+        }
+        .reduce(_ && _)
+      val dim     = readDim(lookup.dim)
+      val aliased = dim.alias(lookup.dim)
+      acc.join(if (hint(dim)) broadcast(aliased) else aliased, cond, "left_outer")
+    }
+
+  /** One output column of `plan` as the expression the populate groups
+    * by (keys) or aggregates (measures), over the source aliased by its
+    * table name and the dims aliased by theirs. */
+  private[graft] def render(env: Env, plan: FactPlan, out: FactPlan.Output): Column = {
+    import FactPlan._
+    val s = env.settings
+    def qual(c: String) = col(s"${plan.fact.tableName}.$c")
+    def coalesceFKId(c: Column) = coalesce(c, lit(s.foreignKeyIdCoalesceValue))
+    val t = SqlTypes.toDataType(out.column.columnType)
+    out.role match {
+      case TimeBucket =>
+        floor(unix_timestamp(qual(plan.timeColumn)) / lit(s.timeUnit.seconds)).cast("long")
+      case Degenerate(source, _) =>
+        Defaults.coalesced(qual(source.name), source, env.typeDefaults)
+      case ExistingDimId(table, source) =>
+        // coalesce only if nullable (Fact.hs:182-184)
+        val raw = col(s"$table.${source.name}")
+        (if (source.isNullable) coalesceFKId(raw) else raw).cast(t)
+      case DerivedDimId(dim) =>
+        coalesceFKId(col(s"$dim.${s.dimTableIdColumnName}")).cast(t)
+      // Measures are cast to their declared SQL type BEFORE
+      // aggregation: declaring a measure `numeric(p,s)` makes the sum
+      // exact decimal arithmetic — deterministic under any partitioning
+      // / aggregation order, which double sums are not. Essential for
+      // reproducible results on a real cluster.
+      case Measure(agg, src) =>
+        lazy val in = qual(src.get)
+        agg match {
+          case Count => src.map(c => count(qual(c))).getOrElse(count(lit(1))).cast(t)
+          case CountDistinct =>
+            val m = RegisterSketch.bucketCount(s.factCountDistinctErrorRate)
+            RegisterSketch.buildAgg(m)(RegisterSketch.hashColumn(in))
+          case Sum => sum(in.cast(t))
+          case Max => max(in.cast(t))
+          case Min => min(in.cast(t))
+        }
+    }
   }
 }

@@ -3,10 +3,9 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.derive.Extractor
+import graft.derive.{Extractor, FactPlan}
 import graft.functions.RegisterSketch
 import graft.model._
-import graft.model.FactColumnKind._
 
 /** Time roll-up of a populated fact table to a coarser bucket — the
   * reason the schema stores re-aggregable pieces (FactAverage as
@@ -19,6 +18,12 @@ import graft.model.FactColumnKind._
   * so `rollup(populate(minute), Hour) == populate(Hour)` exactly —
   * no rescan of the source. At 100 TB this is the difference between
   * re-reading the fact table (small) and re-reading raw events (huge).
+  *
+  * The keys and measures are those of [[Extractor.factPlan]]: its
+  * group-key roles become the roll-up keys (the time id renamed to the
+  * coarser grain) and each measure role picks its re-aggregation, so
+  * `toCoarser`, `merge` and `mergeIncremental` group by the same names
+  * as the populate wrote.
   */
 object Rollup {
 
@@ -27,54 +32,16 @@ object Rollup {
     require(target.seconds % s.timeUnit.seconds == 0,
       s"${target.unitName} is not a multiple of ${s.timeUnit.unitName}")
     val factor = target.seconds / s.timeUnit.seconds
+    val plan   = Extractor.factPlan(env, fact)
+    val names  = rolledNames(env, plan, target)
 
-    val oldTimeId = Naming.timeUnitColumnName(
-      s.dimTableIdColumnName, dimTimeColName(fact), s.timeUnit)
-    val newTimeId = Naming.timeUnitColumnName(
-      s.dimTableIdColumnName, dimTimeColName(fact), target)
-    val fkNames    = factFkNames(env, fact)
-    val degenerate = degenerateCols(fact)
-
-    val groupKeys: Seq[Column] =
-      floor(col(oldTimeId) / factor).cast("long").as(newTimeId) +:
-        (degenerate ++ fkNames).map(col)
-
-    val m = RegisterSketch.bucketCount(s.factCountDistinctErrorRate)
-
-    def checkedSum(cName: String): Column = Rollup.checkedSum(populated)(cName)
-
-    val aggs: Seq[Column] = fact.columns.flatMap { case FactColumn(cName, kind) =>
-      kind match {
-        case FactCount(_) =>
-          Seq(checkedSum(cName))
-        case FactCountDistinct(_) =>
-          Seq(RegisterSketch.mergeAgg(m)(col(cName)).as(cName))
-        case FactSum(_) => Seq(sum(col(cName)).as(cName))
-        case FactMax(_) => Seq(max(col(cName)).as(cName))
-        case FactMin(_) => Seq(min(col(cName)).as(cName))
-        case FactAverage(_) =>
-          val cnt = cName + s.avgCountColumnSuffix
-          val sm  = cName + s.avgSumColumnSuffix
-          Seq(
-            checkedSum(cnt),
-            sum(col(sm)).as(sm))
-        case _ => Nil
-      }
+    val groupKeys: Seq[Column] = plan.columns.zip(names).collect {
+      case (FactPlan.Output(_, FactPlan.TimeBucket), newTimeId) =>
+        floor(col(plan.timeId) / factor).cast("long").as(newTimeId)
+      case (FactPlan.Output(c, role), _) if role.isKey => col(c.name)
     }
-
-    val outCols = newTimeId +: (fact.columns.flatMap {
-      case FactColumn(cName, FactAverage(_)) =>
-        Seq(cName + s.avgCountColumnSuffix, cName + s.avgSumColumnSuffix)
-      case FactColumn(cName, FactCount(_) | FactCountDistinct(_) | FactSum(_) | FactMax(_) | FactMin(_)) =>
-        Seq(cName)
-      case FactColumn(cName, k) if k == NoDimId || k == TenantId => Seq(cName)
-      case _ => Nil
-    } ++ fkNames)
-
-    val grouped =
-      if (aggs.isEmpty) populated.select(groupKeys: _*).distinct()
-      else populated.groupBy(groupKeys: _*).agg(aggs.head, aggs.tail: _*)
-    grouped.select(outCols.map(col): _*)
+    val grouped = reaggregate(env, plan, populated, groupKeys, merging = false)
+    grouped.select(names.map(col): _*)
   }
 
   // Counts are stored in the fact schema's (narrow, default integer)
@@ -137,32 +104,42 @@ object Rollup {
       .as(cName)
   }
 
-  // Shared key derivation — toCoarser and merge/mergeIncremental MUST
-  // group by the same names or the merge(rollup(a) ∪ rollup(b)) ==
-  // rollup(a ∪ b) contract silently breaks; a single source of truth
-  // per piece keeps them from drifting.
-  private def dimTimeColName(fact: Fact): String =
-    fact.columns.collectFirst { case FactColumn(c, DimTime) => c }
-      .getOrElse(throw new IllegalStateException("fact has no DimTime column"))
-
-  private def factFkNames(env: Env, fact: Fact): Seq[String] = {
-    val s = env.settings
-    Extractor.extractAllDimensionTables(env, fact).map { case (dimFact, dimTable) =>
-      Naming.factDimFKIdColumnName(s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables)
-    }
+  /** The plan's output names at `target` grain: its time id renamed. */
+  private def rolledNames(env: Env, plan: FactPlan, target: TimeUnit): Seq[String] = {
+    val newTimeId =
+      Naming.timeUnitColumnName(env.settings.dimTableIdColumnName, plan.timeColumn, target)
+    plan.names.map(n => if (n == plan.timeId) newTimeId else n)
   }
 
-  private def degenerateCols(fact: Fact): Seq[String] =
-    fact.columns.collect {
-      case FactColumn(c, k) if k == NoDimId || k == TenantId => c
+  /** Group `df` by `keys` and re-aggregate every measure of `plan`:
+    * counts add (overflow-guarded), sums add (guarded back into their
+    * incoming type when `merging` already-rolled rows), min/max fold,
+    * sketches merge register-wise. */
+  private def reaggregate(
+      env: Env, plan: FactPlan, df: DataFrame, keys: Seq[Column], merging: Boolean): DataFrame = {
+    import FactPlan._
+    val m = RegisterSketch.bucketCount(env.settings.factCountDistinctErrorRate)
+    val aggs: Seq[Column] = plan.columns.collect { case Output(c, Measure(agg, _)) =>
+      val name = c.name
+      agg match {
+        case Count         => checkedSum(df)(name)
+        case CountDistinct => RegisterSketch.mergeAgg(m)(col(name)).as(name)
+        case Sum           => if (merging) sumBack(df)(name) else sum(col(name)).as(name)
+        case Max           => max(col(name)).as(name)
+        case Min           => min(col(name)).as(name)
+      }
     }
+    if (aggs.isEmpty) df.select(keys: _*).distinct()
+    else df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
 
   /** Column names keying a rolled-up fact at `target` grain: the
     * coarser time id + degenerate keys + dim FKs. */
   private def rolledKeyNames(env: Env, fact: Fact, target: TimeUnit): Seq[String] = {
-    val newTimeId = Naming.timeUnitColumnName(
-      env.settings.dimTableIdColumnName, dimTimeColName(fact), target)
-    newTimeId +: (degenerateCols(fact) ++ factFkNames(env, fact))
+    val plan = Extractor.factPlan(env, fact)
+    plan.columns.zip(rolledNames(env, plan, target)).collect {
+      case (FactPlan.Output(_, role), n) if role.isKey => n
+    }
   }
 
   /** Re-aggregate rows of an ALREADY-rolled fact that share the same
@@ -172,26 +149,9 @@ object Rollup {
     * stored piece is mergeable, `merge(rollup(a) ∪ rollup(b)) ==
     * rollup(a ∪ b)` exactly. Output schema == input schema. */
   def merge(env: Env, fact: Fact, rolled: DataFrame, target: TimeUnit): DataFrame = {
-    val s    = env.settings
-    val keys = rolledKeyNames(env, fact, target)
-    val m    = RegisterSketch.bucketCount(s.factCountDistinctErrorRate)
-    val aggs: Seq[Column] = fact.columns.flatMap { case FactColumn(cName, kind) =>
-      kind match {
-        case FactCount(_)         => Seq(checkedSum(rolled)(cName))
-        case FactCountDistinct(_) => Seq(RegisterSketch.mergeAgg(m)(col(cName)).as(cName))
-        case FactSum(_)           => Seq(sumBack(rolled)(cName))
-        case FactMax(_)           => Seq(max(col(cName)).as(cName))
-        case FactMin(_)           => Seq(min(col(cName)).as(cName))
-        case FactAverage(_)       => Seq(
-          checkedSum(rolled)(cName + s.avgCountColumnSuffix),
-          sumBack(rolled)(cName + s.avgSumColumnSuffix))
-        case _ => Nil
-      }
-    }
-    val grouped =
-      if (aggs.isEmpty) rolled.select(keys.map(col): _*).distinct()
-      else rolled.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    grouped.select(rolled.columns.toIndexedSeq.map(col): _*)
+    val keys = rolledKeyNames(env, fact, target).map(col)
+    reaggregate(env, Extractor.factPlan(env, fact), rolled, keys, merging = true)
+      .select(rolled.columns.toIndexedSeq.map(col): _*)
   }
 
   /** Incremental roll-up maintenance: fold a DELTA batch (already

@@ -76,21 +76,46 @@ final class Runner(
     * day partition (files split only past `maxRecordsPerFile`), then
     * promotes atomically via the same move-aside/move-in/delete-old
     * path as staged rebuilds — the live table stays readable during
-    * the rewrite and a crash leaves it untouched. */
+    * the rewrite and a crash leaves it untouched. A table that is
+    * already compact (see [[isCompact]]) is left as it is. */
   def compact(table: String, maxRecordsPerFile: Long = 5000000L): Unit = withWriterLease {
-    val df      = readOut(table)
-    val staged  = table + "__compact"
-    val writer0 = (
-      if (df.columns.contains("p_day"))
-        // one shuffle task per day partition -> one file per partition
-        df.repartition(col("p_day")).write.partitionBy("p_day")
-      else df.coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4)).write
-    )
-    writer0
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .parquet(s"$outDir/$staged")
-    promoteStaged(table, "__compact")
+    if (!isCompact(table, maxRecordsPerFile)) {
+      val df      = readOut(table)
+      val staged  = table + "__compact"
+      val writer0 = (
+        if (df.columns.contains("p_day"))
+          // one shuffle task per day partition -> one file per partition
+          df.repartition(col("p_day")).write.partitionBy("p_day")
+        else df.coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4)).write
+      )
+      writer0
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .mode("overwrite")
+        .parquet(s"$outDir/$staged")
+      promoteStaged(table, "__compact")
+    }
+  }
+
+  /** Whether every partition directory of `table` (the table directory
+    * itself when unpartitioned) holds exactly one parquet data file, of
+    * at most `maxRecordsPerFile` rows by its footer — the layout a
+    * rewrite would produce. Lists files and reads footers; no Spark job. */
+  private def isCompact(table: String, maxRecordsPerFile: Long): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf  = spark.sessionState.newHadoopConf()
+    val root  = new org.apache.hadoop.fs.Path(s"$outDir/$table")
+    val it    = root.getFileSystem(conf).listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { f =>
+      val n = f.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq
+    def rows(f: org.apache.hadoop.fs.FileStatus): Long = {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }
+    files.nonEmpty && files.groupBy(_.getPath.getParent).values.forall(_.size == 1) &&
+      files.forall(rows(_) <= maxRecordsPerFile)
   }
 
   /** Serialize MUTATING pipeline runs against `outDir`: an incremental
@@ -258,24 +283,8 @@ final class Runner(
     // fact rule (`Create.hs:75-97`): the time bucket, each degenerate
     // dim (NoDimId/TenantId), each dim FK id, and (tenant, time bucket)
     def factIndexes(fact: Fact): Seq[Seq[String]] = {
-      val s = env.settings
-      val timeIdCol = Naming.timeUnitColumnName(
-        s.dimTableIdColumnName, DimPopulate.timeColumnOf(fact), s.timeUnit)
-      val tenantCol = fact.columns.collectFirst {
-        case FactColumn(c, FactColumnKind.TenantId) => c
-      }
-      val factCols = fact.columns.collect {
-        case FactColumn(_, FactColumnKind.DimTime)  => timeIdCol
-        case FactColumn(c, FactColumnKind.NoDimId)  => c
-        case FactColumn(c, FactColumnKind.TenantId) => c
-      }
-      val dimCols = Extractor.extractAllDimensionTables(env, fact).map {
-        case (dimFact, dimTable) =>
-          Naming.factDimFKIdColumnName(
-            s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables)
-      }
-      factCols.map(Seq(_)) ++ dimCols.map(Seq(_)) ++
-        tenantCol.map(c => Seq(c, timeIdCol)).toSeq
+      val plan = Extractor.factPlan(env, fact)
+      plan.keys.map(Seq(_)) ++ plan.tenant.map(c => Seq(c, plan.timeId)).toSeq
     }
     val dims = derivedDims.map { case (_, dimTable) =>
       dimTable.name -> ddlOf(dimTable, partitioned = false, dimIndexes(dimTable))
@@ -406,14 +415,11 @@ final class Runner(
     val derived = Extractor.extractFactTable(env, fact)
     val out     = enforceSchema(df, derived)
     val name    = if (targetName.nonEmpty) targetName else factTableNameOf(fact)
-    val s       = env.settings
     if (partitionFactsByDay) {
-      val timeColSrc = fact.columns.collectFirst {
-        case FactColumn(c, FactColumnKind.DimTime) => c
-      }.getOrElse(throw new IllegalStateException(s"fact ${fact.name} has no DimTime column"))
-      val timeCol = Naming.timeUnitColumnName(s.dimTableIdColumnName, timeColSrc, s.timeUnit)
+      val timeId = Extractor.factPlan(env, fact).timeId
       out
-        .withColumn("p_day", floor(col(timeCol) * s.timeUnit.seconds / 86400L).cast("long"))
+        .withColumn("p_day",
+          floor(col(timeId) * env.settings.timeUnit.seconds / 86400L).cast("long"))
         .write.partitionBy("p_day")
         .mode(if (append) "append" else "overwrite")
         .parquet(s"$outDir/$name")

@@ -1,8 +1,7 @@
 package graft.exec
 
-import graft.derive.SqlTypes
+import graft.derive.{Extractor, FactPlan, SqlTypes}
 import graft.model._
-import graft.model.FactColumnKind._
 
 /** Populate-SQL artifact emission — the reference's primary product
   * (`app/Main.hs:75-81` writes `fullrefresh/<table>.sql` and
@@ -16,7 +15,10 @@ import graft.model.FactColumnKind._
   * an orchestrator driving a Spark catalog (or a human reading the
   * artifacts) sees the engine's real semantics. SqlEmitSpec *runs* the
   * emitted SQL and asserts it reproduces the DataFrame pipelines, so
-  * the artifacts cannot silently diverge from the engine.
+  * the artifacts cannot silently diverge from the engine. A fact's
+  * statement and [[FactPopulate.populate]] render one
+  * [[graft.derive.Extractor.factPlan]], each with its own role renderer,
+  * so neither re-derives a column, key, join or aggregate.
   *
   * Contract (mirroring the reference artifacts):
   *  - window bounds are `?` parameter markers (the reference's JDBC
@@ -67,7 +69,7 @@ object SqlEmit {
     val s         = env.settings
     val mapping   = Naming.dimColumnMapping(s.dimPrefix, fact, dimTableName)
     val factTable = env.findTable(fact.tableName).get
-    val timeCol   = fact.columns.collectFirst { case FactColumn(c, DimTime) => c }.get
+    val timeCol   = Extractor.factPlan(env, fact).timeColumn
     val selectCols = mapping.map { case (dimC, srcC) =>
       s"${coalesced(s"${fact.tableName}.$srcC", findColumn(factTable, srcC), env.typeDefaults)} AS $dimC"
     }
@@ -127,116 +129,54 @@ object SqlEmit {
     }
   }
 
-  /** Populate SQL for an extracted fact table: the single
-    * scan-join-aggregate statement [[FactPopulate.populate]] executes —
-    * parent-source LEFT OUTER joins, broadcast-hinted derived-dim
-    * lookups (replacing the reference's per-row correlated subqueries),
-    * one GROUP BY with every aggregate in the same pass (the
-    * reference's second UPDATE scan for sketches collapses into it).
+  /** Populate SQL for an extracted fact table: [[Extractor.factPlan]]
+    * rendered as the single scan-join-aggregate statement
+    * [[FactPopulate.populate]] executes — parent-source LEFT OUTER
+    * joins, broadcast-hinted derived-dim lookups (replacing the
+    * reference's per-row correlated subqueries), one GROUP BY with every
+    * aggregate in the same pass (the reference's second UPDATE scan for
+    * sketches collapses into it).
     *
     * @param includePartitionDay append the `p_day` epoch-day partition
     *        column ([[Runner]]'s fact partitioning, D3) */
   def factPopulateSql(
       env: Env, fact: Fact, popMode: PopulationMode,
       includePartitionDay: Boolean = true): String = {
-    import graft.derive.Extractor
-    val s       = env.settings
-    val allDims = Extractor.extractAllDimensionTables(env, fact)
-    val fTable  = env.findTable(fact.tableName).get
+    val s    = env.settings
+    val plan = Extractor.factPlan(env, fact)
     def qual(c: String) = s"${fact.tableName}.$c"
 
     // ---- FROM: source LEFT OUTER JOIN parent sources (F5)
-    val parentTables = allDims.map(_._1.tableName).distinct.filter(_ != fact.tableName)
-    val parentJoins = parentTables.map { oTableName =>
-      val fkPairs = fTable.constraints.collectFirst {
-        case TableConstraint.ForeignKey(t, pairs) if t == oTableName => pairs
-      }.getOrElse(throw new IllegalStateException(
-        s"no FK from ${fact.tableName} to parent source $oTableName"))
-      val cond = fkPairs
-        .map { case (c1, c2) => s"${qual(c1)} = $oTableName.$c2" }
+    val parentJoins = plan.parentJoins.map { join =>
+      val cond = join.fkPairs
+        .map { case (c1, c2) => s"${qual(c1)} = ${join.table}.$c2" }
         .mkString(" AND ")
-      s"""    LEFT OUTER JOIN $oTableName
+      s"""    LEFT OUTER JOIN ${join.table}
          |      ON $cond""".stripMargin
     }
 
     // ---- derived-dim lookups (F4): full mode reads the staged dims
-    val derivedDims = allDims.filterNot { case (_, t) => env.tables.contains(t) }
-    val dimJoins = derivedDims.map { case (dimFact, dimTable) =>
-      val srcTable = env.findTable(dimFact.tableName).get
-      val cond = Naming
-        .dimColumnMapping(s.dimPrefix, dimFact, dimTable.name)
-        .map { case (dimC, srcC) =>
-          val rhs = coalesced(
-            s"${dimFact.tableName}.$srcC", findColumn(srcTable, srcC), env.typeDefaults)
-          s"${dimTable.name}.$dimC = $rhs"
+    val dimJoins = plan.dimLookups.map { lookup =>
+      val cond = lookup.pairs
+        .map { case (dimC, src) =>
+          val rhs = coalesced(s"${lookup.sourceTable}.${src.name}", src, env.typeDefaults)
+          s"${lookup.dim}.$dimC = $rhs"
         }
         .mkString("\n         AND ")
-      val source = Naming.suffixTableName(popMode, s.tableNameSuffixTemplate, dimTable.name)
-      s"""    LEFT OUTER JOIN $source AS ${dimTable.name}
+      val source = Naming.suffixTableName(popMode, s.tableNameSuffixTemplate, lookup.dim)
+      s"""    LEFT OUTER JOIN $source AS ${lookup.dim}
          |      ON $cond""".stripMargin
     }
     val broadcastHint =
-      if (derivedDims.isEmpty) ""
-      else s"/*+ BROADCAST(${derivedDims.map(_._2.name).mkString(", ")}) */ "
+      if (plan.dimLookups.isEmpty) ""
+      else s"/*+ BROADCAST(${plan.dimLookups.map(_.dim).mkString(", ")}) */ "
 
-    // ---- select list: (outputName, sqlExpr, isGroupKey) in the exact
-    // order FactPopulate builds its colMap
-    val countType = sqlType(s.factCountColumnType)
-    val factCols: Seq[(String, String, Boolean)] = fact.columns.flatMap {
-      case FactColumn(cName, kind) =>
-        kind match {
-          case DimTime =>
-            val outName = Naming.timeUnitColumnName(s.dimTableIdColumnName, cName, s.timeUnit)
-            val e = s"CAST(FLOOR(unix_timestamp(${qual(cName)}) / ${s.timeUnit.seconds}) AS BIGINT)"
-            Seq((outName, e, true))
-          case NoDimId | TenantId =>
-            Seq((cName, coalesced(qual(cName), findColumn(fTable, cName), env.typeDefaults), true))
-          case FactCount(srcOpt) =>
-            val cnt = srcOpt.map(c => s"count(${qual(c)})").getOrElse("count(1)")
-            Seq((cName, s"CAST($cnt AS $countType)", false))
-          case FactCountDistinct(srcOpt) =>
-            val srcName = srcOpt.getOrElse(
-              fTable.constraints.collectFirst { case TableConstraint.PrimaryKey(c) => c }.get)
-            val hashed = s"CASE WHEN ${qual(srcName)} IS NOT NULL" +
-              s" THEN xxhash64(CAST(${qual(srcName)} AS STRING)) END"
-            Seq((cName, s"sketch_build($hashed)", false))
-          case FactSum(src) =>
-            val t = sqlType(findColumn(fTable, src).columnType)
-            Seq((cName, s"sum(CAST(${qual(src)} AS $t))", false))
-          case FactMax(src) =>
-            val t = sqlType(findColumn(fTable, src).columnType)
-            Seq((cName, s"max(CAST(${qual(src)} AS $t))", false))
-          case FactMin(src) =>
-            val t = sqlType(findColumn(fTable, src).columnType)
-            Seq((cName, s"min(CAST(${qual(src)} AS $t))", false))
-          case FactAverage(src) =>
-            val t = sqlType(findColumn(fTable, src).columnType)
-            Seq(
-              (cName + s.avgCountColumnSuffix, s"CAST(count(${qual(src)}) AS $countType)", false),
-              (cName + s.avgSumColumnSuffix, s"sum(CAST(${qual(src)} AS $t))", false))
-          case DimId(_) | DimVal(_) => Nil
-        }
-    }
-    val dimCols: Seq[(String, String, Boolean)] = allDims.map { case (dimFact, dimTable) =>
-      val fkColName = Naming.factDimFKIdColumnName(
-        s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables)
-      val raw =
-        if (env.tables.contains(dimTable)) {
-          val fkCol = findColumn(env.findTable(dimFact.tableName).get, fkColName)
-          val q     = s"${dimFact.tableName}.$fkColName"
-          if (fkCol.isNullable) s"coalesce($q, ${s.foreignKeyIdCoalesceValue})" else q
-        } else
-          s"coalesce(${dimTable.name}.${s.dimTableIdColumnName}, ${s.foreignKeyIdCoalesceValue})"
-      (fkColName, s"CAST($raw AS ${idSqlType(s)})", true)
-    }
-
-    val colMap    = factCols ++ dimCols
-    val timeIdCol = Naming.timeUnitColumnName(
-      s.dimTableIdColumnName, DimPopulate.timeColumnOf(fact), s.timeUnit)
+    // ---- select list: (outputName, sqlExpr, isGroupKey)
+    val colMap = plan.columns.map(o => (o.column.name, render(env, plan, o), o.role.isKey))
     // p_day repeats the bucket expression (no lateral alias dependence);
     // it is a pure function of the time bucket, so adding it to GROUP BY
     // leaves the grouping unchanged
-    val timeIdExpr = colMap.collectFirst { case (n, e, _) if n == timeIdCol => e }.get
+    val timeIdExpr = colMap.collectFirst { case (n, e, _) if n == plan.timeId => e }.get
     val pDay =
       if (includePartitionDay)
         Seq(("p_day", s"CAST(FLOOR($timeIdExpr * ${s.timeUnit.seconds} / 86400) AS BIGINT)", true))
@@ -251,18 +191,15 @@ object SqlEmit {
     val groupKeys = allCols.zipWithIndex.collect { case ((_, _, true), i) => (i + 1).toString }
     val hasAggs   = allCols.exists(!_._3)
 
+    val t = qual(plan.timeColumn)
     val window = popMode match {
-      case PopulationMode.Full        => s"${qual(DimPopulate.timeColumnOf(fact))} < ?"
-      case PopulationMode.Incremental =>
-        val t = qual(DimPopulate.timeColumnOf(fact))
-        s"$t < ? AND $t >= ?"
+      case PopulationMode.Full        => s"$t < ?"
+      case PopulationMode.Incremental => s"$t < ? AND $t >= ?"
     }
-    val factTableName = Naming.extractedFactTableName(
-      s.factPrefix, s.factInfix, fact.name, s.timeUnit)
     val (insertVerb, target) = popMode match {
       case PopulationMode.Full =>
-        ("INSERT OVERWRITE TABLE", factTableName + s.tableNameSuffixTemplate)
-      case PopulationMode.Incremental => ("INSERT INTO", factTableName)
+        ("INSERT OVERWRITE TABLE", plan.name + s.tableNameSuffixTemplate)
+      case PopulationMode.Incremental => ("INSERT INTO", plan.name)
     }
     val fromSql = (s"    ${fact.tableName}" +: (parentJoins ++ dimJoins)).mkString("\n")
     val distinct = if (hasAggs) "" else "DISTINCT\n    "
@@ -272,7 +209,10 @@ object SqlEmit {
     // registered with the SAME m or merged sketches silently mix
     // incompatible widths (RegisterSketch.registerSql scaladoc)
     val sketchHeader =
-      if (fact.columns.exists(_.kind.isInstanceOf[FactCountDistinct])) {
+      if (plan.columns.exists(_.role match {
+            case FactPlan.Measure(FactPlan.CountDistinct, _) => true
+            case _                                           => false
+          })) {
         val m = graft.functions.RegisterSketch.bucketCount(s.factCountDistinctErrorRate)
         s"-- requires: RegisterSketch.registerSql(spark, m = $m)  " +
           s"-- error rate ${s.factCountDistinctErrorRate}\n"
@@ -284,5 +224,34 @@ object SqlEmit {
        |$fromSql
        |  WHERE $window$groupBy;
        |""".stripMargin
+  }
+
+  /** One output column of `plan` as SQL text: the text form of
+    * [[FactPopulate.render]]. */
+  private def render(env: Env, plan: FactPlan, out: FactPlan.Output): String = {
+    import FactPlan._
+    val s = env.settings
+    def qual(c: String) = s"${plan.fact.tableName}.$c"
+    def coalesceFKId(c: String) = s"coalesce($c, ${s.foreignKeyIdCoalesceValue})"
+    val t = sqlType(out.column.columnType)
+    out.role match {
+      case TimeBucket =>
+        s"CAST(FLOOR(unix_timestamp(${qual(plan.timeColumn)}) / ${s.timeUnit.seconds}) AS BIGINT)"
+      case Degenerate(source, _) => coalesced(qual(source.name), source, env.typeDefaults)
+      case ExistingDimId(table, source) =>
+        val raw = s"$table.${source.name}"
+        s"CAST(${if (source.isNullable) coalesceFKId(raw) else raw} AS $t)"
+      case DerivedDimId(dim) => s"CAST(${coalesceFKId(s"$dim.${s.dimTableIdColumnName}")} AS $t)"
+      case Measure(agg, src) =>
+        lazy val in = qual(src.get)
+        agg match {
+          case Count => s"CAST(${src.fold("count(1)")(c => s"count(${qual(c)})")} AS $t)"
+          case CountDistinct =>
+            s"sketch_build(CASE WHEN $in IS NOT NULL THEN xxhash64(CAST($in AS STRING)) END)"
+          case Sum => s"sum(CAST($in AS $t))"
+          case Max => s"max(CAST($in AS $t))"
+          case Min => s"min(CAST($in AS $t))"
+        }
+    }
   }
 }

@@ -77,6 +77,8 @@ object RegisterSketch {
       buf.iterator.zipWithIndex.collect { case (r, b) if r >= 0 => b -> r }.toMap
     override def bufferEncoder: Encoder[Array[Int]] = RegisterSketch.intArrayEncoder
     override def outputEncoder: Encoder[Map[Int, Int]] = RegisterSketch.intMapEncoder
+    // the name plans print: stable across runs, unlike the identity hash
+    override def toString: String = s"sketch_build(m=$m)"
   }
 
   /** Aggregator merging stored sketches (register-wise max) — the
@@ -99,6 +101,7 @@ object RegisterSketch {
       buf.iterator.zipWithIndex.collect { case (r, b) if r >= 0 => b -> r }.toMap
     override def bufferEncoder: Encoder[Array[Int]] = RegisterSketch.intArrayEncoder
     override def outputEncoder: Encoder[Map[Int, Int]] = RegisterSketch.intMapEncoder
+    override def toString: String = s"sketch_merge(m=$m)"
   }
 
   /** Cardinality estimate from a sketch: HyperLogLog estimator

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.derive.{Extractor, SqlTypes}
-import graft.exec.Defaults
+import graft.derive.{Extractor, FactPlan}
+import graft.exec.FactPopulate
 import graft.model._
-import graft.model.FactColumnKind._
 
 /** Structured Streaming surface (SURVEY §2.11): the same fact layout as
   * the batch populate, fed from a stream.
@@ -41,98 +40,35 @@ object StreamingFactPopulate {
       watermark: String = "10 minutes",
       includeSketches: Boolean = true
   ): DataFrame = {
-    val s = env.settings
-    val fTable = env
-      .findTable(fact.tableName)
-      .getOrElse(throw new IllegalStateException(s"missing table ${fact.tableName}"))
-    def srcColumn(c: String) =
-      fTable.findColumn(c).getOrElse(throw new IllegalStateException(s"missing column $c"))
-
-    val timeColName = fact.columns.collectFirst { case FactColumn(c, DimTime) => c }
-      .getOrElse(throw new IllegalStateException("fact has no DimTime column"))
-
+    import FactPlan._
+    val s        = env.settings
+    val plan     = Extractor.factPlan(env, fact)
     val srcAlias = fact.tableName
-    val withWm   = stream.withWatermark(timeColName, watermark).alias(srcAlias)
+    val withWm   = stream.withWatermark(plan.timeColumn, watermark).alias(srcAlias)
 
     // stream-static dimension lookups (broadcast joins)
-    val allDims = Extractor.extractAllDimensionTables(env, fact)
-    require(
-      allDims.forall { case (df, _) => df.tableName == fact.tableName },
+    require(plan.parentJoins.isEmpty,
       "streaming populate supports single-source facts (no parent-fact joins on streams)")
-    val withDims = allDims.foldLeft(withWm) { case (acc, (dimFact, dimTable)) =>
-      if (env.tables.contains(dimTable)) acc
-      else {
-        val cond = Naming
-          .dimColumnMapping(s.dimPrefix, dimFact, dimTable.name)
-          .map { case (dimColName, sourceColName) =>
-            col(s"${dimTable.name}.$dimColName") ===
-              Defaults.coalesced(
-                col(s"$srcAlias.$sourceColName"), srcColumn(sourceColName), env.typeDefaults)
-          }
-          .reduce(_ && _)
-        acc.join(broadcast(readDim(dimTable.name).alias(dimTable.name)), cond, "left_outer")
-      }
+    val withDims = FactPopulate.joinDimLookups(env, plan, withWm, readDim, _ => true)
+
+    // the window replaces the time bucket key; sketches only if asked
+    def rendered(keep: Role => Boolean) = plan.columns.collect {
+      case o if keep(o.role) => FactPopulate.render(env, plan, o).as(o.column.name)
     }
-
-    val coalesceFKId: Column => Column = c => coalesce(c, lit(s.foreignKeyIdCoalesceValue))
-
-    val groupKeys: Seq[(String, Column)] =
-      fact.columns.flatMap {
-        case FactColumn(cName, k) if k == NoDimId || k == TenantId =>
-          Seq(cName -> Defaults.coalesced(
-            col(s"$srcAlias.$cName"), srcColumn(cName), env.typeDefaults))
-        case _ => Nil
-      } ++ allDims.map { case (dimFact, dimTable) =>
-        val fkName = Naming.factDimFKIdColumnName(
-          s.dimPrefix, s.dimTableIdColumnName, dimFact, dimTable, env.tables)
-        val e =
-          if (env.tables.contains(dimTable)) {
-            val fkCol = srcColumn(fkName)
-            if (fkCol.isNullable) coalesceFKId(col(fkName)) else col(fkName)
-          } else coalesceFKId(col(s"${dimTable.name}.${s.dimTableIdColumnName}"))
-        fkName -> e.cast(SqlTypes.toDataType(Naming.idColTypeToFKIdColType(s.dimTableIdColumnType)))
-      }
-
-    val aggs: Seq[Column] = fact.columns.flatMap { case FactColumn(cName, kind) =>
-      kind match {
-        case FactCountDistinct(srcOpt) if includeSketches =>
-          import graft.functions.RegisterSketch
-          val srcName = srcOpt.getOrElse(
-            fTable.constraints.collectFirst { case TableConstraint.PrimaryKey(c) => c }
-              .getOrElse(throw new IllegalStateException(
-                s"FactCountDistinct with no source column needs a PK on ${fTable.name}")))
-          val m = RegisterSketch.bucketCount(s.factCountDistinctErrorRate)
-          Seq(RegisterSketch.buildAgg(m)(
-            RegisterSketch.hashColumn(col(s"$srcAlias.$srcName"))).as(cName))
-        case FactCount(srcOpt) =>
-          val cnt = srcOpt.map(c => count(col(s"$srcAlias.$c"))).getOrElse(count(lit(1)))
-          Seq(cnt.cast(SqlTypes.toDataType(s.factCountColumnType)).as(cName))
-        case FactSum(src) =>
-          Seq(sum(col(s"$srcAlias.$src").cast(SqlTypes.toDataType(srcColumn(src).columnType))).as(cName))
-        case FactMax(src) =>
-          Seq(max(col(s"$srcAlias.$src").cast(SqlTypes.toDataType(srcColumn(src).columnType))).as(cName))
-        case FactMin(src) =>
-          Seq(min(col(s"$srcAlias.$src").cast(SqlTypes.toDataType(srcColumn(src).columnType))).as(cName))
-        case FactAverage(src) =>
-          val t = SqlTypes.toDataType(srcColumn(src).columnType)
-          Seq(
-            count(col(s"$srcAlias.$src")).cast(SqlTypes.toDataType(s.factCountColumnType))
-              .as(cName + s.avgCountColumnSuffix),
-            sum(col(s"$srcAlias.$src").cast(t)).as(cName + s.avgSumColumnSuffix))
-        case _ => Nil
-      }
+    val groupKeys = rendered(r => r.isKey && r != TimeBucket)
+    val aggs = rendered {
+      case Measure(CountDistinct, _) => includeSketches
+      case r                         => !r.isKey
     }
-
-    val timeIdName = Naming.timeUnitColumnName(s.dimTableIdColumnName, timeColName, s.timeUnit)
-    val bucket     = window(col(s"$srcAlias.$timeColName"), s"${s.timeUnit.seconds} seconds")
+    val bucket = window(col(s"$srcAlias.${plan.timeColumn}"), s"${s.timeUnit.seconds} seconds")
 
     require(aggs.nonEmpty,
       "streaming populate needs at least one aggregate fact column")
     withDims
-      .groupBy(bucket.as("w") +: groupKeys.map { case (n, e) => e.as(n) }: _*)
+      .groupBy(bucket.as("w") +: groupKeys: _*)
       .agg(aggs.head, aggs.tail: _*)
       // window start -> the same bigint bucket id as the batch layout
-      .withColumn(timeIdName,
+      .withColumn(plan.timeId,
         floor(unix_timestamp(col("w.start")) / s.timeUnit.seconds).cast("long"))
       .drop("w")
   }

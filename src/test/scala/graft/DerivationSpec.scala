@@ -1,16 +1,19 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 
-import graft.derive.Extractor
+import graft.derive.{Extractor, SqlTypes}
+import graft.exec.{FactPopulate, Rollup, SqlEmit}
 import graft.model._
 import graft.model.Nullable._
 import graft.model.TableConstraint._
 
 /** Golden tests for the derivation layer, transcribed from the
   * reference's doctest outputs (`/root/reference/src/Ringo.hs:147-221`).
+  * The plan-agreement test is the only one that starts Spark; it
+  * analyses plans and runs no job.
   */
-class DerivationSpec extends AnyFunSuite {
+class DerivationSpec extends SparkSpec {
   import Fixtures.{ringoEnv => env}
 
   private def fact(n: String) = env.findFact(n).get
@@ -199,5 +202,31 @@ class DerivationSpec extends AnyFunSuite {
     val e = Validator.validateEnv(tables, facts, Settings(), Fixtures.testTypeDefaults).toOption.get
     val dim = Extractor.extractDimensionTables(e, e.findFact("f").get).head
     assert(dim.columns.map(_.name) == Seq("id", "city", "city"))
+  }
+
+  test("fact plan: the schema, the populate, the emitted SQL and the roll-up agree") {
+    def empty(t: Table) =
+      spark.createDataFrame(java.util.List.of[Row](), SqlTypes.toStructType(t))
+    val envs = Seq(Fixtures.eventsEnv, Fixtures.tpchEnv, Fixtures.tenantEnv, Fixtures.ringoEnv)
+    for (e <- envs; f <- e.facts if f.persistent) {
+      val plan = Extractor.factPlan(e, f)
+      val dims = e.facts.flatMap(Extractor.extractAllDimensionTables(e, _)).map(_._2)
+      val populated = FactPopulate.populate(e, f, TimeWindow.unbounded,
+        t => empty(e.findTable(t).get), d => empty(dims.find(_.name == d).get))
+      val insert = SqlEmit.factPopulateSql(e, f, PopulationMode.Full, includePartitionDay = false)
+        .linesIterator.find(_.startsWith("INSERT")).get
+      val s       = e.settings
+      val coarser = TimeUnit.all(TimeUnit.all.indexOf(s.timeUnit) + 1)
+      val coarserTimeId =
+        Naming.timeUnitColumnName(s.dimTableIdColumnName, plan.timeColumn, coarser)
+      val rolled = Rollup.toCoarser(e, f, populated, coarser).columns.toSeq
+        .map(n => if (n == coarserTimeId) plan.timeId else n)
+      assert(plan.names.nonEmpty)
+      assert(Extractor.extractFactTable(e, f).columns.map(_.name) == plan.names, plan.name)
+      assert(populated.columns.toSeq == plan.names, plan.name)
+      assert(insert.substring(insert.indexOf('(') + 1, insert.lastIndexOf(')')).split(", ").toSeq
+        == plan.names, plan.name)
+      assert(rolled == plan.names, plan.name)
+    }
   }
 }

@@ -381,6 +381,35 @@ class RunnerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/dim_event_type").collect().map(_.toString).sorted.toSeq == dimBefore)
   }
 
+  test("compacting an already compact table leaves every file as it is") {
+    val out    = tempDir()
+    val lo     = java.sql.Timestamp.valueOf("2024-01-12 06:00:00")
+    val runner = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), out)
+    runner.fullRefresh(TimeWindow.upTo(lo))
+    runner.incrementalRefresh(
+      TimeWindow.between(lo, java.sql.Timestamp.valueOf("2024-01-20 00:00:00")))
+    val tables = Seq("fact_event_by_minute", "dim_event_type")
+    def files(): Seq[(String, java.nio.file.attribute.FileTime)] = tables.flatMap { t =>
+      Files.walk(Paths.get(out, t)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => (p.toString, Files.getLastModifiedTime(p))).toSeq.sortBy(_._1)
+    }
+    tables.foreach(runner.compact(_))
+    val compacted = files()
+    assert(compacted.exists(_._1.endsWith(".parquet")))
+    tables.foreach(runner.compact(_))
+    assert(files() == compacted)
+  }
+
+  test("plan artifacts are reproducible once expression and plan ids are masked") {
+    val runner = new Runner(spark, Fixtures.tpchEnv, sf("sf0.001"), tempDir())
+    runner.fullRefresh(TimeWindow.unbounded) // the fact plans read the dims
+    def masked(plans: Map[String, String]) = plans.view
+      .mapValues(_.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")).toMap
+    val first = masked(runner.emitPlans())
+    assert(first.keySet == tpchTables.toSet)
+    assert(masked(runner.emitPlans()) == first)
+  }
+
   test("non-persistent facts derive dims but skip fact-table writes") {
     val out = tempDir()
     val env = model.Validator.validateEnv(
