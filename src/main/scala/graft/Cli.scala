@@ -206,15 +206,11 @@ object Cli {
     // this and every later refresh runs the parent SMJ exchange-free
     bucketParents.foreach(runner.bucketParentSources)
     val written =
-      if (rest.contains("--compact")) {
-        // maintenance mode: collapse the small files the incremental
-        // appends accumulate; atomic per-table promotion, live
-        // tables stay readable throughout
-        val tables = runner.derivedDims.map(_._2.name) ++
-          runner.factsInTopoOrder.filter(_.persistent).map(runner.factTableNameOf)
-        tables.foreach(runner.compact(_))
-        tables
-      } else if (window.lower.nonEmpty) runner.incrementalRefresh(window)
+      // maintenance mode: collapse the small files the incremental
+      // appends accumulate; atomic per-table promotion, live tables
+      // stay readable throughout
+      if (rest.contains("--compact")) runner.compactAll()
+      else if (window.lower.nonEmpty) runner.incrementalRefresh(window)
       else {
         val w = runner.fullRefresh(window)
         if (stagingSuffix.nonEmpty) runner.swapStaging(w)

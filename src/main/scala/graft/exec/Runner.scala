@@ -1,9 +1,5 @@
 package graft.exec
 
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors,
-  ThreadFactory}
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -12,16 +8,19 @@ import graft.derive.{Extractor, SqlTypes}
 import graft.model._
 
 /** End-to-end ETL runner: derives the dimensional model from an [[Env]]
-  * and executes the populate pipelines in dependency waves, writing
-  * parquet. Replaces the reference's emit-SQL-and-let-an-orchestrator-
-  * run-it lifecycle (SURVEY §3.1 step 5) with a single in-session run.
+  * and executes the populate pipelines as the levels of its dependency
+  * graph, writing parquet. Replaces the reference's emit-SQL-and-let-
+  * an-orchestrator-run-it lifecycle (SURVEY §3.1 step 5) with a single
+  * in-session run.
   *
-  * The waves are the levels of [[Extractor]]'s dependency DAG: every
-  * derived dim, then every persistent fact. The tables of one wave run
-  * concurrently (see [[runWave]]); a wave starts only after the previous
-  * one has ended. A fact populate reads sources and dims only, never
-  * another fact table, so [[factsInTopoOrder]] orders the returned
-  * names but adds no data edge between facts.
+  * The graph is [[Extractor.allDependencies]] restricted to the derived
+  * tables, run by [[Dag]]: the tables of one level run concurrently, and
+  * a level starts only after the previous one has ended. A dim depends
+  * on sources only, a fact on sources and the dims it looks up, never
+  * on another fact table — so [[factsInTopoOrder]] orders the returned
+  * names but adds no edge, and a fact that looks up no derived dim runs
+  * in the first level, beside the dims. The post-load checks, the plan
+  * dumps and `--compact` each run as one level.
   *
   * Physical design (D1-D3, re-expressed for parquet/Spark):
   *  - every output is written with the *derived* schema enforced (cast)
@@ -68,6 +67,8 @@ final class Runner(
   private def promoteStaged(t: String, suffix: String): Unit =
     Staging.promoteStaged(spark, outDir, t, suffix)
 
+  private val CompactMaxRecords = 5000000L
+
   /** Compact a derived table's parquet layout. Every incremental
     * refresh appends a file batch per touched `p_day` partition; after
     * months of windows a fact table's scan cost is dominated by FILE
@@ -78,7 +79,17 @@ final class Runner(
     * path as staged rebuilds — the live table stays readable during
     * the rewrite and a crash leaves it untouched. A table that is
     * already compact (see [[isCompact]]) is left as it is. */
-  def compact(table: String, maxRecordsPerFile: Long = 5000000L): Unit = withWriterLease {
+  def compact(table: String, maxRecordsPerFile: Long = CompactMaxRecords): Unit =
+    withWriterLease(rewriteCompact(table, maxRecordsPerFile))
+
+  /** [[compact]] every derived table as one level under one writer
+    * lease. Returns the table names, dims first, then facts. */
+  def compactAll(): Seq[String] = withWriterLease {
+    def one(table: String) = { rewriteCompact(table, CompactMaxRecords); table }
+    eachTable("warehouse compact")((_, dimTable) => one(dimTable.name))((_, name) => one(name))
+  }
+
+  private def rewriteCompact(table: String, maxRecordsPerFile: Long): Unit =
     if (!isCompact(table, maxRecordsPerFile)) {
       val df      = readOut(table)
       val staged  = table + "__compact"
@@ -94,7 +105,6 @@ final class Runner(
         .parquet(s"$outDir/$staged")
       promoteStaged(table, "__compact")
     }
-  }
 
   /** Whether every partition directory of `table` (the table directory
     * itself when unpartitioned) holds exactly one parquet data file, of
@@ -170,74 +180,80 @@ final class Runner(
       .filterNot { case (_, t) => env.tables.contains(t) }
       .distinctBy(_._2.name)
 
-  /** Full refresh of every derived table: the dims wave, then the facts
-    * wave. Each table is written once; fact reads resolve dims from the
-    * just-written parquet. Returns written table names, dims first, then
-    * facts in parent-before-child order. */
+  /** Every persistent fact, parents before children. */
+  private def persistentFacts: Seq[Fact] = factsInTopoOrder.filter(_.persistent)
+
+  /** Run one [[Dag]] node per derived table — every derived dim, then
+    * every persistent fact — labelled `<label>: dim|fact <table>`, with
+    * `deps(table)` as its edges. Returns the results in that order. */
+  private def eachTable[T](label: String, deps: String => Seq[String] = _ => Nil)(
+      dim: (Fact, Table) => T)(fact: (Fact, String) => T): Seq[T] = {
+    def node(kind: String, name: String)(body: => T) =
+      Dag.Node(name, deps(name), s"$label: $kind $name", () => body)
+    Dag.run(spark,
+      derivedDims.map { case (f, t) => node("dim", t.name)(dim(f, t)) } ++
+        persistentFacts.map { f =>
+          val name = factTableNameOf(f)
+          node("fact", name)(fact(f, name))
+        })
+  }
+
+  /** Full refresh of every derived table, level by level: a table's
+    * edges are those of [[Extractor.allDependencies]] (the graph
+    * `dependencies.json` publishes) among the derived tables, so every
+    * dim comes before the facts that look it up. Each table is written
+    * once; fact reads resolve dims from the just-written parquet.
+    * Returns written table names, dims first, then facts in
+    * parent-before-child order. */
   def fullRefresh(window: TimeWindow = TimeWindow.unbounded): Seq[String] = withWriterLease {
-    val dimNames = runWave(derivedDims.map { case (fact, dimTable) =>
-      s"warehouse full: dim ${dimTable.name}" -> { () =>
-        val df = DimPopulate.full(env, fact, dimTable.name, readSource(fact.tableName), window)
-        writeDim(df, dimTable, targetName = stagedName(dimTable.name, PopulationMode.Full))
-        dimTable.name
-      }
-    })
-    val factNames = runWave(factsInTopoOrder.filter(_.persistent).map { fact =>
-      s"warehouse full: fact ${factTableNameOf(fact)}" -> { () =>
-        // in full mode the dim lookups read the staged dims too
-        // (`Fact.hs:189`: the subquery targets the suffixed table)
-        val df = FactPopulate.populate(env, fact, window, readSource,
-          d => readOut(stagedName(d, PopulationMode.Full)), saltParents)
-        writeFact(df, fact, targetName = stagedName(factTableNameOf(fact), PopulationMode.Full))
-        factTableNameOf(fact)
-      }
-    })
-    dimNames ++ factNames
+    eachTable("warehouse full", Extractor.allDependencies(env)) { (fact, dimTable) =>
+      val df = DimPopulate.full(env, fact, dimTable.name, readSource(fact.tableName), window)
+      writeDim(df, dimTable, targetName = stagedName(dimTable.name, PopulationMode.Full))
+      dimTable.name
+    } { (fact, name) =>
+      // in full mode the dim lookups read the staged dims too
+      // (`Fact.hs:189`: the subquery targets the suffixed table)
+      val df = FactPopulate.populate(env, fact, window, readSource,
+        d => readOut(stagedName(d, PopulationMode.Full)), saltParents)
+      writeFact(df, fact, targetName = stagedName(name, PopulationMode.Full))
+      name
+    }
   }
 
   /** Incremental refresh over an aligned window: appends new dim rows
     * (anti-join, ids continuing after the existing max) and appends the
-    * window's fact rows, in the same two waves as [[fullRefresh]].
+    * window's fact rows, in the same levels as [[fullRefresh]].
     * Bucket keys are disjoint across aligned windows, so appends never
     * double-count (SURVEY §4, last row). */
   def incrementalRefresh(window: TimeWindow): Seq[String] = withWriterLease {
     require(window.lower.nonEmpty && window.upper.nonEmpty,
       "incremental refresh needs both window bounds")
-    val dimNames = runWave(derivedDims.map { case (fact, dimTable) =>
-      s"warehouse incremental: dim ${dimTable.name}" -> { () =>
-        val newRows = DimPopulate.incremental(
-          env, fact, dimTable.name, readSource(fact.tableName), readOut(dimTable.name), window)
-        writeDim(newRows, dimTable, append = true)
-        dimTable.name
-      }
-    })
-    val factNames = runWave(factsInTopoOrder.filter(_.persistent).map { fact =>
-      s"warehouse incremental: fact ${factTableNameOf(fact)}" -> { () =>
-        val df = FactPopulate.populate(env, fact, window, readSource, readOut, saltParents)
-        writeFact(df, fact, append = true)
-        factTableNameOf(fact)
-      }
-    })
-    dimNames ++ factNames
+    eachTable("warehouse incremental", Extractor.allDependencies(env)) { (fact, dimTable) =>
+      val newRows = DimPopulate.incremental(
+        env, fact, dimTable.name, readSource(fact.tableName), readOut(dimTable.name), window)
+      writeDim(newRows, dimTable, append = true)
+      dimTable.name
+    } { (fact, name) =>
+      val df = FactPopulate.populate(env, fact, window, readSource, readOut, saltParents)
+      writeFact(df, fact, append = true)
+      name
+    }
   }
 
   /** Data-quality checks (the executable form of PK/UK constraints):
     * returns (table, constraint-description, violation count) for every
     * declared uniqueness on derived tables; all counts must be 0. The
-    * checks run as one wave. */
+    * checks run as one level. */
   def checkUniqueKeys(): Seq[(String, String, Long)] = {
-    def check(kind: String, name: String, derived: Table) =
-      s"warehouse check: $kind $name" -> { () =>
-        val uk = derived.constraints.collectFirst {
-          case TableConstraint.UniqueKey(cols) => cols
-        }.getOrElse(Seq.empty)
-        (name, s"UniqueKey(${uk.mkString(",")})", countDuplicates(readOut(name), uk))
-      }
-    runWave(
-      derivedDims.map { case (_, dimTable) => check("dim", dimTable.name, dimTable) } ++
-        factsInTopoOrder.filter(_.persistent).map { fact =>
-          check("fact", factTableNameOf(fact), Extractor.extractFactTable(env, fact))
-        })
+    def check(name: String, derived: Table) = {
+      val uk = derived.constraints.collectFirst {
+        case TableConstraint.UniqueKey(cols) => cols
+      }.getOrElse(Seq.empty)
+      (name, s"UniqueKey(${uk.mkString(",")})", countDuplicates(readOut(name), uk))
+    }
+    eachTable("warehouse check") { (_, dimTable) => check(dimTable.name, dimTable) } {
+      (fact, name) => check(name, Extractor.extractFactTable(env, fact))
+    }
   }
 
   private def countDuplicates(df: DataFrame, keys: Seq[String]): Long =
@@ -289,7 +305,7 @@ final class Runner(
     val dims = derivedDims.map { case (_, dimTable) =>
       dimTable.name -> ddlOf(dimTable, partitioned = false, dimIndexes(dimTable))
     }
-    val facts = factsInTopoOrder.filter(_.persistent).map { fact =>
+    val facts = persistentFacts.map { fact =>
       val t = Extractor.extractFactTable(env, fact)
       factTableNameOf(fact) -> ddlOf(t, partitioned = partitionFactsByDay, factIndexes(fact))
     }
@@ -305,7 +321,7 @@ final class Runner(
     val dims = derivedDims.map { case (fact, dimTable) =>
       dimTable.name -> SqlEmit.dimensionPopulateSql(env, fact, dimTable.name, popMode)
     }
-    val facts = factsInTopoOrder.filter(_.persistent).map { fact =>
+    val facts = persistentFacts.map { fact =>
       factTableNameOf(fact) ->
         SqlEmit.factPopulateSql(env, fact, popMode, includePartitionDay = partitionFactsByDay)
     }
@@ -314,69 +330,18 @@ final class Runner(
 
   /** Emit the optimized physical plan per derived table — the
     * debuggability analogue of the reference's SQL-text artifacts. The
-    * plans are built as one wave. Each text is `Dataset.explain`'s
+    * plans are built as one level. Each text is `Dataset.explain`'s
     * output, the trailing newline of its `println` included. */
   def emitPlans(window: TimeWindow = TimeWindow.unbounded): Map[String, String] = {
     def planOf(df: DataFrame): String =
       df.queryExecution.explainString(FormattedMode) + "\n"
-    val dims = derivedDims.map { case (fact, dimTable) =>
-      s"warehouse plan: dim ${dimTable.name}" -> { () =>
-        dimTable.name -> planOf(
-          DimPopulate.candidates(env, fact, dimTable.name, readSource(fact.tableName), window))
-      }
-    }
-    val facts = factsInTopoOrder.filter(_.persistent).map { fact =>
-      s"warehouse plan: fact ${factTableNameOf(fact)}" -> { () =>
-        factTableNameOf(fact) -> planOf(
-          FactPopulate.populate(env, fact, window, readSource, readOut, saltParents))
-      }
-    }
-    runWave(dims ++ facts).toMap
+    eachTable("warehouse plan") { (fact, dimTable) =>
+      dimTable.name -> planOf(
+        DimPopulate.candidates(env, fact, dimTable.name, readSource(fact.tableName), window))
+    } { (fact, name) =>
+      name -> planOf(FactPopulate.populate(env, fact, window, readSource, readOut, saltParents))
+    }.toMap
   }
-
-  /** Run one wave of tables: each `(label, body)` on a pool of
-    * `min(wave size, defaultParallelism)` daemon threads, every Spark
-    * job of a body described by its label. Waits for every body before
-    * it returns their results in wave order or rethrows the first
-    * failure, in wave order, as thrown — so a wave never overlaps the
-    * next, and a failed wave leaves nothing running behind the writer
-    * lease. The session's FIFO scheduling suffices: each table's jobs
-    * are a few 1-task stages, so it is running tables side by side, not
-    * sharing cores within a job, that keeps the other cores busy. */
-  private def runWave[T](wave: Seq[(String, () => T)]): Seq[T] =
-    if (wave.isEmpty) Seq.empty
-    else {
-      val sc      = spark.sparkContext
-      val ids     = new AtomicInteger()
-      val workers = new ConcurrentLinkedQueue[Thread]()
-      val factory: ThreadFactory = { r =>
-        val t = new Thread(r, s"${Runner.WaveThreadPrefix}${ids.incrementAndGet()}")
-        t.setDaemon(true)
-        workers.add(t)
-        t
-      }
-      val pool = Executors.newFixedThreadPool(math.min(wave.size, sc.defaultParallelism), factory)
-      try {
-        // workers start on submit and inherit a copy of the caller's
-        // local properties, so the labels set on them never reach the
-        // caller's later jobs
-        val futures = wave.map { case (label, body) =>
-          pool.submit(new Callable[T] {
-            def call(): T = { sc.setJobDescription(label); body() }
-          })
-        }
-        val outcomes = futures.map { f =>
-          try Right(f.get())
-          catch { case e: ExecutionException => Left(e.getCause) }
-        }
-        outcomes.collectFirst { case Left(e) => throw e }
-        outcomes.collect { case Right(t) => t }
-      } finally {
-        // joined, not just terminated: no worker outlives its wave
-        pool.shutdown()
-        workers.forEach(_.join())
-      }
-    }
 
   def factTableNameOf(fact: Fact): String = {
     val s = env.settings
@@ -426,10 +391,4 @@ final class Runner(
     } else
       out.write.mode(if (append) "append" else "overwrite").parquet(s"$outDir/$name")
   }
-}
-
-object Runner {
-
-  /** Name prefix of the threads that run a wave's tables. */
-  private[graft] val WaveThreadPrefix = "graft-refresh-"
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.yaml.snakeyaml.Yaml
 
-import graft.exec.Staging
+import graft.exec.{Dag, Staging}
 import graft.operators.{AnnIndex, AnnLifecycle, Decontaminate, Dedup, Multimodal, Packing, Sampling, Sessions, TextAnalysis}
 import graft.streaming.{MaintainedStore, PostingAdmission, StreamingAdmission, StreamingAnnIndex, StreamingAudioDedup, StreamingHammingDedup, StreamingImageDedup, StreamingLineDedup, StreamingNearDup, StreamingRecrawl, StreamingSemDedup, StreamingVideoDedup, StreamingWinnowDedup}
 
@@ -102,7 +102,10 @@ object CurationPipeline {
     * not a traversal). */
   private val SafeName = "^[A-Za-z0-9_][A-Za-z0-9_.-]*$".r
 
-  def validate(spec: Spec): Either[Seq[String], Seq[Step]] = {
+  def validate(spec: Spec): Either[Seq[String], Seq[Step]] = stepInputs(spec).map(_.map(_._1))
+
+  /** [[validate]], each step paired with its resolved main input. */
+  private def stepInputs(spec: Spec): Either[Seq[String], Seq[(Step, String)]] = {
     val errors = Seq.newBuilder[String]
     if (spec.steps.isEmpty) errors += "pipeline has no steps"
     (spec.name +: (spec.steps.map(_.name) ++ spec.steps.flatMap(_.input) ++
@@ -151,17 +154,17 @@ object CurationPipeline {
     // by a later-in-file step must still run first). Names that are not
     // step names resolve against SOURCE_DIR at run time.
     val remaining = scala.collection.mutable.LinkedHashMap(
-      withInputs.map { case (s, in) => s.name -> (s, (in +: auxRefs(s)).toSet) }: _*)
-    val ordered = Seq.newBuilder[Step]
+      withInputs.map { case (s, in) => s.name -> (s, in, (in +: auxRefs(s)).toSet) }: _*)
+    val ordered = Seq.newBuilder[(Step, String)]
     val done    = scala.collection.mutable.Set.empty[String]
     var progress = true
     while (progress && remaining.nonEmpty) {
       progress = false
-      remaining.find { case (_, (_, deps)) =>
+      remaining.find { case (_, (_, _, deps)) =>
         deps.forall(d => !stepNames.contains(d) || done.contains(d))
       }
-        .foreach { case (name, (s, _)) =>
-          ordered += s
+        .foreach { case (name, (s, in, _)) =>
+          ordered += s -> in
           done += name
           remaining.remove(name)
           progress = true
@@ -259,9 +262,14 @@ object CurationPipeline {
 
   /** A step's table references beyond its main input: every
     * `tableParams` / `stepRefParams` value, comma-split. */
-  private def auxRefs(s: Step): Seq[String] =
+  private def auxRefs(s: Step): Seq[String] = paramRefs(s)(op => op.tableParams ++ op.stepRefParams)
+
+  /** The steps whose state store `s` names: its `stepRefParams` values. */
+  private def storeRefs(s: Step): Seq[String] = paramRefs(s)(_.stepRefParams)
+
+  private def paramRefs(s: Step)(which: Op => Set[String]): Seq[String] =
     ops.get(s.op).toSeq
-      .flatMap(op => (op.tableParams ++ op.stepRefParams).toSeq.sorted)
+      .flatMap(op => which(op).toSeq.sorted)
       .flatMap(p =>
         s.params.get(p).toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
 
@@ -2509,12 +2517,50 @@ object CurationPipeline {
 
   // ================================================================ execution
 
-  /** Opt-in per-step phase timing to stderr (diagnostic only). */
-  private val StepPhaseTiming = sys.env.contains("SPARK_GRAFT_STEP_TIMING")
+  /** The batch counter under a state directory: the id of the batch the
+    * next run admits. */
+  private val BatchCounter = "_graft_next_batch"
+
+  /** Everything [[run]] and [[dryRun]] check before their first step:
+    * the spec validates, stateful steps have a state directory, and no
+    * step name shadows a source table (that would make `input:`
+    * ambiguous). Returns the steps in execution order, each with its
+    * main input, and this run's batch id: the committed counter under
+    * the state directory, else 0. */
+  private def prelude(spec: Spec, sourceDir: String,
+      stateDir: Option[String]): (Seq[(Step, String)], Long) = {
+    val steps = stepInputs(spec).fold(
+      errs => throw new IllegalArgumentException(errs.mkString("\n")), identity)
+    val stateful = statefulSteps(spec)
+    require(stateful.isEmpty || stateDir.nonEmpty,
+      s"steps ${stateful.mkString(", ")} run incremental modes — pass a state directory")
+    steps.foreach { case (s, _) =>
+      require(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(sourceDir, s.name + ".parquet")),
+        s"step name '${s.name}' collides with a source table in $sourceDir")
+    }
+    val batchId = stateDir.flatMap(d => MaintainedStore.readMarker(d, BatchCounter).map { v =>
+      v.trim.toLongOption.getOrElse(throw new IllegalStateException(
+        s"${java.nio.file.Paths.get(d, BatchCounter)} holds '$v', not a batch id"))
+    })
+    (steps, batchId.getOrElse(0L))
+  }
 
   /** Run a validated spec: resolve each step's input (an earlier step's
     * WRITTEN output, else a SOURCE_DIR table), execute, stage, promote.
     * Returns the written table names in execution order.
+    *
+    * The steps run through [[Dag]] as the levels of their dependency
+    * graph — a step depends on its input and its aux tables, the edges
+    * [[validate]] draws, and on the previous step (in validate's order)
+    * that names the same step's state store — so the independent
+    * branches of a spec run concurrently, a store has one writer at a
+    * time, and a linear chain runs one step at a time. Every
+    * Spark job of a step is described `pipeline <job>: step <s> (<op>)`;
+    * the caller's own job description is left as it was. When a step
+    * fails, the other steps of its level still run to their end, no
+    * later level starts, no manifest is written, the batch counter
+    * stays where it was, and the step's exception is rethrown.
     *
     * `stateDir` enables the incremental step variants (`mode: admit` /
     * `against_store` / `incremental` / `merge`): each stateful step
@@ -2525,35 +2571,17 @@ object CurationPipeline {
     * admission-store contract all the streaming twins share); a
     * CRASHED run may simply be re-run — the run's batch id
     * (`STATE_DIR/_graft_next_batch`, bumped only after a fully
-    * successful run) makes every store update replay-idempotent
-    * (batch-owned partitions, set-union buckets, versioned session
-    * stores). Feeding the SAME data again after a successful run is
-    * not a replay but a second batch: the dedup admissions will
-    * reject it (that is their job); sessionize/moments would
-    * double-count, exactly as their operator contracts document. */
+    * successful run, by an atomic rename) makes every store update
+    * replay-idempotent (batch-owned partitions, set-union buckets,
+    * versioned session stores). Feeding the SAME data again after a
+    * successful run is not a replay but a second batch: the dedup
+    * admissions will reject it (that is their job); sessionize/moments
+    * would double-count, exactly as their operator contracts document. */
   def run(spark: SparkSession, spec: Spec, sourceDir: String, outDir: String,
       stagingSuffix: String = "_staging", stateDir: Option[String] = None,
       compactState: Boolean = false): Seq[String] = {
-    val ordered = validate(spec) match {
-      case Left(errs) => throw new IllegalArgumentException(errs.mkString("\n"))
-      case Right(o)   => o
-    }
-    val stateful = statefulSteps(spec)
-    require(stateful.isEmpty || stateDir.nonEmpty,
-      s"steps ${stateful.mkString(", ")} run incremental modes — pass a state directory")
-    val counterPath = stateDir.map(d => java.nio.file.Paths.get(d, "_graft_next_batch"))
-    val batchId: Long = counterPath.map { p =>
-      if (java.nio.file.Files.exists(p))
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-      else 0L
-    }.getOrElse(0L)
+    val (steps, batchId) = prelude(spec, sourceDir, stateDir)
     val stepNames = spec.steps.map(_.name).toSet
-    // a step name shadowing a source table would make `input:` ambiguous
-    ordered.foreach { s =>
-      require(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(sourceDir, s.name + ".parquet")),
-        s"step name '${s.name}' collides with a source table in $sourceDir")
-    }
     def resolve(name: String): DataFrame =
       if (stepNames.contains(name)) spark.read.parquet(s"$outDir/$name")
       else graft.sources.ParquetTables.readTable(spark, sourceDir, name)
@@ -2563,58 +2591,50 @@ object CurationPipeline {
       // source table read by several steps has one count — without the
       // memo every step paid two count jobs per run (the counts are
       // metadata-only but each is still a scheduled job with listing
-      // and footer reads)
-      val countedRows = scala.collection.mutable.Map.empty[String, Long]
-      val manifest = ordered.map { s =>
-        val in  = s.input.getOrElse(
-          spec.steps(spec.steps.indexWhere(_.name == s.name) - 1).name)
-        val ctx = Ctx(resolve(in), spec.idCol, spec.textCol, resolve,
-          new Params(s.name, s.params), s.name, stateDir, batchId, in, outDir)
-        val t0  = System.nanoTime()
-        // label every job this step schedules (UI/profiling attribution —
-        // a pipeline run is dozens of jobs that are otherwise anonymous)
-        spark.sparkContext.setJobDescription(
-          s"pipeline ${spec.name}: step ${s.name} (${s.op})")
-        def phase[A](what: String)(f: => A): A =
-          if (!StepPhaseTiming) f
-          else {
-            val p0 = System.nanoTime()
-            val r = f
-            System.err.println(
-              f"[pipeline-timing] ${s.name}%-12s $what%-8s ${(System.nanoTime() - p0) / 1e9}%7.3fs")
-            r
-          }
-        val out = phase("op")(ops(s.op).run(ctx))
-        // plans/<step>.txt — the warehouse path's plan artifact, same
-        // contract: the optimized physical plan a reviewer audits for
-        // pushdown/broadcast/exchange shape without re-running the job
-        val plansDir = java.nio.file.Paths.get(outDir, "plans")
-        java.nio.file.Files.createDirectories(plansDir)
-        phase("explain")(java.nio.file.Files.write(plansDir.resolve(s"${s.name}.txt"),
-          out.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        phase("write") {
+      // and footer reads). The steps of one level share it.
+      val countedRows = scala.collection.concurrent.TrieMap.empty[String, Long]
+      // plans/<step>.txt — the warehouse path's plan artifact, same
+      // contract: the optimized physical plan a reviewer audits for
+      // pushdown/broadcast/exchange shape without re-running the job
+      val plansDir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir, "plans"))
+      // the steps that name one step's state store (two recrawls
+      // sharing a storeFrom) also depend on the previous such step:
+      // a store update reads the touched buckets, then overwrites
+      // them, so two at once would lose one of them
+      val lastUser = scala.collection.mutable.Map.empty[String, String]
+      val manifest = Dag.run(spark, steps.map { case (s, in) =>
+        val sharers = storeRefs(s).flatMap(lastUser.get)
+        storeRefs(s).foreach(lastUser(_) = s.name)
+        Dag.Node(s.name, (in +: auxRefs(s)) ++ sharers,
+            s"pipeline ${spec.name}: step ${s.name} (${s.op})", { () =>
+          val ctx = Ctx(resolve(in), spec.idCol, spec.textCol, resolve,
+            new Params(s.name, s.params), s.name, stateDir, batchId, in, outDir)
+          val t0  = System.nanoTime()
+          val out = ops(s.op).run(ctx)
+          java.nio.file.Files.write(plansDir.resolve(s"${s.name}.txt"),
+            out.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
           if (stagingSuffix.isEmpty) {
             out.write.mode("overwrite").parquet(s"$outDir/${s.name}")
           } else {
             out.write.mode("overwrite").parquet(s"$outDir/${s.name}$stagingSuffix")
             Staging.promoteStaged(spark, outDir, s.name, stagingSuffix)
           }
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // counts on WRITTEN/source parquet: row-group-metadata only
-        // (Spark's aggregate pushdown), never a data rescan. Input rows
-        // make the admission story readable straight off the manifest:
-        // in_rows - rows = what this step rejected/dropped this batch.
-        val rows = phase("count")(spark.read.parquet(s"$outDir/${s.name}").count())
-        countedRows(s.name) = rows
-        val inRows = phase("incount")(
-          countedRows.getOrElseUpdate(in, ctx.input.count()))
-        (s, in, inRows, rows, sec)
-      }
-      // don't leak the last step's label onto the caller's next jobs
-      spark.sparkContext.setJobDescription(null)
+          val sec = (System.nanoTime() - t0) / 1e9
+          // counts on WRITTEN/source parquet: row-group-metadata only
+          // (Spark's aggregate pushdown), never a data rescan. Input rows
+          // make the admission story readable straight off the manifest:
+          // in_rows - rows = what this step rejected/dropped this batch.
+          val rows = spark.read.parquet(s"$outDir/${s.name}").count()
+          countedRows.put(s.name, rows)
+          // no lock is held across the count job: two steps of one
+          // level may both count a shared source, to the same figure
+          val inRows = countedRows.getOrElse(in, {
+            val n = ctx.input.count(); countedRows.putIfAbsent(in, n); n
+          })
+          (s, in, inRows, rows, sec)
+        })
+      })
       // run manifest: the observability record a scheduled pipeline
       // needs (which step shrank the corpus, where the time went, what
       // batch this was)
@@ -2629,18 +2649,14 @@ object CurationPipeline {
       // the batch id advances ONLY once everything promoted: a crashed
       // run re-runs under the same id and every store update replays
       // idempotently
-      counterPath.foreach { p =>
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p,
-          (batchId + 1).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
+      stateDir.foreach(MaintainedStore.writeMarker(_, BatchCounter, (batchId + 1).toString))
       // state compaction AFTER the counter bump: batches <= batchId can
       // never replay (a rerun presents the NEXT id), so folding them is
       // safe; the additive stores fold exactly (line-df group-sum,
       // moment partial-sum), and the swap is the two-rename crash-safe
       // shape (MaintainedStore.swapCompacted)
       if (compactState) stateDir.foreach { sd =>
-        ordered.foreach { s =>
+        steps.foreach { case (s, _) =>
           (s.op, s.params.getOrElse("mode", "full")) match {
             case ("line_dedup", "against_store") =>
               graft.streaming.StreamingLineDedup.compact(
@@ -2682,25 +2698,8 @@ object CurationPipeline {
     * batch counter, touches no store. */
   def dryRun(spark: => SparkSession, spec: Spec, sourceDir: String,
       stateDir: Option[String] = None): String = {
-    val ordered = validate(spec) match {
-      case Left(errs) => throw new IllegalArgumentException(errs.mkString("\n"))
-      case Right(o)   => o
-    }
-    val stateful = statefulSteps(spec)
-    require(stateful.isEmpty || stateDir.nonEmpty,
-      s"steps ${stateful.mkString(", ")} run incremental modes — pass a state directory")
+    val (steps, batchId) = prelude(spec, sourceDir, stateDir)
     val stepNames = spec.steps.map(_.name).toSet
-    ordered.foreach { s =>
-      require(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(sourceDir, s.name + ".parquet")),
-        s"step name '${s.name}' collides with a source table in $sourceDir")
-    }
-    val batchId: Long = stateDir.map { d =>
-      val p = java.nio.file.Paths.get(d, "_graft_next_batch")
-      if (java.nio.file.Files.exists(p))
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-      else 0L
-    }.getOrElse(0L)
     val counts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     def sourceCount(name: String): Long =
       counts.getOrElseUpdate(name, {
@@ -2710,9 +2709,7 @@ object CurationPipeline {
             "(and no step produces it)")
         graft.sources.ParquetTables.readTable(spark, sourceDir, name).count()
       })
-    val lines = ordered.map { s =>
-      val in = s.input.getOrElse(
-        spec.steps(spec.steps.indexWhere(_.name == s.name) - 1).name)
+    val lines = steps.map { case (s, in) =>
       val rendered = (in +: auxRefs(s)).distinct.map { r =>
         if (stepNames.contains(r)) s""""$r":"(step output, this run)""""
         else s""""$r":${sourceCount(r)}"""

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -105,5 +111,175 @@ class PipelinePropertySpec extends SparkSpec {
         System.err.println(s"chain $chain mismatch:\n got=${g.take(3)}\n want=${w.take(3)}")
       g == w
     }, n = 5)
+  }
+
+  /** A small corpus with exact duplicates, written as `corpus.parquet`
+    * under a fresh source directory. */
+  private def corpusDir(): String = {
+    import spark.implicits._
+    val src = tempDir()
+    (0L until 24L).map(i => (i, s"The  Doc  ${i % 5} mail bob@example.com v${i % 9}"))
+      .toDF("doc_id", "text").write.parquet(s"$src/corpus.parquet")
+    src
+  }
+
+  /** The descriptions of the Spark jobs `body` runs, once every event
+    * `body` posted has been delivered (a marker job started afterwards
+    * is seen). The marker runs on its own thread, leaving the caller's
+    * local properties as `body` left them. */
+  private def jobLabels[T](body: => T): (T, Seq[String]) = {
+    val labels = new ConcurrentLinkedQueue[String]()
+    val rec = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(rec)
+    try {
+      val result = body
+      val marker = new Thread(() => {
+        sc.setJobDescription("listener marker")
+        sc.parallelize(Seq(1), 1).count()
+      })
+      marker.start()
+      marker.join()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!labels.contains("listener marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(labels.remove("listener marker"), "listener events were not delivered")
+      (result, labels.asScala.toSeq)
+    } finally sc.removeSparkListener(rec)
+  }
+
+  private def liveDagThreads(): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(graft.exec.Dag.ThreadPrefix)).map(_.getName)
+
+  private def step(name: String, op: String, input: String) =
+    CurationPipeline.Step(name, op, Some(input), Map.empty)
+
+  test("a branching spec runs its branches as levels: same tables, manifest order and labels") {
+    val src = corpusDir()
+    val out = tempDir()
+    // levels: {dedup, norm}, {est, red}; file order differs from both
+    val spec = CurationPipeline.Spec("branches", "doc_id", "text", Seq(
+      step("dedup", "dedup_exact", "corpus"),
+      step("est", "token_estimate", "dedup"),
+      step("norm", "normalize", "corpus"),
+      step("red", "redact", "norm")))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    val (written, labels) =
+      try {
+        val r = jobLabels(CurationPipeline.run(spark, spec, src, out))
+        assert(sc.getLocalProperty("spark.job.description") == "caller label")
+        r
+      } finally sc.setJobDescription(null)
+    val order = CurationPipeline.validate(spec).toOption.get.map(_.name)
+    assert(written == order)
+    val manifest = Files.readString(Paths.get(out, "pipeline_manifest.json"))
+    assert("\"name\":\"(\\w+)\"".r.findAllMatchIn(manifest).map(_.group(1)).toSeq == order)
+    val corpus = spark.read.parquet(s"$src/corpus.parquet")
+    val want = Map(
+      "dedup" -> refOp(corpus, "dedup_exact", Map.empty),
+      "est"   -> refOp(refOp(corpus, "dedup_exact", Map.empty), "token_estimate", Map.empty),
+      "norm"  -> refOp(corpus, "normalize", Map.empty),
+      "red"   -> refOp(refOp(corpus, "normalize", Map.empty), "redact", Map.empty))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    want.foreach { case (t, df) =>
+      assert(rows(spark.read.parquet(s"$out/$t")) == rows(df), t)
+    }
+    val stepLabels = spec.steps.map(s => s"pipeline branches: step ${s.name} (${s.op})")
+    assert(labels.nonEmpty)
+    labels.foreach(l => assert(stepLabels.contains(l), s"job label '$l' names no step"))
+    stepLabels.foreach(l => assert(labels.contains(l), s"no job labelled '$l'"))
+    assert(liveDagThreads().isEmpty, liveDagThreads())
+  }
+
+  test("a failed step ends its level: no later level, no counter bump, the error as thrown") {
+    val src   = corpusDir()
+    val out   = tempDir()
+    val state = tempDir()
+    Files.writeString(Paths.get(state, "_graft_next_batch"), "5")
+    // level 1: ok and bad (its source table does not exist); level 2: later
+    val spec = CurationPipeline.Spec("failing", "doc_id", "text", Seq(
+      step("ok", "normalize", "corpus"),
+      step("bad", "normalize", "no_such_table"),
+      step("later", "redact", "ok")))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller label")
+    val e =
+      try {
+        val e = intercept[Exception](CurationPipeline.run(spark, spec, src, out, stateDir = Some(state)))
+        assert(sc.getLocalProperty("spark.job.description") == "caller label")
+        e
+      } finally sc.setJobDescription(null)
+    assert(!e.isInstanceOf[ExecutionException], e)
+    assert(e.isInstanceOf[AnalysisException] && e.getMessage.contains("no_such_table"), e)
+    assert(Files.exists(Paths.get(out, "ok", "_SUCCESS")), "the rest of the level did not end")
+    assert(!Files.exists(Paths.get(out, "later")), "a later level started")
+    assert(!Files.exists(Paths.get(out, "pipeline_manifest.json")))
+    assert(!Files.exists(Paths.get(out, "_graft_writer.lock")), "the writer lease was not released")
+    assert(Files.readString(Paths.get(state, "_graft_next_batch")) == "5")
+    assert(liveDagThreads().isEmpty, liveDagThreads())
+  }
+
+  test("the batch counter: a stray temp file is ignored, bad content names the file") {
+    val src   = corpusDir()
+    val state = tempDir()
+    val spec  = CurationPipeline.Spec("counter", "doc_id", "text",
+      Seq(step("norm", "normalize", "corpus")))
+    val counter = Paths.get(state, "_graft_next_batch")
+    Files.writeString(counter, "3")
+    // a crash between writing the next id and renaming it into place
+    Files.writeString(Paths.get(state, "_graft_next_batch.__tmp"), "4")
+    val out = tempDir()
+    CurationPipeline.run(spark, spec, src, out, stateDir = Some(state))
+    assert(Files.readString(Paths.get(out, "pipeline_manifest.json")).contains("\"batch_id\":3,"))
+    assert(Files.readString(counter) == "4")
+    assert(!Files.exists(Paths.get(state, "_graft_next_batch.__tmp")))
+    // a counter truncated by a crash fails loud, naming the file
+    Files.writeString(counter, "")
+    val e = intercept[IllegalStateException](
+      CurationPipeline.dryRun(spark, spec, src, Some(state)))
+    assert(e.getMessage.contains(counter.toString), e.getMessage)
+  }
+
+  test("steps that share a state store run one after another, as called in order") {
+    import spark.implicits._
+    val src = tempDir()
+    Seq((1L, "http://h/p", "page")).toDF("doc_id", "url", "text")
+      .write.parquet(s"$src/pages.parquet")
+    Seq((1L, "http://h/a", "t"), (2L, "http://h/b", "t")).toDF("doc_id", "url", "text")
+      .write.parquet(s"$src/list_a.parquet")
+    Seq((3L, "http://h/c", "t"), (4L, "http://h/d", "t")).toDF("doc_id", "url", "text")
+      .write.parquet(s"$src/list_b.parquet")
+    val now = "1700000000"
+    // one bucket: both recrawls read and overwrite the same store bucket
+    def admit(name: String, op: String, input: String, more: (String, String)*) =
+      CurationPipeline.Step(name, op, Some(input),
+        Map("mode" -> "admit", "url" -> "url", "now" -> now, "buckets" -> "1") ++ more)
+    val spec = CurationPipeline.Spec("shared", "doc_id", "text", Seq(
+      admit("changed", "change_detect", "pages"),
+      admit("due_a", "recrawl", "list_a", "storeFrom" -> "changed"),
+      admit("due_b", "recrawl", "list_b", "storeFrom" -> "changed")))
+    val (out, state) = (tempDir(), tempDir())
+    CurationPipeline.run(spark, spec, src, out, stateDir = Some(state))
+    // the reference: the same ops called one after another, as batch 0
+    val refState = tempDir()
+    def resolve(n: String) = graft.sources.ParquetTables.readTable(spark, src, n)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    spec.steps.foreach { s =>
+      val in  = s.input.get
+      val ctx = CurationPipeline.Ctx(resolve(in), "doc_id", "text", resolve,
+        new CurationPipeline.Params(s.name, s.params), s.name, Some(refState), 0L, in, tempDir())
+      val want = rows(CurationPipeline.ops(s.op).run(ctx))
+      assert(rows(spark.read.parquet(s"$out/${s.name}")) == want, s.name)
+    }
+    val store = spark.read.parquet(s"$state/changed/lastfetch")
+    assert(rows(store) == rows(spark.read.parquet(s"$refState/changed/lastfetch")))
+    assert(store.filter(col("url").isin("http://h/a", "http://h/b", "http://h/c", "http://h/d") &&
+      col("last_fetch_ts") === now.toLong).count() == 4, rows(store))
   }
 }

@@ -65,7 +65,7 @@ class RunnerSpec extends SparkSpec {
 
   private def liveWaveThreads(): Seq[String] =
     Thread.getAllStackTraces.keySet.asScala.toSeq
-      .filter(t => t.isAlive && t.getName.startsWith(Runner.WaveThreadPrefix)).map(_.getName)
+      .filter(t => t.isAlive && t.getName.startsWith(graft.exec.Dag.ThreadPrefix)).map(_.getName)
 
   private val tpchTables = Seq("dim_order_priority", "dim_order_status", "dim_line_status",
     "fact_order_by_day", "fact_line_by_day")
@@ -320,6 +320,22 @@ class RunnerSpec extends SparkSpec {
     assert(liveWaveThreads().isEmpty, liveWaveThreads())
   }
 
+  test("the executor runs nodes by level and rejects a node before its dep") {
+    import graft.exec.Dag
+    val ran = new ConcurrentLinkedQueue[String]()
+    def node(name: String, deps: String*) =
+      Dag.Node(name, deps, s"node $name", { () => ran.add(name); name })
+    // c depends on a (a later level); b and the input src add no edge
+    assert(Dag.run(spark, Seq(node("a", "src"), node("c", "a"), node("b"))) == Seq("a", "c", "b"))
+    assert(ran.asScala.toSeq.last == "c", ran)
+    ran.clear()
+    val later = intercept[IllegalArgumentException](
+      Dag.run(spark, Seq(node("c", "a"), node("a"))))
+    assert(later.getMessage.contains("node c depends on a"), later.getMessage)
+    intercept[IllegalArgumentException](Dag.run(spark, Seq(node("a"), node("a"))))
+    assert(ran.isEmpty, "a node ran although the graph was rejected")
+  }
+
   test("writer lease: concurrent mutating runs against one outDir fail loudly") {
     val out = tempDir()
     val runner = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), out)
@@ -398,6 +414,32 @@ class RunnerSpec extends SparkSpec {
     assert(compacted.exists(_._1.endsWith(".parquet")))
     tables.foreach(runner.compact(_))
     assert(files() == compacted)
+  }
+
+  test("compacting every table under one lease rewrites only the fragmented ones") {
+    val out    = tempDir()
+    val lo     = java.sql.Timestamp.valueOf("2024-01-12 06:00:00")
+    val runner = new Runner(spark, Fixtures.eventsEnv, sf("sf0.001"), out)
+    runner.fullRefresh(TimeWindow.upTo(lo))
+    runner.incrementalRefresh(
+      TimeWindow.between(lo, java.sql.Timestamp.valueOf("2024-01-20 00:00:00")))
+    val (compact, fragmented) = ("fact_event_by_minute", "fact_user_activity_by_minute")
+    runner.compact(compact)
+    def files(t: String): Seq[(String, java.nio.file.attribute.FileTime)] =
+      Files.walk(Paths.get(out, t)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => (p.toString, Files.getLastModifiedTime(p))).toSeq.sortBy(_._1)
+    def rows(t: String): Seq[String] =
+      spark.read.parquet(s"$out/$t").collect().map(_.toString).sorted.toSeq
+    val (compactFiles, fragmentedFiles, fragmentedRows) =
+      (files(compact), files(fragmented), rows(fragmented))
+    val written = runner.compactAll()
+    assert(written == runner.derivedDims.map(_._2.name) ++
+      runner.factsInTopoOrder.filter(_.persistent).map(runner.factTableNameOf))
+    assert(files(compact) == compactFiles, "an already compact table was rewritten")
+    assert(files(fragmented) != fragmentedFiles, "the fragmented table was not rewritten")
+    assert(rows(fragmented) == fragmentedRows)
+    assert(!Files.exists(Paths.get(out, "_graft_writer.lock")), "the writer lease was not released")
+    assert(liveWaveThreads().isEmpty, liveWaveThreads())
   }
 
   test("plan artifacts are reproducible once expression and plan ids are masked") {
