@@ -5,6 +5,7 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.yaml.snakeyaml.Yaml
 
 import graft.exec.{Dag, Staging}
@@ -359,48 +360,16 @@ object CurationPipeline {
 
   // ---------------------------------------------------------------- state helpers
 
-  /** Read a batch-id-partitioned parquet sink's single batch partition,
-    * projecting back to the input's columns in order; empty frame ONLY
-    * when the sink holds no data files yet — dedup_near/dedup_winnow's
-    * initialize() writes an empty sink directory on a cold start, and an
-    * empty first batch would otherwise die on parquet schema inference
-    * over it. Any OTHER failure (schema drift after a spec change, a
-    * corrupt sink) propagates: applyBatch has already recorded the
-    * batch's fingerprints in the store, so swallowing a read error here
-    * would mark documents admitted while silently delivering 0 rows
-    * downstream — permanent data loss dressed as an empty batch. */
-  private def readBatchPartition(
-      c: Ctx, path: String, batchCol: String,
-      extraCols: Seq[String] = Seq.empty): DataFrame = {
-    val spark = c.input.sparkSession
-    val hasData = {
-      val root = java.nio.file.Paths.get(path)
-      java.nio.file.Files.isDirectory(root) && {
-        val s = java.nio.file.Files.walk(root)
-        try s.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-      }
-    }
-    if (!hasData) {
-      extraCols.foldLeft(c.input.limit(0))((d, e) =>
-        d.withColumn(e, lit(null).cast("string")))
-    } else {
-      // mergeSchema: without it Spark infers the sink schema from ONE
-      // part file — on a pre-upgrade sink that file is an OLD partition
-      // lacking a newly-added extra column, and the CURRENT batch's
-      // real values would then read back as NULL (silently — the
-      // column exists in the padded frame, just empty). Merging unions
-      // all part schemas so new columns survive old partitions.
-      val raw = spark.read.option("mergeSchema", "true").parquet(path)
-        .filter(col(batchCol) === c.batchId)
-      // schema evolution: a sink where NO partition has the extra
-      // column yet (first post-upgrade read) still needs the NULL pad
-      val padded = extraCols.foldLeft(raw)((d, e) =>
-        if (d.columns.contains(e)) d
-        else d.withColumn(e, lit(null).cast("string")))
-      padded.select((c.input.columns.toSeq ++ extraCols).map(col): _*)
-    }
-  }
+  /** Read back batch `c.batchId` of the batch-owned `sink` under the
+    * input's schema plus the `extra` DDL columns the store adds
+    * ([[MaintainedStore.readBatch]]): a cold, empty sink reads as
+    * empty, and a column a pre-upgrade partition lacks as NULL. A
+    * corrupt sink fails: the store has already recorded the batch, so
+    * reading it as empty would mark documents admitted while
+    * delivering 0 rows downstream. */
+  private def readBack(c: Ctx, sink: String, extra: String*): DataFrame =
+    MaintainedStore.readBatch(c.input.sparkSession, sink, c.batchId,
+      StructType(c.input.schema ++ extra.flatMap(StructType.fromDDL(_))))
 
   /** `mode: admit` of the posting-store dedups (near, winnow, image,
     * audio, video): judge the batch against `store` under `--state`
@@ -423,7 +392,7 @@ object CurationPipeline {
     if (!store.initialized(storePath))
       store.initialize(batch.limit(0), c.idCol, contentCol, storePath, sink, p)
     store.applyBatch(batch, c.batchId, c.idCol, contentCol, storePath, sink, p)
-    if (payloadCol.isEmpty) readBatchPartition(c, sink, MaintainedStore.BatchCol)
+    if (payloadCol.isEmpty) readBack(c, sink)
     else c.input.join(
       store.admittedIds(c.input.sparkSession, c.batchId, c.idCol, sink),
       Seq(c.idCol), "left_semi")
@@ -518,7 +487,7 @@ object CurationPipeline {
             StreamingAdmission.initialize(c.input.limit(0), c.textCol, fp, buckets)
           StreamingAdmission.applyBatch(
             c.input, c.idCol, c.textCol, fp, sink, buckets, c.batchId)
-          readBatchPartition(c, sink, MaintainedStore.BatchCol)
+          readBack(c, sink)
       }
     }, modes = Set("full", "admit"), fullOnlyParams = Set("column")),
     // MinHash-LSH near-dup dedup: one survivor per near-dup cluster
@@ -1179,9 +1148,7 @@ object CurationPipeline {
           StreamingRecrawl.applyBatch(padded, c.idCol, urlCol, lastmodCol,
             changefreqCol, store, sink, buckets, c.batchId, nowTs, defaultAgeS,
             adaptive = adaptive)
-          val out = readBatchPartition(
-            c.copy(input = padded), sink, MaintainedStore.BatchCol,
-            extraCols = Seq("recrawl_reason"))
+          val out = readBack(c.copy(input = padded), sink, "recrawl_reason STRING")
           // project back to the INPUT's columns (+ the reason): the
           // padding columns were plumbing unless the input had them
           out.select((c.input.columns.toSeq :+ "recrawl_reason").map(col): _*)
@@ -1266,13 +1233,8 @@ object CurationPipeline {
               urlCol, store, buckets)
           StreamingRecrawl.applyFetchBatch(withFpCol, c.idCol, urlCol, fpCol,
             store, sink, buckets, c.batchId, nowTs)
-          // the boolean cast inside project: the empty-sink path
-          // materializes extraCols as string nulls; a bare string
-          // filter would be an analysis error
-          project(readBatchPartition(
-            c.copy(input = withFpCol), sink, MaintainedStore.BatchCol,
-            extraCols = Seq("change_kind", "content_changed",
-              "content_fp_ts")), fpCol)
+          project(readBack(c.copy(input = withFpCol), sink,
+            "change_kind STRING, content_changed BOOLEAN, content_fp_ts BIGINT"), fpCol)
       }
     }, modes = Set("full", "admit"), tableParams = Set("table"),
       fullOnlyParams = Set("table")),
@@ -1579,9 +1541,8 @@ object CurationPipeline {
         case "merge" =>
           val store = c.requireState("moments mode: merge") + "/moments"
           val spark = c.input.sparkSession
-          batchMoments.withColumn(MaintainedStore.BatchCol, lit(c.batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy(MaintainedStore.BatchCol).parquet(store)
+          MaintainedStore.publish(batchMoments.withColumn(MaintainedStore.BatchCol,
+            lit(c.batchId)), store, MaintainedStore.BatchCol)
           val all = spark.read.parquet(store).drop(MaintainedStore.BatchCol)
           // mergeMoments is a self-merge over the unioned partials
           graft.operators.Profile.mergeMoments(all, all.limit(0))

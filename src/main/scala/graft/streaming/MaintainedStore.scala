@@ -4,14 +4,15 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{AtomicMoveNotSupportedException, Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{hash, lit, pmod}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** A persistent maintenance store: an object whose `initialize`
   * bootstraps a store directory and whose `applyBatch` folds one batch
   * into it. The store objects keep only their merge algebra; the
-  * protocol they share lives here, once:
+  * protocol and the partition I/O they share live here, once:
   *
   *  - '''Markers.''' A store's table properties (bucket modulus, LSH /
   *    winnow / hamming parameters, register count, pinned centroids,
@@ -29,10 +30,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    (a whitespace line delimiter is a payload), and fails loud on a
   *    mismatch or a missing marker — a reader pruning with the wrong
   *    modulus or parameters would otherwise corrupt the store silently.
-  *  - '''Marker written last.''' `initialize` writes its data first and
-  *    [[marker]] last, so [[initialized]] ("the last marker is
+  *  - '''Bootstrap''' ([[bootstrap]]): a static overwrite partitioned by
+  *    the store's column — a re-bootstrap truncates, so no partition of
+  *    an earlier layout survives behind the fresh marker — then
+  *    [[marker]], last. So [[initialized]] ("the last marker is
   *    present") is false after a crashed bootstrap and callers
   *    re-bootstrap instead of failing on every later batch.
+  *  - '''Marker check, then the empty batch''' ([[checkedEmpty]]): every
+  *    `applyBatch` checks its marker before it skips an empty batch, so
+  *    a missing or mismatched marker fails on the first batch, empty or
+  *    not, instead of on whichever later batch carries data.
+  *  - '''Touched read''' ([[MaintainedStore.readTouched]]): the distinct
+  *    partition values of a batch (bounded: at most one per store
+  *    partition), then the store read under its explicit schema and
+  *    filtered to them.
+  *  - '''Publish.''' [[MaintainedStore.publish]] dynamically overwrites
+  *    exactly the partitions a frame holds — the batch's own
+  *    [[MaintainedStore.BatchCol]] partition, or the touched buckets —
+  *    so a replay replaces them; [[MaintainedStore.append]] is the
+  *    append-only publish of a set store (never-seen members only).
+  *  - '''Read-back''' ([[MaintainedStore.readBatch]]): one batch
+  *    partition of a batch-owned sink under an explicit schema — a
+  *    missing or empty sink reads as empty, and a column that a
+  *    partition written before an upgrade lacks reads as NULL.
   *  - '''Columns.''' Bucket-partitioned stores partition by
   *    [[MaintainedStore.BucketCol]] = [[MaintainedStore.bucketOf]];
   *    batch-owned sinks and summaries by [[MaintainedStore.BatchCol]].
@@ -55,6 +75,26 @@ trait MaintainedStore {
 
   protected def checkMarker(root: String, expected: String, what: String, why: String): Unit =
     MaintainedStore.checkMarker(root, marker, expected, what, why)
+
+  /** Bootstrap: statically overwrite `rows` at `path`, partitioned by
+    * `partCols`, then write the marker `payload` under `root`, last.
+    * Static, because a dynamic overwrite would leave the partitions the
+    * bootstrap lacks on disk behind the fresh marker, and their rows,
+    * built under an earlier modulus or parameters, would merge into
+    * every later batch; last, so a failed truncation never leaves a
+    * valid marker over stale rows. */
+  protected final def bootstrap(rows: DataFrame, path: String, partCols: String*)(
+      payload: String, root: String = path): Unit = {
+    MaintainedStore.overwrite(rows, path, partCols: _*)
+    writeMarker(root, payload)
+  }
+
+  /** The batch guard: run the marker `check`, then say whether `batch`
+    * is empty (and so writes nothing). */
+  protected final def checkedEmpty(batch: DataFrame)(check: => Unit): Boolean = {
+    check
+    batch.isEmpty
+  }
 }
 
 object MaintainedStore {
@@ -66,6 +106,76 @@ object MaintainedStore {
   val BatchCol = "__batch_id"
 
   private val InitHint = "initialize() the store first"
+
+  /** Static overwrite: `rows` replace the whole table at `path`,
+    * partitioned by `partCols` — a re-bootstrap truncates, so no
+    * partition of an earlier layout or modulus survives. A store that
+    * bootstraps a second table (a sink) writes it with this before its
+    * own `bootstrap`. */
+  def overwrite(rows: DataFrame, path: String, partCols: String*): Unit =
+    rows.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+
+  /** The distinct `partCol` values of `batch`: a bounded driver
+    * materialization, at most one per store partition. */
+  def touched(batch: DataFrame, partCol: String): Seq[Any] =
+    batch.select(col(partCol)).distinct().collect().map(_.get(0)).toSeq
+
+  /** Touched read: the store at `path` filtered to the partitions
+    * `batch` lands in. */
+  def readTouched(batch: DataFrame, path: String, schema: Option[String],
+      partCol: String = BucketCol): DataFrame =
+    readTouched(batch.sparkSession, path, schema, partCol, touched(batch, partCol))
+
+  /** The store at `path` filtered to the `partCol` values `values`.
+    * With an explicit `schema` an empty bootstrap (a marker, no files)
+    * reads, and a missing directory reads as empty; without one the
+    * schema is inferred from the files. */
+  def readTouched(spark: SparkSession, path: String, schema: Option[String],
+      partCol: String, values: Seq[Any]): DataFrame = {
+    val store = schema match {
+      case Some(s) if !Files.isDirectory(Paths.get(path)) => empty(spark, StructType.fromDDL(s))
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None    => spark.read.parquet(path)
+    }
+    store.filter(col(partCol).isin(values: _*))
+  }
+
+  /** Publish: dynamically overwrite exactly the `partCols` partitions
+    * `rows` holds — a replay replaces them, and no other partition is
+    * touched. */
+  def publish(rows: DataFrame, path: String, partCols: String*): Unit =
+    rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*).parquet(path)
+
+  /** Append-only publish of a set store: `rows` (members the store has
+    * never seen) land as new files beside the old ones, so no live file
+    * is deleted under a concurrent reader and a replay that anti-joins
+    * empty appends nothing. Clustering by `partCols` bounds the files
+    * at one per touched partition. The partition count is pinned to the
+    * session's shuffle parallelism, not left to AQE: a column-only
+    * repartition coalesces a small batch to ONE post-shuffle partition,
+    * whose single writer then creates every touched partition's file
+    * sequentially (a measured 2.5 s single-task write at 128 dirs vs
+    * ~0.3 s spread over the session's cores). */
+  def append(rows: DataFrame, path: String, partCols: String*): Unit =
+    rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions,
+        partCols.map(col): _*)
+      .write.mode("append").partitionBy(partCols: _*).parquet(path)
+
+  /** Read-back: partition `batchId` of the batch-owned sink at `path`
+    * under the explicit `schema` (partition column excluded), read from
+    * that partition's directory alone. A missing sink or partition (a
+    * dynamic overwrite of zero rows writes none) reads as empty; a
+    * column the partition's files lack (written before the column was
+    * added) reads as NULL, with no schema merge. */
+  def readBatch(spark: SparkSession, path: String, batchId: Long, schema: StructType): DataFrame = {
+    val part = Paths.get(path, s"$BatchCol=$batchId")
+    if (Files.isDirectory(part)) spark.read.schema(schema).parquet(part.toString)
+    else empty(spark, schema)
+  }
+
+  private def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Fail loud on a bucket count below 1, before anything is written:
     * an empty bootstrap never evaluates `pmod(…, 0)`, so it would land
@@ -112,7 +222,7 @@ object MaintainedStore {
   def checkMarker(root: String, name: String, expected: String, what: String, why: String): Unit = {
     val stored = requireMarker(root, name)
     require(stored == expected,
-      s"$what mismatch for $root: store laid out with ${show(stored)}, " +
+      s"$what mismatch for $root: its $name marker holds ${show(stored)}, " +
         s"caller passed ${show(expected)} — $why")
   }
 

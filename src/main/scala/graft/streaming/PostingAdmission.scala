@@ -1,12 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
-import MaintainedStore.{BatchCol, BucketCol, bucketOf}
+import MaintainedStore.{BatchCol, BucketCol, bucketOf, overwrite, publish, readBatch, readTouched}
 
 /** The posting-admission core of the near-dup ([[StreamingNearDup]]),
   * winnow ([[StreamingWinnowDedup]]), hamming ([[StreamingImageDedup]],
@@ -87,65 +85,46 @@ abstract class PostingAdmission(
       corpus: DataFrame, idCol: String, contentCol: String,
       storePath: String, sinkPath: String, p: Params): Unit = {
     val posts = bucketed(corpus, idCol, contentCol, p)
-    posts.write.mode("overwrite").partitionBy(BucketCol).parquet(storePath)
-    bootstrapSink(corpus, posts, idCol)
-      .withColumn(BatchCol, lit(-1L))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(sinkPath)
-    writeMarker(storePath, p.encoded)
+    overwrite(bootstrapSink(corpus, posts, idCol).withColumn(BatchCol, lit(-1L)),
+      sinkPath, BatchCol)
+    bootstrap(posts, storePath, BucketCol)(p.encoded)
   }
 
   /** Admit one batch against the posting store + sink. */
   def applyBatch(
       batch: DataFrame, batchId: Long, idCol: String, contentCol: String,
       storePath: String, sinkPath: String, p: Params): Unit = {
-    if (batch.isEmpty) return
-    checkMarker(storePath, p.encoded, "posting-table parameter",
+    if (checkedEmpty(batch)(checkMarker(storePath, p.encoded, "posting-table parameter",
       "postings built under other parameters must never merge — mixing " +
-        "them silently corrupts candidate generation")
+        "them silently corrupts candidate generation"))) return
     // the postings feed the touched-bucket probe, the match and the
     // posting union — persist or they recompute per use
     val posts = bucketed(batch, idCol, contentCol, p).persist()
     try {
-      // bounded driver materialization: at most numBuckets ints
-      val touched = posts.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val stored = batch.sparkSession.read
-        .schema(s"`$idCol` BIGINT, $postingSchema, $BucketCol INT")
-        .parquet(storePath)
-        .filter(col(BucketCol).isin(touched: _*))
+      val stored = readTouched(posts, storePath,
+        Some(s"`$idCol` BIGINT, $postingSchema, $BucketCol INT"))
       // persist: the admitted set feeds both writes; recomputed, the
       // second run would race the sink write it follows
       val admitted = admit(batch, posts, stored, idCol, contentCol, sinkPath, p).persist()
       try {
-        admitted
-          .withColumn(BatchCol, lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BatchCol).parquet(sinkPath)
+        publish(admitted.withColumn(BatchCol, lit(batchId)), sinkPath, BatchCol)
         // admitted postings are a subset of the batch's, so they land
         // only in touched buckets
-        stored.unionByName(posts.join(admitted.select(col(idCol)), Seq(idCol), "left_semi"))
-          .distinct()
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BucketCol).parquet(storePath)
+        publish(
+          stored.unionByName(posts.join(admitted.select(col(idCol)), Seq(idCol), "left_semi"))
+            .distinct(),
+          storePath, BucketCol)
       } finally admitted.unpersist(blocking = false)
     } finally posts.unpersist()
   }
 
-  /** The ids batch `batchId` admitted — empty when it admitted nothing
-    * (a dynamic overwrite of zero rows writes no partition) or no sink
-    * exists yet. Existence-checked, not Try-swallowed: a corrupt sink
-    * fails instead of reading as an empty batch. Read as BIGINT (every
-    * store's id casts to it; a narrower stored id widens). */
+  /** The ids batch `batchId` admitted ([[MaintainedStore.readBatch]]):
+    * empty when it admitted nothing or no sink exists yet, while a
+    * corrupt sink fails. Read as BIGINT (every store's id casts to it;
+    * a narrower stored id widens). */
   def admittedIds(
       spark: SparkSession, batchId: Long, idCol: String, sinkPath: String): DataFrame =
-    if (Files.isDirectory(Paths.get(sinkPath)))
-      spark.read.schema(s"`$idCol` BIGINT, $BatchCol BIGINT").parquet(sinkPath)
-        .filter(col(BatchCol) === batchId)
-        .select(col(idCol))
-    else {
-      import spark.implicits._
-      Seq.empty[Long].toDF(idCol)
-    }
+    readBatch(spark, sinkPath, batchId, StructType.fromDDL(s"`$idCol` BIGINT"))
 }
 
 object PostingAdmission {

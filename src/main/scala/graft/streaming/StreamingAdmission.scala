@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import MaintainedStore.{BatchCol, BucketCol, bucketOf}
+import MaintainedStore.{BatchCol, BucketCol, append, bucketOf, publish, readTouched}
 
 /** Streaming corpus admission — the foreachBatch twin of
   * [[graft.operators.Dedup.exactIncremental]]: every micro-batch of
@@ -33,11 +33,9 @@ object StreamingAdmission extends MaintainedStore {
   protected val marker = "_graft_buckets"
 
   // explicit schema: an empty-corpus bootstrap writes a marker but no
-  // parquet files, and schema inference over the empty directory would
-  // throw on the FIRST micro-batch — the natural cold start (begin
-  // streaming with no pre-existing corpus) must work
-  private def readStore(spark: org.apache.spark.sql.SparkSession, path: String) =
-    spark.read.schema(s"fingerprint STRING, $BucketCol INT").parquet(path)
+  // parquet files — the natural cold start (begin streaming with no
+  // pre-existing corpus) must work
+  private val StoreSchema = s"fingerprint STRING, $BucketCol INT"
 
   private def requireCleanColumns(df: DataFrame): Unit =
     Seq("fingerprint", BucketCol, BatchCol).foreach { c =>
@@ -52,11 +50,9 @@ object StreamingAdmission extends MaintainedStore {
   def initialize(
       corpus: DataFrame, textCol: String, fpStorePath: String, numBuckets: Int
   ): Unit = {
-    Dedup.fingerprints(corpus, textCol)
-      .withColumn(BucketCol, bucketOf(numBuckets, col("fingerprint")))
-      .write.mode("overwrite")
-      .partitionBy(BucketCol).parquet(fpStorePath)
-    writeMarker(fpStorePath, numBuckets.toString)
+    bootstrap(Dedup.fingerprints(corpus, textCol)
+      .withColumn(BucketCol, bucketOf(numBuckets, col("fingerprint"))),
+      fpStorePath, BucketCol)(numBuckets.toString)
   }
 
   /** Admit one micro-batch: anti-join the touched store buckets,
@@ -69,11 +65,9 @@ object StreamingAdmission extends MaintainedStore {
       batch: DataFrame, idCol: String, textCol: String,
       fpStorePath: String, corpusOutPath: String, numBuckets: Int, batchId: Long
   ): Unit = {
-    if (batch.isEmpty) return
+    if (checkedEmpty(batch)(checkMarker(fpStorePath, numBuckets.toString, "bucket-count",
+      "pruning with the wrong modulus re-admits known content"))) return
     requireCleanColumns(batch)
-    checkMarker(fpStorePath, numBuckets.toString, "bucket-count",
-      "pruning with the wrong modulus re-admits known content")
-    val spark = batch.sparkSession
     // fingerprint the batch ONCE (normalize+md5 is the hottest
     // expression of the loop) and feed every consumer from the cached
     // frame — the anti-join/survivor logic below is the
@@ -84,11 +78,7 @@ object StreamingAdmission extends MaintainedStore {
       .withColumn(BucketCol, bucketOf(numBuckets, col("fingerprint")))
     withFp.persist()
     try {
-      // bounded driver materialization: at most numBuckets ints
-      val touched = withFp.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val stored = readStore(spark, fpStorePath)
-        .filter(col(BucketCol).isin(touched: _*))
+      val stored = readTouched(withFp, fpStorePath, Some(StoreSchema))
         .select(col("fingerprint"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("fingerprint")).orderBy(col(idCol))
@@ -97,30 +87,14 @@ object StreamingAdmission extends MaintainedStore {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("__rn", "fingerprint", BucketCol)
-      admitted
-        .withColumn(BatchCol, lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BatchCol).parquet(corpusOutPath)
+      publish(admitted.withColumn(BatchCol, lit(batchId)), corpusOutPath, BatchCol)
       // APPEND-ONLY store publish: the fingerprint store is a SET, so
-      // only fingerprints it has never seen land — as new files beside
-      // the old ones — instead of dynamic-overwriting every touched
-      // bucket with (stored ∪ batch). A batch's store write is
-      // O(new fingerprints), not O(touched buckets), no live file is
-      // deleted under a concurrent reader, and a replayed batch
-      // anti-joins empty and appends nothing — the same set semantics
-      // and idempotence, cheaper.
-      // the partition count is pinned to the session's shuffle
-      // parallelism (not left to AQE): a column-only repartition
-      // coalesces a small batch to ONE post-shuffle partition and the
-      // single writer creates every touched bucket-dir file
-      // sequentially (see StreamingAnnIndex.applyBatch). File count is
-      // one per touched bucket either way.
-      withFp.select(col("fingerprint"), col(BucketCol)).distinct()
-        .join(stored, Seq("fingerprint"), "left_anti")
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col(BucketCol))
-        .write.mode("append")
-        .partitionBy(BucketCol).parquet(fpStorePath)
+      // only fingerprints it has never seen land, instead of
+      // dynamic-overwriting every touched bucket with (stored ∪ batch).
+      // A batch's store write is O(new fingerprints), not O(touched
+      // buckets) — the same set semantics and idempotence, cheaper.
+      append(withFp.select(col("fingerprint"), col(BucketCol)).distinct()
+        .join(stored, Seq("fingerprint"), "left_anti"), fpStorePath, BucketCol)
     } finally withFp.unpersist()
   }
 }

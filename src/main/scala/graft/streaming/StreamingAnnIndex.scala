@@ -121,11 +121,12 @@ object StreamingAnnIndex extends MaintainedStore {
       batch: DataFrame, idCol: String, storePath: String, schema: String,
       numBuckets: Int, encode: DataFrame => DataFrame
   ): Long = {
-    if (batch.isEmpty) return 0L
-    MaintainedStore.checkMarker(storePath, BucketsMarker, numBuckets.toString,
-      "bucket-count", "pruning with the wrong modulus would re-encode known " +
-        "vectors or miss stored ones")
-    checkSchema(storePath, schema)
+    if (checkedEmpty(batch) {
+      MaintainedStore.checkMarker(storePath, BucketsMarker, numBuckets.toString,
+        "bucket-count", "pruning with the wrong modulus would re-encode known " +
+          "vectors or miss stored ones")
+      checkSchema(storePath, schema)
+    }) return 0L
     require(!batch.columns.contains(BucketCol),
       s"input already has a '$BucketCol' column — rename it first")
     require(idCol == "id" || !batch.columns.contains("id"),
@@ -153,10 +154,9 @@ object StreamingAnnIndex extends MaintainedStore {
       // the same pass yields the batch row count, so callers never pay
       // a second corpus scan just to count what they admitted
       val bucketCounts = guarded.groupBy(col(BucketCol)).count().collect()
-      val touched = bucketCounts.map(_.getInt(0)).toSeq
       val nBatch = bucketCounts.map(_.getLong(1)).sum
-      val stored = spark.read.schema(s"$schema, $BucketCol INT").parquet(storePath)
-        .filter(col(BucketCol).isin(touched: _*))
+      val stored = MaintainedStore.readTouched(spark, storePath,
+        Some(s"$schema, $BucketCol INT"), BucketCol, bucketCounts.map(_.get(0)).toSeq)
       // only vectors the store has never seen encode — the model is
       // frozen, so known ids' stored codes are already THE codes
       val newRows = guarded
@@ -167,27 +167,12 @@ object StreamingAnnIndex extends MaintainedStore {
         "StreamingAnnIndex: encode must return rows keyed by 'id' " +
           s"(got ${encoded.columns.mkString(", ")})")
       // APPEND-ONLY publish: the store is insert-only by contract (one
-      // frozen-model encode per id, ever), so new rows land as new
-      // files BESIDE the old ones instead of dynamic-overwriting every
-      // touched partition. A night's write is O(batch), not O(store),
-      // no live file is ever deleted mid-read (the old rewrite was the
-      // FileNotFoundException source under concurrent readers), and a
-      // replayed batch anti-joins empty and appends nothing — the same
-      // idempotence, cheaper. Clustering by the partition columns
-      // first bounds output files at one per touched partition. The
-      // partition count is pinned to the session's shuffle parallelism
-      // (not left to AQE): a column-only repartition coalesces a small
-      // batch to ONE post-shuffle partition, and the single writer then
-      // creates every touched partition-dir file SEQUENTIALLY — a
-      // measured 2.5s single-task write at 128 dirs vs ~0.3s spread
-      // over the session's cores. File count is unchanged either way
-      // (one per touched dir — each dir's rows hash to one partition).
-      val parts = partitioning(storePath)
-      encoded.withColumn(BucketCol, bucketOf(numBuckets, col("id")))
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          parts.map(col): _*)
-        .write.mode("append")
-        .partitionBy(parts: _*).parquet(storePath)
+      // frozen-model encode per id, ever), so a night's write is
+      // O(batch), not O(store), and no live file is ever deleted
+      // mid-read (the old rewrite was the FileNotFoundException source
+      // under concurrent readers)
+      MaintainedStore.append(encoded.withColumn(BucketCol, bucketOf(numBuckets, col("id"))),
+        storePath, partitioning(storePath): _*)
       nBatch
     } finally guarded.unpersist()
   }

@@ -69,22 +69,17 @@ object StreamingHeavyHitters extends MaintainedStore {
     * truncates, marker after data). */
   def initialize(
       corpus: DataFrame, valueCol: String, path: String, k: Int): Unit = {
-    summarize(corpus, valueCol, k)
-      .withColumn(BatchCol, lit(-1L))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(path)
-    writeMarker(path, k.toString)
+    bootstrap(summarize(corpus, valueCol, k).withColumn(BatchCol, lit(-1L)),
+      path, BatchCol)(k.toString)
   }
 
   /** Fold one micro-batch's summary into its own store partition. */
   def applyBatch(
       batch: DataFrame, batchId: Long, valueCol: String,
       path: String, k: Int): Unit = {
-    if (batch.isEmpty) return
-    checkK(path, k)
-    summarize(batch, valueCol, k)
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol).parquet(path)
+    if (checkedEmpty(batch)(checkK(path, k))) return
+    MaintainedStore.publish(summarize(batch, valueCol, k).withColumn(BatchCol, lit(batchId)),
+      path, BatchCol)
   }
 
   /** Merge a list of summaries with the mergeable-summaries rule:
@@ -166,9 +161,7 @@ object StreamingHeavyHitters extends MaintainedStore {
         keep.flatMap { case (b, m) => m.toSeq.map { case (v, c) => (v, c, b) } }
     import spark.implicits._
     MaintainedStore.swapCompacted(path) { tmp =>
-      rows.toDF("value", "cnt", BatchCol)
-        .write.mode("overwrite").partitionBy(BatchCol).parquet(tmp)
-      writeMarker(tmp, k.toString)
+      bootstrap(rows.toDF("value", "cnt", BatchCol), tmp, BatchCol)(k.toString)
     }
   }
 }

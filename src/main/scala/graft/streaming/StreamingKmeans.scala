@@ -70,13 +70,8 @@ object StreamingKmeans extends MaintainedStore {
   def initialize(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], path: String): Unit = {
-    // static overwrite: re-initializing truncates statistics assigned
-    // against any previous centroids; marker written AFTER the data so
-    // a failed truncation cannot leave a valid marker over stale rows
-    batchStats(corpus, idCol, vecCol, centroids)
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(path)
-    writeMarker(path, encode(centroids))
+    bootstrap(batchStats(corpus, idCol, vecCol, centroids).withColumn("batch_id", lit(-1L)),
+      path, "batch_id")(encode(centroids))
   }
 
   /** Fold one micro-batch into the store: assignment stats written to
@@ -85,12 +80,9 @@ object StreamingKmeans extends MaintainedStore {
   def applyBatch(
       batch: DataFrame, batchId: Long, idCol: String, vecCol: String,
       centroids: Seq[Array[Double]], path: String): Unit = {
-    if (batch.isEmpty) return
-    checkCentroids(path, centroids)
-    batchStats(batch, idCol, vecCol, centroids)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
+    if (checkedEmpty(batch)(checkCentroids(path, centroids))) return
+    MaintainedStore.publish(batchStats(batch, idCol, vecCol, centroids)
+      .withColumn("batch_id", lit(batchId)), path, "batch_id")
   }
 
   /** Current cluster means and populations off the store (k·d-row

@@ -58,10 +58,8 @@ object StreamingLineDedup extends MaintainedStore {
       corpus: DataFrame, idCol: String, textCol: String,
       storePath: String, delim: String = "\n"
   ): Unit = {
-    Dedup.lineDf(corpus, idCol, textCol, delim)
-      .withColumn(BatchCol, lit(-1L))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(storePath)
-    writeMarker(storePath, delim)
+    bootstrap(Dedup.lineDf(corpus, idCol, textCol, delim).withColumn(BatchCol, lit(-1L)),
+      storePath, BatchCol)(delim)
   }
 
   /** Fold one micro-batch's line summary into the store: the batch's
@@ -71,15 +69,10 @@ object StreamingLineDedup extends MaintainedStore {
       batch: DataFrame, idCol: String, textCol: String,
       storePath: String, delim: String, batchId: Long
   ): Unit = {
-    // marker check BEFORE the empty short-circuit: an uninitialized
-    // store or wrong delimiter must fail on the FIRST micro-batch,
-    // empty or not — not whenever data happens to arrive
-    checkDelim(storePath, delim)
-    if (batch.isEmpty) return
-    Dedup.lineDf(batch, idCol, textCol, delim)
-      .withColumn(BatchCol, lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BatchCol).parquet(storePath)
+    if (checkedEmpty(batch)(checkDelim(storePath, delim))) return
+    MaintainedStore.publish(
+      Dedup.lineDf(batch, idCol, textCol, delim).withColumn(BatchCol, lit(batchId)),
+      storePath, BatchCol)
   }
 
   /** The current duplicated-line set: lines whose summed df reached
@@ -143,9 +136,8 @@ object StreamingLineDedup extends MaintainedStore {
       .withColumn(BatchCol, lit(-1L))
     val keep = store.filter(col(BatchCol) > upToBatchId)
     MaintainedStore.swapCompacted(storePath) { tmp =>
-      folded.unionByName(keep.select(col("line"), col("n_docs"), col(BatchCol)))
-        .write.mode("overwrite").partitionBy(BatchCol).parquet(tmp)
-      writeMarker(tmp, delim)
+      bootstrap(folded.unionByName(keep.select(col("line"), col("n_docs"), col(BatchCol))),
+        tmp, BatchCol)(delim)
     }
   }
 }

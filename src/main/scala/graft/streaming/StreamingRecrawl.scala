@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Recrawl
-import MaintainedStore.{BatchCol, BucketCol, bucketOf}
+import MaintainedStore.{BatchCol, BucketCol, bucketOf, publish, readTouched}
 
 /** Maintained last-fetch store + recrawl admission — the stateful
   * twin of [[Recrawl.dueVerdicts]] and the 13th maintenance store:
@@ -60,9 +60,6 @@ object StreamingRecrawl extends MaintainedStore {
       s"unchanged_streak LONG, prev_streak LONG, " +
       s"fp_ts LONG, prev_fp_ts LONG, $BucketCol INT"
 
-  private def readStore(spark: org.apache.spark.sql.SparkSession, path: String) =
-    spark.read.schema(StoreSchema).parquet(path)
-
   private def checkBuckets(path: String, numBuckets: Int): Unit =
     checkMarker(path, numBuckets.toString, "bucket-count",
       "pruning with the wrong modulus would miss fetch records and re-crawl " +
@@ -73,7 +70,7 @@ object StreamingRecrawl extends MaintainedStore {
   def initialize(
       fetchLog: DataFrame, urlCol: String, storePath: String, numBuckets: Int
   ): Unit = {
-    fetchLog
+    bootstrap(fetchLog
       .select(md5(col(urlCol).cast("string")).as("__url_fp"),
         col(urlCol).cast("string").as("url"),
         col("last_fetch_ts").cast("long").as("last_fetch_ts"),
@@ -91,12 +88,10 @@ object StreamingRecrawl extends MaintainedStore {
       // EVERY upstream partition writes a file into EVERY bucket dir
       // (tasks × buckets tiny files); clustered it is one file per
       // bucket. Explicit partition count so AQE cannot coalesce the
-      // write to a single sequential task (StreamingAnnIndex note).
+      // write to a single sequential task (MaintainedStore.append note).
       .repartition(fetchLog.sparkSession.sessionState.conf.numShufflePartitions,
-        col(BucketCol))
-      .write.mode("overwrite")
-      .partitionBy(BucketCol).parquet(storePath)
-    writeMarker(storePath, numBuckets.toString)
+        col(BucketCol)),
+      storePath, BucketCol)(numBuckets.toString)
   }
 
   /** Judge one discovery batch and advance the store. Due rows land in
@@ -112,8 +107,7 @@ object StreamingRecrawl extends MaintainedStore {
       storePath: String, sinkPath: String, numBuckets: Int, batchId: Long,
       nowTs: Long, defaultAgeS: Long, adaptive: Boolean = false
   ): Unit = {
-    if (batch.isEmpty) return
-    checkBuckets(storePath, numBuckets)
+    if (checkedEmpty(batch)(checkBuckets(storePath, numBuckets))) return
     Seq("__url_fp", BucketCol, BatchCol, "recrawl_due", "recrawl_reason").foreach(c =>
       require(!batch.columns.contains(c),
         s"input already has a '$c' column — rename it first"))
@@ -137,11 +131,7 @@ object StreamingRecrawl extends MaintainedStore {
       .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
     withFp.persist()
     try {
-      // bounded driver materialization: at most numBuckets ints
-      val touched = withFp.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val stored = readStore(spark, storePath)
-        .filter(col(BucketCol).isin(touched: _*))
+      val stored = readTouched(withFp, storePath, Some(StoreSchema))
       // replay self-exclusion: a row this batch already touched is
       // evaluated at its pre-batch value
       val evalTs = when(col("last_batch_id") === batchId, col("prev_fetch_ts"))
@@ -160,7 +150,7 @@ object StreamingRecrawl extends MaintainedStore {
       verdicts.persist()
       try {
         // the batch's frontier: due rows, plumbing dropped
-        verdicts.filter(col("recrawl_due"))
+        publish(verdicts.filter(col("recrawl_due"))
           .drop("recrawl_due", "__url_fp", BucketCol)
           .withColumn(BatchCol, lit(batchId))
           // AQE-sized sink files: unbalanced, every post-shuffle
@@ -168,9 +158,7 @@ object StreamingRecrawl extends MaintainedStore {
           // file into the batch dir; rebalanced, files target the
           // advisory partition size (one at batch scale, split at
           // cluster scale)
-          .hint("rebalance")
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BatchCol).parquet(sinkPath)
+          .hint("rebalance"), sinkPath, BatchCol)
         // store advance: due URLs get last_fetch_ts = nowTs with one
         // step of history; everything else in the touched buckets
         // rewrites VERBATIM (all history columns as-read — a replayed
@@ -202,15 +190,13 @@ object StreamingRecrawl extends MaintainedStore {
             coalesce(col("fp_batch_id"), lit(-1L)).as("fp_batch_id"),
             col("unchanged_streak"), col("prev_streak"),
             col("fp_ts"), col("prev_fp_ts"))
-        kept.unionByName(advanced)
+        publish(kept.unionByName(advanced)
           .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
           // cluster by bucket: one rewritten file per touched bucket
           // instead of one per (upstream partition × bucket) — see
           // initialize()'s note
           .repartition(spark.sessionState.conf.numShufflePartitions,
-            col(BucketCol))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BucketCol).parquet(storePath)
+            col(BucketCol)), storePath, BucketCol)
       } finally verdicts.unpersist()
     } finally withFp.unpersist()
   }
@@ -237,8 +223,7 @@ object StreamingRecrawl extends MaintainedStore {
       storePath: String, sinkPath: String, numBuckets: Int, batchId: Long,
       nowTs: Long
   ): Unit = {
-    if (batch.isEmpty) return
-    checkBuckets(storePath, numBuckets)
+    if (checkedEmpty(batch)(checkBuckets(storePath, numBuckets))) return
     Seq("__url_fp", BucketCol, BatchCol, "change_kind", "content_changed")
       .foreach(c => require(!batch.columns.contains(c),
         s"input already has a '$c' column — rename it first"))
@@ -252,10 +237,7 @@ object StreamingRecrawl extends MaintainedStore {
       .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
     withFp.persist()
     try {
-      val touched = withFp.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val stored = readStore(spark, storePath)
-        .filter(col(BucketCol).isin(touched: _*))
+      val stored = readTouched(withFp, storePath, Some(StoreSchema))
       // replay self-exclusion on the FINGERPRINT triple: a row this
       // batch already stamped is compared at its pre-batch fingerprint
       val evalFp = when(col("fp_batch_id") === batchId, col("prev_fp"))
@@ -279,15 +261,13 @@ object StreamingRecrawl extends MaintainedStore {
         // response record, never to an intermediate revisit
         val refTs = stored.select(col("url").as("__rd_url"),
           evalFpTs.as("content_fp_ts"))
-        verdicts
+        publish(verdicts
           .join(refTs, verdicts(urlCol).cast("string") === col("__rd_url"), "left")
           .drop("__rd_url")
           .drop("__url_fp", BucketCol)
           .withColumn(BatchCol, lit(batchId))
           // AQE-sized sink files (see applyBatch's sink note)
-          .hint("rebalance")
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BatchCol).parquet(sinkPath)
+          .hint("rebalance"), sinkPath, BatchCol)
         val batchFps = verdicts.select(col("__url_fp"),
           col(urlCol).cast("string").as("__b_url"),
           col(fpCol).cast("string").as("__b_fp"),
@@ -325,15 +305,13 @@ object StreamingRecrawl extends MaintainedStore {
             when(col("__b_kind") === "unchanged", col("__prev_fp_ts"))
               .otherwise(lit(nowTs)).as("fp_ts"),
             col("__prev_fp_ts").as("prev_fp_ts"))
-        kept.unionByName(advanced)
+        publish(kept.unionByName(advanced)
           .withColumn(BucketCol, bucketOf(numBuckets, col("__url_fp")))
           // cluster by bucket: one rewritten file per touched bucket
           // instead of one per (upstream partition × bucket) — see
           // initialize()'s note
           .repartition(spark.sessionState.conf.numShufflePartitions,
-            col(BucketCol))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(BucketCol).parquet(storePath)
+            col(BucketCol)), storePath, BucketCol)
       } finally verdicts.unpersist()
     } finally withFp.unpersist()
   }

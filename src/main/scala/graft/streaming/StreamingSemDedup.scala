@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Kmeans
 import MaintainedStore.{BatchCol, BucketCol}
@@ -87,7 +88,7 @@ object StreamingSemDedup extends MaintainedStore {
     MaintainedStore.readMarker(path, marker).map { payload =>
       val lines = payload.split("\n", 3)
       require(lines(0) == p.encoded,
-        s"semdedup store parameter mismatch for $path: store pinned (${lines(0)}), " +
+        s"semdedup store parameter mismatch for $path: its $marker marker pinned (${lines(0)}), " +
           s"caller passed (${p.encoded}) — mixed geometry corrupts every admission")
       def parseCents(body: String): Seq[Array[Double]] =
         body.split(";").toSeq.filter(_.nonEmpty).map(_.split(",").map(_.toDouble))
@@ -123,10 +124,8 @@ object StreamingSemDedup extends MaintainedStore {
   private def admittedPath(storeDir: String) = s"$storeDir/admitted"
 
   // explicit schema: survives the cold start (marker but no files)
-  private def readSeen(spark: org.apache.spark.sql.SparkSession, storeDir: String) =
-    spark.read
-      .schema(s"vid BIGINT, cluster INT, vec ARRAY<DOUBLE>, $BucketCol INT, $BatchCol BIGINT")
-      .parquet(seenPath(storeDir))
+  private val SeenSchema =
+    s"vid BIGINT, cluster INT, vec ARRAY<DOUBLE>, $BucketCol INT, $BatchCol BIGINT"
 
   /** Bootstrap from an existing corpus (batch -1, already admitted
     * wholesale — the [[StreamingNearDup.initialize]] shape): pins
@@ -140,11 +139,9 @@ object StreamingSemDedup extends MaintainedStore {
     val cents = Kmeans.initLowestIds(corpus, idCol, vecCol, p.k)
     val assigned = assignedOf(corpus, idCol, vecCol, cents, p)
       .withColumn(BatchCol, lit(-1L))
-    assigned.write.mode("overwrite")
-      .partitionBy(BucketCol, BatchCol).parquet(seenPath(storeDir))
-    assigned.select(col("vid"), col("cluster"), col(BatchCol))
-      .write.mode("overwrite").partitionBy(BatchCol).parquet(admittedPath(storeDir))
-    writeMarker(storeDir, encode(p, cents))
+    MaintainedStore.overwrite(assigned.select(col("vid"), col("cluster"), col(BatchCol)),
+      admittedPath(storeDir), BatchCol)
+    bootstrap(assigned, seenPath(storeDir), BucketCol, BatchCol)(encode(p, cents), root = storeDir)
   }
 
   private def assignedOf(
@@ -165,9 +162,11 @@ object StreamingSemDedup extends MaintainedStore {
   def applyBatch(
       batch: DataFrame, batchId: Long, idCol: String, vecCol: String,
       storeDir: String, p: Params): Unit = {
+    // the marker is checked before an empty batch returns; an absent
+    // one is legal here, since the first data seen pins it
+    val pinned = readCentroids(storeDir, p)
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    val cents = readCentroids(storeDir, p).getOrElse {
+    val cents = pinned.getOrElse {
       // data without a marker = a CRASHED initialize() (it writes the
       // marker last, the NearDup convention): self-pinning from this
       // batch would silently read the bootstrap rows under DIFFERENT
@@ -186,22 +185,17 @@ object StreamingSemDedup extends MaintainedStore {
     val assigned = assignedOf(batch, idCol, vecCol, cents, p)
       .persist()
     try {
-        // bounded driver materialization: at most numBuckets bucket ids
-        val touched = assigned.select(col(BucketCol)).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (touched.nonEmpty) {
-          val prior =
-            // existence check, not a Try: a CORRUPT seen store must
-            // fail, not silently admit everything (fail-loud convention)
-            (if (Files.isDirectory(Paths.get(seenPath(storeDir))))
-              readSeen(spark, storeDir)
-                .filter(col(BucketCol).isin(touched: _*))
-                // self-exclusion: a crashed run's partial write of THIS
-                // batch must not feed its replay
-                .filter(col(BatchCol) =!= batchId)
-                .select(col("vid"), col("cluster"), col("vec"))
-            else assigned.select(col("vid"), col("cluster"), col("vec")).limit(0))
-              .persist()
+      val touched = MaintainedStore.touched(assigned, BucketCol)
+      if (touched.nonEmpty) {
+        // a missing seen store reads as empty, a CORRUPT one fails
+        // instead of silently admitting everything
+        val prior = MaintainedStore.readTouched(batch.sparkSession, seenPath(storeDir),
+            Some(SeenSchema), BucketCol, touched)
+          // self-exclusion: a crashed run's partial write of THIS
+          // batch must not feed its replay
+          .filter(col(BatchCol) =!= batchId)
+          .select(col("vid"), col("cluster"), col("vec"))
+          .persist()
         try {
           val members = prior.unionByName(assigned.select("vid", "cluster", "vec"))
           val sizes = members.groupBy(col("cluster")).agg(count(lit(1)).as("__cn"))
@@ -235,41 +229,26 @@ object StreamingSemDedup extends MaintainedStore {
             .filter(col("dot").cast("double") /
               (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))) >= p.minCosine)
             .select(col("hi").as("vid")).distinct()
-          assigned.join(pruned, Seq("vid"), "left_anti")
+          MaintainedStore.publish(assigned.join(pruned, Seq("vid"), "left_anti")
             .select(col("vid"), col("cluster"))
-            .withColumn(BatchCol, lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BatchCol).parquet(admittedPath(storeDir))
-          assigned
-            .withColumn(BatchCol, lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BucketCol, BatchCol).parquet(seenPath(storeDir))
+            .withColumn(BatchCol, lit(batchId)), admittedPath(storeDir), BatchCol)
+          MaintainedStore.publish(assigned.withColumn(BatchCol, lit(batchId)),
+            seenPath(storeDir), BucketCol, BatchCol)
           // unpersist in finally: the failOnOversized raise (an EXPECTED
           // failure path) must not pin the cached seen rows for the
           // session's lifetime
         } finally prior.unpersist(blocking = false)
-      } else {
-        // nothing assignable: still write an empty admitted partition?
-        // No — dynamic overwrite with zero rows touches nothing, and
-        // readers treat a missing batch partition as an empty batch.
-        ()
       }
+      // nothing assignable writes nothing: a missing batch partition
+      // reads back as an empty batch
     } finally assigned.unpersist(blocking = false)
   }
 
-  /** This batch's admitted `(vid, cluster)` — empty when the batch
-    * assigned nothing. Existence-checked (not Try-swallowed): a corrupt
-    * admitted store fails instead of reading as an empty batch. */
+  /** This batch's admitted `(vid, cluster)` ([[MaintainedStore.readBatch]]):
+    * empty when the batch assigned nothing, while a corrupt admitted
+    * store fails. */
   def admittedOf(
       spark: org.apache.spark.sql.SparkSession, storeDir: String, batchId: Long): DataFrame =
-    if (Files.isDirectory(Paths.get(admittedPath(storeDir))))
-      spark.read
-        .schema(s"vid BIGINT, cluster INT, $BatchCol BIGINT")
-        .parquet(admittedPath(storeDir))
-        .filter(col(BatchCol) === batchId)
-        .select(col("vid"), col("cluster"))
-    else {
-      import spark.implicits._
-      Seq.empty[(Long, Int)].toDF("vid", "cluster")
-    }
+    MaintainedStore.readBatch(spark, admittedPath(storeDir), batchId,
+      StructType.fromDDL("vid BIGINT, cluster INT"))
 }

@@ -44,8 +44,7 @@ object StreamingSketch extends MaintainedStore {
   // freshly-built daily sketches) AND survives an empty store (an
   // empty-events bootstrap writes a marker but no parquet files;
   // inference over the empty dir would throw on the first batch)
-  private def readStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.schema(s"sk MAP<INT, INT>, $DayCol BIGINT").parquet(path)
+  private val StoreSchema = s"sk MAP<INT, INT>, $DayCol BIGINT"
 
   private def checkM(path: String, m: Int): Unit =
     checkMarker(path, m.toString, "register-count",
@@ -60,16 +59,7 @@ object StreamingSketch extends MaintainedStore {
   def initialize(
       events: DataFrame, tsCol: String, valueCol: String, path: String, m: Int
   ): Unit = {
-    // STATIC overwrite: a re-initialize must truncate the whole store.
-    // Dynamic partition overwrite would leave day partitions absent
-    // from the bootstrap data on disk — stale days (or registers built
-    // with a previous m, whose marker this call rewrites) would then
-    // merge silently into every rolling window. Marker written AFTER
-    // the data so the truncation cannot orphan it.
-    dailySketches(events, tsCol, valueCol, m)
-      .write.mode("overwrite")
-      .partitionBy(DayCol).parquet(path)
-    writeMarker(path, m.toString)
+    bootstrap(dailySketches(events, tsCol, valueCol, m), path, DayCol)(m.toString)
   }
 
   /** Fold one micro-batch of events into the store: sketch the batch
@@ -79,21 +69,14 @@ object StreamingSketch extends MaintainedStore {
   def applyBatch(
       batch: DataFrame, tsCol: String, valueCol: String, path: String, m: Int
   ): Unit = {
-    if (batch.isEmpty) return
-    checkM(path, m)
-    val spark = batch.sparkSession
+    if (checkedEmpty(batch)(checkM(path, m))) return
     val batchDaily = dailySketches(batch, tsCol, valueCol, m)
     batchDaily.persist()
     try {
-      // bounded driver materialization: the batch's day ids
-      val touched = batchDaily.select(col(DayCol)).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val stored = readStore(spark, path).filter(col(DayCol).isin(touched: _*))
-      stored.unionByName(batchDaily)
+      val stored = MaintainedStore.readTouched(batchDaily, path, Some(StoreSchema), DayCol)
+      MaintainedStore.publish(stored.unionByName(batchDaily)
         .groupBy(col(DayCol))
-        .agg(RegisterSketch.mergeAgg(m)(col("sk")).as("sk"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(DayCol).parquet(path)
+        .agg(RegisterSketch.mergeAgg(m)(col("sk")).as("sk")), path, DayCol)
     } finally batchDaily.unpersist()
   }
 
@@ -108,7 +91,7 @@ object StreamingSketch extends MaintainedStore {
     checkM(path, m)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col(DayCol)).rangeBetween(-(windowDays - 1L), 0L)
-    readStore(spark, path)
+    spark.read.schema(StoreSchema).parquet(path)
       .withColumn("rsk", RegisterSketch.mergeAgg(m)(col("sk")).over(w))
       .select(col(DayCol),
         RegisterSketch.estimateUdf(m)(col("rsk")).as("approx_users"))

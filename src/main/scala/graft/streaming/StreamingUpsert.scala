@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd2
-import MaintainedStore.{BucketCol, bucketOf}
+import MaintainedStore.{BucketCol, bucketOf, publish, readTouched}
 
 /** Streaming upsert maintenance for dimension tables: the
   * `foreachBatch` twins of the two batch merge primitives —
@@ -67,15 +67,9 @@ object StreamingUpsert extends MaintainedStore {
       attrCols: Seq[String], path: String, numBuckets: Int
   ): Unit = {
     requireNoBucketCol(changes)
-    // STATIC overwrite: re-initializing must truncate the store —
-    // dynamic overwrite would leave buckets absent from the bootstrap
-    // (or laid out with a previous modulus) on disk behind a fresh
-    // marker. Marker written AFTER the data survives the truncation.
-    Scd2.history(changes, keyCol, tsCol, tieCol, attrCols)
-      .withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
-      .write.mode("overwrite")
-      .partitionBy(BucketCol).parquet(path)
-    writeMarker(path, numBuckets.toString)
+    bootstrap(Scd2.history(changes, keyCol, tsCol, tieCol, attrCols)
+      .withColumn(BucketCol, bucketOf(numBuckets, col(keyCol))),
+      path, BucketCol)(numBuckets.toString)
   }
 
   /** Fold one micro-batch of change rows into the stored history:
@@ -86,21 +80,14 @@ object StreamingUpsert extends MaintainedStore {
       batch: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       attrCols: Seq[String], path: String, numBuckets: Int
   ): Unit = {
-    if (batch.isEmpty) return
+    if (checkedEmpty(batch)(checkBuckets(path, numBuckets))) return
     requireNoBucketCol(batch)
-    checkBuckets(path, numBuckets)
-    val spark = batch.sparkSession
     val withKb = batch.withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
     withKb.persist()
     try {
-      // bounded driver materialization: at most numBuckets ints
-      val touched = withKb.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val bucketHistory = spark.read.parquet(path)
-        .filter(col(BucketCol).isin(touched: _*))
-      Scd2.merge(bucketHistory, withKb, keyCol, tsCol, tieCol, attrCols)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BucketCol).parquet(path)
+      val bucketHistory = readTouched(withKb, path, schema = None)
+      publish(Scd2.merge(bucketHistory, withKb, keyCol, tsCol, tieCol, attrCols),
+        path, BucketCol)
     } finally withKb.unpersist()
   }
 
@@ -128,12 +115,9 @@ object StreamingUpsert extends MaintainedStore {
       path: String, numBuckets: Int
   ): Unit = {
     requireNoBucketCol(changes)
-    // static overwrite + marker-after-data, same grounds as initializeScd2
-    latestWins(changes, keyCol, tsCol, tieCol)
-      .withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
-      .write.mode("overwrite")
-      .partitionBy(BucketCol).parquet(path)
-    writeMarker(path, numBuckets.toString)
+    bootstrap(latestWins(changes, keyCol, tsCol, tieCol)
+      .withColumn(BucketCol, bucketOf(numBuckets, col(keyCol))),
+      path, BucketCol)(numBuckets.toString)
   }
 
   /** Fold one micro-batch of upserts into the Type-1 store: prune to
@@ -143,20 +127,13 @@ object StreamingUpsert extends MaintainedStore {
       batch: DataFrame, keyCol: String, tsCol: String, tieCol: String,
       path: String, numBuckets: Int
   ): Unit = {
-    if (batch.isEmpty) return
+    if (checkedEmpty(batch)(checkBuckets(path, numBuckets))) return
     requireNoBucketCol(batch)
-    checkBuckets(path, numBuckets)
-    val spark = batch.sparkSession
     val withKb = batch.withColumn(BucketCol, bucketOf(numBuckets, col(keyCol)))
     withKb.persist()
     try {
-      val touched = withKb.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val stored = spark.read.parquet(path)
-        .filter(col(BucketCol).isin(touched: _*))
-      latestWins(stored.unionByName(withKb), keyCol, tsCol, tieCol)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BucketCol).parquet(path)
+      val stored = readTouched(withKb, path, schema = None)
+      publish(latestWins(stored.unionByName(withKb), keyCol, tsCol, tieCol), path, BucketCol)
     } finally withKb.unpersist()
   }
 }

@@ -2006,6 +2006,72 @@ class CliSpec extends SparkSpec {
     assert(ids(s"$out2/budgeted") === Set(5L))
   }
 
+  test("pipeline --state: examples/nightly_admission.yaml over empty nights, cold and warm") {
+    import spark.implicits._
+    val (src, state) = (tempDir(), tempDir())
+    val steps = Seq("validated", "admitted", "stripped", "novel", "budgeted")
+    def night(batch: org.apache.spark.sql.DataFrame): String = {
+      val out = tempDir()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$src/batch.parquet"))
+      batch.write.parquet(s"$src/batch.parquet")
+      Cli.run(Seq("pipeline", "examples/nightly_admission.yaml", src, out,
+        "--state", state), spark)
+      out
+    }
+    def nextBatch = Files.readString(Paths.get(state, "_graft_next_batch")).trim
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    def assertEmptyNight(out: String, budgetedCols: Seq[String]): Unit = {
+      for (s <- steps) {
+        val t = spark.read.parquet(s"$out/$s")
+        assert(t.count() === 0L, s"$s wrote rows")
+        assert(t.columns.toSeq === (if (s == "budgeted") budgetedCols else Seq("doc_id", "text")),
+          s"$s columns")
+      }
+      val manifest = Files.readString(Paths.get(out, "pipeline_manifest.json"))
+      for (s <- steps)
+        assert(s""""name":"$s"[^}]*"in_rows":0,"rows":0,""".r.findFirstIn(manifest).nonEmpty,
+          s"manifest for $s is not in_rows = rows = 0:\n$manifest")
+    }
+    // cold: every store bootstraps empty, nothing reads back
+    val cold = night(empty)
+    assert(nextBatch === "1")
+    val warm = night(Seq(1L -> "a first document with enough words to admit here",
+      2L -> "a second document, different words entirely from the first").toDF("doc_id", "text"))
+    assert(nextBatch === "2")
+    val budgetedCols = spark.read.parquet(s"$warm/budgeted").columns.toSeq
+    assertEmptyNight(cold, budgetedCols)
+    // warm: the sinks hold earlier batches but none for this one
+    assertEmptyNight(night(empty), budgetedCols)
+    assert(nextBatch === "3")
+  }
+
+  test("pipeline --state: change_detect keep: all on an empty night keeps its column types") {
+    import spark.implicits._
+    val (src, state, out) = (tempDir(), tempDir(), tempDir())
+    val yaml = Files.createTempFile("graft-pipe-empty-cd", ".yaml")
+    Files.writeString(yaml,
+      """pipeline: fresh_content
+        |id: doc_id
+        |text: text
+        |steps:
+        |  - name: changed
+        |    op: change_detect
+        |    input: pages
+        |    params: { mode: admit, url: url, now: "1700000000", buckets: "8",
+        |              keep: all }
+        |""".stripMargin)
+    Seq.empty[(Long, String, String)].toDF("doc_id", "url", "text")
+      .write.parquet(s"$src/pages.parquet")
+    Cli.run(Seq("pipeline", yaml.toString, src, out, "--state", state), spark)
+    val changed = spark.read.parquet(s"$out/changed")
+    assert(changed.count() === 0L)
+    assert(changed.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq === Seq(
+      "doc_id" -> "bigint", "url" -> "string", "text" -> "string",
+      "change_kind" -> "string", "content_changed" -> "boolean",
+      "content_fp" -> "string", "content_fp_ts" -> "bigint"))
+    assert(Files.readString(Paths.get(state, "_graft_next_batch")).trim === "1")
+  }
+
   test("pipeline --state: dedup_winnow admit rejects cross-batch local overlap") {
     import spark.implicits._
     val (src, state) = (tempDir(), tempDir())

@@ -203,6 +203,100 @@ class StoreFormatSpec extends SparkSpec {
     }
   }
 
+  test("an empty batch against a mismatched marker fails and names the marker, in every store") {
+    // the marker check runs before the empty-batch return: a night with
+    // nothing to admit must not pass over an edited table property
+    val empty = docs.limit(0)
+    val changes = Seq((1L, Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "a"))
+      .toDF("k", "ts", "tie", "attr")
+    val pages = Seq((1L, "https://a.example/x", "2024-01-01", "daily", "fp1"))
+      .toDF("doc_id", "url", "lastmod", "changefreq", "fp")
+    val events = Seq((Timestamp.valueOf("2024-01-01 10:00:00"), 7L)).toDF("ts", "user_id")
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("doc_id", "embedding")
+    val payloads = Seq.empty[(Long, Array[Byte])].toDF("doc_id", "payload")
+    val m = RegisterSketch.bucketCount(0.05)
+    val annSchema = "id BIGINT, vector ARRAY<FLOAT>"
+    // (store, marker, bootstrap, empty batch under other parameters)
+    val stores: Seq[(String, String, String => Unit, String => Unit)] = Seq(
+      ("admission", "_graft_buckets",
+        d => StreamingAdmission.initialize(docs, "text", d, 8),
+        d => StreamingAdmission.applyBatch(empty, "doc_id", "text", d, s"$d.out", 16, 0L)),
+      ("near-dup", "_graft_buckets",
+        d => StreamingNearDup.initialize(docs, "doc_id", "text", d, s"$d.out",
+          StreamingNearDup.Params(numBuckets = 8)),
+        d => StreamingNearDup.applyBatch(empty, 0L, "doc_id", "text", d, s"$d.out",
+          StreamingNearDup.Params(numBuckets = 16))),
+      ("winnow", "_graft_buckets",
+        d => StreamingWinnowDedup.initialize(docs, "doc_id", "text", d, s"$d.out",
+          StreamingWinnowDedup.Params(numBuckets = 8)),
+        d => StreamingWinnowDedup.applyBatch(empty, 0L, "doc_id", "text", d, s"$d.out",
+          StreamingWinnowDedup.Params(numBuckets = 16))),
+      ("image", "_graft_dhash",
+        d => StreamingImageDedup.initialize(payloads, "doc_id", d, s"$d.out",
+          StreamingImageDedup.Params(numBuckets = 8)),
+        d => StreamingImageDedup.applyBatch(payloads, 0L, "doc_id", "payload", d, s"$d.out",
+          StreamingImageDedup.Params(numBuckets = 16))),
+      ("audio", "_graft_afp",
+        d => StreamingAudioDedup.initialize(payloads, "doc_id", d, s"$d.out",
+          StreamingAudioDedup.Params(numBuckets = 8)),
+        d => StreamingAudioDedup.applyBatch(payloads, 0L, "doc_id", "payload", d, s"$d.out",
+          StreamingAudioDedup.Params(numBuckets = 16))),
+      ("video", "_graft_vfp",
+        d => StreamingVideoDedup.initialize(payloads, "doc_id", d, s"$d.out",
+          StreamingVideoDedup.Params(numBuckets = 8)),
+        d => StreamingVideoDedup.applyBatch(payloads, 0L, "doc_id", "payload", d, s"$d.out",
+          StreamingVideoDedup.Params(numBuckets = 16))),
+      ("scd2", "_graft_buckets",
+        d => StreamingUpsert.initializeScd2(changes, "k", "ts", "tie", Seq("attr"), d, 8),
+        d => StreamingUpsert.applyScd2Batch(changes.limit(0), "k", "ts", "tie", Seq("attr"),
+          d, 16)),
+      ("latest", "_graft_buckets",
+        d => StreamingUpsert.initializeLatest(changes, "k", "ts", "tie", d, 8),
+        d => StreamingUpsert.applyLatestBatch(changes.limit(0), "k", "ts", "tie", d, 16)),
+      ("recrawl", "_graft_buckets",
+        d => StreamingRecrawl.initialize(pages.select($"url", lit(100L).as("last_fetch_ts")),
+          "url", d, 8),
+        d => StreamingRecrawl.applyBatch(pages.limit(0), "doc_id", "url", "lastmod",
+          "changefreq", d, s"$d.out", 16, 0L, 1700000000L, 86400L)),
+      ("change_detect", "_graft_buckets",
+        d => StreamingRecrawl.initialize(pages.select($"url", lit(100L).as("last_fetch_ts")),
+          "url", d, 8),
+        d => StreamingRecrawl.applyFetchBatch(pages.limit(0), "doc_id", "url", "fp",
+          d, s"$d.out", 16, 0L, 1700000000L)),
+      ("sketch", "_graft_sketch_m",
+        d => StreamingSketch.initialize(events, "ts", "user_id", d, m),
+        d => StreamingSketch.applyBatch(events.limit(0), "ts", "user_id", d, m * 2)),
+      ("kmeans", "_graft_centroids",
+        d => StreamingKmeans.initialize(vecs, "doc_id", "embedding",
+          Seq(Array(1.0, 0.0), Array(0.0, 1.0)), d),
+        d => StreamingKmeans.applyBatch(vecs.limit(0), 0L, "doc_id", "embedding",
+          Seq(Array(0.0, 1.0), Array(1.0, 0.0)), d)),
+      ("heavy-hitters", "_graft_hh_k",
+        d => StreamingHeavyHitters.initialize(Seq("a", "b").toDF("v"), "v", d, 3),
+        d => StreamingHeavyHitters.applyBatch(Seq("a").toDF("v").limit(0), 0L, "v", d, 4)),
+      ("line-dedup", "_graft_line_delim",
+        d => StreamingLineDedup.initialize(docs, "doc_id", "text", d),
+        d => StreamingLineDedup.applyBatch(empty, "doc_id", "text", d, "|", 0L)),
+      ("ann", "_graft_buckets",
+        d => StreamingAnnIndex.initialize(d, 8, annSchema),
+        d => StreamingAnnIndex.applyBatch(vecs.limit(0), "doc_id", d, annSchema, 16,
+          identity)),
+      ("semdedup", "_graft_semdedup",
+        d => StreamingSemDedup.initialize(vecs, "doc_id", "embedding", d,
+          StreamingSemDedup.Params(numBuckets = 4, k = 2, minCosine = 0.95)),
+        d => StreamingSemDedup.applyBatch(vecs.limit(0), 0L, "doc_id", "embedding", d,
+          StreamingSemDedup.Params(numBuckets = 8, k = 2, minCosine = 0.95))))
+    val r = root()
+    for ((name, marker, init, apply) <- stores) {
+      val d = s"$r/$name"
+      init(d)
+      val before = markers(d)
+      val e = intercept[IllegalArgumentException](apply(d))
+      assert(e.getMessage.contains(marker), s"$name: ${e.getMessage}")
+      assert(markers(d) === before, s"$name rewrote its marker")
+    }
+  }
+
   test("StreamingAnnIndex: bucket, schema and layout markers; (cell, bucket) directories") {
     val r = root()
     val schema = "id BIGINT, cell INT, vector ARRAY<FLOAT>"

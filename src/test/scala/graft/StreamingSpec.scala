@@ -5,281 +5,11 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.exec.{DimPopulate, FactPopulate}
-import graft.model.TimeWindow
-import graft.streaming.StreamingFactPopulate
-
-/** Streaming fact populate: a file-source stream aggregated with the
-  * streaming surface must converge to the batch populate over the same
-  * data (complete output mode; the append/watermark path shares the
-  * same plan shape). */
+/** The maintained stores driven as streams: each folded store must equal
+  * its batch operator over the same data, and a replayed micro-batch
+  * must be a content no-op. */
 class StreamingSpec extends SparkSpec {
   import Fixtures._
-
-  test("streaming aggregation converges to the batch fact populate") {
-    val fact = eventsEnv.findFact("user_activity").get
-    val ev   = sources.ParquetTables.readTable(spark, sf("sf0.001"), "events")
-
-    // stage the source as two micro-batch files
-    val stage = Files.createTempDirectory("graft-stream-src").toString
-    val half1 = ev.filter(col("event_id") % 2 === 0)
-    val half2 = ev.filter(col("event_id") % 2 === 1)
-    half1.write.mode("append").parquet(stage)
-    half2.write.mode("append").parquet(stage)
-
-    val dim = DimPopulate.full(eventsEnv, fact, "dim_app_user", ev, TimeWindow.unbounded)
-    dim.cache().count()
-
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-
-    val agg = StreamingFactPopulate.aggregate(eventsEnv, fact, stream, _ => dim)
-
-    val q = agg.writeStream
-      .format("memory")
-      .queryName("stream_fact")
-      .outputMode("complete")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val streamed = spark.table("stream_fact")
-    val batch: DataFrame =
-      FactPopulate.populate(eventsEnv, fact, TimeWindow.unbounded, _ => ev, _ => dim)
-
-    val a = streamed
-      .select("ts_minute_id", "activity_count", "app_user_id")
-      .collect().map(_.toString).sorted.toSeq
-    val b = batch
-      .select("ts_minute_id", "activity_count", "app_user_id")
-      .collect().map(_.toString).sorted.toSeq
-    assert(a == b)
-  }
-
-  test("append mode with watermark emits only finalized windows, no duplicates") {
-    val fact = eventsEnv.findFact("user_activity").get
-    val ev   = sources.ParquetTables.readTable(spark, sf("sf0.001"), "events")
-
-    val stage = Files.createTempDirectory("graft-stream-append").toString
-    ev.write.mode("append").parquet(stage)
-
-    val dim = DimPopulate.full(eventsEnv, fact, "dim_app_user", ev, TimeWindow.unbounded)
-    dim.cache().count()
-
-    val stream = spark.readStream.schema(ev.schema).parquet(stage)
-    val agg = StreamingFactPopulate.aggregate(
-      eventsEnv, fact, stream, _ => dim, watermark = "5 minutes")
-
-    val q = agg.writeStream
-      .format("memory")
-      .queryName("stream_fact_append")
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val emitted = spark.table("stream_fact_append")
-    val batch = FactPopulate.populate(eventsEnv, fact, TimeWindow.unbounded, _ => ev, _ => dim)
-    val batchKeys = batch.select("ts_minute_id", "app_user_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val emittedRows = emitted.select("ts_minute_id", "app_user_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1)))
-    // finalized windows only: every emitted row exists in the batch
-    // result and appears exactly once (watermark holds back only the
-    // tail windows)
-    assert(emittedRows.toSet.subsetOf(batchKeys))
-    assert(emittedRows.length == emittedRows.toSet.size, "duplicate appends")
-    assert(emittedRows.nonEmpty)
-  }
-
-  test("streamed count-distinct sketches equal the batch registers per window") {
-    // a fact whose sketch source (user_id) is NOT a group key — each
-    // (minute, event_type) group sketches MANY users split across the
-    // two micro-batches, so the cross-batch register merge is exercised
-    // for real (grouping by the sketched column would make every
-    // sketch single-valued and the merge vacuous)
-    import graft.model._
-    import graft.model.FactColumnKind._
-    val sketchFacts = Seq(Fact("event", "events", columns = Seq(
-      FactColumn("ts", DimTime),
-      FactColumn("event_type", DimVal("event_type")),
-      FactColumn("event_count", FactCount(None)),
-      FactColumn("user_count", FactCountDistinct(Some("user_id"))))))
-    // hour buckets: sf0.001 has ~1 event per (minute, type) group, which
-    // would leave every sketch single-valued
-    val env = Validator.validateEnv(
-      eventsTables, sketchFacts, eventsSettings.copy(timeUnit = TimeUnit.Hour),
-      testTypeDefaults).toOption.get
-    val fact = env.findFact("event").get
-    val ev   = sources.ParquetTables.readTable(spark, sf("sf0.001"), "events")
-
-    val stage = Files.createTempDirectory("graft-stream-sketch").toString
-    ev.filter(col("event_id") % 2 === 0).write.mode("append").parquet(stage)
-    ev.filter(col("event_id") % 2 === 1).write.mode("append").parquet(stage)
-
-    val dim = DimPopulate.full(env, fact, "dim_event_type", ev, TimeWindow.unbounded)
-    dim.cache().count()
-
-    val stream = spark.readStream
-      .schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(stage)
-    val agg = StreamingFactPopulate.aggregate(env, fact, stream, _ => dim)
-
-    val q = agg.writeStream
-      .format("memory").queryName("stream_sketch").outputMode("complete").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    def keyed(df: DataFrame) = df
-      .select(col("ts_hour_id"), col("event_type_id"), col("user_count"))
-      .collect()
-      .map(r => ((r.getLong(0), r.getInt(1)), r.getMap[Int, Int](2).toMap))
-      .toMap
-    val streamed = keyed(spark.table("stream_sketch"))
-    val batch = keyed(
-      FactPopulate.populate(env, fact, TimeWindow.unbounded, _ => ev, _ => dim))
-    assert(streamed.keySet == batch.keySet)
-    // multi-register sketches must actually merge across micro-batches
-    assert(streamed.values.exists(_.size > 1), "sketches are single-valued; merge not exercised")
-    // registers byte-identical: the sketch merged across micro-batches
-    // must equal the one built in a single batch pass
-    assert(streamed.forall { case (k, m) => batch(k) == m })
-  }
-
-  test("streaming dim maintenance: new keys appended with continuing ids, replay is a no-op") {
-    import graft.streaming.StreamingDimPopulate
-    val fact = eventsEnv.findFact("user_activity").get
-    val ev   = sources.ParquetTables.readTable(spark, sf("sf0.001"), "events")
-
-    // seed the dim from a subset of USERS so the second micro-batch
-    // genuinely introduces new natural keys
-    val half1 = ev.filter(col("user_id") % 3 =!= 0)
-    val half2 = ev.filter(col("user_id") % 3 === 0)
-    val dimDir = Files.createTempDirectory("graft-stream-dim").toString + "/dim_app_user"
-    DimPopulate.full(eventsEnv, fact, "dim_app_user", half1, TimeWindow.unbounded)
-      .write.parquet(dimDir)
-    val seeded = spark.read.parquet(dimDir)
-    val seedCount = seeded.count()
-    val seedMaxId = seeded.agg(max(col("id"))).head().getInt(0)
-
-    // micro-batch 2 arrives: only genuinely new users get rows, ids continue
-    val newRows = StreamingDimPopulate.step(
-      eventsEnv, fact, "dim_app_user", half2, spark.read.parquet(dimDir))
-    newRows.write.mode("append").parquet(dimDir)
-    val after = spark.read.parquet(dimDir)
-    val batchWhole = DimPopulate.full(eventsEnv, fact, "dim_app_user", ev, TimeWindow.unbounded)
-    assert(after.count() == batchWhole.count())
-    assert(after.select("user_id").distinct().count() == after.count(), "duplicate natural keys")
-    if (!newRows.isEmpty)
-      assert(newRows.agg(min(col("id"))).head().getInt(0) == seedMaxId + 1, "ids must continue")
-    assert(seedCount < after.count()) // the stream actually added keys
-
-    // replayed micro-batch (failure recovery): anti-join yields nothing
-    val replay = StreamingDimPopulate.step(
-      eventsEnv, fact, "dim_app_user", half2, spark.read.parquet(dimDir))
-    assert(replay.isEmpty, "replay must be idempotent")
-  }
-
-  test("streaming debounce equals batch debounce, including a run across the batch boundary") {
-    import graft.operators.Sessions
-    import graft.streaming.StreamingDebounce
-    import spark.implicits._
-    val ev = sources.ParquetTables.readTable(spark, sf("sf0.001"), "events")
-
-    // split by TIME so per-entity order holds across micro-batches —
-    // the operator's documented arrival-order contract — which also
-    // makes runs straddling the boundary continue via carried state
-    val split = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
-    val stage = Files.createTempDirectory("graft-stream-deb").toString
-    ev.filter(col("ts") < split).coalesce(1).write.mode("append").parquet(stage)
-    // FileStreamSource orders files by MODIFICATION TIME; back-to-back
-    // writes can share an mtime on coarse-granularity filesystems and
-    // invert the arrival order the in-order contract requires — pin the
-    // order explicitly
-    java.nio.file.Files.list(java.nio.file.Paths.get(stage)).forEach { p =>
-      if (p.toString.endsWith(".parquet"))
-        java.nio.file.Files.setLastModifiedTime(
-          p, java.nio.file.attribute.FileTime.fromMillis(1000000L))
-    }
-    ev.filter(col("ts") >= split).coalesce(1).write.mode("append").parquet(stage)
-    java.nio.file.Files.list(java.nio.file.Paths.get(stage)).forEach { p =>
-      if (p.toString.endsWith(".parquet") &&
-        java.nio.file.Files.getLastModifiedTime(p).toMillis != 1000000L)
-        java.nio.file.Files.setLastModifiedTime(
-          p, java.nio.file.attribute.FileTime.fromMillis(2000000L))
-    }
-
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-    // a WIDE window (12h) so same-type runs certainly span the split
-    val q = StreamingDebounce.debounce(
-      stream, "user_id", "ts", "event_id", "event_type",
-      windowMicros = 12L * 3600L * 1000000L)
-      .writeStream.format("memory").queryName("stream_debounce")
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val streamed = spark.table("stream_debounce")
-      .select("tie").as[Long].collect().sorted.toSeq
-    val batch = Sessions.debounce(ev, "user_id", "ts", "event_id", "event_type",
-      windowMicros = 12L * 3600L * 1000000L)
-      .select("event_id").as[Long].collect().sorted.toSeq
-    assert(streamed == batch, "stream survivors must equal the batch operator's")
-    assert(batch.size < ev.count(), "the window must actually suppress events")
-  }
-
-  test("streaming dedup drops within-watermark duplicates across and within batches") {
-    import graft.streaming.StreamingDedup
-    import spark.implicits._
-    val docs = sources.ParquetTables.readTable(spark, sf("sf0.001"), "documents")
-      .select(col("doc_id"), col("text"),
-        (lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00").getTime / 1000L) +
-          col("doc_id")).cast("timestamp").as("ts"))
-    // duplicates: every 5th doc re-arrives an hour later under a new id,
-    // plus one SAME-batch duplicate pair
-    val redeliveries = docs.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 100000L).as("doc_id"), col("text"),
-        (col("ts").cast("long") + 3600L).cast("timestamp").as("ts"))
-
-    val stage = Files.createTempDirectory("graft-stream-dedup").toString
-    docs.union(docs.filter(col("doc_id") === 3)
-        .select(col("doc_id") + 200000L, col("text"), col("ts")))
-      .coalesce(1).write.mode("append").parquet(stage)
-    java.nio.file.Files.list(java.nio.file.Paths.get(stage)).forEach { p =>
-      if (p.toString.endsWith(".parquet"))
-        java.nio.file.Files.setLastModifiedTime(
-          p, java.nio.file.attribute.FileTime.fromMillis(1000000L))
-    }
-    redeliveries.coalesce(1).write.mode("append").parquet(stage)
-    java.nio.file.Files.list(java.nio.file.Paths.get(stage)).forEach { p =>
-      if (p.toString.endsWith(".parquet") &&
-        java.nio.file.Files.getLastModifiedTime(p).toMillis != 1000000L)
-        java.nio.file.Files.setLastModifiedTime(
-          p, java.nio.file.attribute.FileTime.fromMillis(2000000L))
-    }
-
-    val stream = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-    val q = StreamingDedup.dedupe(stream, "ts", "text", watermark = "7 days")
-      .writeStream.format("memory").queryName("stream_dedup")
-      .outputMode("append").start()
-    try q.processAllAvailable()
-    finally q.stop()
-
-    val survivors = spark.table("stream_dedup")
-      .select("doc_id").as[Long].collect().toSet
-    val originals = docs.select("doc_id").as[Long].collect().toSet
-    // every original text survives exactly once (first arrival), every
-    // redelivery — cross-batch or same-batch — is suppressed
-    assert(survivors == originals,
-      s"unexpected: extra=${survivors -- originals} missing=${originals -- survivors}")
-  }
 
   // -------------------------------------------------------- upsert maintenance
 
